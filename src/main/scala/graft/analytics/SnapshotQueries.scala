@@ -281,9 +281,10 @@ object SnapshotQueries {
 
   /** X48: file skipping from manifest stats — the table is committed
     * range-partitioned on o_orderkey so file envelopes are tight, then a
-    * key-range scan prunes whole files driver-side (SnapshotsSpec asserts
-    * the prune count); the residual filter makes the result EXACTLY the
-    * full scan's, which is what the oracle pins.
+    * key-range filter over the indexed read prunes whole files
+    * driver-side (SnapshotsSpec asserts the prune count); the filter
+    * itself makes the result EXACTLY the full scan's, which is what the
+    * oracle pins.
     */
   val fileSkip = Q("q_file_skip",
     (s, d) => {
@@ -294,7 +295,8 @@ object SnapshotQueries {
       val maxKey = orders(s, d).agg(max(col("o_orderkey")).cast("long"))
         .head().getLong(0)
       val hi = maxKey / 10
-      Snapshots.scanPruned(s, tbl, "o_orderkey", 1L, hi).df
+      Snapshots.readIndexed(s, tbl)._1
+        .filter(col("o_orderkey").between(1L, hi))
         .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total"))
     },
     Some(s"""SELECT count(*) AS n_orders, ${dsumSql("o_totalprice")} AS total
@@ -364,9 +366,8 @@ object SnapshotQueries {
     * file but every file's [min,max] custkey envelope spans most of the
     * domain, so range stats prune nothing for `o_custkey = x`; the bloom
     * proves absence per file driver-side (SnapshotsSpec asserts the skip
-    * count). The residual filter makes the result exactly the full
-    * scan's, which is what the oracle pins (a sound skip can never
-    * change the answer).
+    * count). The filter makes the result exactly the full scan's, which
+    * is what the oracle pins (a sound skip can never change the answer).
     */
   val bloomSkip = Q("q_bloom_skip",
     (s, d) => {
@@ -378,7 +379,8 @@ object SnapshotQueries {
       }
       val cust = orders(s, d).agg(min(col("o_custkey")).cast("long"))
         .head().getLong(0)
-      Snapshots.scanPrunedEq(s, tbl, "o_custkey", cust).df
+      Snapshots.readIndexed(s, tbl)._1
+        .filter(col("o_custkey") === lit(cust))
         .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total"))
     },
     Some(s"""SELECT count(*) AS n_orders, ${dsumSql("o_totalprice")} AS total
@@ -388,7 +390,7 @@ object SnapshotQueries {
   /** X50: Z-order layout × manifest box pruning — committed in z-value
     * order, each file is a small box in (l_partkey, l_suppkey) space, so
     * a box predicate on BOTH dims prunes most files from their manifest
-    * envelopes alone ([[Snapshots.scanPrunedBox]]; spec quantifies the
+    * envelopes alone ([[Snapshots.readIndexed]]; spec quantifies the
     * win vs a linear layout). File-level twin of ZOrderSpec's row-group
     * pruning; the oracle is the plain conjunctive filter.
     */
@@ -406,9 +408,9 @@ object SnapshotQueries {
         .head().getLong(0)
       val maxSupp = supplier(s, d).agg(max(col("s_suppkey")).cast("long"))
         .head().getLong(0)
-      Snapshots.scanPrunedBox(s, tbl,
-          Seq(("l_partkey", 1L, maxPart / 8), ("l_suppkey", 1L, maxSupp / 8)))
-        .df
+      Snapshots.readIndexed(s, tbl)._1
+        .filter(col("l_partkey").between(1L, maxPart / 8) &&
+          col("l_suppkey").between(1L, maxSupp / 8))
         .agg(count(lit(1)).as("n_rows"), dsum(col("l_quantity")).as("qty"))
     },
     Some(s"""SELECT count(*) AS n_rows, ${dsumSql("l_quantity")} AS qty
@@ -581,10 +583,9 @@ object SnapshotQueries {
         .head().getLong(0)
       val maxSupp = supplier(s, d).agg(max(col("s_suppkey")).cast("long"))
         .head().getLong(0)
-      Snapshots.scanPrunedBox(s, tbl,
-          Seq(("l_partkey", 1L, maxPart / 8),
-            ("l_suppkey", maxSupp / 2, maxSupp / 2 + maxSupp / 8)))
-        .df
+      Snapshots.readIndexed(s, tbl)._1
+        .filter(col("l_partkey").between(1L, maxPart / 8) &&
+          col("l_suppkey").between(maxSupp / 2, maxSupp / 2 + maxSupp / 8))
         .agg(count(lit(1)).as("n_rows"), dsum(col("l_quantity")).as("qty"))
     },
     Some(s"""SELECT count(*) AS n_rows, ${dsumSql("l_quantity")} AS qty
@@ -594,17 +595,18 @@ object SnapshotQueries {
              AND (SELECT max(s_suppkey) FROM supplier) // 2
                + (SELECT max(s_suppkey) FROM supplier) // 8"""))
 
-  /** X107: TWO-LEVEL manifest pruning ([[Snapshots.buildSegmentIndex]] +
-    * [[Snapshots.scanPrunedBoxSegmented]]) — the manifest-list tier: the
-    * z-ordered file list is segmented with rolled-up envelopes, a box
-    * probe prunes whole SEGMENTS from the small index before any
-    * per-file entry is parsed, and the version's properties ride the
-    * index header so planning never opens the flat manifest — at a
-    * million files, per-query planning cost follows the surviving
-    * fraction, not the table. Exactness is the oracle's (same plain
-    * conjunctive filter as [[zorderSkip]] over a different mid-domain
-    * probe); SegmentIndexSpec pins segment-level skip counts, flat-scan
-    * equality, idempotent builds, and the crash discipline.
+  /** X107: TWO-LEVEL manifest pruning ([[Snapshots.buildSegmentIndex]]
+    * under [[Snapshots.readIndexed]]) — the manifest-list tier: the
+    * z-ordered file list is segmented with rolled-up envelopes, the
+    * indexed read plans from the segment tier, a box filter prunes whole
+    * SEGMENTS from the small index before any per-file entry is parsed,
+    * and the version's properties ride the index header so planning
+    * never opens the flat manifest — at a million files, per-query
+    * planning cost follows the surviving fraction, not the table.
+    * Exactness is the oracle's (same plain conjunctive filter as
+    * [[zorderSkip]] over a different mid-domain probe); SegmentIndexSpec
+    * pins segment-level skip counts, flat-scan equality, idempotent
+    * builds, and the crash discipline.
     */
   val manifestList = Q("q_manifest_list",
     (s, d) => {
@@ -621,10 +623,10 @@ object SnapshotQueries {
         .head().getLong(0)
       val maxSupp = supplier(s, d).agg(max(col("s_suppkey")).cast("long"))
         .head().getLong(0)
-      Snapshots.scanPrunedBoxSegmented(s, tbl,
-          Seq(("l_partkey", maxPart / 2, maxPart / 2 + maxPart / 8),
-            ("l_suppkey", 1L, maxSupp / 8)))
-        .df
+      Snapshots.readIndexed(s, tbl)._1
+        .filter(
+          col("l_partkey").between(maxPart / 2, maxPart / 2 + maxPart / 8) &&
+            col("l_suppkey").between(1L, maxSupp / 8))
         .agg(count(lit(1)).as("n_rows"), dsum(col("l_quantity")).as("qty"))
     },
     Some(s"""SELECT count(*) AS n_rows, ${dsumSql("l_quantity")} AS qty
@@ -1044,11 +1046,11 @@ object SnapshotQueries {
 
   /** X63: STRING file skipping — the table is committed clustered by
     * order priority with UTF-8 [min,max] envelopes in the manifest
-    * ([[Snapshots.scanPrunedStr]]; byte-wise UTF-8 order, the order
-    * Spark/DuckDB/parquet stats all compare with), then a priority-range
-    * scan prunes whole files driver-side (SnapshotsSpec asserts the
-    * count); the residual filter keeps the result exactly the full
-    * scan's, which the oracle pins.
+    * (byte-wise UTF-8 order, the order Spark/DuckDB/parquet stats all
+    * compare with), then a priority-range filter over the indexed read
+    * prunes whole files driver-side (SnapshotsSpec asserts the count);
+    * the filter keeps the result exactly the full scan's, which the
+    * oracle pins.
     */
   val strSkip = Q("q_str_skip",
     (s, d) => {
@@ -1059,8 +1061,8 @@ object SnapshotQueries {
             .repartitionByRange(5, col("o_orderpriority")),
           tbl, strStatsCols = Seq("o_orderpriority"))
       }
-      Snapshots.scanPrunedStr(s, tbl, "o_orderpriority",
-          "1-URGENT", "2-HIGH").df
+      Snapshots.readIndexed(s, tbl)._1
+        .filter(col("o_orderpriority").between("1-URGENT", "2-HIGH"))
         .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total"))
     },
     Some(s"""SELECT count(*) AS n_orders, ${dsumSql("o_totalprice")} AS total
@@ -2411,7 +2413,7 @@ object SnapshotQueries {
            FROM orders)"""))
 
   /** X50 join tier: DYNAMIC FILE PRUNING from a dimension
-    * ([[Snapshots.dimPrunedScan]]) — the star-join scan cut Delta calls
+    * ([[graft.plans.DimFilePrune]]) — the star-join scan cut Delta calls
     * dynamic file pruning: a SELECTIVE dim filter (one nation's
     * suppliers, 1/25 of the key space) collects its bounded distinct
     * join keys, the FACT table's files prune through every manifest
@@ -2419,10 +2421,12 @@ object SnapshotQueries {
     * blooms) BEFORE the join, and the join then runs over the surviving
     * files with the dim broadcast. At 100 TB this is the difference
     * between scanning the fact table and scanning one nation's slice of
-    * it. Keys cast to the fact column's recorded type pre-hash (bloom
+    * it. Keys narrow to the fact column's recorded type pre-hash (bloom
     * hashes are width-sensitive); the oracle replays the plain join.
     * The file cut itself is pinned in SnapshotsSpec (evidence counts
-    * are data-layout-dependent, not oracle-replayable).
+    * are data-layout-dependent, not oracle-replayable). The dim here is
+    * a plain parquet slice, bounded by the broadcast-size estimate;
+    * [[dimFilePruneAuto]] proves its bound from a committed dim.
     */
   val dimFilePrune = Q("q_dim_file_prune",
     (s, d) => {
@@ -2441,15 +2445,15 @@ object SnapshotQueries {
       val dim = supplier(s, d)
         .filter(col("s_nationkey") === lit(nat))
         .select(col("s_suppkey"))
-      val pruned = Snapshots.dimPrunedScan(s, tbl, "l_suppkey",
-        dim, "s_suppkey")
+      graft.plans.DimFilePrune.enable(s, tbl)
       // two-level aggregate, NOT count_distinct mixed into the agg:
       // RewriteDistinctAggregates plans mixed distinct/plain aggregates
       // as an Expand whose group ids come from exprId hash-map
       // iteration — session-history-dependent, the one plan-fingerprint
       // instability class (NOTES r13); the per-key partial also
       // combines map-side, which is the shape that scales
-      pruned.df.join(broadcast(dim), col("l_suppkey") === col("s_suppkey"))
+      Snapshots.readIndexed(s, tbl)._1
+        .join(broadcast(dim), col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("l_suppkey"))
         .agg(count(lit(1)).as("_n"),
           sum(revenue(col("l_extendedprice"), col("l_discount"))
@@ -2504,7 +2508,7 @@ object SnapshotQueries {
       }
       val dim = Snapshots.readIndexed(s, dimTbl)._1
       val (fact, _) = Snapshots.readIndexed(s, tbl)
-      // the PLAIN join — no dimPrunedScan call; the rule injects the cut
+      // the PLAIN join — the rule injects the cut
       fact.join(broadcast(dim), col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("l_suppkey"))
         .agg(count(lit(1)).as("_n"),
@@ -2764,9 +2768,9 @@ object SnapshotQueries {
         .head().getLong(0)
       val maxSupp = supplier(s, d).agg(max(col("s_suppkey")).cast("long"))
         .head().getLong(0)
-      Snapshots.scanPrunedBox(s, tbl,
-          Seq(("l_partkey", 1L, maxPart / 8), ("l_suppkey", 1L, maxSupp / 8)))
-        .df
+      Snapshots.readIndexed(s, tbl)._1
+        .filter(col("l_partkey").between(1L, maxPart / 8) &&
+          col("l_suppkey").between(1L, maxSupp / 8))
         .agg(count(lit(1)).as("n_rows"), dsum(col("l_quantity")).as("qty"))
     },
     Some(s"""SELECT count(*) AS n_rows, ${dsumSql("l_quantity")} AS qty

@@ -10,9 +10,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 
-/** AUTOMATIC dynamic file pruning — the optimizer-rule completion of
-  * [[Snapshots.dimPrunedScan]], the way [[graft.sources.SnapshotFileIndex]]
-  * completed the explicit `scanPruned*` calls: a plain
+/** AUTOMATIC dynamic file pruning — the join form of the one
+  * file-skipping path, [[graft.sources.SnapshotFileIndex]]: a plain
   * `fact.join(dim.filter(...), key)` over a [[Snapshots.readIndexed]] /
   * `format("graft")` fact gets the dim-driven file cut with ZERO graft
   * API calls. The rule detects an inner, left-semi, or outer equi-join
@@ -25,7 +24,7 @@ import org.apache.spark.sql.types._
   * sitting under the session's broadcast threshold (the join would
   * broadcast that side anyway) — executes the bounded side once to
   * collect its distinct join keys, prunes the fact's manifest through
-  * every evidence tier [[Snapshots.scanPrunedIn]] holds (integral
+  * every evidence tier [[SnapshotFileIndex.pruneByKeys]] holds (integral
   * envelopes, UTF-8 string envelopes, widen-era-aware blooms), and swaps
   * the fact relation's file index for the pruned copy. This is the scan
   * cut Delta calls dynamic file pruning; at 100 TB it is the difference
@@ -46,17 +45,16 @@ import org.apache.spark.sql.types._
   * outside the narrow type's range is dropped — through the join's own
   * widening cast it can equal no fact value. Anything unprovable — an
   * unbounded dim, an unsupported key type, a non-equi condition, >
-  * `maxKeys` distinct keys — leaves the plan untouched: unlike the
-  * explicit API there is no loud refusal, because the plain join IS the
-  * correct fallback.
+  * `maxKeys` distinct keys — leaves the plan untouched: there is no loud
+  * refusal, because the plain join IS the correct fallback.
   *
   * Registration-scoped like [[MetaAgg]]/[[MaterializedViews]]: plans
   * change only for [[DimFilePrune.enable]]-d table paths. The dim-side
-  * execution happens INSIDE optimization (the same jobs
-  * `dimPrunedScan`'s explicit collect runs); a thread-local re-entrancy
-  * guard keeps that sub-query's own optimization from recursing, and the
-  * pruned index's `flatForm = false` marker keeps the fixed-point batch
-  * from re-pruning its own output.
+  * execution happens INSIDE optimization (one bounded collect of the
+  * dim's keys); a thread-local re-entrancy guard keeps that sub-query's
+  * own optimization from recursing, and the pruned index's
+  * `flatForm = false` marker keeps the fixed-point batch from re-pruning
+  * its own output.
   */
 object DimFilePrune {
 

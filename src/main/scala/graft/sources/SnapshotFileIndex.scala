@@ -10,16 +10,16 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** CATALYST-NATIVE data skipping for [[Snapshots]] tables: a
   * [[FileIndex]] over the version's manifest, so the ordinary Spark scan
-  * path — not a bespoke `scanPruned*` call — decides which files to read.
-  * `FileSourceStrategy` pushes the query's data filters into
-  * [[listFiles]], where each file's manifest evidence ([min,max]
-  * envelopes, UTF-8 string envelopes, bloom filters) proves files
-  * row-free and drops them BEFORE the scan is planned. The win over the
-  * explicit `scanPrunedBox` API: every `.filter`/`WHERE` on a
-  * [[Snapshots.readIndexed]] frame prunes automatically, composed
-  * filters (`AND`/`OR`/`IN`/`BETWEEN`/prefix) prune too, and the file
-  * cut shows up in the scan's own `numFiles` metric — at 100 TB the
-  * planner reads manifest evidence (KBs) instead of footers (TBs).
+  * path decides which files to read — the one file-skipping path for
+  * user filters and optimizer rules alike. `FileSourceStrategy` pushes
+  * the query's data filters into [[listFiles]], where each file's
+  * manifest evidence ([min,max] envelopes, UTF-8 string envelopes, bloom
+  * filters) proves files row-free and drops them BEFORE the scan is
+  * planned. Every `.filter`/`WHERE` on a [[Snapshots.readIndexed]]
+  * frame prunes automatically, composed filters
+  * (`AND`/`OR`/`IN`/`BETWEEN`/prefix) prune too, and the file cut shows
+  * up in the scan's own `numFiles` metric — at 100 TB the planner reads
+  * manifest evidence (KBs) instead of footers (TBs).
   *
   * Soundness rule: a file is dropped only when the evidence PROVES no
   * row can match (`mayMatch` returns false); any unrecognized predicate
@@ -183,16 +183,6 @@ final class SnapshotFileIndex private[sources] (spark: SparkSession,
     (segPlan.map(_.segments.size).getOrElse(0),
       segPlan.map(_.segments.size).getOrElse(0))
 
-  /** The (kept entries, skipped file count) under an IN-set key probe —
-    * the evidence surface the automatic dim-prune rule
-    * ([[graft.plans.DimFilePruneRule]]) computes from. Segment-planning
-    * mode probes the SEGMENT ROLLUPS first and parses only surviving
-    * segments' entries, so the cut costs O(segments + kept files), not
-    * O(files) — the rule must not defeat the planning economics this
-    * index exists for on a million-file table. `values` must already be
-    * in the column's recorded type (bloom hashes are width-sensitive);
-    * an empty set skips everything without parsing a single segment.
-    */
   /** Total recorded rows — answered from the segment ROLLUPS in
     * segment-planning mode (each rollup records its members' row total),
     * per-file entries otherwise. The dim-side bound probe of the
@@ -204,20 +194,32 @@ final class SnapshotFileIndex private[sources] (spark: SparkSession,
     case None => entries.map(_.rows).sum
   }
 
+  import SnapshotFileIndex.prunedEntriesInOver
+
+  /** The (kept entries, skipped file count) under an IN-set key probe —
+    * the evidence surface the automatic dim-prune rule
+    * ([[graft.plans.DimFilePruneRule]]) computes from. Segment-planning
+    * mode probes the SEGMENT ROLLUPS first and parses only surviving
+    * segments' entries, so the cut costs O(segments + kept files), not
+    * O(files) — the rule must not defeat the planning economics this
+    * index exists for on a million-file table. `values` must already be
+    * in the column's recorded type (bloom hashes are width-sensitive);
+    * an empty set skips everything without parsing a single segment.
+    */
   private[graft] def pruneByKeys(col: String, values: Seq[Any])
       : (Seq[Snapshots.FileEntry], Int) = segPlan match {
     case Some(ix) =>
       // segment-plannable ⇒ no evolution events ⇒ no widen eras
       val (keptSegs, skippedSegs) =
-        Snapshots.prunedEntriesInOver(ix.segments, Seq.empty, col, values)
-      val (kept, skippedFiles) = Snapshots.prunedEntriesInOver(
+        prunedEntriesInOver(ix.segments, Seq.empty, col, values)
+      val (kept, skippedFiles) = prunedEntriesInOver(
         keptSegs.flatMap(parsedSegment), Seq.empty, col, values)
       // a segment entry's `seq` field carries its file count
       (kept, skippedFiles.size + skippedSegs.map(_.seq).sum)
     case None =>
       val widens = Snapshots.widenEvents(props).filter(_.name == col)
       val (kept, skipped) =
-        Snapshots.prunedEntriesInOver(entries, widens, col, values)
+        prunedEntriesInOver(entries, widens, col, values)
       (kept, skipped.size)
   }
 
@@ -556,6 +558,63 @@ object SnapshotFileIndex {
       kept: Seq[Snapshots.FileEntry]): SnapshotFileIndex =
     new SnapshotFileIndex(spark, fi.table, fi.version, Some(kept),
       Some(fi.dataSchema))
+
+  /** The (kept, skipped) partition of `files` under an IN-set probe of
+    * `col` — the evidence core of [[SnapshotFileIndex.pruneByKeys]]. A
+    * file is kept iff SOME value might be in it: the integral [min,max]
+    * envelope contains it (numeric values), the UTF-8 string envelope
+    * contains it (string values), and the bloom says maybe (when
+    * recorded; widen-era-aware — see [[Snapshots.narrowReps]]). Files
+    * with no evidence are always kept. Segment-rollup entries are
+    * [[Snapshots.FileEntry]]-shaped with sound evidence (a rollup
+    * envelope contains every member file's, blooms are OR'd), so the
+    * same probe prunes whole segments before any per-file entry is
+    * parsed. `widens` must be the column's widen events — callers on the
+    * segment path pass none (segment planning requires event-freedom).
+    */
+  private def prunedEntriesInOver(files: Seq[Snapshots.FileEntry],
+      widens: Seq[Snapshots.WidenEvent], col: String, values: Seq[Any])
+      : (Seq[Snapshots.FileEntry], Seq[Snapshots.FileEntry]) = {
+    import Snapshots.{FileEntry, bloomHash, mightContain, narrowReps}
+    // IndexedSeq: the partition loop below indexes per (file, value)
+    val hashes = values.map(bloomHash).toIndexedSeq
+    def strOk(e: FileEntry, value: Any): Boolean =
+      (value, e.strStats.get(col)) match {
+        case (s: String, Some((mn, mx))) =>
+          !ParquetMeta.u8Less(s, mn) && !ParquetMeta.u8Less(mx, s)
+        case _ => true
+      }
+    // integral values prune from the [min,max] envelope too — on a
+    // range-clustered key the envelope alone cuts most files before the
+    // bloom is even consulted (and tables with stats but no bloom still
+    // prune)
+    def intOk(e: FileEntry, value: Any): Boolean =
+      (value, e.stats.get(col)) match {
+        case (n: java.lang.Number, Some((mn, mx))) =>
+          mn <= n.longValue() && n.longValue() <= mx
+        case _ => true
+      }
+    // narrow-representation hashes hoisted ONCE per value (not per
+    // file × value — the probe loop runs files × values times and
+    // bloomHash constructs a Catalyst expression per call)
+    val narrowHashes: IndexedSeq[Seq[Long]] =
+      if (widens.isEmpty) IndexedSeq.empty
+      else values.map(v => narrowReps(v).map(bloomHash)).toIndexedSeq
+    def bloomOk(e: FileEntry, i: Int, h: Long): Boolean =
+      e.blooms.get(col) match {
+        case Some(bits) =>
+          // pre-widen era files store (and hashed) the NARROW physical
+          // type — probe the lossless narrowing too, or a correctly
+          // long-typed probe false-rejects an int-era file
+          if (widens.exists(_.boundary >= e.seq))
+            narrowHashes(i).exists(nh => mightContain(bits, nh))
+          else mightContain(bits, h)
+        case None => true
+      }
+    files.partition(e =>
+      values.iterator.zipWithIndex.exists { case (value, i) =>
+        strOk(e, value) && intOk(e, value) && bloomOk(e, i, hashes(i)) })
+  }
 
   /** A pushed comparison side resolved to manifest evidence: column
     * name, era default (if the pushdown shape was a null-fill

@@ -19,7 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    readers treat it as absent (the version simply never happened);
   *  - manifests carry per-file row counts and integral-column [min,max]
   *    envelopes ([[ParquetMeta.fileStats]]), so readers prune whole files
-  *    DRIVER-side before any Spark job ([[Snapshots.scanPruned]]).
+  *    DRIVER-side before any Spark job ([[SnapshotFileIndex]], behind
+  *    [[Snapshots.readIndexed]]).
   *
   * Scale note: manifest size grows with FILE count, not data size —
   * [[compactVersion]] keeps file count proportional to bytes, and because
@@ -43,16 +44,6 @@ object Snapshots {
       blooms: Map[String, Array[Long]] = Map.empty,
       strStats: Map[String, (String, String)] = Map.empty,
       seq: Int = 0)
-
-  final case class PrunedScan(df: DataFrame, filesRead: Int, filesSkipped: Int)
-
-  /** [[dimPrunedScan]]'s over-`maxKeys` refusal as a TYPE, so fallback
-    * paths (the streaming lookup join) match on it instead of sniffing
-    * message text; subclasses IllegalArgumentException to keep existing
-    * catch sites and specs valid.
-    */
-  final class UnselectiveDimException(msg: String)
-      extends IllegalArgumentException(msg)
 
   /** Outcome of a [[merge]] commit: the new version plus how many data
     * files the copy-on-write actually rewrote vs carried untouched — the
@@ -177,8 +168,8 @@ object Snapshots {
     * parent version's file set; `overwrite=true` replaces it (the file
     * BYTES of prior versions are untouched either way — that is what
     * keeps them readable). `statsCols` selects columns whose file
-    * envelopes the manifest records for [[scanPruned]] and the
-    * Catalyst-native skip path ([[SnapshotFileIndex]]): integral
+    * envelopes the manifest records for the Catalyst-native skip path
+    * ([[SnapshotFileIndex]]): integral
     * columns, plus DATE and TIMESTAMP columns — both are stored
     * physically as ordered integrals (epoch-day INT32 / epoch-micros
     * INT64, see [[withMicrosTs]]) in exactly the domain Catalyst
@@ -2134,9 +2125,9 @@ object Snapshots {
   }
 
   /** [[readFiles]] with the version's properties supplied by the caller —
-    * the segment-index scan path ([[scanPrunedBoxSegmented]]) carries the
-    * props in its index header so planning never re-reads the full
-    * manifest; everything else goes through [[readFiles]].
+    * the merge-on-read reader already holds them and may ask for the
+    * position-metadata columns; everything else goes through
+    * [[readFiles]].
     */
   private def readFilesWithProps(spark: SparkSession, table: String,
       version: Int, entries: Seq[FileEntry],
@@ -2244,242 +2235,7 @@ object Snapshots {
     else readFiles(spark, table, to, added)
   }
 
-  /** Scan `version` (default latest) keeping only files whose [min,max]
-    * envelope for `col` intersects [lo, hi] — files are skipped on the
-    * DRIVER from manifest stats, before any Spark task launches; the
-    * residual per-row filter is still applied, so the result is exactly
-    * the full scan's (files without recorded stats are always read).
-    */
-  def scanPruned(spark: SparkSession, table: String, col: String,
-      lo: Long, hi: Long, version: Option[Int] = None): PrunedScan =
-    scanPrunedBox(spark, table, Seq((col, lo, hi)), version)
-
-  /** Multi-dimensional box scan: a file survives only if EVERY queried
-    * dimension's envelope intersects its range — the consumer a Z-order
-    * layout ([[graft.functions.ZOrderExpression]]) exists for: committing
-    * in z-value order makes each file a small box in key space, so a box
-    * predicate on ANY dimension subset prunes most files from the
-    * manifest alone.
-    */
-  def scanPrunedBox(spark: SparkSession, table: String,
-      box: Seq[(String, Long, Long)], version: Option[Int] = None)
-      : PrunedScan = {
-    require(box.nonEmpty, "need at least one (col, lo, hi) dimension")
-    val v = version.getOrElse(latestVersion(spark, table))
-    val files = manifest(spark, table, v)
-    val (kept, skipped) = files.partition(e => box.forall {
-      case (col, lo, hi) => e.stats.get(col) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    })
-    import org.apache.spark.sql.functions.{col => c}
-    val pred = box.map { case (col, lo, hi) => c(col).between(lo, hi) }
-      .reduce(_ && _)
-    val df =
-      if (kept.isEmpty) read(spark, table, Some(v)).limit(0).filter(pred)
-      else readFiles(spark, table, v, kept).filter(pred)
-    PrunedScan(df, kept.size, skipped.size)
-  }
-
-  /** String-range scan pruned by per-file UTF-8 [min,max] envelopes
-    * (recorded via `strStatsCols` at commit): a file is skipped only
-    * when its envelope provably misses [lo, hi] under byte-wise UTF-8
-    * order — the order Spark, DuckDB and parquet statistics all compare
-    * strings with. Files without a recorded envelope are always read;
-    * the residual filter keeps the result exactly the full scan's.
-    */
-  def scanPrunedStr(spark: SparkSession, table: String, col: String,
-      lo: String, hi: String, version: Option[Int] = None): PrunedScan = {
-    val v = version.getOrElse(latestVersion(spark, table))
-    val files = manifest(spark, table, v)
-    val (kept, skipped) = files.partition(e => e.strStats.get(col) match {
-      case Some((mn, mx)) =>
-        // intersects iff NOT (mx < lo) and NOT (hi < mn)
-        !ParquetMeta.u8Less(mx, lo) && !ParquetMeta.u8Less(hi, mn)
-      case None => true
-    })
-    import org.apache.spark.sql.functions.{col => c, lit}
-    val pred = c(col) >= lit(lo) && c(col) <= lit(hi)
-    val df =
-      if (kept.isEmpty) read(spark, table, Some(v)).limit(0).filter(pred)
-      else readFiles(spark, table, v, kept).filter(pred)
-    PrunedScan(df, kept.size, skipped.size)
-  }
-
-  /** IN-list scan pruned by whatever per-file evidence the manifest
-    * holds: a file is kept iff SOME value of `values` might be in it —
-    * the integral [min,max] envelope contains the value (numeric
-    * values), AND the UTF-8 string envelope contains it (string
-    * values), AND the bloom says maybe (when recorded; widen-era-aware
-    * — see [[narrowReps]]). Files with no evidence are always read,
-    * and the residual `isin` filter makes the result exactly the full
-    * scan's either way. This is the posting-list/index serving scan: an
-    * equality set over a clustered column keeps only the files whose
-    * range or bloom admits at least one queried value.
-    */
-  def scanPrunedIn(spark: SparkSession, table: String, col: String,
-      values: Seq[Any], version: Option[Int] = None): PrunedScan = {
-    require(values.nonEmpty, "scanPrunedIn needs at least one value")
-    val v = version.getOrElse(latestVersion(spark, table))
-    val (kept, skipped) = prunedEntriesIn(spark, table, col, values, v)
-    import org.apache.spark.sql.functions.{col => c}
-    val pred = c(col).isin(values: _*)
-    val df =
-      if (kept.isEmpty) read(spark, table, Some(v)).limit(0).filter(pred)
-      else readFiles(spark, table, v, kept).filter(pred)
-    PrunedScan(df, kept.size, skipped.size)
-  }
-
-  /** The (kept, skipped) manifest partition under an IN-list probe — the
-    * evidence core of [[scanPrunedIn]], shared with the AUTOMATIC
-    * dim-driven prune rule ([[graft.plans.DimFilePruneRule]]), which
-    * swaps a join's fact-side [[SnapshotFileIndex]] for a pruned copy
-    * instead of building a residual-filtered frame. `values` must
-    * already be in the column's RECORDED type — bloom hashes are
-    * width-sensitive (see [[dimPrunedScan]]).
-    */
-  private[graft] def prunedEntriesIn(spark: SparkSession, table: String,
-      col: String, values: Seq[Any], v: Int)
-      : (Seq[FileEntry], Seq[FileEntry]) =
-    prunedEntriesInOver(manifest(spark, table, v),
-      widenEvents(properties(spark, table, v)).filter(_.name == col),
-      col, values)
-
-  /** The same IN-probe over an EXPLICIT entry list — what the segment
-    * tier needs: segment-rollup entries are [[FileEntry]]-shaped with
-    * sound evidence (a rollup envelope contains every member file's,
-    * blooms are OR'd), so probing them with this core prunes whole
-    * segments before any per-file entry is parsed
-    * ([[SnapshotFileIndex.pruneByKeys]]). `widens` must be the column's
-    * widen events — callers on the segment path pass none (segment
-    * planning requires event-freedom).
-    */
-  private[sources] def prunedEntriesInOver(files: Seq[FileEntry],
-      widens: Seq[WidenEvent], col: String, values: Seq[Any])
-      : (Seq[FileEntry], Seq[FileEntry]) = {
-    // IndexedSeq: the partition loop below indexes per (file, value)
-    val hashes = values.map(bloomHash).toIndexedSeq
-    def strOk(e: FileEntry, value: Any): Boolean =
-      (value, e.strStats.get(col)) match {
-        case (s: String, Some((mn, mx))) =>
-          !ParquetMeta.u8Less(s, mn) && !ParquetMeta.u8Less(mx, s)
-        case _ => true
-      }
-    // integral values prune from the [min,max] envelope too — on a
-    // range-clustered key the envelope alone cuts most files before the
-    // bloom is even consulted (and tables with stats but no bloom still
-    // prune)
-    def intOk(e: FileEntry, value: Any): Boolean =
-      (value, e.stats.get(col)) match {
-        case (n: java.lang.Number, Some((mn, mx))) =>
-          mn <= n.longValue() && n.longValue() <= mx
-        case _ => true
-      }
-    // narrow-representation hashes hoisted ONCE per value (not per
-    // file × value — the probe loop runs files × values times and
-    // bloomHash constructs a Catalyst expression per call)
-    val narrowHashes: IndexedSeq[Seq[Long]] =
-      if (widens.isEmpty) IndexedSeq.empty
-      else values.map(v => narrowReps(v).map(bloomHash)).toIndexedSeq
-    def bloomOk(e: FileEntry, i: Int, h: Long): Boolean =
-      e.blooms.get(col) match {
-        case Some(bits) =>
-          // pre-widen era files store (and hashed) the NARROW physical
-          // type — probe the lossless narrowing too, or a correctly
-          // long-typed probe false-rejects an int-era file
-          if (widens.exists(_.boundary >= e.seq))
-            narrowHashes(i).exists(nh => mightContain(bits, nh))
-          else mightContain(bits, h)
-        case None => true
-      }
-    files.partition(e =>
-      values.iterator.zipWithIndex.exists { case (value, i) =>
-        strOk(e, value) && intOk(e, value) && bloomOk(e, i, hashes(i)) })
-  }
-
-  /** DYNAMIC FILE PRUNING from a dimension frame — the join shape that
-    * dominates a 100 TB star schema: a SELECTIVE dim filter should cut
-    * the FACT table's files before the join, not after a full scan.
-    * Collects the dim side's distinct join keys (bounded — the same
-    * premise as broadcasting that dim into the join itself), prunes the
-    * fact's files through every evidence tier [[scanPrunedIn]] holds
-    * (integral envelopes, UTF-8 string envelopes, blooms), and returns
-    * the pruned fact frame with its residual `isin` filter — join it to
-    * the dim as usual; AQE sees the post-prune size and broadcasts the
-    * dim at runtime. Keys are CAST to the fact column's RECORDED type
-    * before hashing (an int dim key probing a long fact column's bloom
-    * would miss — the hash is width-sensitive). Refuses loudly above
-    * `maxKeys` — an unselective dim is not a pruning opportunity, read
-    * the table plainly.
-    */
-  def dimPrunedScan(spark: SparkSession, table: String, col: String,
-      dim: DataFrame, dimCol: String, maxKeys: Int = 100000,
-      version: Option[Int] = None): PrunedScan = {
-    val v = version.getOrElse(latestVersion(spark, table))
-    val factType = properties(spark, table, v).get(SchemaProp)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .filter(_.fieldNames.contains(col))
-      .map(_.apply(col).dataType)
-      .getOrElse(throw new IllegalArgumentException(
-        s"dimPrunedScan: $table records no schema field '$col'"))
-    import org.apache.spark.sql.functions.{col => c}
-    // ordered collect: a bare distinct().collect() returns keys in
-    // partition-race order, which would embed a run-varying literal
-    // list in the residual isin (plan-fingerprint flap, and needless
-    // plan-cache misses for repeated scans of the same dim slice)
-    val keys = dim.select(c(dimCol).cast(factType).as(dimCol)).na.drop()
-      .distinct().orderBy(c(dimCol)).limit(maxKeys + 1)
-      .collect().map(_.get(0)).toSeq
-    if (keys.size > maxKeys) throw new UnselectiveDimException(
-      s"dimPrunedScan: dim side exceeds $maxKeys distinct keys — " +
-        "unselective; read the fact table plainly and join")
-    if (keys.isEmpty)
-      return PrunedScan(read(spark, table, Some(v)).limit(0), 0,
-        manifest(spark, table, v).size)
-    scanPrunedIn(spark, table, col, keys, Some(v))
-  }
-
-  /** Equality scan pruned by per-file BLOOM filters: if `value`'s two
-    * probe bits are not both set in a file's bloom, the file provably
-    * does not contain the value and is skipped driver-side. This is the
-    * skip a hash-distributed column needs — its per-file [min,max] spans
-    * the whole domain, so range stats prune nothing. `value`'s Scala
-    * type must match the column type (the hash is type-sensitive). Files
-    * without a recorded bloom are always read; the residual filter makes
-    * the result exactly the full scan's either way.
-    */
-  def scanPrunedEq(spark: SparkSession, table: String, col: String,
-      value: Any, version: Option[Int] = None): PrunedScan = {
-    val v = version.getOrElse(latestVersion(spark, table))
-    val files = manifest(spark, table, v)
-    val h = bloomHash(value)
-    val widens = widenEvents(properties(spark, table, v))
-      .filter(_.name == col)
-    val (kept, skipped) = files.partition(e => e.blooms.get(col) match {
-      case Some(bits) =>
-        // pre-widen era files hashed the narrow physical type — see
-        // [[narrowReps]]
-        if (widens.exists(_.boundary >= e.seq))
-          narrowReps(value).exists(r => mightContain(bits, bloomHash(r)))
-        else mightContain(bits, h)
-      case None => true
-    })
-    import org.apache.spark.sql.functions.{col => c, lit}
-    val df =
-      if (kept.isEmpty) read(spark, table, Some(v)).limit(0)
-      else readFiles(spark, table, v, kept)
-    PrunedScan(df.filter(c(col) === lit(value)), kept.size, skipped.size)
-  }
-
   // --- two-level manifests: the segment-index (manifest-list) tier --------
-
-  /** Outcome of a segment-pruned scan: files skipped counts BOTH whole
-    * skipped segments' files and per-file skips inside read segments.
-    */
-  final case class SegPrunedScan(df: DataFrame, segmentsRead: Int,
-      segmentsSkipped: Int, filesRead: Int, filesSkipped: Int)
 
   private def segDir(root: Path, v: Int): Path =
     new Path(new Path(root, "_manifests"), f"v$v%06d.segments")
@@ -2501,11 +2257,6 @@ object Snapshots {
     * answerable without parsing any per-file segment.
     */
   val SegMasksProp = "graft.segix.masks"
-
-  /** Number of files a segment entry covers (rides the codec's `seq`
-    * field — always > 0, so segment lines always serialize in full).
-    */
-  private def segFileCount(e: FileEntry): Int = e.seq
 
   /** Build the SEGMENT INDEX of a version — the manifest-list tier this
     * format's own scaladoc promises at 100 TB: planning over a
@@ -2701,56 +2452,6 @@ object Snapshots {
     readEntriesFileOpt(fs, p).getOrElse(throw new IllegalStateException(
       s"Snapshots.segmentEntries: segment ${seg.path} of $table " +
         s"v$version missing or corrupt")).files
-  }
-
-  /** Multi-dimensional box scan through the SEGMENT INDEX
-    * ([[buildSegmentIndex]] must have run for the version): segment
-    * envelopes prune whole segments first, only surviving segments'
-    * entry files are opened for per-file pruning, and the version's
-    * properties ride the index header — planning cost is proportional
-    * to the surviving fraction, never the table's file count, and the
-    * full manifest is never opened. The residual predicate keeps the
-    * result exactly [[scanPrunedBox]]'s (SegmentIndexSpec pins the
-    * equality and the skip counts).
-    */
-  def scanPrunedBoxSegmented(spark: SparkSession, table: String,
-      box: Seq[(String, Long, Long)], version: Option[Int] = None)
-      : SegPrunedScan = {
-    require(box.nonEmpty, "need at least one (col, lo, hi) dimension")
-    val (fs, root) = fsOf(spark, table)
-    val v = version.getOrElse(latestVersion(spark, table))
-    val index = readEntriesFileOpt(fs, new Path(segDir(root, v), "index"))
-      .getOrElse(throw new IllegalStateException(
-        s"Snapshots.scanPrunedBoxSegmented: no segment index for $table " +
-          s"v$v — run buildSegmentIndex first"))
-    def boxKeep(stats: Map[String, (Long, Long)]): Boolean = box.forall {
-      case (c, lo, hi) => stats.get(c).forall { case (mn, mx) =>
-        mx >= lo && mn <= hi }
-    }
-    val (keptSegs, skippedSegs) = index.files.partition(e => boxKeep(e.stats))
-    // segment paths are relative to _manifests (they may point into an
-    // ANCESTOR version's segment dir — incremental builds reuse full
-    // segments by reference); bare legacy names resolve into this
-    // version's own dir
-    val mfDir = new Path(root, "_manifests")
-    val entries = keptSegs.flatMap { se =>
-      val p = if (se.path.contains("/")) new Path(mfDir, se.path)
-        else new Path(segDir(root, v), se.path)
-      readEntriesFileOpt(fs, p)
-        .getOrElse(throw new IllegalStateException(
-          s"Snapshots.scanPrunedBoxSegmented: segment ${se.path} of " +
-            s"$table v$v missing or corrupt"))
-        .files
-    }
-    val (kept, skipped) = entries.partition(e => boxKeep(e.stats))
-    import org.apache.spark.sql.functions.{col => c}
-    val pred = box.map { case (col2, lo, hi) => c(col2).between(lo, hi) }
-      .reduce(_ && _)
-    val df =
-      if (kept.isEmpty) read(spark, table, Some(v)).limit(0).filter(pred)
-      else readFilesWithProps(spark, table, v, kept, index.props).filter(pred)
-    SegPrunedScan(df, keptSegs.size, skippedSegs.size, kept.size,
-      skipped.size + skippedSegs.map(segFileCount).sum)
   }
 
   /** Copy-on-write MERGE into the latest version: each `upserts` row
@@ -3471,8 +3172,8 @@ object Snapshots {
     * when it was computed, so later appends are never affected.
     *
     * The position scan reads only what the predicate needs (Catalyst
-    * prunes columns; at scale, pair with [[scanPruned]]-recorded stats
-    * so file pruning bounds it further). A concurrent commit that
+    * prunes columns; at scale, recorded `statsCols` envelopes let file
+    * pruning bound it further). A concurrent commit that
     * REWRITES a referenced file (compaction/merge) would silently
     * strand the positions — the publish re-validates that every
     * referenced file name is still live in the final parent manifest
@@ -4352,7 +4053,7 @@ object Snapshots {
   /** Driver-side twin of the write path's probe computation: same
     * xxhash64 (Catalyst expression, same seed), same two positions.
     */
-  private def bloomHash(value: Any): Long = {
+  private[sources] def bloomHash(value: Any): Long = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
     XxHash64(Seq(Literal.create(value)), 42L).eval(null).asInstanceOf[Long]
   }
@@ -4385,7 +4086,7 @@ object Snapshots {
     case x => Seq(x)
   }
 
-  private def mightContain(bits: Array[Long], h: Long): Boolean = {
+  private[sources] def mightContain(bits: Array[Long], h: Long): Boolean = {
     val b1 = (((h % BloomBits) + BloomBits) % BloomBits).toInt
     val b2 = ((h >>> 10) % BloomBits).toInt
     def set(b: Int) = (bits(b >> 6) & (1L << (b & 63))) != 0

@@ -90,32 +90,35 @@ class InvertedIndexSpec extends SparkSpec {
         tbl, strStatsCols = Seq("token"), bloomCols = Seq("token"))
     }
     val terms = Seq("vector", "hash", "stream")
-    val pruned = Snapshots.scanPrunedIn(spark, tbl, "token", terms)
-    assert(pruned.filesSkipped > 0,
-      s"token-clustered files should skip: kept=${pruned.filesRead}")
-    // pruned scan ≡ unpruned residual scan
+    val (postings, ix) = Snapshots.readIndexed(spark, tbl)
+    val pruned = postings.filter(col("token").isin(terms: _*))
+    val n = pruned.count()
+    val (kept, total) = ix.lastPrune
+    assert(kept < total, s"token-clustered files should skip: kept=$kept")
+    // pruned scan ≡ unpruned scan
     val unpruned = Snapshots.read(spark, tbl)
       .filter(col("token").isin(terms: _*))
-    assert(pruned.df.count() === unpruned.count())
+    assert(n === unpruned.count())
     // append-maintained index answers exactly the from-scratch search
     val totals = docs.agg(count(lit(1)).cast("bigint").as("n_docs"))
-    val stored = InvertedIndex.rankedSearch(pruned.df, totals, terms)
+    val stored = InvertedIndex.rankedSearch(pruned, totals, terms)
       .collect().toSeq
     val scratch = InvertedIndex.rankedSearch(
       InvertedIndex.postings(docs), totals, terms).collect().toSeq
     assert(stored === scratch && stored.nonEmpty)
   }
 
-  test("scanPrunedIn without evidence reads everything, stays exact") {
+  test("an indexed IN filter without evidence reads everything, stays " +
+      "exact") {
+    import graft.sources.IndexedCount
     import graft.sources.Snapshots
     val tbl = java.nio.file.Files.createTempDirectory("graft_invidx_ne")
       .toString + "/t"
     val post = InvertedIndex.postings(tiny)
     Snapshots.commit(post.repartition(3), tbl) // no stats, no blooms
-    val p = Snapshots.scanPrunedIn(spark, tbl, "token", Seq("join"))
-    assert(p.filesSkipped === 0)
-    assert(p.df.count() ===
-      post.filter(col("token") === "join").count())
+    val c = IndexedCount.of(spark, tbl, col("token").isin("join"))
+    assert(c.skipped === 0)
+    assert(c.rows === post.filter(col("token") === "join").count())
   }
 
   test("a term absent from the corpus empties the AND result") {

@@ -6,9 +6,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions._
 
 /** The AUTOMATIC dim-driven file prune ([[DimFilePruneRule]]): a plain
-  * `fact.join(dim)` over an enabled indexed snapshot table must get the
-  * same file cut [[Snapshots.dimPrunedScan]] gives explicitly — and must
-  * leave every unprovable shape untouched.
+  * `fact.join(dim)` over an enabled indexed snapshot table must have its
+  * fact files cut by the dim's join keys — and must leave every
+  * unprovable shape untouched.
   */
 class DimFilePruneSpec extends SparkSpec {
 

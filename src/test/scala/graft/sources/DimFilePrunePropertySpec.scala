@@ -1,20 +1,25 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.plans.DimFilePrune
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-/** Property test for [[Snapshots.dimPrunedScan]]'s soundness surface —
-  * like [[SnapshotFileIndexPropertySpec]] pins indexed reads, this pins
-  * the dim-driven cut: for ARBITRARY dim key sets (hits, misses,
-  * out-of-domain values, duplicates, empty — presented at the recorded
-  * width and at a NARROWER one), the pruned scan must return exactly the
-  * rows a plain read filtered to those keys returns. The widened table
+/** Property test for the automatic dim-driven file cut
+  * ([[graft.plans.DimFilePruneRule]]) — like
+  * [[SnapshotFileIndexPropertySpec]] pins indexed reads, this pins the
+  * join cut: for ARBITRARY dim key sets (hits, misses, out-of-domain
+  * values, duplicates, empty — presented at the recorded width and at a
+  * NARROWER one), a plain `fact.join(dim, k === dk)` over an enabled
+  * indexed fact must return exactly the rows of the unpruned join. The
+  * widened table reads through [[Snapshots.readIndexedEvolved]] and
   * drives the era-aware bloom probe (pre-widen files hashed the narrow
   * type) under the same random key sets — the class of silent row loss
-  * r14's widen fix closed, now property-pinned on this API too.
+  * the widen-aware probe closed. The empty-dim and over-limit edges are
+  * pinned in DimFilePruneSpec.
   */
-class DimPrunedScanPropertySpec extends SparkSpec {
+class DimFilePrunePropertySpec extends SparkSpec {
 
   private def check(prop: Prop, minSuccessful: Int): Unit = {
     val res = SCTest.check(
@@ -22,7 +27,12 @@ class DimPrunedScanPropertySpec extends SparkSpec {
     assert(res.passed, res.status.toString)
   }
 
-  // ---- fixtures (built once per suite) ----------------------------------
+  // ---- fixtures (built once per suite, each enabled for the rule) -------
+
+  private def enabled(tbl: String): String = {
+    DimFilePrune.enable(spark, tbl)
+    tbl
+  }
 
   /** k long, range-clustered (envelopes) AND bloomed — both integral
     * evidence tiers active at once.
@@ -35,11 +45,8 @@ class DimPrunedScanPropertySpec extends SparkSpec {
       .toDF("k", "v")
       .repartitionByRange(8, col("k")).sortWithinPartitions(col("k"))
     Snapshots.commit(df, tbl, statsCols = Seq("k"), bloomCols = Seq("k"))
-    tbl
+    enabled(tbl)
   }
-  private lazy val factRows: Map[Long, Long] =
-    Snapshots.read(spark, factTbl).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   /** Era 1 stores k as INT (bloom hashed at int width), then k widens to
     * long and era 2 commits long rows — a key in [0,31] probes pre-widen
@@ -57,11 +64,8 @@ class DimPrunedScanPropertySpec extends SparkSpec {
     val df2 = (32L until 64L).map(i => (i, i * 10L)).toDF("k", "v")
       .repartitionByRange(4, col("k")).sortWithinPartitions(col("k"))
     Snapshots.commit(df2, tbl, statsCols = Seq("k"), bloomCols = Seq("k"))
-    tbl
+    enabled(tbl)
   }
-  private lazy val widenRows: Map[Long, Long] =
-    Snapshots.read(spark, widenTbl).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   /** s string with UTF-8 envelopes only — the string evidence tier. */
   private lazy val strTbl: String = {
@@ -71,11 +75,8 @@ class DimPrunedScanPropertySpec extends SparkSpec {
     val df = (0 until 64).map(i => (f"s$i%03d", i.toLong)).toDF("s", "v")
       .repartitionByRange(8, col("s")).sortWithinPartitions(col("s"))
     Snapshots.commit(df, tbl, strStatsCols = Seq("s"))
-    tbl
+    enabled(tbl)
   }
-  private lazy val strRows: Map[String, Long] =
-    Snapshots.read(spark, strTbl).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
 
   // ---- generators --------------------------------------------------------
 
@@ -97,62 +98,72 @@ class DimPrunedScanPropertySpec extends SparkSpec {
 
   // ---- the property -------------------------------------------------------
 
-  /** pruned-scan rows ≡ driver-side filter of the full table. `narrow`
-    * presents the dim keys as INT (dropping unrepresentable ones — a
-    * narrower dim column is exactly the width mismatch the recorded-type
-    * cast exists for).
+  // how many joins the rule actually cut — a property that never fired
+  // would pin nothing
+  private val cuts = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  private def rows(df: DataFrame): List[String] =
+    df.collect().map(_.toSeq.mkString("|")).sorted.toList
+
+  /** Pruned join rows ≡ unpruned join rows. `fact` is the enabled
+    * indexed read; the unpruned side joins the plain read, which the
+    * rule never touches.
     */
-  private def soundOn(tbl: String, full: Map[Long, Long], keys: List[Long],
+  private def sameJoin(tbl: String, fact: DataFrame, key: String,
+      dim: DataFrame, show: String): Prop = {
+    DimFilePrune.lastCut = None
+    val got = rows(fact.join(dim, col(key) === col("dk")))
+    if (DimFilePrune.lastCut.nonEmpty) cuts.incrementAndGet()
+    val want = rows(Snapshots.read(spark, tbl)
+      .join(dim, col(key) === col("dk")))
+    Prop(got == want) :| s"$show got=$got want=$want"
+  }
+
+  /** `narrow` presents the dim keys as INT (dropping unrepresentable
+    * ones — a narrower dim column is exactly the width mismatch the
+    * rule's recorded-type narrowing exists for).
+    */
+  private def soundOn(tbl: String, fact: DataFrame, keys: List[Long],
       narrow: Boolean): Prop = {
     import spark.implicits._
     val ks = if (narrow) keys.filter(k => k.isValidInt) else keys
     val dim =
       if (narrow) ks.map(_.toInt).toDF("dk")
       else ks.toDF("dk")
-    val ps = Snapshots.dimPrunedScan(spark, tbl, "k", dim, "dk")
-    val got = ps.df.collect().map(r => (r.getLong(0), r.getLong(1)))
-      .sorted.toList
-    val want = ks.distinct.sorted.flatMap(k => full.get(k).map(v => (k, v)))
-    Prop(got == want) :| s"keys=$ks narrow=$narrow got=$got want=$want"
+    sameJoin(tbl, fact, "k", dim, s"keys=$ks narrow=$narrow")
   }
 
-  test("pruned scan ≡ plain filtered read for random dim key sets " +
+  private def checkFired(): Unit = {
+    assert(cuts.get > 0, "the rule never cut a join")
+    cuts.set(0)
+  }
+
+  test("pruned join ≡ unpruned join for random dim key sets " +
       "(envelopes + blooms, long and int-presented keys)") {
     check(Prop.forAll(longKeys, Gen.oneOf(true, false)) { (keys, narrow) =>
-      soundOn(factTbl, factRows, keys, narrow)
+      soundOn(factTbl, Snapshots.readIndexed(spark, factTbl)._1, keys,
+        narrow)
     }, minSuccessful = 60)
+    checkFired()
   }
 
-  test("pruned scan ≡ plain filtered read across a k int→long WIDEN " +
-      "(pre-widen blooms hashed narrow; era-aware probe must not lose rows)") {
+  test("pruned join ≡ unpruned join across a k int→long WIDEN read " +
+      "through readIndexedEvolved (pre-widen blooms hashed narrow; the " +
+      "era-aware probe must not lose rows)") {
     check(Prop.forAll(longKeys, Gen.oneOf(true, false)) { (keys, narrow) =>
-      soundOn(widenTbl, widenRows, keys, narrow)
+      soundOn(widenTbl, Snapshots.readIndexedEvolved(spark, widenTbl)._1,
+        keys, narrow)
     }, minSuccessful = 60)
+    checkFired()
   }
 
-  test("pruned scan ≡ plain filtered read for random STRING key sets " +
+  test("pruned join ≡ unpruned join for random STRING key sets " +
       "(UTF-8 envelope tier)") {
     import spark.implicits._
     check(Prop.forAll(strKeys) { keys =>
-      val dim = keys.toDF("dk")
-      val ps = Snapshots.dimPrunedScan(spark, strTbl, "s", dim, "dk")
-      val got = ps.df.collect().map(r => (r.getString(0), r.getLong(1)))
-        .sorted.toList
-      val want = keys.distinct.sorted
-        .flatMap(k => strRows.get(k).map(v => (k, v)))
-      Prop(got == want) :| s"keys=$keys got=$got want=$want"
+      sameJoin(strTbl, Snapshots.readIndexed(spark, strTbl)._1, "s",
+        keys.toDF("dk"), s"keys=$keys")
     }, minSuccessful = 60)
-  }
-
-  test("over-limit dims refuse loudly; empty dims read zero files") {
-    import spark.implicits._
-    val e = intercept[IllegalArgumentException] {
-      Snapshots.dimPrunedScan(spark, factTbl, "k",
-        (0L until 64L).toDF("dk"), "dk", maxKeys = 4)
-    }
-    assert(e.getMessage.contains("unselective"))
-    val ps = Snapshots.dimPrunedScan(spark, factTbl, "k",
-      List.empty[Long].toDF("dk"), "dk")
-    assert(ps.filesRead === 0 && ps.df.count() === 0L)
+    checkFired()
   }
 }

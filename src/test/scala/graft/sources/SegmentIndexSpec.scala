@@ -4,9 +4,9 @@ import graft.SparkSpec
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-/** The manifest-list tier: segment index build, segment-level pruning,
-  * exactness vs the flat-manifest scan, and its crash/idempotence
-  * discipline.
+/** The manifest-list tier: segment index build, segment-level pruning
+  * under [[Snapshots.readIndexed]], exactness vs the flat-manifest scan,
+  * and its crash/idempotence discipline.
   */
 class SegmentIndexSpec extends SparkSpec {
 
@@ -33,14 +33,15 @@ class SegmentIndexSpec extends SparkSpec {
     buildKeyed(tbl)
     val nSegs = Snapshots.buildSegmentIndex(spark, tbl, segSize = 4)
     assert(nSegs === 8)
-    val seg = Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 9L, 14L)))
-    val flat = Snapshots.scanPrunedBox(spark, tbl, Seq(("k", 9L, 14L)))
+    val box = col("k").between(9L, 14L)
+    val (seg, ix) = Snapshots.readIndexed(spark, tbl)
+    val got = seg.filter(box).orderBy("k", "v").collect().toSeq
     // keys 9..14 live in files 9..14 -> segments 2 (8-11) and 3 (12-15)
-    assert(seg.segmentsRead === 2 && seg.segmentsSkipped === 6)
-    assert(seg.filesRead === flat.filesRead)
-    assert(seg.filesRead + seg.filesSkipped === 32)
-    assert(seg.df.orderBy("k", "v").collect().toSeq ===
-      flat.df.orderBy("k", "v").collect().toSeq)
+    assert(ix.lastSegPrune === ((2, 8)), s"got ${ix.lastSegPrune}")
+    // the same 6 files a flat per-file evidence pass keeps, of 32
+    assert(ix.lastPrune === ((6, 32)), s"got ${ix.lastPrune}")
+    assert(got === Snapshots.read(spark, tbl).filter(box)
+      .orderBy("k", "v").collect().toSeq)
   }
 
   test("build is idempotent and a prebuilt index serves without the " +
@@ -54,13 +55,18 @@ class SegmentIndexSpec extends SparkSpec {
     val mtime = fs(tbl).getFileStatus(ixPath).getModificationTime
     assert(Snapshots.buildSegmentIndex(spark, tbl, segSize = 8) === 4)
     assert(fs(tbl).getFileStatus(ixPath).getModificationTime === mtime)
-    // the segmented scan never opens the flat manifest: make it
-    // unreadable and scan anyway (versions() still lists from the file
-    // name, so resolve the version explicitly)
-    val seg = Snapshots.scanPrunedBoxSegmented(spark, tbl,
-      Seq(("k", 0L, 3L)), version = Some(1))
-    assert(seg.segmentsRead === 1 && seg.segmentsSkipped === 3)
-    assert(seg.df.count() === 8) // 4 keys x 2 rows
+    // the segment-planned read never opens the flat manifest: move it
+    // aside and read anyway (versions() lists from the manifest file
+    // names, so resolve the version explicitly)
+    val mf = new Path(s"$tbl/_manifests/v000001.manifest")
+    val aside = new Path(s"$tbl/_manifests/v000001.aside")
+    assert(fs(tbl).rename(mf, aside))
+    try {
+      val (seg, ix) = Snapshots.readIndexed(spark, tbl, version = Some(1))
+      // 4 keys x 2 rows
+      assert(seg.filter(col("k").between(0L, 3L)).count() === 8)
+      assert(ix.lastSegPrune === ((1, 4)), s"got ${ix.lastSegPrune}")
+    } finally fs(tbl).rename(aside, mf)
   }
 
   test("incremental build: an append reuses the parent's full segments " +
@@ -81,21 +87,21 @@ class SegmentIndexSpec extends SparkSpec {
     assert(written === Array("index", "seg-00008"),
       s"append must write only the tail segment, wrote ${written.toSeq}")
     // the reused segments serve scans exactly like a full rebuild would
-    val seg = Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 9L, 14L)))
-    assert(seg.segmentsRead === 2 && seg.segmentsSkipped === 7)
-    assert(seg.filesRead + seg.filesSkipped === 34)
-    assert(seg.df.count() === 12)
-    val tail = Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 32L, 40L)))
-    assert(tail.segmentsRead === 1 && tail.df.count() === 2)
+    val (seg, ix) = Snapshots.readIndexed(spark, tbl)
+    assert(seg.filter(col("k").between(9L, 14L)).count() === 12)
+    assert(ix.lastSegPrune === ((2, 9)), s"got ${ix.lastSegPrune}")
+    assert(ix.lastPrune === ((6, 34)), s"got ${ix.lastPrune}")
+    assert(seg.filter(col("k").between(32L, 40L)).count() === 2)
+    assert(ix.lastSegPrune === ((1, 9)), s"got ${ix.lastSegPrune}")
     // compaction rewrites the layout: the prefix proof fails and the
     // index rebuilds in full under the new version's own dir
     val v3 = Snapshots.compactVersion(spark, tbl)
     assert(Snapshots.buildSegmentIndex(spark, tbl, segSize = 4) >= 1)
     val v3dir = new Path(f"$tbl/_manifests/v$v3%06d.segments")
     val v3Files = fs(tbl).listStatus(v3dir).map(_.getPath.getName)
-    assert(v3Files.count(_.startsWith("seg-")) ===
-      Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", Long.MinValue,
-        Long.MaxValue))).segmentsRead,
+    val (full, fullIx) = Snapshots.readIndexed(spark, tbl)
+    assert(full.count() === 66)
+    assert(v3Files.count(_.startsWith("seg-")) === fullIx.lastSegPrune._2,
       "full rebuild must own every segment it serves")
   }
 
@@ -110,32 +116,40 @@ class SegmentIndexSpec extends SparkSpec {
     assert(n === 1)
     // probe far away from both keys: the segment contains a stat-less
     // file, so its rolled envelope must NOT claim coverage of k
-    val seg = Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 50L, 60L)))
-    assert(seg.segmentsRead === 1, "stat-less member must keep the segment")
-    assert(seg.df.count() === 0) // residual filter still exact
+    val (seg, ix) = Snapshots.readIndexed(spark, tbl)
+    assert(seg.filter(col("k").between(50L, 60L)).count() === 0) // exact
+    assert(ix.lastSegPrune === ((1, 1)),
+      "stat-less member must keep the segment")
   }
 
-  test("scan refuses a version without an index; half-written index " +
-      "reads as absent") {
+  test("readIndexed plans flat without an index and over a half-written " +
+      "one; a repair build restores segment planning") {
     val tbl = freshTable("crash")
     buildKeyed(tbl)
-    val e = intercept[IllegalStateException] {
-      Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 0L, 1L)))
+    def probe(): SnapshotFileIndex = {
+      val (df, ix) = Snapshots.readIndexed(spark, tbl)
+      assert(df.filter(col("k").between(0L, 1L)).count() === 4)
+      ix
     }
-    assert(e.getMessage.contains("buildSegmentIndex"))
+    val none = probe()
+    assert(none.segmentParses.get === 0 && none.lastSegPrune === ((0, 0)))
+    assert(none.lastPrune === ((2, 32)), s"got ${none.lastPrune}")
     // simulate a crashed builder: index present but terminator-less
     val dir = new Path(s"$tbl/_manifests/v000001.segments")
     fs(tbl).mkdirs(dir)
     val out = fs(tbl).create(new Path(dir, "index"), true)
     out.write("graft-manifest-v1\nseg-00000\t64\tk=0:31".getBytes("UTF-8"))
     out.close()
-    intercept[IllegalStateException] {
-      Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 0L, 1L)))
-    }
+    val half = probe()
+    assert(half.segmentParses.get === 0 && half.lastSegPrune === ((0, 0)))
+    assert(half.lastPrune === ((2, 32)), s"got ${half.lastPrune}")
     // a later complete build repairs it
     assert(Snapshots.buildSegmentIndex(spark, tbl, segSize = 16) === 2)
-    assert(Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 0L, 1L)))
-      .df.count() === 4)
+    val repaired = probe()
+    assert(repaired.lastSegPrune === ((1, 2)),
+      s"got ${repaired.lastSegPrune}")
+    assert(repaired.segmentParses.get === 1)
+    assert(repaired.lastPrune === ((2, 32)), s"got ${repaired.lastPrune}")
   }
 
   test("segment blooms OR soundly: equality probe via index evidence") {
@@ -145,13 +159,15 @@ class SegmentIndexSpec extends SparkSpec {
       .repartition(8, col("k"))
     Snapshots.commit(df, tbl, bloomCols = Seq("k"))
     Snapshots.buildSegmentIndex(spark, tbl, segSize = 4)
-    val (fsys, root) = (fs(tbl), new Path(tbl))
-    // read the index back through the public scan: a box on a column
-    // with no range stats keeps everything (blooms are rolled, ranges
-    // absent), and the result is still exact
-    val seg = Snapshots.scanPrunedBoxSegmented(spark, tbl, Seq(("k", 3L, 3L)))
-    assert(seg.df.count() === 1)
-    assert(seg.segmentsRead + seg.segmentsSkipped === 2)
+    val (seg, ix) = Snapshots.readIndexed(spark, tbl)
+    // a range on a column with no range stats keeps every segment
+    // (blooms are rolled, ranges absent), and the result is still exact
+    assert(seg.filter(col("k").between(2L, 4L)).count() === 3)
+    assert(ix.lastSegPrune === ((2, 2)), s"got ${ix.lastSegPrune}")
+    // equality reaches the OR'd segment blooms: k = 3 lives in one file,
+    // so one segment survives
+    assert(seg.filter(col("k") === 3L).count() === 1)
+    assert(ix.lastSegPrune === ((1, 2)), s"got ${ix.lastSegPrune}")
   }
 
   test("readIndexed PLANS from the segment tier when an index exists: " +

@@ -1,7 +1,9 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.plans.DimFilePrune
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SnapshotsSpec extends SparkSpec {
@@ -43,18 +45,19 @@ class SnapshotsSpec extends SparkSpec {
     }
   }
 
-  test("scanPruned skips files by manifest envelope and loses no rows") {
+  test("indexed range filter skips files by manifest envelope and loses " +
+      "no rows") {
     val tbl = freshTable("skip")
     Snapshots.commit(orders.repartitionByRange(8, col("o_orderkey")), tbl,
       statsCols = Seq("o_orderkey"))
-    val ps = Snapshots.scanPruned(spark, tbl, "o_orderkey", 1L, 500L)
-    assert(ps.filesSkipped > 0, "tight range over 8 range-files must skip some")
-    assert(ps.filesRead + ps.filesSkipped === 8)
+    val c = IndexedCount.of(spark, tbl, col("o_orderkey").between(1L, 500L))
+    assert(c.skipped > 0, "tight range over 8 range-files must skip some")
+    assert(c.kept + c.skipped === 8)
     val expect = orders.filter(col("o_orderkey").between(1, 500)).count()
-    assert(ps.df.count() === expect)
+    assert(c.rows === expect)
     // a column without recorded stats never skips (correctness over speed)
-    val ps2 = Snapshots.scanPruned(spark, tbl, "o_totalprice", 0L, 1L)
-    assert(ps2.filesSkipped === 0 && ps2.filesRead === 8)
+    val c2 = IndexedCount.of(spark, tbl, col("o_totalprice").between(0L, 1L))
+    assert(c2.skipped === 0 && c2.kept === 8)
   }
 
   test("compactVersion shrinks file count, preserves content and history") {
@@ -94,21 +97,21 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.read(spark, tbl2).count() === 200)
   }
 
-  test("scanPrunedEq skips files via manifest blooms, soundly") {
+  test("indexed equality filter skips files via manifest blooms, soundly") {
     val tbl = freshTable("bloom")
     val o = spark.read.parquet(s"$sf001/orders.parquet")
       .select(col("o_orderkey"), col("o_custkey"))
     Snapshots.commit(o.repartition(8, col("o_custkey")), tbl,
       bloomCols = Seq("o_custkey"))
     val cust = o.agg(min(col("o_custkey"))).head().getLong(0)
-    val ps = Snapshots.scanPrunedEq(spark, tbl, "o_custkey", cust)
+    val c = IndexedCount.of(spark, tbl, col("o_custkey") === cust)
     // the customer hashes into ONE of the 8 custkey-clustered files;
     // blooms must prove absence for most of the rest (false positives ok)
-    assert(ps.filesSkipped >= 4, s"skipped only ${ps.filesSkipped}/8")
-    assert(ps.df.count() === o.filter(col("o_custkey") === cust).count())
+    assert(c.skipped >= 4, s"skipped only ${c.skipped}/8")
+    assert(c.rows === o.filter(col("o_custkey") === cust).count())
     // a column without a bloom never skips
-    val ps2 = Snapshots.scanPrunedEq(spark, tbl, "o_orderkey", 1L)
-    assert(ps2.filesSkipped === 0)
+    val c2 = IndexedCount.of(spark, tbl, col("o_orderkey") === 1L)
+    assert(c2.skipped === 0)
     // blooms survive compaction (carried like statsCols)
     Snapshots.compactVersion(spark, tbl, targetBytes = 1L << 14)
     val after = Snapshots.manifest(spark, tbl,
@@ -116,9 +119,9 @@ class SnapshotsSpec extends SparkSpec {
     assert(after.forall(_.blooms.contains("o_custkey")))
   }
 
-  test("dimPrunedScan cuts fact files from a selective dim's join keys " +
-      "(envelope + bloom), loses no rows, casts key widths, refuses " +
-      "unselective dims") {
+  test("a dim-pruned join cuts fact files from a selective dim's join " +
+      "keys (envelope + bloom), loses no rows, casts key widths, falls " +
+      "back to the plain join on unselective dims") {
     val tbl = freshTable("dfp")
     val li = spark.read.parquet(s"$sf001/lineitem.parquet")
       .select(col("l_suppkey"), col("l_extendedprice"))
@@ -133,31 +136,41 @@ class SnapshotsSpec extends SparkSpec {
       .select(col("s_suppkey"))
     val dimKeys = dim.collect().map(_.getLong(0)).toSet
     assert(dimKeys.nonEmpty)
-    val ps = Snapshots.dimPrunedScan(spark, tbl, "l_suppkey",
-      dim, "s_suppkey")
-    // the key is range-clustered, the dim is 1/25 of the key space —
-    // envelopes alone must cut files
-    assert(ps.filesSkipped > 0,
-      s"no file cut: read ${ps.filesRead}, skipped ${ps.filesSkipped}")
-    val want = li.filter(col("l_suppkey").isInCollection(dimKeys)).count()
-    assert(ps.df.count() === want)
-    // width-normalized hashing: an INT-typed dim key column must probe
-    // the LONG fact column's blooms correctly (cast before hash)
-    val psInt = Snapshots.dimPrunedScan(spark, tbl, "l_suppkey",
-      dim.select(col("s_suppkey").cast("int").as("s_suppkey")), "s_suppkey")
-    assert(psInt.df.count() === want,
-      "int-typed dim keys lost rows against the long fact column")
-    // empty dim → zero files read, empty result
-    val psEmpty = Snapshots.dimPrunedScan(spark, tbl, "l_suppkey",
-      dim.limit(0), "s_suppkey")
-    assert(psEmpty.filesRead === 0 && psEmpty.df.count() === 0L)
-    // unselective dim refuses loudly toward the plain join
-    val e = intercept[IllegalArgumentException] {
-      Snapshots.dimPrunedScan(spark, tbl, "l_suppkey",
-        li.select(col("l_suppkey").as("s_suppkey")), "s_suppkey",
-        maxKeys = 3)
+    // row count of the plain join over the indexed fact, and the rule's
+    // (table, kept, skipped) cut — None when it planned the join untouched
+    def prunedJoin(fact: String, factCol: String, d: DataFrame)
+        : (Long, Option[(String, Int, Int)]) = {
+      DimFilePrune.lastCut = None
+      val dk = d.select(col(d.columns.head).as("_dk"))
+      val n = Snapshots.readIndexed(spark, fact)._1
+        .join(dk, col(factCol) === col("_dk")).count()
+      (n, DimFilePrune.lastCut)
     }
-    assert(e.getMessage.contains("unselective"))
+    DimFilePrune.enable(spark, tbl)
+    try {
+      val (n, cut) = prunedJoin(tbl, "l_suppkey", dim)
+      // the key is range-clustered, the dim is 1/25 of the key space —
+      // envelopes alone must cut files
+      assert(cut.exists(_._3 > 0), s"no file cut: $cut")
+      val want = li.filter(col("l_suppkey").isInCollection(dimKeys)).count()
+      assert(n === want)
+      // width-normalized hashing: an INT-typed dim key column must probe
+      // the LONG fact column's blooms correctly (narrow before hash)
+      val (nInt, cutInt) = prunedJoin(tbl, "l_suppkey",
+        dim.select(col("s_suppkey").cast("int")))
+      assert(nInt === want,
+        "int-typed dim keys lost rows against the long fact column")
+      assert(cutInt === cut)
+      // empty dim → zero files read, empty result
+      val (nEmpty, cutEmpty) = prunedJoin(tbl, "l_suppkey",
+        dim.filter(col("s_suppkey") < 0))
+      assert(nEmpty === 0L && cutEmpty.exists(_._2 == 0), s"$cutEmpty")
+      // unselective dim: the rule backs off to the plain join
+      DimFilePrune.enable(spark, tbl, maxKeys = 3)
+      val (nWide, cutWide) = prunedJoin(tbl, "l_suppkey",
+        li.select(col("l_suppkey")).distinct())
+      assert(nWide === li.count() && cutWide.isEmpty, s"$cutWide")
+    } finally DimFilePrune.disable(spark, tbl)
     // STRING join keys prune through the UTF-8 envelope tier: a fact
     // range-clustered on a string key, dim'd by a handful of values
     val tblS = freshTable("dfps")
@@ -170,11 +183,12 @@ class SnapshotsSpec extends SparkSpec {
     val dimS = dim.select(
       concat(lit("sup-"), lpad(col("s_suppkey").cast("string"), 4, "0"))
         .as("sk"))
-    val psS = Snapshots.dimPrunedScan(spark, tblS, "sk", dimS, "sk")
-    assert(psS.filesSkipped > 0,
-      s"no string-envelope cut: ${psS.filesRead}/${psS.filesSkipped}")
-    val wantS = liS.join(dimS, "sk").count()
-    assert(psS.df.count() === wantS)
+    DimFilePrune.enable(spark, tblS)
+    try {
+      val (nS, cutS) = prunedJoin(tblS, "sk", dimS)
+      assert(cutS.exists(_._3 > 0), s"no string-envelope cut: $cutS")
+      assert(nS === liS.join(dimS, "sk").count())
+    } finally DimFilePrune.disable(spark, tblS)
   }
 
   test("z-ordered layout + box pruning beats a linear layout") {
@@ -191,15 +205,16 @@ class SnapshotsSpec extends SparkSpec {
     val linTbl = freshTable("linbox")
     Snapshots.commit(li.repartitionByRange(8, col("l_orderkey")), linTbl,
       statsCols = stats)
-    val box = Seq(("l_partkey", 1L, 25L), ("l_suppkey", 1L, 2L))
-    val z = Snapshots.scanPrunedBox(spark, zTbl, box)
-    val lin = Snapshots.scanPrunedBox(spark, linTbl, box)
-    assert(z.filesSkipped > lin.filesSkipped,
-      s"z skipped ${z.filesSkipped}, linear skipped ${lin.filesSkipped}")
+    val box = col("l_partkey").between(1L, 25L) &&
+      col("l_suppkey").between(1L, 2L)
+    val z = IndexedCount.of(spark, zTbl, box)
+    val lin = IndexedCount.of(spark, linTbl, box)
+    assert(z.skipped > lin.skipped,
+      s"z skipped ${z.skipped}, linear skipped ${lin.skipped}")
     // both layouts return the exact filter result
     val expect = li.filter(col("l_partkey").between(1, 25) &&
       col("l_suppkey").between(1, 2)).count()
-    assert(z.df.count() === expect && lin.df.count() === expect)
+    assert(z.rows === expect && lin.rows === expect)
   }
 
   test("half-written manifest (no terminator) reads as an absent version") {
@@ -257,10 +272,10 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.read(spark, tbl, Some(3)).count() === nOrig)
     // carried entries keep their envelopes → file skipping still works on
     // a range no carried file covers
-    val ps = Snapshots.scanPruned(spark, tbl, "o_orderkey",
-      1000000L, 2000000L)
-    assert(ps.filesSkipped > 0)
-    assert(ps.df.count() === 0)
+    val c = IndexedCount.of(spark, tbl,
+      col("o_orderkey").between(1000000L, 2000000L))
+    assert(c.skipped > 0)
+    assert(c.rows === 0)
   }
 
   test("merge key resolves case-insensitively, like col()/SQL — the " +
@@ -477,21 +492,24 @@ class SnapshotsSpec extends SparkSpec {
     assert(h(1).getString(3) === "src=b")
   }
 
-  test("scanPrunedStr skips files by UTF-8 envelope and loses no rows") {
+  test("indexed string-range filter skips files by UTF-8 envelope and " +
+      "loses no rows") {
     val tbl = freshTable("strskip")
     val o = spark.read.parquet(s"$sf001/orders.parquet")
       .select(col("o_orderkey"), col("o_orderpriority"))
     Snapshots.commit(o.repartitionByRange(5, col("o_orderpriority")), tbl,
       strStatsCols = Seq("o_orderpriority"))
-    val ps = Snapshots.scanPrunedStr(spark, tbl, "o_orderpriority",
-      "1-URGENT", "2-HIGH")
-    assert(ps.filesSkipped > 0, "priority-clustered files must skip")
+    val c = IndexedCount.of(spark, tbl,
+      col("o_orderpriority").between("1-URGENT", "2-HIGH"))
+    assert(c.skipped > 0, "priority-clustered files must skip")
     val expect = o.filter(col("o_orderpriority")
       .between("1-URGENT", "2-HIGH")).count()
-    assert(ps.df.count() === expect)
-    // a column without recorded string stats never skips
-    val ps2 = Snapshots.scanPrunedStr(spark, tbl, "o_orderkey", "a", "b")
-    assert(ps2.filesSkipped === 0)
+    assert(c.rows === expect)
+    // a string probe with no recorded string envelope behind it never
+    // skips
+    val c2 = IndexedCount.of(spark, tbl,
+      col("o_orderkey").cast("string").between("a", "b"))
+    assert(c2.skipped === 0)
     // envelopes survive incremental compaction (carried like statsCols)
     Snapshots.commit(o.limit(10), tbl)
     val sizes = Snapshots.manifest(spark, tbl, 2).map(e =>

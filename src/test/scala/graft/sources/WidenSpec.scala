@@ -38,7 +38,8 @@ class WidenSpec extends SparkSpec {
     assert(Snapshots.read(spark, tbl, Some(1)).schema("k").dataType ===
       org.apache.spark.sql.types.IntegerType)
     // pruning evidence still works across the widen (stats are longs)
-    assert(Snapshots.scanPruned(spark, tbl, "k", big, big).df.count() === 1)
+    val c = IndexedCount.evolved(spark, tbl, col("k").between(big, big))
+    assert(c.rows === 1 && c.skipped > 0, s"$c")
   }
 
   test("bloom scans across a widen probe pre-widen files at their " +
@@ -58,17 +59,17 @@ class WidenSpec extends SparkSpec {
     // a LONG-typed probe of an era-1 value: the int-era file's bloom was
     // hashed at int width — pre-fix this false-rejected the file and the
     // scan silently lost the row
-    val ps = Snapshots.scanPrunedEq(spark, tbl, "k", 5L)
-    assert(ps.df.count() === 1L,
-      "widened bloom probe lost the pre-widen row")
-    assert(ps.filesSkipped > 0, "bloom pruning power lost entirely")
-    // IN-scan across both eras: era-1 value + era-2 beyond-int value
-    val psIn = Snapshots.scanPrunedIn(spark, tbl, "k", Seq(7L, big))
-    assert(psIn.df.collect().map(_.getLong(0)).toSet === Set(7L, big))
+    val c = IndexedCount.evolved(spark, tbl, col("k") === 5L)
+    assert(c.rows === 1L, "widened bloom probe lost the pre-widen row")
+    assert(c.skipped > 0, "bloom pruning power lost entirely")
+    // IN-filter across both eras: era-1 value + era-2 beyond-int value
+    val in = Snapshots.readIndexedEvolved(spark, tbl)._1
+      .filter(col("k").isin(7L, big))
+    assert(in.collect().map(_.getLong(0)).toSet === Set(7L, big))
     // absent values still skip every file (the narrow probe must not
     // blanket-keep)
-    val psAbs = Snapshots.scanPrunedEq(spark, tbl, "k", 999L)
-    assert(psAbs.df.count() === 0L)
+    val abs = IndexedCount.evolved(spark, tbl, col("k") === 999L)
+    assert(abs.rows === 0L && abs.kept === 0, s"$abs")
     // float→double widen with a NaN row: Java NaN != NaN breaks the
     // lossless-roundtrip check, but Spark SQL equality MATCHES NaN —
     // the probe must still try the float representation
@@ -80,11 +81,9 @@ class WidenSpec extends SparkSpec {
     Snapshots.widenColumn(spark, ftbl, "x", DoubleType)
     Snapshots.commit(Seq((4, 4.5)).toDF("k", "x").coalesce(1), ftbl,
       bloomCols = Seq("x"))
-    val psNaN = Snapshots.scanPrunedEq(spark, ftbl, "x", Double.NaN)
-    assert(psNaN.df.count() === 1L,
-      "NaN probe lost the pre-widen float-era row")
-    val psF = Snapshots.scanPrunedEq(spark, ftbl, "x", 1.5d)
-    assert(psF.df.count() === 1L)
+    assert(IndexedCount.evolved(spark, ftbl, col("x") === Double.NaN)
+      .rows === 1L, "NaN probe lost the pre-widen float-era row")
+    assert(IndexedCount.evolved(spark, ftbl, col("x") === 1.5d).rows === 1L)
   }
 
   test("float→double widens; narrowing and cross-family casts refuse; " +
