@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: exactly ONE JSON line on stdout — a COMPACT summary
   * sized to survive a tail capture — plus the complete per-query maps
   * written to a file. Machine-parseable by construction:
@@ -51,22 +49,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // untruncated scan metadata: required for stable plan
-      // fingerprints (see PlanFingerprint.of — the 100-char cut moves
-      // with the JVM-global exprId width)
-      .config("spark.sql.maxMetadataStringLength", "100000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     // Warm the JVM/codegen/scheduler paths once so the first measured
     // query doesn't absorb session startup cost.
     spark.range(1000000L).selectExpr("sum(id)").collect()

@@ -22,13 +22,13 @@ import org.apache.spark.sql.DataFrame
 object PlanFingerprint {
 
   /** SESSION REQUIREMENT: fingerprinting sessions must set
-    * `spark.sql.maxMetadataStringLength` high (Bench and the fp tools
-    * set 100000) so scan metadata prints UNTRUNCATED. The default
+    * `spark.sql.maxMetadataStringLength` high ([[graft.Session]] sets
+    * 100000) so scan metadata prints UNTRUNCATED. The default
     * 100-char abbreviation cuts at a position set by the RAW exprId
     * digit widths — a JVM-GLOBAL counter — so which COMPLETE filter
     * elements survive the cut depends on how many expressions every
-    * EARLIER query in the session allocated (localized r18 with
-    * FpOrderProbe: running the ann family first grew
+    * EARLIER query in the session allocated (localized r18 with a
+    * prefix run, now `Probe fp`: running the ann family first grew
     * q_auto_skip_evolved's exprIds by a digit, the DataFilters cut
     * moved one element left, and the fingerprint flipped — the fifth
     * drift class, and in hindsight the r17 one-off q_containment_dedup

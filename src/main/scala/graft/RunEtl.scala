@@ -1,7 +1,6 @@
 package graft
 
 import graft.etl.RetailWarehouse
-import org.apache.spark.sql.SparkSession
 
 /** Batch ETL entry point — the working equivalent of the reference's
   * `python main.py` (which is broken by a bad import; see SURVEY §0):
@@ -17,16 +16,7 @@ object RunEtl {
     val Array(csvPath, outDir) = args.take(2)
     val asOf = java.sql.Date.valueOf(
       if (args.length > 2) args(2) else java.time.LocalDate.now().toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-retail-etl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val prior = RetailWarehouse.readPriorDims(spark, outDir)
     val res0 = RetailWarehouse.runFromCsv(spark, csvPath, asOf, prior)

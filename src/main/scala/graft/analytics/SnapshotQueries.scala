@@ -24,16 +24,6 @@ object SnapshotQueries {
   // non-empty, so version-1 snapshots actually hold data
   private val cutoff = "1996-07-01"
 
-  private def tablePath(s: SparkSession, d: String, tag: String): String =
-    Fixtures.tablePath(s, d, tag)
-
-  private def freshTable(s: SparkSession, d: String, tag: String): String =
-    Fixtures.freshTable(s, d, tag)
-
-  /** See [[Fixtures.memo]]. */
-  private def memoFixture(s: SparkSession, d: String, tag: String)(
-      build: String => Unit): String = Fixtures.memo(s, d, tag)(build)
-
   /** (Re-)bind a session-global catalog NAME to this dataset's table
     * path. The SQL-DML entries register their names inside the memoized
     * builder (the build's statements need them), but the memo is keyed
@@ -56,7 +46,7 @@ object SnapshotQueries {
     * (JVM, dataset, tag): every caller only reads the two versions.
     */
   private def buildTwoVersions(s: SparkSession, d: String, tag: String)
-      : String = memoFixture(s, d, tag) { tbl =>
+      : String = Fixtures.memo(s, d, tag) { tbl =>
     val o = src(s, d)
     Snapshots.commit(o.filter(col("o_orderdate") < lit(cutoff)), tbl,
       statsCols = Seq("o_orderkey"))
@@ -114,8 +104,8 @@ object SnapshotQueries {
     */
   val cloneQ = Q("q_clone",
     (s, d) => {
-      val dstTbl = memoFixture(s, d, "cldst") { dstTbl =>
-        val srcTbl = freshTable(s, d, "clsrc")
+      val dstTbl = Fixtures.memo(s, d, "cldst") { dstTbl =>
+        val srcTbl = Fixtures.freshTable(s, d, "clsrc")
         val o = src(s, d)
         Snapshots.commit(o, srcTbl, statsCols = Seq("o_orderkey"))
         Snapshots.cloneTable(s, srcTbl, dstTbl)
@@ -124,7 +114,7 @@ object SnapshotQueries {
         val del = s.range(100, 120).select(col("id").as("o_orderkey"))
         Snapshots.merge(s, dstTbl, upd, del, "o_orderkey")
       }
-      val srcTbl = tablePath(s, d, "clsrc")
+      val srcTbl = Fixtures.tablePath(s, d, "clsrc")
       def side(tbl: String, name: String): DataFrame =
         Snapshots.read(s, tbl)
           .agg(count(lit(1)).as("n_orders"),
@@ -169,7 +159,7 @@ object SnapshotQueries {
   val resultCacheQ = Q("q_result_cache",
     (s, d) => {
       val tbl = buildTwoVersions(s, d, "rc")
-      val cache = freshTable(s, d, "rcc")
+      val cache = Fixtures.freshTable(s, d, "rcc")
       def q = Snapshots.read(s, tbl)
         .groupBy(year(col("o_orderdate")).as("order_year"))
         .agg(count(lit(1)).as("n_orders"),
@@ -191,7 +181,7 @@ object SnapshotQueries {
     */
   val morUpsert = Q("q_mor_upsert",
     (s, d) => {
-      val tbl = memoFixture(s, d, "morup") { tbl =>
+      val tbl = Fixtures.memo(s, d, "morup") { tbl =>
         val o = src(s, d)
         Snapshots.commit(o, tbl, statsCols = Seq("o_orderkey"))
         val batch = o.filter(col("o_orderkey").between(1, 10))
@@ -217,13 +207,13 @@ object SnapshotQueries {
   val mvIncremental = Q("q_mv_incremental",
     (s, d) => {
       def mvOf(tbl: String) = graft.plans.SnapshotMv.SnapshotMvDef(tbl,
-        tablePath(s, d, "smvroot"),
+        Fixtures.tablePath(s, d, "smvroot"),
         keys = Seq("o_orderkey"), countCol = "n",
         sums = Seq(graft.plans.MaterializedViews.MvSum("rev", "o_totalprice",
           Some(org.apache.spark.sql.types.DecimalType(27, 4)))))
-      val tbl = memoFixture(s, d, "smv") { tbl =>
+      val tbl = Fixtures.memo(s, d, "smv") { tbl =>
         val o = src(s, d)
-        val root = freshTable(s, d, "smvroot") // cleared with the memo
+        val root = Fixtures.freshTable(s, d, "smvroot") // cleared with the memo
         val _ = root
         Snapshots.commit(o.filter(col("o_orderdate") < lit(cutoff)), tbl,
           statsCols = Seq("o_orderkey"))
@@ -261,7 +251,7 @@ object SnapshotQueries {
     */
   val morDelete = Q("q_mor_delete",
     (s, d) => {
-      val tbl = memoFixture(s, d, "mor") { tbl =>
+      val tbl = Fixtures.memo(s, d, "mor") { tbl =>
         val o = src(s, d)
         Snapshots.commit(o, tbl, statsCols = Seq("o_orderkey"))
         Snapshots.deleteWhere(s, tbl,
@@ -288,7 +278,7 @@ object SnapshotQueries {
     */
   val fileSkip = Q("q_file_skip",
     (s, d) => {
-      val tbl = memoFixture(s, d, "skip") { tbl =>
+      val tbl = Fixtures.memo(s, d, "skip") { tbl =>
         Snapshots.commit(src(s, d).repartitionByRange(8, col("o_orderkey")),
           tbl, statsCols = Seq("o_orderkey"))
       }
@@ -312,7 +302,7 @@ object SnapshotQueries {
     */
   val versionedCompact = Q("q_versioned_compact",
     (s, d) => {
-      val tbl = memoFixture(s, d, "vc") { tbl =>
+      val tbl = Fixtures.memo(s, d, "vc") { tbl =>
         val o = src(s, d)
         Snapshots.commit(
           o.filter(col("o_orderdate") < lit(cutoff)).repartition(6), tbl)
@@ -371,7 +361,7 @@ object SnapshotQueries {
     */
   val bloomSkip = Q("q_bloom_skip",
     (s, d) => {
-      val tbl = memoFixture(s, d, "bloom") { tbl =>
+      val tbl = Fixtures.memo(s, d, "bloom") { tbl =>
         Snapshots.commit(
           orders(s, d).select(col("o_orderkey"), col("o_totalprice"),
             col("o_custkey")).repartition(8, col("o_custkey")),
@@ -396,7 +386,7 @@ object SnapshotQueries {
     */
   val zorderSkip = Q("q_zorder_skip",
     (s, d) => {
-      val tbl = memoFixture(s, d, "zskip") { tbl =>
+      val tbl = Fixtures.memo(s, d, "zskip") { tbl =>
         val li = lineitem(s, d).select(col("l_orderkey"), col("l_partkey"),
           col("l_suppkey"), col("l_quantity"))
         Snapshots.commit(
@@ -432,7 +422,7 @@ object SnapshotQueries {
     */
   val autoSkip = Q("q_auto_skip",
     (s, d) => {
-      val tbl = memoFixture(s, d, "autoskip") { tbl =>
+      val tbl = Fixtures.memo(s, d, "autoskip") { tbl =>
         val li = lineitem(s, d).select(col("l_orderkey"), col("l_partkey"),
           col("l_suppkey"), col("l_quantity"))
         Snapshots.commit(
@@ -483,7 +473,7 @@ object SnapshotQueries {
     */
   val tsSkip = Q("q_ts_skip",
     (s, d) => {
-      val tbl = memoFixture(s, d, "tsskip") { tbl =>
+      val tbl = Fixtures.memo(s, d, "tsskip") { tbl =>
         Snapshots.commit(
           src(s, d).withColumn("o_date", to_date(col("o_orderdate")))
             .repartitionByRange(8, col("o_orderdate")),
@@ -508,7 +498,7 @@ object SnapshotQueries {
         .head().getLong(0)
       val maxSupp = supplier(s, d).agg(max(col("s_suppkey")).cast("long"))
         .head().getLong(0)
-      val tbl = memoFixture(s, d, "autoskipev") { tbl =>
+      val tbl = Fixtures.memo(s, d, "autoskipev") { tbl =>
         // era 1: even orderkeys, pre-evolution shape (pk int-era names)
         val part1 = li.filter(col("l_orderkey") % 2 === 0)
           .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"),
@@ -571,7 +561,7 @@ object SnapshotQueries {
     */
   val hilbertSkip = Q("q_hilbert_skip",
     (s, d) => {
-      val tbl = memoFixture(s, d, "hskip") { tbl =>
+      val tbl = Fixtures.memo(s, d, "hskip") { tbl =>
         val li = lineitem(s, d).select(col("l_orderkey"), col("l_partkey"),
           col("l_suppkey"), col("l_quantity"))
         Snapshots.commit(
@@ -610,7 +600,7 @@ object SnapshotQueries {
     */
   val manifestList = Q("q_manifest_list",
     (s, d) => {
-      val tbl = memoFixture(s, d, "mlist") { tbl =>
+      val tbl = Fixtures.memo(s, d, "mlist") { tbl =>
         val li = lineitem(s, d).select(col("l_orderkey"), col("l_partkey"),
           col("l_suppkey"), col("l_quantity"))
         Snapshots.commit(
@@ -650,7 +640,7 @@ object SnapshotQueries {
     */
   val branchMerge = Q("q_branch_merge",
     (s, d) => {
-      val tbl = memoFixture(s, d, "branch") { tbl =>
+      val tbl = Fixtures.memo(s, d, "branch") { tbl =>
         val o = src(s, d)
         val bucket = col("o_orderkey") % 10
         Snapshots.commit(o.filter(bucket >= 2), tbl,
@@ -659,7 +649,7 @@ object SnapshotQueries {
         // the branch dir lives OUTSIDE the table root; freshTable keeps
         // the one-time fork clean even if a crashed prior JVM left one
         val br = Branches.create(s, tbl, "dev",
-          dir = Some(freshTable(s, d, "branchdev")))
+          dir = Some(Fixtures.freshTable(s, d, "branchdev")))
         Snapshots.deleteWhere(s, br,
           o.filter(bucket === 2).select(col("o_orderkey")).distinct(),
           "o_orderkey")
@@ -699,7 +689,7 @@ object SnapshotQueries {
     */
   val formatIo = Q("q_format_io",
     (s, d) => {
-      val tbl = freshTable(s, d, "fmt")
+      val tbl = Fixtures.freshTable(s, d, "fmt")
       val o = src(s, d)
       o.filter(col("o_orderdate") < lit(cutoff)).write.format("graft")
         .option("statsCols", "o_orderkey").save(tbl)
@@ -736,7 +726,7 @@ object SnapshotQueries {
     */
   val metaAgg = Q("q_meta_agg",
     (s, d) => {
-      val tbl = freshTable(s, d, "metaagg")
+      val tbl = Fixtures.freshTable(s, d, "metaagg")
       val o = orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))
       Snapshots.commit(o.filter(col("o_orderkey") % 2 === 0), tbl,
         statsCols = Seq("o_orderkey"), strStatsCols = Seq("o_orderpriority"))
@@ -768,8 +758,8 @@ object SnapshotQueries {
   val foreignKey = Q("q_foreign_key",
     (s, d) => {
       val rejectedBox = new java.util.concurrent.atomic.AtomicLong(1L)
-      val child = memoFixture(s, d, "fkchild") { child =>
-        val parent = freshTable(s, d, "fkparent")
+      val child = Fixtures.memo(s, d, "fkchild") { child =>
+        val parent = Fixtures.freshTable(s, d, "fkparent")
         Snapshots.commit(customer(s, d).select(col("c_custkey")), parent,
           statsCols = Seq("c_custkey"))
         val o = orders(s, d).select(col("o_orderkey"), col("o_custkey"),
@@ -812,7 +802,7 @@ object SnapshotQueries {
     */
   val defaultColumn = Q("q_default_column",
     (s, d) => {
-      val tbl = memoFixture(s, d, "defcol") { tbl =>
+      val tbl = Fixtures.memo(s, d, "defcol") { tbl =>
         val o = src(s, d)
         Snapshots.commit(o.filter(col("o_orderdate") < lit(cutoff)), tbl,
           statsCols = Seq("o_orderkey"))
@@ -845,7 +835,7 @@ object SnapshotQueries {
     */
   val wap = Q("q_wap",
     (s, d) => {
-      val tbl = memoFixture(s, d, "wap") { tbl =>
+      val tbl = Fixtures.memo(s, d, "wap") { tbl =>
         val o = src(s, d)
         val audit: org.apache.spark.sql.DataFrame => Option[String] = b =>
           if (b.filter(col("o_totalprice") <= 0).count() > 0)
@@ -880,7 +870,7 @@ object SnapshotQueries {
       val maxKey = orders(s, d).agg(max(col("o_orderkey")).cast("long"))
         .head().getLong(0)
       val updHi = maxKey / 20
-      val tbl = memoFixture(s, d, "merge") { tbl =>
+      val tbl = Fixtures.memo(s, d, "merge") { tbl =>
         val o = src(s, d)
         Snapshots.commit(o.repartitionByRange(8, col("o_orderkey")), tbl,
           statsCols = Seq("o_orderkey"))
@@ -924,7 +914,7 @@ object SnapshotQueries {
     */
   val schemaEvolution = Q("q_schema_evolution",
     (s, d) => {
-      val tbl = memoFixture(s, d, "evo") { tbl =>
+      val tbl = Fixtures.memo(s, d, "evo") { tbl =>
         val o = orders(s, d)
         Snapshots.commit(o.filter(col("o_orderdate") < lit(cutoff))
           .select(col("o_orderkey"), col("o_totalprice")), tbl)
@@ -953,7 +943,7 @@ object SnapshotQueries {
     */
   val rollbackQ = Q("q_rollback",
     (s, d) => {
-      val tbl = memoFixture(s, d, "rb") { tbl =>
+      val tbl = Fixtures.memo(s, d, "rb") { tbl =>
         val o = src(s, d)
         Snapshots.commit(o.filter(col("o_orderdate") < lit(cutoff)), tbl)
         val maxKey = orders(s, d).agg(max(col("o_orderkey")).cast("long"))
@@ -994,7 +984,7 @@ object SnapshotQueries {
     */
   val compactSmallQ = Q("q_compact_small",
     (s, d) => {
-      val tbl = memoFixture(s, d, "cs") { tbl =>
+      val tbl = Fixtures.memo(s, d, "cs") { tbl =>
         val o = src(s, d)
         Snapshots.commit(
           o.filter(col("o_orderdate") < lit(cutoff)).coalesce(1), tbl)
@@ -1026,7 +1016,7 @@ object SnapshotQueries {
     */
   val tableHistory = Q("q_table_history",
     (s, d) => {
-      val tbl = memoFixture(s, d, "hist") { tbl =>
+      val tbl = Fixtures.memo(s, d, "hist") { tbl =>
         val o = src(s, d)
         Snapshots.commit(o.filter(col("o_orderdate") < lit(cutoff)), tbl,
           properties = Map("source" -> "backfill"))
@@ -1054,7 +1044,7 @@ object SnapshotQueries {
     */
   val strSkip = Q("q_str_skip",
     (s, d) => {
-      val tbl = memoFixture(s, d, "strskip") { tbl =>
+      val tbl = Fixtures.memo(s, d, "strskip") { tbl =>
         Snapshots.commit(
           orders(s, d).select(col("o_orderkey"), col("o_totalprice"),
               col("o_orderpriority"))
@@ -1205,7 +1195,7 @@ object SnapshotQueries {
     */
   val changeFeed = Q("q_change_feed",
     (s, d) => {
-      val tbl = memoFixture(s, d, "cdf") { tbl =>
+      val tbl = Fixtures.memo(s, d, "cdf") { tbl =>
         val o = src(s, d)
         // split v1/v2 by key parity, not date: the sf0.001 generation
         // has no pre-cutoff orders, and an empty version would drop a
@@ -1260,7 +1250,7 @@ object SnapshotQueries {
     */
   val cdcStream = Q("q_cdc_stream",
     (s, d) => {
-      val root = memoFixture(s, d, "cdcs") { rootDir =>
+      val root = Fixtures.memo(s, d, "cdcs") { rootDir =>
         val srcTbl = s"$rootDir/src"
         val o = src(s, d)
         Snapshots.commit(o.filter(col("o_orderkey") % 2 === 0), srcTbl,
@@ -1316,14 +1306,15 @@ object SnapshotQueries {
   val mvChanges = Q("q_mv_changes",
     (s, d) => {
       def mvOf(tbl: String) = graft.plans.SnapshotMv.SnapshotMvDef(tbl,
-        tablePath(s, d, "mvchroot"),
+        Fixtures.tablePath(s, d, "mvchroot"),
         keys = Seq("o_orderpriority"), countCol = "n",
         sums = Seq(graft.plans.MaterializedViews.MvSum("rev", "o_totalprice",
           Some(org.apache.spark.sql.types.DecimalType(27, 4)))))
-      val tbl = memoFixture(s, d, "mvch") { tbl =>
+      val tbl = Fixtures.memo(s, d, "mvch") { tbl =>
         val o = orders(s, d).select(col("o_orderkey"),
           col("o_orderpriority"), col("o_totalprice"))
-        val root = freshTable(s, d, "mvchroot") // cleared with the memo
+        // cleared with the memo
+        val root = Fixtures.freshTable(s, d, "mvchroot")
         val _ = root
         Snapshots.commit(o, tbl, statsCols = Seq("o_orderkey"))
         graft.plans.SnapshotMv.refresh(s, mvOf(tbl)) // full build at v1
@@ -1336,7 +1327,7 @@ object SnapshotQueries {
           "o_orderkey")
         graft.plans.SnapshotMv.refresh(s, mvOf(tbl)) // change-feed fold
       }
-      val root = tablePath(s, d, "mvchroot")
+      val root = Fixtures.tablePath(s, d, "mvchroot")
       try {
         // already-current: registration only
         val v = graft.plans.SnapshotMv.refresh(s, mvOf(tbl))
@@ -1367,10 +1358,10 @@ object SnapshotQueries {
     (s, d) => {
       // the memo key is the REPLICA: src is rebuilt inside the same
       // one-time build, so both sides exist iff the memo holds
-      val dst = memoFixture(s, d, "repldst") { dst =>
+      val dst = Fixtures.memo(s, d, "repldst") { dst =>
         val o = orders(s, d).select(col("o_orderkey"),
           col("o_orderpriority"), col("o_totalprice"))
-        val src = freshTable(s, d, "replsrc")
+        val src = Fixtures.freshTable(s, d, "replsrc")
         Snapshots.commit(o.filter(col("o_orderkey") % 2 === 0), src,
           statsCols = Seq("o_orderkey"))
         Snapshots.commit(o.filter(col("o_orderkey") % 2 === 1), src,
@@ -1409,7 +1400,7 @@ object SnapshotQueries {
     */
   val checkConstraintsQ = Q("q_check_constraints",
     (s, d) => {
-      val tbl = memoFixture(s, d, "chk") { tbl =>
+      val tbl = Fixtures.memo(s, d, "chk") { tbl =>
         val o = src(s, d)
         Snapshots.commit(o.filter(col("o_orderkey") % 2 === 0), tbl,
           statsCols = Seq("o_orderkey"))
@@ -1436,7 +1427,7 @@ object SnapshotQueries {
     */
   val uniqueKey = Q("q_unique_key",
     (s, d) => {
-      val tbl = memoFixture(s, d, "uq") { tbl =>
+      val tbl = Fixtures.memo(s, d, "uq") { tbl =>
         val dedup = src(s, d).groupBy(col("o_orderkey"))
           .agg(max(col("o_totalprice")).as("o_totalprice"))
         Snapshots.commit(dedup, tbl, statsCols = Seq("o_orderkey"))
@@ -1471,7 +1462,7 @@ object SnapshotQueries {
     */
   val renameColumnQ = Q("q_rename_column",
     (s, d) => {
-      val tbl = freshTable(s, d, "ren")
+      val tbl = Fixtures.freshTable(s, d, "ren")
       val o = src(s, d)
       Snapshots.commit(o.filter(col("o_orderkey") % 2 === 0), tbl,
         statsCols = Seq("o_orderkey"))
@@ -1503,7 +1494,7 @@ object SnapshotQueries {
     */
   val dropColumnQ = Q("q_drop_column",
     (s, d) => {
-      val tbl = memoFixture(s, d, "dropc") { tbl =>
+      val tbl = Fixtures.memo(s, d, "dropc") { tbl =>
         val o = src(s, d)
         Snapshots.commit(o.filter(col("o_orderkey") % 2 === 0), tbl,
           statsCols = Seq("o_orderkey"))
@@ -1537,7 +1528,7 @@ object SnapshotQueries {
   val statsAggQ = Q("q_stats_agg",
     (s, d) => {
       import s.implicits._
-      val tbl = memoFixture(s, d, "stats") { tbl =>
+      val tbl = Fixtures.memo(s, d, "stats") { tbl =>
         val o = src(s, d)
         Snapshots.commit(o.filter(col("o_orderkey") % 2 === 0), tbl,
           statsCols = Seq("o_orderkey"))
@@ -1562,9 +1553,9 @@ object SnapshotQueries {
     */
   val txnConsistent = Q("q_txn_consistent",
     (s, d) => {
-      val a = memoFixture(s, d, "txna") { a =>
-        val b = freshTable(s, d, "txnb")
-        val txns = freshTable(s, d, "txnlog")
+      val a = Fixtures.memo(s, d, "txna") { a =>
+        val b = Fixtures.freshTable(s, d, "txnb")
+        val txns = Fixtures.freshTable(s, d, "txnlog")
         val o = orders(s, d)
           .select(col("o_orderkey"), col("o_orderpriority"))
         def roll(df: DataFrame) =
@@ -1576,7 +1567,7 @@ object SnapshotQueries {
         Snapshots.commitTxn(s, Seq(
           Snapshots.TxnWrite(hi, a), Snapshots.TxnWrite(roll(hi), b)), txns)
       }
-      val b = tablePath(s, d, "txnb")
+      val b = Fixtures.tablePath(s, d, "txnb")
       val facts = Snapshots.read(s, a)
         .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n_facts"))
       val rollup = Snapshots.read(s, b)
@@ -1598,7 +1589,7 @@ object SnapshotQueries {
     */
   val uniqueKeyStr = Q("q_unique_key_str",
     (s, d) => {
-      val tbl = memoFixture(s, d, "uqs") { tbl =>
+      val tbl = Fixtures.memo(s, d, "uqs") { tbl =>
         val byCust = orders(s, d).groupBy(col("o_custkey"))
           .agg(max(col("o_totalprice")).as("o_totalprice"))
         def keyed(prefix: String, df: DataFrame) =
@@ -1635,7 +1626,7 @@ object SnapshotQueries {
     */
   val uniqueKeyPair = Q("q_unique_pair",
     (s, d) => {
-      val tbl = memoFixture(s, d, "uqp") { tbl =>
+      val tbl = Fixtures.memo(s, d, "uqp") { tbl =>
         val pairs = lineitem(s, d)
           .groupBy(col("l_orderkey"), col("l_linenumber"))
           .agg(max(col("l_quantity")).as("qty"))
@@ -1667,7 +1658,7 @@ object SnapshotQueries {
   val statsAggStrQ = Q("q_stats_agg_str",
     (s, d) => {
       import s.implicits._
-      val tbl = memoFixture(s, d, "statss") { tbl =>
+      val tbl = Fixtures.memo(s, d, "statss") { tbl =>
         val o = orders(s, d)
           .select(col("o_orderkey"), col("o_orderpriority"))
         Snapshots.commit(o.filter(col("o_orderkey") % 2 === 0), tbl,
@@ -1695,7 +1686,7 @@ object SnapshotQueries {
     */
   val deletionVector = Q("q_deletion_vector",
     (s, d) => {
-      val tbl = memoFixture(s, d, "dv") { tbl =>
+      val tbl = Fixtures.memo(s, d, "dv") { tbl =>
         val o = src(s, d)
         Snapshots.commit(o.filter(col("o_orderdate") < lit(cutoff)), tbl,
           statsCols = Seq("o_orderkey"))
@@ -1727,7 +1718,7 @@ object SnapshotQueries {
     */
   val updateWhere = Q("q_update_where",
     (s, d) => {
-      val tbl = memoFixture(s, d, "uw") { tbl =>
+      val tbl = Fixtures.memo(s, d, "uw") { tbl =>
         Snapshots.commit(src(s, d), tbl, statsCols = Seq("o_orderkey"))
         Snapshots.updateWhere(s, tbl, col("o_orderdate") < lit(cutoff),
           Seq("o_totalprice" -> col("o_totalprice") * 0.5))
@@ -1753,7 +1744,7 @@ object SnapshotQueries {
   val sqlDml = Q("q_sql_dml",
     (s, d) => {
       val q = graft.plans.SqlDml.enable(s)
-      val tbl = memoFixture(s, d, "sqldml") { tbl =>
+      val tbl = Fixtures.memo(s, d, "sqldml") { tbl =>
         Snapshots.commit(src(s, d), tbl, statsCols = Seq("o_orderkey"))
         bindName(q, "graft_dml_q", tbl)
         q.sql("UPDATE graft_dml_q SET o_totalprice = o_totalprice * 0.5 " +
@@ -1791,7 +1782,7 @@ object SnapshotQueries {
   val sqlDmlCorr = Q("q_sql_dml_corr",
     (s, d) => {
       val q = graft.plans.SqlDml.enable(s)
-      val tbl = memoFixture(s, d, "sqldmlc") { tbl =>
+      val tbl = Fixtures.memo(s, d, "sqldmlc") { tbl =>
         Snapshots.commit(src(s, d).filter(col("o_orderkey") % 2 === 0), tbl,
           statsCols = Seq("o_orderkey"))
         bindName(q, "graft_cdml_q", tbl)
@@ -1844,7 +1835,7 @@ object SnapshotQueries {
   val sqlUpdateScalar = Q("q_sql_update_scalar",
     (s, d) => {
       val q = graft.plans.SqlDml.enable(s)
-      val tbl = memoFixture(s, d, "sqlusc") { tbl =>
+      val tbl = Fixtures.memo(s, d, "sqlusc") { tbl =>
         Snapshots.commit(src(s, d).filter(col("o_orderkey") % 2 === 1), tbl,
           statsCols = Seq("o_orderkey"))
         bindName(q, "graft_usc_q", tbl)
@@ -1910,7 +1901,7 @@ object SnapshotQueries {
   val sqlMaintain = Q("q_sql_maintain",
     (s, d) => {
       val q = graft.plans.SqlDml.enable(s)
-      val tbl = memoFixture(s, d, "sqlmnt") { tbl =>
+      val tbl = Fixtures.memo(s, d, "sqlmnt") { tbl =>
         val o = src(s, d)
         Snapshots.commit(o.filter(col("o_orderkey") % 3 === 0), tbl,
           statsCols = Seq("o_orderkey"))
@@ -1951,7 +1942,7 @@ object SnapshotQueries {
   val compactWhereQ = Q("q_compact_where",
     (s, d) => {
       val q = graft.plans.SqlDml.enable(s)
-      val tbl = memoFixture(s, d, "cmpw") { tbl =>
+      val tbl = Fixtures.memo(s, d, "cmpw") { tbl =>
         val o = src(s, d)
         Snapshots.commit(
           o.filter(col("o_orderdate") < lit(cutoff)).repartition(4),
@@ -1993,7 +1984,7 @@ object SnapshotQueries {
   val decimalRoundtrip = Q("q_decimal_roundtrip",
     (s, d) => {
       val q = graft.plans.SqlDml.enable(s)
-      val tbl = memoFixture(s, d, "decrt") { tbl =>
+      val tbl = Fixtures.memo(s, d, "decrt") { tbl =>
         Snapshots.commit(
           src(s, d).select(col("o_orderkey"),
             col("o_totalprice").cast("decimal(18,4)").as("price"),
@@ -2038,7 +2029,7 @@ object SnapshotQueries {
   val sqlMerge = Q("q_sql_merge",
     (s, d) => {
       val q = graft.plans.SqlDml.enable(s)
-      val tbl = memoFixture(s, d, "sqlmrg") { tbl =>
+      val tbl = Fixtures.memo(s, d, "sqlmrg") { tbl =>
         Snapshots.commit(src(s, d).filter(col("o_orderkey") % 2 === 0), tbl,
           statsCols = Seq("o_orderkey"))
         bindName(q, "graft_mrg_q", tbl)
@@ -2082,7 +2073,7 @@ object SnapshotQueries {
   val sqlMergeConditional = Q("q_sql_merge_conditional",
     (s, d) => {
       val q = graft.plans.SqlDml.enable(s)
-      val tbl = memoFixture(s, d, "sqlmrgc") { tbl =>
+      val tbl = Fixtures.memo(s, d, "sqlmrgc") { tbl =>
         Snapshots.commit(src(s, d).filter(col("o_orderkey") % 2 === 0), tbl,
           statsCols = Seq("o_orderkey"))
         bindName(q, "graft_cmrg_q", tbl)
@@ -2133,7 +2124,7 @@ object SnapshotQueries {
   val sqlMergeStr = Q("q_sql_merge_str",
     (s, d) => {
       val q = graft.plans.SqlDml.enable(s)
-      val tbl = memoFixture(s, d, "sqlmrgs") { tbl =>
+      val tbl = Fixtures.memo(s, d, "sqlmrgs") { tbl =>
         Snapshots.commit(
           src(s, d).filter(col("o_orderkey") % 2 === 0)
             .select(concat(lit("o"), col("o_orderkey")).as("k"),
@@ -2176,7 +2167,7 @@ object SnapshotQueries {
   val sqlMergeEvolve = Q("q_sql_merge_evolve",
     (s, d) => {
       val q = graft.plans.SqlDml.enable(s)
-      val tbl = memoFixture(s, d, "sqlmrge") { tbl =>
+      val tbl = Fixtures.memo(s, d, "sqlmrge") { tbl =>
         Snapshots.commit(
           src(s, d).filter(col("o_orderkey") % 2 === 0)
             .select(col("o_orderkey"), col("o_totalprice")),
@@ -2222,7 +2213,7 @@ object SnapshotQueries {
   val sqlMergeEvolveWiden = Q("q_sql_merge_evolve_widen",
     (s, d) => {
       val q = graft.plans.SqlDml.enable(s)
-      val tbl = memoFixture(s, d, "sqlmrgw") { tbl =>
+      val tbl = Fixtures.memo(s, d, "sqlmrgw") { tbl =>
         Snapshots.commit(
           orders(s, d).filter(col("o_orderkey") % 2 === 0)
             .select(col("o_orderkey"),
@@ -2280,7 +2271,7 @@ object SnapshotQueries {
   val sqlMergeMulti = Q("q_sql_merge_multi",
     (s, d) => {
       val q = graft.plans.SqlDml.enable(s)
-      val tbl = memoFixture(s, d, "sqlmrgm") { tbl =>
+      val tbl = Fixtures.memo(s, d, "sqlmrgm") { tbl =>
         // tuple-unique base: the driver's synthetic lineitem DUPLICATES
         // some (orderkey, linenumber) tuples, which the MERGE cardinality
         // guard correctly refuses — aggregate first (max: exact on
@@ -2329,7 +2320,7 @@ object SnapshotQueries {
   val hiddenPartition = Q("q_hidden_partition",
     (s, d) => {
       import graft.sources.Partitioning
-      val tbl = memoFixture(s, d, "hp") { tbl =>
+      val tbl = Fixtures.memo(s, d, "hp") { tbl =>
         val o = src(s, d)
         Snapshots.commit(o.limit(0), tbl) // schema-bearing seed
         Partitioning.setSpec(s, tbl, Seq(Partitioning.Month("o_orderdate")))
@@ -2375,7 +2366,7 @@ object SnapshotQueries {
   val compositePartition = Q("q_composite_partition",
     (s, d) => {
       import graft.sources.Partitioning
-      val tbl = memoFixture(s, d, "cpart") { tbl =>
+      val tbl = Fixtures.memo(s, d, "cpart") { tbl =>
         val o = orders(s, d).select(col("o_orderkey"), col("o_custkey"),
           col("o_totalprice"), col("o_orderdate"))
         Snapshots.commit(o.limit(0), tbl) // schema-bearing seed
@@ -2430,7 +2421,7 @@ object SnapshotQueries {
     */
   val dimFilePrune = Q("q_dim_file_prune",
     (s, d) => {
-      val tbl = memoFixture(s, d, "dfp") { tbl =>
+      val tbl = Fixtures.memo(s, d, "dfp") { tbl =>
         val li = lineitem(s, d).select(col("l_suppkey"),
           col("l_extendedprice"), col("l_discount"))
         Snapshots.commit(
@@ -2490,7 +2481,7 @@ object SnapshotQueries {
     */
   val dimFilePruneAuto = Q("q_dim_file_prune_auto",
     (s, d) => {
-      val tbl = memoFixture(s, d, "dfpa") { tbl =>
+      val tbl = Fixtures.memo(s, d, "dfpa") { tbl =>
         val li = lineitem(s, d).select(col("l_suppkey"),
           col("l_extendedprice"), col("l_discount"))
         Snapshots.commit(
@@ -2501,7 +2492,7 @@ object SnapshotQueries {
       graft.plans.DimFilePrune.enable(s, tbl)
       val nat = supplier(s, d).agg(max(col("s_nationkey")).cast("long"))
         .head().getLong(0)
-      val dimTbl = memoFixture(s, d, "dfpa_dim") { dimTbl =>
+      val dimTbl = Fixtures.memo(s, d, "dfpa_dim") { dimTbl =>
         Snapshots.commit(supplier(s, d)
           .filter(col("s_nationkey") === lit(nat))
           .select(col("s_suppkey")), dimTbl)
@@ -2538,7 +2529,7 @@ object SnapshotQueries {
     */
   val dimPruneEvolved = Q("q_dim_prune_evolved",
     (s, d) => {
-      val tbl = memoFixture(s, d, "dfpe") { tbl =>
+      val tbl = Fixtures.memo(s, d, "dfpe") { tbl =>
         val li = lineitem(s, d)
         // era 1: even orderkeys under pre-rename/pre-widen shape
         Snapshots.commit(
@@ -2565,7 +2556,7 @@ object SnapshotQueries {
       graft.plans.DimFilePrune.enable(s, tbl)
       val nat = supplier(s, d).agg(min(col("s_nationkey")).cast("long"))
         .head().getLong(0)
-      val dimTbl = memoFixture(s, d, "dfpe_dim") { dimTbl =>
+      val dimTbl = Fixtures.memo(s, d, "dfpe_dim") { dimTbl =>
         Snapshots.commit(supplier(s, d)
           .filter(col("s_nationkey") === lit(nat))
           .select(col("s_suppkey")), dimTbl)
@@ -2604,7 +2595,7 @@ object SnapshotQueries {
     */
   val lookupEnrich = Q("q_lookup_enrich",
     (s, d) => {
-      val tbl = memoFixture(s, d, "lkp") { tbl =>
+      val tbl = Fixtures.memo(s, d, "lkp") { tbl =>
         val cust = customer(s, d)
           .select(col("c_custkey"), col("c_mktsegment"))
           .filter(col("c_custkey") % 2 === 0)
@@ -2642,7 +2633,7 @@ object SnapshotQueries {
     */
   val sqlTimeTravel = Q("q_sql_timetravel",
     (s, d) => {
-      val tbl = memoFixture(s, d, "sqltt") { tbl =>
+      val tbl = Fixtures.memo(s, d, "sqltt") { tbl =>
         val o = src(s, d)
         Snapshots.commit(o.filter(col("o_orderdate") < lit("1998-01-01")),
           tbl, statsCols = Seq("o_orderkey"))
@@ -2683,7 +2674,7 @@ object SnapshotQueries {
     */
   val metaTables = Q("q_meta_tables",
     (s, d) => {
-      val tbl = memoFixture(s, d, "mtv") { tbl =>
+      val tbl = Fixtures.memo(s, d, "mtv") { tbl =>
         val o = src(s, d)
         Snapshots.commit(o.filter(col("o_orderdate") < lit(cutoff)), tbl,
           statsCols = Seq("o_orderkey"))
@@ -2712,7 +2703,7 @@ object SnapshotQueries {
     */
   val widenColumnQ = Q("q_widen_column",
     (s, d) => {
-      val tbl = freshTable(s, d, "widen")
+      val tbl = Fixtures.freshTable(s, d, "widen")
       val o = src(s, d)
       Snapshots.commit(
         o.filter(col("o_orderdate") < lit(cutoff))
@@ -2755,7 +2746,7 @@ object SnapshotQueries {
     */
   val clusteredCompact = Q("q_clustered_compact",
     (s, d) => {
-      val tbl = memoFixture(s, d, "clus") { tbl =>
+      val tbl = Fixtures.memo(s, d, "clus") { tbl =>
         val li = lineitem(s, d).select(col("l_orderkey"), col("l_partkey"),
           col("l_suppkey"), col("l_quantity"))
         // committed SCATTERED: every file spans the whole key domain

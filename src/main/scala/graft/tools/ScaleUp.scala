@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-probe data generator: replicates the driver's testdata tables
@@ -33,14 +33,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir) = args.take(2)
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     def rd(t: String): DataFrame = spark.read.parquet(s"$srcDir/$t.parquet")
     def wr(df: DataFrame, t: String): Unit =

@@ -3,21 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite (lazy, UTC, small shuffle width). */
+/** The shared local session, `Session.local(4)`: one JVM-wide session
+  * for every suite, at a fixed 4-wide shape whatever the host size.
+  */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // untruncated scan metadata, matching Bench and the fp tools: the
-    // default 100-char cut moves with the JVM-global exprId width, which
-    // is exactly the drift class PlanFingerprintSpec pins (ADVICE r18)
-    .config("spark.sql.maxMetadataStringLength", "100000")
-    .config("spark.sql.warehouse.dir",
-      s"${System.getProperty("java.io.tmpdir")}/graft-test-warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   def sf001 = "/root/testdata/sf0.001"
 
