@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.ingest.Ingest
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,8 +21,8 @@ final case class DimSpec(
   * `load_to_bigquery` flow (/root/reference/etl/load_to_query.py:47-204)
   * as one declarative Spark job graph:
   *
-  *   staging → (per dim: project ∩ available-columns → distinct → SCD2
-  *   merge → sink) → dim_date derivation → fact assembly via broadcast
+  *   staging → (per dim: project ∩ available-columns → SCD2 merge →
+  *   sink) → dim_date derivation → fact assembly via broadcast
   *   key-mapping joins → marts.
   *
   * Differences by design, not accident:
@@ -65,7 +66,9 @@ object RetailWarehouse {
       else {
         val tracked = spec.tracked.filter(avail.contains)
         val cfg = Scd2Config(spec.naturalKey, tracked, spec.surrogateKey)
-        val incoming = staging.select(avail.map(col): _*).distinct()
+        // duplicate rows need no distinct(): the SCD2 dedup's min_by
+        // group-by collapses them without a shuffle of its own
+        val incoming = staging.select(avail.map(col): _*)
         val dim = prior.get(spec.name) match {
           case Some(cur) => Scd2.merge(cur, incoming, cfg, asOf)
           case None      => Scd2.initialLoad(incoming, cfg, asOf)
@@ -150,13 +153,49 @@ object RetailWarehouse {
     // must not re-execute that read after the files are replaced. On a
     // real cluster use a reliable checkpoint dir or versioned dim paths;
     // dims are the small side of a star schema either way.
-    val dims = buildDims(staging, prior, asOf)
-      .map { case (n, d) => n -> d.localCheckpoint(true) }
+    val dims = materializeConcurrently(buildDims(staging, prior, asOf))
     val dimDate = DimDate.fromColumn(staging, "order_date")
     val fact = buildFact(staging, dims,
       Seq("order_id", "order_date", "customer_id", "product_id", "store_id",
         "sales", "profit"))
     WarehouseResult(staging, dims, dimDate, fact)
+  }
+
+  /** `localCheckpoint(true)` every dim, one thread per dim. Each dim's
+    * merge is a few small jobs whose tasks leave most cores idle, so
+    * running the dims side by side overlaps their scheduling gaps instead
+    * of queueing them. Each thread runs through
+    * `SQLExecution.withThreadLocalCaptured`, which carries the caller's
+    * local properties (job group, description, any tag a profiler set)
+    * and its active session onto the pool thread, so every job still
+    * reads as the caller's. All dims finish before this returns; the
+    * first failing dim (in registry order) rethrows its own cause.
+    */
+  private def materializeConcurrently(
+      dims: Map[String, DataFrame]): Map[String, DataFrame] = {
+    import java.util.concurrent.{ExecutionException, Executors}
+    import org.apache.spark.sql.execution.SQLExecution
+    if (dims.isEmpty) dims
+    else {
+      val session = dims.head._2.sparkSession
+        .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val pool = Executors.newFixedThreadPool(dims.size, (r: Runnable) => {
+        val t = new Thread(r, "graft-dim-pool")
+        t.setDaemon(true)
+        t
+      })
+      try {
+        val pending = dimensions.map(_.name).filter(dims.contains).map { n =>
+          n -> SQLExecution.withThreadLocalCaptured(session, pool)(dims(n).localCheckpoint(true))
+        }
+        val done = pending.map { case (n, f) => n -> scala.util.Try(f.get()) }
+        done.collectFirst { case (_, scala.util.Failure(e: ExecutionException)) => throw e.getCause }
+        done.map { case (n, t) => n -> t.get }.toMap
+      } finally {
+        pool.shutdown()
+        pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+      }
+    }
   }
 
   /** Persist the star schema: dims overwrite (tiny, full-state tables);
@@ -182,15 +221,26 @@ object RetailWarehouse {
     * FileSystem API so the same code works on HDFS/object stores.
     */
   def writeSwap(df: DataFrame, target: String): Unit = {
-    import org.apache.hadoop.fs.Path
     recoverSwap(df.sparkSession, target)
     val staged = new Path(target + "._staged")
     val tgt = new Path(target)
     val fs = tgt.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     df.write.mode("overwrite").parquet(staged.toString)
-    if (fs.exists(tgt)) fs.delete(tgt, true)
-    fs.rename(staged, tgt)
+    swapIn(fs, staged, tgt)
   }
+
+  /** Replace `tgt` by the complete `staged` copy. Hadoop's `rename`
+    * reports failure by returning false, not by throwing; a silent false
+    * would leave the target deleted while the swap "succeeds".
+    */
+  private[etl] def swapIn(fs: FileSystem, staged: Path, tgt: Path): Unit = {
+    if (fs.exists(tgt)) fs.delete(tgt, true)
+    renameOrThrow(fs, staged, tgt)
+  }
+
+  private def renameOrThrow(fs: FileSystem, staged: Path, tgt: Path): Unit =
+    if (!fs.rename(staged, tgt))
+      throw new java.io.IOException(s"could not rename staged copy $staged to $tgt")
 
   /** Finish an interrupted [[writeSwap]]: a crash between its delete and
     * rename leaves the target missing with a COMPLETE staged copy beside
@@ -202,11 +252,13 @@ object RetailWarehouse {
     * (writeSwap overwrites it).
     */
   def recoverSwap(spark: SparkSession, target: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val staged = new Path(target + "._staged")
     val tgt = new Path(target)
-    val fs = tgt.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(tgt) && fs.exists(staged)) fs.rename(staged, tgt)
+    recoverSwap(tgt.getFileSystem(spark.sparkContext.hadoopConfiguration), tgt)
+  }
+
+  private[etl] def recoverSwap(fs: FileSystem, tgt: Path): Unit = {
+    val staged = new Path(tgt.toString + "._staged")
+    if (!fs.exists(tgt) && fs.exists(staged)) renameOrThrow(fs, staged, tgt)
   }
 
   /** Re-read prior dimension state for an incremental run (reference
@@ -216,7 +268,6 @@ object RetailWarehouse {
     * history as an initial load.
     */
   def readPriorDims(spark: SparkSession, dir: String): Map[String, DataFrame] = {
-    import org.apache.hadoop.fs.Path
     dimensions.flatMap { spec =>
       val p = new Path(s"$dir/${spec.name}")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

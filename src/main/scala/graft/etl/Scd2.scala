@@ -27,9 +27,12 @@ final case class Scd2Config(
 /** Set-based SCD2 merge.
   *
   * Replaces the reference's O(rows × dim) `iterrows` loop
-  * (/root/reference/etl/load_to_query.py:119-151) with two shuffles on the
-  * natural key: one `row_number` window to dedup/rank incoming rows and one
-  * full-outer join against the current dimension slice. Change detection is
+  * (reference `etl/load_to_query.py:119-151`) with one full-outer join
+  * on the natural key. The incoming batch is first collapsed to one row
+  * per key by a `min_by` group-by. The join pairs it with the current
+  * dimension slice, and one generator fans each joined row out into its
+  * output versions (kept, corrected, expired, fresh), so every branch of
+  * the merge reads the same join. Change detection is
   * a null-safe md5 row hash (the README's declared `row_hash` mechanism,
   * /root/reference/README.md:300-311), so `null vs null` reads as
   * *unchanged* — unlike the reference, whose `!=` comparison treats NaN as
@@ -42,7 +45,7 @@ final case class Scd2Config(
   * offset is a broadcast scalar frame (no driver-side action). Surrogate
   * keys are assigned with `row_number` over the natural key —
   * deterministic across retries, unlike `monotonically_increasing_id`; the
-  * global sort touches only the fresh delta, and [[Scd2Config.scalableKeys]]
+  * global sort touches only the fresh rows, and [[Scd2Config.scalableKeys]]
   * switches to a range-partitioned zipWithIndex assignment for initial
   * loads too big for one sort task. Same-day re-runs of an identical batch
   * are a no-op (idempotence is enforced by the hash equality, tested by
@@ -86,33 +89,9 @@ object Scd2 {
 
     val keyCols = cfg.naturalKey
     val hashC = "_graft_hash"
-
-    // Deterministic in-batch dedup: one row per natural key, smallest
-    // tracked-tuple wins (stable under re-runs and row-order changes).
-    // Key-only dims (no tracked columns survive the column guard) order
-    // by the key itself — every row of a key is identical then anyway.
-    // min_by over the ordering struct, not a row_number window: hash
-    // aggregate with map-side partials instead of a per-partition sort —
-    // on an initial load this is the whole dimension, and struct
-    // comparison is field-by-field ascending nulls-first, matching the
-    // window ordering it replaces (Scd2Spec/PropertySpec pin equality).
-    val dedupOrder = if (cfg.tracked.nonEmpty) cfg.tracked else keyCols
-    val inc = incoming
-      .select(cfg.attrCols.map(col): _*)
-      .groupBy(keyCols.map(col): _*)
-      .agg(min_by(struct(cfg.attrCols.map(col): _*),
-        struct(dedupOrder.map(col): _*)).as("_graft_row"))
-      .select(cfg.attrCols.map(c => col(s"_graft_row.$c").as(c)): _*)
-      .withColumn(hashC, rowHash(cfg.tracked))
-
+    val inc  = dedup(incoming, cfg).withColumn(hashC, rowHash(cfg.tracked))
     val cur  = current.filter(col(cfg.currentCol) === 1).withColumn(hashC, rowHash(cfg.tracked))
     val hist = current.filter(col(cfg.currentCol) === 0)
-
-    // Key offset as a broadcast scalar frame, NOT a driver-side head():
-    // the merge stays one fully-lazy, composable plan with no eager job
-    // against the (possibly huge) current dimension.
-    val maxKeyDf = current
-      .agg(coalesce(max(col(cfg.surrogateKey)).cast("bigint"), lit(0L)).as("_graft_max_key"))
 
     val i = inc.select(
       keyCols.map(c => col(c).as(s"i_$c")) ++
@@ -138,53 +117,76 @@ object Scd2 {
     val isChanged   = isDiff && !(col("c_eff") === lit(asOf))
     val isUnchanged = col("c_key").isNotNull && (col("i_hash").isNull || col("i_hash") === col("c_hash"))
 
-    val corrected = j.filter(isSameDay)
-      .select(Seq(col("c_key").as(cfg.surrogateKey)) ++
-        keyCols.map(k => col(s"i_$k").as(k)) ++
-        cfg.tracked.map(t => col(s"i_$t").as(t)) ++ Seq(
-          col("c_eff").as(cfg.effectiveCol),
-          lit(null).cast("date").as(cfg.expiryCol),
-          lit(1).as(cfg.currentCol),
-          col("c_ver").as(cfg.versionCol)): _*)
+    // Every output version of a joined row, tagged fresh (needs a new
+    // surrogate key) or settled (final as built). `side` picks the
+    // attribute values: "i" for the batch, "c" for the current row.
+    val freshC = "_graft_fresh"
+    def version(fresh: Boolean, key: Column, side: String, eff: Column,
+        expiry: Column, isCurrent: Int, ver: Column): Column =
+      struct(Seq(lit(fresh).as(freshC), key.as(cfg.surrogateKey)) ++
+        cfg.attrCols.map(a => col(s"${side}_$a").as(a)) ++ Seq(
+          eff.as(cfg.effectiveCol), expiry.as(cfg.expiryCol),
+          lit(isCurrent).as(cfg.currentCol), ver.cast("int").as(cfg.versionCol)): _*)
+    val noDate = lit(null).cast("date")
+    val versions = j.select(inline(array(
+      // unchanged or absent-from-batch current rows: carry forward verbatim
+      when(isUnchanged, version(false, col("c_key"), "c", col("c_eff"), noDate, 1, col("c_ver"))),
+      // same-day correction: batch attributes under the current key
+      when(isSameDay, version(false, col("c_key"), "i", col("c_eff"), noDate, 1, col("c_ver"))),
+      // prior versions of changed keys: expire as of `asOf`
+      when(isChanged, version(false, col("c_key"), "c", col("c_eff"), lit(asOf), 0, col("c_ver"))),
+      // brand-new keys (version 1) and changed keys (prior current's
+      // version + 1 — the README-declared incrementing version number,
+      // reference README.md:305-311); key and dates come later
+      when(isNew || isChanged, version(true, lit(null).cast("bigint"), "i", noDate, noDate, 1,
+        coalesce(col("c_ver"), lit(0)) + 1)))))
+      .filter(col(freshC).isNotNull)
 
-    // Rows needing a fresh version: brand-new keys (version 1) + changed
-    // keys (prior current's version + 1 — the README-declared
-    // incrementing version number, /root/reference/README.md:305-311).
-    val freshAttrs = j.filter(isNew || isChanged)
-      .select(keyCols.map(k => col(s"i_$k").as(k)) ++
-        cfg.tracked.map(t => col(s"i_$t").as(t)) :+
-        (coalesce(col("c_ver"), lit(0)) + 1).cast("int").as(cfg.versionCol): _*)
-    val fresh = assignSurrogateKeys(freshAttrs, cfg, maxKeyDf)
+    val ordered = outputCols(cfg)
+    val settled = versions.filter(!col(freshC)).select(ordered.map(col): _*)
+    val freshAttrs = versions.filter(col(freshC))
+      .select(cfg.attrCols.map(col) :+ col(cfg.versionCol): _*)
+
+    hist.select(ordered.map(col): _*)
+      .unionByName(settled)
+      .unionByName(freshVersions(freshAttrs, cfg, current, asOf))
+  }
+
+  /** Deterministic in-batch dedup: one row per natural key, smallest
+    * tracked-tuple wins (stable under re-runs and row-order changes).
+    * Key-only dims (no tracked columns survive the column guard) order
+    * by the key itself — every row of a key is identical then anyway.
+    * min_by over the ordering struct, not a row_number window: hash
+    * aggregate with map-side partials instead of a per-partition sort —
+    * on an initial load this is the whole dimension, and struct
+    * comparison is field-by-field ascending nulls-first, matching the
+    * window ordering it replaces (Scd2Spec/PropertySpec pin equality).
+    */
+  private def dedup(incoming: DataFrame, cfg: Scd2Config): DataFrame = {
+    val dedupOrder = if (cfg.tracked.nonEmpty) cfg.tracked else cfg.naturalKey
+    incoming
+      .select(cfg.attrCols.map(col): _*)
+      .groupBy(cfg.naturalKey.map(col): _*)
+      .agg(min_by(struct(cfg.attrCols.map(col): _*),
+        struct(dedupOrder.map(col): _*)).as("_graft_row"))
+      .select(cfg.attrCols.map(c => col(s"_graft_row.$c").as(c)): _*)
+  }
+
+  /** Fresh current versions of `attrs` (attribute columns plus version):
+    * surrogate keys after the largest key in `current`, effective `asOf`.
+    * The key offset is a broadcast scalar frame, NOT a driver-side
+    * head(): the merge stays one fully-lazy, composable plan with no
+    * eager job against the (possibly huge) current dimension.
+    */
+  private def freshVersions(attrs: DataFrame, cfg: Scd2Config,
+      current: DataFrame, asOf: java.sql.Date): DataFrame = {
+    val maxKeyDf = current
+      .agg(coalesce(max(col(cfg.surrogateKey)).cast("bigint"), lit(0L)).as("_graft_max_key"))
+    assignSurrogateKeys(attrs, cfg, maxKeyDf)
       .withColumn(cfg.effectiveCol, lit(asOf))
       .withColumn(cfg.expiryCol, lit(null).cast("date"))
       .withColumn(cfg.currentCol, lit(1))
-
-    // Prior versions of changed keys: expire as of `asOf`.
-    val expired = j.filter(isChanged)
-      .select(Seq(col("c_key").as(cfg.surrogateKey)) ++
-        keyCols.map(k => col(s"c_$k").as(k)) ++
-        cfg.tracked.map(t => col(s"c_$t").as(t)) ++ Seq(
-          col("c_eff").as(cfg.effectiveCol),
-          lit(asOf).as(cfg.expiryCol),
-          lit(0).as(cfg.currentCol),
-          col("c_ver").as(cfg.versionCol)): _*)
-
-    // Unchanged or absent-from-batch current rows: carry forward verbatim.
-    val kept = j.filter(isUnchanged)
-      .select(Seq(col("c_key").as(cfg.surrogateKey)) ++
-        keyCols.map(k => col(s"c_$k").as(k)) ++
-        cfg.tracked.map(t => col(s"c_$t").as(t)) ++ Seq(
-          col("c_eff").as(cfg.effectiveCol),
-          lit(null).cast("date").as(cfg.expiryCol),
-          lit(1).as(cfg.currentCol),
-          col("c_ver").as(cfg.versionCol)): _*)
-
-    val ordered = outputCols(cfg)
-    hist.select(ordered.map(col): _*)
-      .unionByName(kept.select(ordered.map(col): _*))
-      .unionByName(corrected.select(ordered.map(col): _*))
-      .unionByName(expired.select(ordered.map(col): _*))
-      .unionByName(fresh.select(ordered.map(col): _*))
+      .select(outputCols(cfg).map(col): _*)
   }
 
   /** Dense 1..n bigint keys for `df` in `orderCols` order, computed
@@ -234,8 +236,9 @@ object Scd2 {
     }
   }
 
-  /** Initial load: merge into an empty dimension. The whole batch is the
-    * fresh delta here, so key assignment always takes the scalable
+  /** Initial load: every deduplicated batch row is a fresh version 1,
+    * with no join and no settled rows — exactly [[merge]] into an empty
+    * dimension. Key assignment always takes the scalable
     * [[denseKeys]] path — a global `row_number` window would drag the
     * entire dimension through one sort task, the one plan shape that
     * cannot survive a 100× scale-up. Incremental [[merge]] keeps the
@@ -243,5 +246,6 @@ object Scd2 {
     * in; both paths produce identical keys (Scd2Spec pins it).
     */
   def initialLoad(incoming: DataFrame, cfg: Scd2Config, asOf: java.sql.Date): DataFrame =
-    merge(emptyDim(incoming, cfg), incoming, cfg.copy(scalableKeys = true), asOf)
+    freshVersions(dedup(incoming, cfg).withColumn(cfg.versionCol, lit(1)),
+      cfg.copy(scalableKeys = true), emptyDim(incoming, cfg), asOf)
 }

@@ -15,12 +15,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the merge is idempotent for an identical batch (hash-equality makes
   * re-merging unchanged attributes a no-op, pinned by Scd2 property
   * tests), so replays converge instead of double-versioning. Per-key
-  * conflicts WITHIN one micro-batch are the upstream CDC compaction's
-  * concern — this operator de-duplicates exact duplicate rows only.
+  * conflicts WITHIN one micro-batch collapse to the smallest tracked
+  * tuple (Scd2.merge's `min_by`); ordering them by event time is the
+  * upstream CDC compaction's concern.
   *
-  * Scale: the per-batch work is two key-partitioned shuffles (Scd2.merge)
-  * over current-dimension + batch — history rows never enter the join, so
-  * micro-batch cost tracks the live dimension size, not total history.
+  * Scale: the per-batch work is one [[Scd2.merge]]: a key group-by of the
+  * batch, then one full-outer join with the current dimension slice whose
+  * rows fan out through one generator — history rows never enter the
+  * join, so micro-batch cost tracks the live dimension size, not total
+  * history.
   */
 object DimensionStream {
 
@@ -52,7 +55,7 @@ object DimensionStream {
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          val incoming = batch.toDF().distinct()
+          val incoming = batch.toDF()
           val merged = Scd2.merge(
             currentDim(spark, dimPath, incoming, cfg), incoming, cfg, asOf(batchId))
           RetailWarehouse.writeSwap(merged, dimPath)

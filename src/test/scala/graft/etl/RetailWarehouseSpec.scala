@@ -1,8 +1,10 @@
 package graft.etl
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class RetailWarehouseSpec extends SparkSpec {
   import spark.implicits._
@@ -85,5 +87,125 @@ class RetailWarehouseSpec extends SparkSpec {
     assert(res.fact.filter(col("customer_key").isNull).count() === 0)
     val mart = RetailWarehouse.martSalesPerformance(res.fact, res.dims("dim_customer"))
     assert(mart.count() > 0)
+  }
+
+  private val tagKey = "graft.test.tag"
+
+  /** The `tagKey` value of every job `body` starts. Marker jobs run on
+    * this thread before and after bound the window: the listener bus
+    * delivers events in order, so jobs started earlier (still queued when
+    * the listener joins) come before the first marker, and once the
+    * second marker's start arrives, so has every job of `body`.
+    */
+  private def jobTags(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val tag = Option(e.properties).flatMap(p => Option(p.getProperty(tagKey))).getOrElse("")
+        seen.add(tag)
+        if (tag == "end") drained.countDown()
+      }
+    }
+    val sc = spark.sparkContext
+    def marker(tag: String): Unit = {
+      sc.setLocalProperty(tagKey, tag)
+      sc.parallelize(Seq(1), 1).count()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("start")
+      sc.setLocalProperty(tagKey, "run")
+      body
+      marker("end")
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setLocalProperty(tagKey, null)
+      sc.removeSparkListener(listener)
+    }
+    seen.asScala.toSeq.dropWhile(_ != "start").drop(1).takeWhile(_ != "end")
+  }
+
+  /** Dimension-pool threads still alive after a grace period: a pool that
+    * was shut down lets its idle threads exit, one that was not keeps them.
+    */
+  private def livePoolThreads(): Seq[Thread] = {
+    val pool = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(_.getName.startsWith("graft-dim-pool"))
+    pool.foreach(_.join(5000))
+    pool.filter(_.isAlive)
+  }
+
+  /** A written warehouse re-read as prior, plus an incremental batch that
+    * changes a product's category, corrects nothing and adds a customer.
+    */
+  private def priorAndBatch(): (String, Map[String, org.apache.spark.sql.DataFrame],
+      org.apache.spark.sql.DataFrame) = {
+    val dir = Files.createTempDirectory("graft_wh_inc").toString
+    RetailWarehouse.writeWarehouse(RetailWarehouse.run(staging, asOf), dir)
+    val batch = Seq(
+      ("O4", "2024-03-01", "C3", "Cy", "Consumer", "P1", "Widget", "Hardware", 5.0, 1.0),
+      ("O5", "2024-03-02", "C1", "Ann", "Consumer", "P2", "Gadget", "Tech", 7.0, 2.0),
+    ).toDF("order_id", "order_date", "customer_id", "customer_name", "segment",
+      "product_id", "product_name", "category", "sales", "profit")
+      .withColumn("order_date", to_date(col("order_date")))
+    (dir, RetailWarehouse.readPriorDims(spark, dir), batch)
+  }
+
+  test("incremental run: bounded jobs per dimension, all carrying the caller's local properties") {
+    val (_, prior, batch) = priorAndBatch()
+    var res: RetailWarehouse.WarehouseResult = null
+    val tags = jobTags {
+      res = RetailWarehouse.run(batch, java.sql.Date.valueOf("2024-07-01"), prior)
+    }
+    // two dims at 7 jobs each; the four-branch merge this replaced
+    // started 10 per dim on this batch
+    assert(tags.nonEmpty && tags.size <= 2 * 8, s"${tags.size} jobs")
+    assert(tags.forall(_ == "run"), tags)
+    assert(livePoolThreads().isEmpty)
+    val p1 = res.dims("dim_product").filter(col("product_id") === "P1")
+      .orderBy("product_key").collect()
+    assert(p1.map(_.getAs[String]("category")).toSeq === Seq("Tools", "Hardware"))
+    assert(res.dims("dim_customer").filter(col("is_current") === 1).count() === 3)
+  }
+
+  test("a dimension that fails to materialize rethrows its cause and leaves no pool thread") {
+    val (dir, prior, batch) = priorAndBatch()
+    // the prior frame's schema is resolved; its files now read as garbage
+    new java.io.File(s"$dir/dim_product").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach(f => Files.write(f.toPath, Array.fill[Byte](64)(7)))
+    val e = intercept[Exception] {
+      RetailWarehouse.run(batch, java.sql.Date.valueOf("2024-07-01"), prior)
+    }
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException] &&
+      !e.isInstanceOf[java.util.concurrent.CompletionException], e)
+    assert(livePoolThreads().isEmpty)
+  }
+
+  test("writeSwap throws when rename fails; recoverSwap then restores the staged copy") {
+    import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val local = FileSystem.getLocal(conf)
+    // Hadoop's rename reports failure by returning false
+    val failing = new FilterFileSystem(local) {
+      override def rename(src: Path, dst: Path): Boolean = false
+    }
+    val target = Files.createTempDirectory("graft_swap").toString + "/dim"
+    val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    df.write.parquet(target)
+    val staged = new Path(target + "._staged")
+    Seq((3L, "c"), (4L, "d"), (5L, "e")).toDF("k", "v").write.parquet(staged.toString)
+    val e = intercept[java.io.IOException] {
+      RetailWarehouse.swapIn(failing, staged, new Path(target))
+    }
+    assert(e.getMessage.contains(staged.toString) && e.getMessage.contains(target), e.getMessage)
+    // the failed swap left the target deleted and the staged copy complete
+    assert(!local.exists(new Path(target)))
+    intercept[java.io.IOException](RetailWarehouse.recoverSwap(failing, new Path(target)))
+    RetailWarehouse.recoverSwap(spark, target)
+    assert(spark.read.parquet(target).orderBy("k").collect().map(_.getLong(0)).toSeq ===
+      Seq(3L, 4L, 5L))
+    assert(!local.exists(staged))
   }
 }

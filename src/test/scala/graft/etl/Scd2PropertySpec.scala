@@ -12,6 +12,8 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   *   3. current rows never carry an expiry date, expired rows always do;
   *   4. the current row reflects the latest batch's attributes;
   *   5. replaying the final batch is a no-op.
+  * A third property compares every merge, surrogate keys included, with
+  * a driver-side reference model of the same semantics.
   */
 class Scd2PropertySpec extends SparkSpec {
   import spark.implicits._
@@ -83,5 +85,86 @@ class Scd2PropertySpec extends SparkSpec {
       d2.collect().sortBy(_.getLong(0)).toSeq ==
         d3.collect().sortBy(_.getLong(0)).toSeq
     }, minSuccessful = 10)
+  }
+
+  /** One dimension row of the reference model: `attrs` is the natural
+    * key followed by the tracked columns, dates are ISO strings.
+    */
+  private final case class V(key: Long, attrs: List[Option[String]], eff: String,
+      exp: Option[String], cur: Int, ver: Int)
+
+  private implicit val attrOrder: Ordering[List[Option[String]]] =
+    Ordering.Implicits.seqOrdering[List, Option[String]]
+
+  /** The SCD2 semantics `Scd2.merge` implements, row by row on the driver:
+    * in-batch duplicates collapse to the smallest tracked tuple (the key
+    * itself for key-only dims, nulls first); a changed tracked tuple
+    * (null-safe) expires the current row and opens version + 1, unless
+    * the current row took effect on `asOf`, which is corrected in place;
+    * fresh rows take keys max + 1.. in natural-key order (nulls first).
+    */
+  private def model(dim: Seq[V], batch: Seq[List[Option[String]]],
+      nKey: Int, keyOnly: Boolean, asOf: String): Seq[V] = {
+    val inc = batch.groupBy(_.take(nKey)).map { case (k, rows) =>
+      k -> rows.minBy(a => if (keyOnly) a.take(nKey) else a.drop(nKey))
+    }
+    val cur = dim.filter(_.cur == 1).map(v => v.attrs.take(nKey) -> v).toMap
+    val maxKey = (0L +: dim.map(_.key)).max
+    val settled = Seq.newBuilder[V]
+    val fresh = Seq.newBuilder[(List[Option[String]], Int)]
+    for (k <- inc.keySet ++ cur.keySet) (inc.get(k), cur.get(k)) match {
+      case (None, Some(c)) => settled += c
+      case (Some(i), Some(c)) if i.drop(nKey) == c.attrs.drop(nKey) => settled += c
+      case (Some(i), Some(c)) if c.eff == asOf => settled += c.copy(attrs = i)
+      case (Some(i), Some(c)) =>
+        settled += c.copy(exp = Some(asOf), cur = 0)
+        fresh += (i -> (c.ver + 1))
+      case (Some(i), None) => fresh += (i -> 1)
+      case (None, None) =>
+    }
+    val keyed = fresh.result().sortBy(_._1.take(nKey)).zipWithIndex.map {
+      case ((a, ver), ix) => V(maxKey + ix + 1, a, asOf, None, 1, ver)
+    }
+    dim.filter(_.cur == 0) ++ settled.result() ++ keyed
+  }
+
+  private val genVal: Gen[Option[String]] =
+    Gen.frequency(1 -> Gen.const(None), 4 -> Gen.oneOf("x", "y").map(Some(_)))
+  private val genKey: Gen[Option[String]] =
+    Gen.frequency(1 -> Gen.const(None), 8 -> Gen.oneOf("a", "b", "c", "d").map(Some(_)))
+  // (id, name, seg) rows: duplicate keys and exact duplicates both occur
+  private val genRows: Gen[List[(Option[String], Option[String], Option[String])]] =
+    Gen.choose(0, 6).flatMap(n => Gen.listOfN(n, Gen.zip(genKey, genVal, genVal)))
+  // 1..4 batches, each dated the same day as the one before or a day later
+  private val genRun = for {
+    n <- Gen.choose(1, 4)
+    batches <- Gen.listOfN(n, genRows)
+    steps <- Gen.listOfN(n, Gen.oneOf(0, 1))
+    keyOnly <- Gen.oneOf(false, true)
+    scalable <- Gen.oneOf(false, true)
+  } yield (batches, steps.scanLeft(0)(_ + _).tail, keyOnly, scalable)
+
+  test("merge and initialLoad match a reference model exactly, surrogate keys included") {
+    check(Prop.forAll(genRun) { case (batches, days, keyOnly, scalable) =>
+      val c = Scd2Config(Seq("id"), if (keyOnly) Nil else Seq("name", "seg"), "key",
+        scalableKeys = scalable)
+      val nAttr = c.attrCols.size
+      val steps = batches.zip(days.map(d =>
+        java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(d.toLong))))
+      steps.foldLeft((Option.empty[DataFrame], Seq.empty[V], true)) {
+        case ((prev, expected, ok), (rows, asOf)) =>
+          val df = rows.toDF("id", "name", "seg")
+          val merged = prev.fold(Scd2.initialLoad(df, c, asOf))(Scd2.merge(_, df, c, asOf))
+            .localCheckpoint(true)
+          val got = merged.collect().map(r => V(r.getLong(0),
+            (1 to nAttr).map(ix => Option(r.getString(ix))).toList,
+            r.getDate(nAttr + 1).toString, Option(r.getDate(nAttr + 2)).map(_.toString),
+            r.getInt(nAttr + 3), r.getInt(nAttr + 4))).toSeq
+          val batch = rows.map { case (id, name, seg) => List(id, name, seg).take(nAttr) }
+          val want = model(expected, batch, 1, keyOnly, asOf.toString)
+          val same = got.sortBy(_.toString) == want.sortBy(_.toString)
+          (Some(merged), want, ok && same)
+      }._3
+    }, minSuccessful = 25)
   }
 }
