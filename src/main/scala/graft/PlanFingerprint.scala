@@ -54,6 +54,13 @@ object PlanFingerprint {
     // allocated — the r17 drift class the fixture memo exposed. The
     // suffix is allocation history, not plan shape.
     .replaceAll("\\blambda ([A-Za-z]+)_\\d+", "lambda $1_n")
+    // the aliases Spark gives the shared subexpressions of a rewritten
+    // `With` expression (count_if, for one) print as `_common_expr_7`:
+    // the suffix is another JVM-global counter, so the same query hashed
+    // differently on its first and third construction in one session
+    // (q_conditional_agg, found through `Probe fp`). Allocation history,
+    // not plan shape.
+    .replaceAll("\\b_common_expr_\\d+", "_common_expr_n")
     .replaceAll("plan_id=\\d+", "plan_id=x")
     .replaceAll("\\[id=[^\\]]*\\]", "[id=x]")        // exchange/stage ids
     .replaceAll("(file|hdfs|s3a?):[^\\s,\\)\\]]+", "<path>")

@@ -476,7 +476,8 @@ object CoreQueries {
   /** S1/S2/P2/F2: CSV sink + scan roundtrip with explicit schema. */
   val csvRoundtrip = Q("q_csv_roundtrip",
     (s, d) => {
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_csv_${d.replaceAll("[^a-z0-9.]", "_")}"
+      val out = s"${System.getProperty("java.io.tmpdir")}/graft_csv_" +
+        s"${d.replaceAll("[^A-Za-z0-9.]", "_")}_${s.sparkContext.applicationId}"
       region(s, d).coalesce(1).write.mode("overwrite").option("header", "true").csv(out)
       val schema = StructType(Seq(
         StructField("r_regionkey", IntegerType), StructField("r_name", StringType)))
@@ -694,7 +695,8 @@ object CoreQueries {
   /** S5/S6: parquet sink + scan roundtrip. */
   val parquetRoundtrip = Q("q_parquet_roundtrip",
     (s, d) => {
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_pq_${d.replaceAll("[^a-z0-9.]", "_")}"
+      val out = s"${System.getProperty("java.io.tmpdir")}/graft_pq_" +
+        s"${d.replaceAll("[^A-Za-z0-9.]", "_")}_${s.sparkContext.applicationId}"
       nation(s, d).write.mode("overwrite").parquet(out)
       s.read.parquet(out).orderBy(col("n_nationkey"))
     },

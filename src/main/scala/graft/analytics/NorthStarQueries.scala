@@ -1041,22 +1041,16 @@ object NorthStarQueries {
     * (stored probe, rerank shortlist, recall audit) probes the parquet
     * layout; only q_ann_ivfpq keeps the self-contained in-memory build,
     * because it IS the benchmark of the build path. Built on first use
-    * per (dataset, application); bit-identical to the in-memory index
-    * (SimilaritySpec pins the round-trip), so every consumer's oracle is
-    * unchanged.
+    * per (dataset, application) under an [[AppState]] completion
+    * marker, so a failed build is redone rather than reused;
+    * bit-identical to the in-memory index (SimilaritySpec pins the
+    * round-trip), so every consumer's oracle is unchanged.
     */
-  private val pqIndexLock = new Object
   private def storedPqIndex(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft_pqidx_" +
-      s"${d.replaceAll("[^A-Za-z0-9.]", "_")}_${s.sparkContext.applicationId}"
-    val p = new org.apache.hadoop.fs.Path(s"$out/codes")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    pqIndexLock.synchronized {
-      if (!fs.exists(p)) Similarity.writePqIndex(embeddings(s, d), out, iters = 1)
+      d: String): String =
+    AppState.ensure(s, "graft_pqidx_" + AppState.sanitize(d)) { out =>
+      Similarity.writePqIndex(embeddings(s, d), out, iters = 1)
     }
-    out
-  }
 
   /** The SERVING path of the IVF-PQ story: [[Similarity.writePqIndex]]
     * persists centroids + codebooks + per-vector codes (m bytes-ish per

@@ -2260,7 +2260,7 @@ object SnapshotQueries {
 
   /** X125: COMPOSITE-key MERGE — `ON t.k1 = s.k1 AND t.k2 = s.k2`, the
     * (order_id, line_number)-shaped tuple keys real CDC feeds carry,
-    * landed through [[graft.sources.Snapshots.mergeComposite]]: the
+    * landed through [[graft.sources.Snapshots.merge]] on the key list: the
     * anti-join compares the FULL tuple (so rows sharing only one key
     * column are never touched) while file pruning rides the LEADING
     * column's envelope — lead-clustered layouts keep a bounded CDC

@@ -13,7 +13,6 @@ final case class DimSpec(
     naturalKey: Seq[String],
     tracked: Seq[String],
     surrogateKey: String) {
-  def scd2: Scd2Config = Scd2Config(naturalKey, tracked, surrogateKey)
   def cols: Seq[String] = naturalKey ++ tracked
 }
 
@@ -92,7 +91,7 @@ object RetailWarehouse {
       if (!spec.naturalKey.forall(acc.columns.contains)) acc
       else {
         val keyMap = dims(spec.name)
-          .filter(col(spec.scd2.currentCol) === 1)
+          .filter(col(Scd2.CurrentCol) === 1)
           .select((spec.naturalKey :+ spec.surrogateKey).map(col): _*)
         acc.join(broadcast(keyMap), spec.naturalKey, "left")
           .drop(spec.naturalKey: _*)

@@ -11,16 +11,14 @@ import org.apache.spark.sql.functions._
   * @param naturalKey  business key columns (e.g. customer_id)
   * @param tracked     attribute columns whose change opens a new version
   * @param surrogateKey name of the dense surrogate key column (bigint)
+  *
+  * The validity and version columns have fixed names: [[Scd2.EffectiveCol]],
+  * [[Scd2.ExpiryCol]], [[Scd2.CurrentCol]] and [[Scd2.VersionCol]].
   */
 final case class Scd2Config(
     naturalKey: Seq[String],
     tracked: Seq[String],
-    surrogateKey: String,
-    effectiveCol: String = "effective_date",
-    expiryCol: String = "expiry_date",
-    currentCol: String = "is_current",
-    versionCol: String = "version",
-    scalableKeys: Boolean = false) {
+    surrogateKey: String) {
   def attrCols: Seq[String] = naturalKey ++ tracked
 }
 
@@ -45,13 +43,18 @@ final case class Scd2Config(
   * offset is a broadcast scalar frame (no driver-side action). Surrogate
   * keys are assigned with `row_number` over the natural key —
   * deterministic across retries, unlike `monotonically_increasing_id`; the
-  * global sort touches only the fresh rows, and [[Scd2Config.scalableKeys]]
-  * switches to a range-partitioned zipWithIndex assignment for initial
-  * loads too big for one sort task. Same-day re-runs of an identical batch
-  * are a no-op (idempotence is enforced by the hash equality, tested by
-  * property in Scd2Spec).
+  * global sort touches only the fresh rows, and [[initialLoad]] uses a
+  * range-partitioned zipWithIndex assignment ([[denseKeys]]) instead,
+  * because there the fresh rows are the whole dimension. Same-day
+  * re-runs of an identical batch are a no-op (idempotence is enforced by
+  * the hash equality, tested by property in Scd2Spec).
   */
 object Scd2 {
+
+  val EffectiveCol = "effective_date"
+  val ExpiryCol = "expiry_date"
+  val CurrentCol = "is_current"
+  val VersionCol = "version"
 
   /** Null-safe row fingerprint: md5 over sentinel-coalesced string casts.
     * `\u0001` separates fields, `\u0000` stands for null — neither occurs
@@ -66,17 +69,17 @@ object Scd2 {
   def emptyDim(incoming: DataFrame, cfg: Scd2Config): DataFrame = {
     val base = incoming.select(cfg.attrCols.map(col): _*)
       .withColumn(cfg.surrogateKey, lit(null).cast("bigint"))
-      .withColumn(cfg.effectiveCol, lit(null).cast("date"))
-      .withColumn(cfg.expiryCol, lit(null).cast("date"))
-      .withColumn(cfg.currentCol, lit(null).cast("int"))
-      .withColumn(cfg.versionCol, lit(null).cast("int"))
+      .withColumn(EffectiveCol, lit(null).cast("date"))
+      .withColumn(ExpiryCol, lit(null).cast("date"))
+      .withColumn(CurrentCol, lit(null).cast("int"))
+      .withColumn(VersionCol, lit(null).cast("int"))
       .select(outputCols(cfg).map(col): _*)
     base.filter(lit(false))
   }
 
   def outputCols(cfg: Scd2Config): Seq[String] =
     (cfg.surrogateKey +: cfg.attrCols) ++
-      Seq(cfg.effectiveCol, cfg.expiryCol, cfg.currentCol, cfg.versionCol)
+      Seq(EffectiveCol, ExpiryCol, CurrentCol, VersionCol)
 
   /** Merge `incoming` (raw attribute rows) into `current` (prior dimension
     * state, possibly empty) as of `asOf`. Returns the full new dimension.
@@ -90,8 +93,8 @@ object Scd2 {
     val keyCols = cfg.naturalKey
     val hashC = "_graft_hash"
     val inc  = dedup(incoming, cfg).withColumn(hashC, rowHash(cfg.tracked))
-    val cur  = current.filter(col(cfg.currentCol) === 1).withColumn(hashC, rowHash(cfg.tracked))
-    val hist = current.filter(col(cfg.currentCol) === 0)
+    val cur  = current.filter(col(CurrentCol) === 1).withColumn(hashC, rowHash(cfg.tracked))
+    val hist = current.filter(col(CurrentCol) === 0)
 
     val i = inc.select(
       keyCols.map(c => col(c).as(s"i_$c")) ++
@@ -100,8 +103,8 @@ object Scd2 {
       keyCols.map(c0 => col(c0).as(s"c_$c0")) ++
         cfg.tracked.map(c0 => col(c0).as(s"c_$c0")) ++ Seq(
           col(cfg.surrogateKey).as("c_key"),
-          col(cfg.effectiveCol).as("c_eff"),
-          col(cfg.versionCol).as("c_ver"),
+          col(EffectiveCol).as("c_eff"),
+          col(VersionCol).as("c_ver"),
           col(hashC).as("c_hash")): _*)
 
     val joinCond = keyCols.map(k => col(s"i_$k") <=> col(s"c_$k")).reduce(_ && _)
@@ -125,8 +128,8 @@ object Scd2 {
         expiry: Column, isCurrent: Int, ver: Column): Column =
       struct(Seq(lit(fresh).as(freshC), key.as(cfg.surrogateKey)) ++
         cfg.attrCols.map(a => col(s"${side}_$a").as(a)) ++ Seq(
-          eff.as(cfg.effectiveCol), expiry.as(cfg.expiryCol),
-          lit(isCurrent).as(cfg.currentCol), ver.cast("int").as(cfg.versionCol)): _*)
+          eff.as(EffectiveCol), expiry.as(ExpiryCol),
+          lit(isCurrent).as(CurrentCol), ver.cast("int").as(VersionCol)): _*)
     val noDate = lit(null).cast("date")
     val versions = j.select(inline(array(
       // unchanged or absent-from-batch current rows: carry forward verbatim
@@ -145,11 +148,11 @@ object Scd2 {
     val ordered = outputCols(cfg)
     val settled = versions.filter(!col(freshC)).select(ordered.map(col): _*)
     val freshAttrs = versions.filter(col(freshC))
-      .select(cfg.attrCols.map(col) :+ col(cfg.versionCol): _*)
+      .select(cfg.attrCols.map(col) :+ col(VersionCol): _*)
 
     hist.select(ordered.map(col): _*)
       .unionByName(settled)
-      .unionByName(freshVersions(freshAttrs, cfg, current, asOf))
+      .unionByName(freshVersions(freshAttrs, cfg, current, asOf, dense = false))
   }
 
   /** Deterministic in-batch dedup: one row per natural key, smallest
@@ -179,13 +182,13 @@ object Scd2 {
     * eager job against the (possibly huge) current dimension.
     */
   private def freshVersions(attrs: DataFrame, cfg: Scd2Config,
-      current: DataFrame, asOf: java.sql.Date): DataFrame = {
+      current: DataFrame, asOf: java.sql.Date, dense: Boolean): DataFrame = {
     val maxKeyDf = current
       .agg(coalesce(max(col(cfg.surrogateKey)).cast("bigint"), lit(0L)).as("_graft_max_key"))
-    assignSurrogateKeys(attrs, cfg, maxKeyDf)
-      .withColumn(cfg.effectiveCol, lit(asOf))
-      .withColumn(cfg.expiryCol, lit(null).cast("date"))
-      .withColumn(cfg.currentCol, lit(1))
+    assignSurrogateKeys(attrs, cfg, maxKeyDf, dense)
+      .withColumn(EffectiveCol, lit(asOf))
+      .withColumn(ExpiryCol, lit(null).cast("date"))
+      .withColumn(CurrentCol, lit(1))
       .select(outputCols(cfg).map(col): _*)
   }
 
@@ -215,14 +218,14 @@ object Scd2 {
   /** Dense surrogate keys (offset + 1..n in natural-key order) for the
     * fresh delta. Default: a global `row_number` window — one sort task,
     * fine for incremental deltas, matches the oracle's sequencing exactly.
-    * `cfg.scalableKeys`: [[denseKeys]] — the same total order computed
+    * `dense`: [[denseKeys]] — the same total order computed
     * distributively, used for initial loads where the delta IS the whole
     * dimension (see [[initialLoad]]).
     */
-  private def assignSurrogateKeys(
-      attrs: DataFrame, cfg: Scd2Config, maxKeyDf: DataFrame): DataFrame = {
+  private def assignSurrogateKeys(attrs: DataFrame, cfg: Scd2Config,
+      maxKeyDf: DataFrame, dense: Boolean): DataFrame = {
     val keyCols = cfg.naturalKey
-    if (!cfg.scalableKeys) {
+    if (!dense) {
       val freshW = Window.orderBy(keyCols.map(col): _*)
       attrs
         .crossJoin(broadcast(maxKeyDf))
@@ -242,10 +245,10 @@ object Scd2 {
     * [[denseKeys]] path — a global `row_number` window would drag the
     * entire dimension through one sort task, the one plan shape that
     * cannot survive a 100× scale-up. Incremental [[merge]] keeps the
-    * window default (the delta is small) unless `cfg.scalableKeys` opts
-    * in; both paths produce identical keys (Scd2Spec pins it).
+    * window (the delta is small); both paths produce identical keys
+    * (Scd2Spec pins it).
     */
   def initialLoad(incoming: DataFrame, cfg: Scd2Config, asOf: java.sql.Date): DataFrame =
-    freshVersions(dedup(incoming, cfg).withColumn(cfg.versionCol, lit(1)),
-      cfg.copy(scalableKeys = true), emptyDim(incoming, cfg), asOf)
+    freshVersions(dedup(incoming, cfg).withColumn(VersionCol, lit(1)),
+      cfg, emptyDim(incoming, cfg), asOf, dense = true)
 }

@@ -54,7 +54,7 @@ import org.apache.spark.sql.functions.{col, count, lit}
   *    `WHEN NOT MATCHED BY SOURCE THEN UPDATE/DELETE` — evaluates as a
   *    side-prefixed join cascade that still lands as ONE atomic
   *    `Snapshots.merge` commit. Composite `ON k1 = k1 AND k2 = k2`
-  *    tuple keys route onto `Snapshots.mergeComposite`, and
+  *    tuple keys land through the same key-list `Snapshots.merge`, and
   *    `MERGE WITH SCHEMA EVOLUTION` adds source-only columns to the
   *    target (metadata-only addColumn + catalog-schema sync; star
   *    expansions carry their source values) and WIDENS target columns a
@@ -1371,7 +1371,7 @@ object SqlDml {
         // appears in the source (keys absent from the target are no-ops)
         val keys = src0.select(keyCols.map(col): _*)
         evolve()
-        Snapshots.mergeComposite(spark, table,
+        Snapshots.merge(spark, table,
           upserts = shapedEmpty(spark), deleteKeys = keys,
           keyCols = keyCols)
       } else {
@@ -1405,7 +1405,7 @@ object SqlDml {
         if (newCols.nonEmpty || widenCols.nonEmpty)
           Snapshots.preValidateUniqueBatch(spark, table, upserts)
         evolve()
-        Snapshots.mergeComposite(spark, table,
+        Snapshots.merge(spark, table,
           upserts = withRecordedSchema(spark, upserts, targetSchema),
           deleteKeys = shapedEmpty(spark), keyCols = keyCols)
       }
@@ -1597,7 +1597,7 @@ object SqlDml {
           Snapshots.addColumn(spark, table, f.name, f.dataType))
         syncCatalogSchema(spark, table, ident)
       }
-      Snapshots.mergeComposite(spark, table,
+      Snapshots.merge(spark, table,
         upserts = withRecordedSchema(spark, ups, targetSchema),
         deleteKeys = dels, keyCols = keyCols)
       refreshCatalog(spark, ident)

@@ -288,7 +288,7 @@ object Snapshots {
   }
 
   /** The partitioned batch writer for `table` when it declares a spec —
-    * what [[merge]]/[[mergeComposite]] hand [[commitWith]] so their
+    * what [[merge]] hands [[commitWith]] so its
     * rewritten files keep the tuple-in-name layout (the partition tier
     * would otherwise refuse the table until a rewriteLayout). None on
     * unspec'd tables = the plain writer.
@@ -2454,40 +2454,50 @@ object Snapshots {
         s"v$version missing or corrupt")).files
   }
 
-  /** Copy-on-write MERGE into the latest version: each `upserts` row
-    * replaces the stored row with the same `keyCol` (insert when the key
-    * is absent), and keys present in `deleteKeys` are removed; a key in
+  /** Copy-on-write MERGE into the latest version on the key tuple
+    * `keyCols`: one column (`order_id`) or the `(order_id, line_number)`-
+    * shaped tuples real CDC feeds carry (order lines, sensor (device,
+    * ts-bucket), account (region, id)). Each `upserts` row replaces the
+    * stored row with the same key tuple (insert when the tuple is
+    * absent), and tuples present in `deleteKeys` are removed; a tuple in
     * both is delete-then-insert, i.e. the upsert row wins. Only data
-    * files whose manifest `keyCol` envelope may contain an affected key
-    * are rewritten; every other file is CARRIED into the new manifest
-    * byte-identical — stats and blooms included, so later skip decisions
-    * keep working. Rewrite cost is therefore proportional to the TOUCHED
-    * file set, not the table: with a key-clustered layout (range-
-    * partitioned or Z-ordered commits) a bounded CDC batch touches a
-    * bounded number of files at any table size — the shape that makes
-    * row-level merge viable at 100 TB.
+    * files whose manifest envelope on the LEADING key column may contain
+    * an affected lead value are rewritten — a file that can hold no
+    * affected lead value holds no affected tuple, the same leading-column
+    * soundness [[addUnique]]'s parent check uses. Every other file is
+    * CARRIED into the new manifest byte-identical — stats and blooms
+    * included, so later skip decisions keep working. Rewrite cost is
+    * therefore proportional to the TOUCHED file set, not the table: with
+    * a layout clustered on the lead column (range-partitioned or
+    * Z-ordered commits) a bounded CDC batch touches a bounded number of
+    * files at any table size — the shape that makes row-level merge
+    * viable at 100 TB.
     *
-    * Keys must be integral or string (validated against the table's
-    * schema — other types refuse loudly) and non-null (null-keyed
-    * upsert rows insert; null delete keys are ignored). Integral keys
-    * prune files through the manifest [min,max] stats; string keys
-    * through the UTF-8 string envelopes ([[ParquetMeta.fileStrStats]]),
-    * compared UNCAST end-to-end so '1'/'01' stay distinct keys and
-    * non-numeric keys are first-class. Affected keys are collected
-    * driver-side when ≤ `maxCollectedKeys` (exact per-file envelope test
-    * by binary search, and the anti-join side is broadcast); above that
-    * the per-file test falls back to the batch's overall [min,max]
+    * Key columns must be integral or string (validated against the
+    * table's schema — other types refuse loudly). A tuple with ANY null
+    * component inserts (upserts) or is ignored (deletes) — null keys
+    * match nothing, exactly the join's semantics. The anti-join compares
+    * ALL key columns: integral components as longs (width-free
+    * equality), string components UNCAST end-to-end so '1'/'01' stay
+    * distinct keys and non-numeric keys are first-class. An integral
+    * lead prunes files through the manifest [min,max] stats, a string
+    * lead through the UTF-8 string envelopes ([[ParquetMeta.fileStrStats]]).
+    * Affected tuples are collected driver-side when ≤ `maxCollectedKeys`
+    * (exact per-file test by binary search over the distinct lead
+    * values, and the anti-join side is broadcast); above that the
+    * per-file test falls back to the batch's overall lead [min,max]
     * envelope (strings: min/max of the UTF-8 encoding, so the envelope
-    * order matches the footer stats') and the anti-join shuffles. Both are SOUND: a file is
-    * only carried when its envelope proves no affected key is inside;
-    * files without a recorded `keyCol` envelope are always rewritten.
+    * order matches the footer stats') and the anti-join shuffles. Both
+    * are SOUND: a file is only carried when its envelope proves no
+    * affected key is inside; files without a recorded lead envelope are
+    * always rewritten.
     *
     * Concurrency: the merge plans against the current latest version; if
     * another commit lands before the manifest create, the retry loop
     * re-reads the parent and AUTO-REBASES when that is provably safe —
     * the racer left every file this merge rewrites untouched, and no file
     * the racer added may contain any of this merge's keys (the same
-    * envelope / collected-key test the pruning uses, so the proof is
+    * lead-envelope / collected-key test the pruning uses, so the proof is
     * sound, not heuristic). Then the merge re-commits carrying the NEW
     * parent's other files — two writers on disjoint key ranges both land,
     * the contention path a multi-pipeline warehouse hits daily. A racer
@@ -2501,58 +2511,72 @@ object Snapshots {
     * inside it.
     */
   def merge(spark: SparkSession, table: String, upserts: DataFrame,
-      deleteKeys: DataFrame, keyCol: String,
+      deleteKeys: DataFrame, keyCols: Seq[String],
       maxCollectedKeys: Int = 100000,
       properties: Map[String, String] = Map.empty,
       planHook: () => Unit = () => ()): MergeResult = {
     import org.apache.spark.sql.functions.{broadcast, col => c}
+    require(keyCols.nonEmpty, "Snapshots.merge: empty key list")
+    require(keyCols.distinct == keyCols,
+      "Snapshots.merge: duplicate key columns in " + keyCols.mkString(","))
     val v = latestVersion(spark, table)
     require(v > 0, s"Snapshots.merge: $table has no committed version")
-    require(deleteKeys.columns.exists(_.equalsIgnoreCase(keyCol)),
-      s"Snapshots.merge: deleteKeys needs a '$keyCol' column")
+    keyCols.foreach(k => require(
+      deleteKeys.columns.exists(_.equalsIgnoreCase(k)),
+      s"Snapshots.merge: deleteKeys needs a '$k' column"))
     val entries = manifest(spark, table, v)
     val tableDf = read(spark, table, Some(v))
     val tableCols = tableDf.columns
     require(upserts.columns.sorted.sameElements(tableCols.sorted),
       s"Snapshots.merge: upserts columns [${upserts.columns.sorted.mkString(",")}] " +
         s"must match table columns [${tableCols.sorted.mkString(",")}]")
+    val strType = org.apache.spark.sql.types.StringType
     // resolve CASE-INSENSITIVELY (matching col()/SQL resolution — a
     // caller passing 'ID' for column 'id' must not hit a misleading
-    // no-column or type-refusal path) and use the CANONICAL name
+    // no-column or type-refusal path) and use the CANONICAL names
     // downstream: footer stats maps and recorded envelopes are keyed by
     // the table's own spelling
-    val keyField = tableDf.schema.fields.find(_.name.equalsIgnoreCase(keyCol))
-      .getOrElse(sys.error(s"Snapshots.merge: no column '$keyCol' in $table"))
-    val key = keyField.name
-    val keyIsStr = keyField.dataType ==
-      org.apache.spark.sql.types.StringType
-    require(keyIsStr || isIntegralType(keyField.dataType),
-      s"Snapshots.merge: merge keys must be integral or string; " +
-        s"'$key' is ${keyField.dataType.simpleString}")
-    // integral keys collect as longs (the manifest stats' width);
-    // string keys collect UNCAST — casting would collapse '1'/'01'
-    // and null out non-numeric keys, i.e. corrupt, not error
-    val keyRepr = if (keyIsStr) "string" else "long"
-    val keysDf = upserts.select(c(key).cast(keyRepr).as("_merge_key"))
-      .unionByName(
-        deleteKeys.select(c(keyCol).cast(keyRepr).as("_merge_key")))
-      .filter(c("_merge_key").isNotNull)
+    val keyFields = keyCols.map { k =>
+      val f = tableDf.schema.fields.find(_.name.equalsIgnoreCase(k))
+        .getOrElse(sys.error(s"Snapshots.merge: no column '$k' in $table"))
+      require(f.dataType == strType || isIntegralType(f.dataType),
+        s"Snapshots.merge: merge keys must be integral or string; " +
+          s"'${f.name}' is ${f.dataType.simpleString}")
+      f
+    }
+    val keyCanon = keyFields.map(_.name)
+    val keyIsStr: Seq[Boolean] = keyFields.map(_.dataType == strType)
+    val leadIsStr = keyIsStr.head
+    val lead = keyCanon.head
+    // tuple frame for the anti join: integral components collect as
+    // longs (the manifest stats' width); string components UNCAST —
+    // casting would collapse '1'/'01' and null out non-numeric keys,
+    // i.e. corrupt, not error
+    val mk = keyCols.indices.map(i => s"_merge_key_$i")
+    def tupleOf(df: DataFrame): DataFrame =
+      df.select(keyCols.zip(mk).zip(keyIsStr).map { case ((k, a), isStr) =>
+        c(k).cast(if (isStr) "string" else "long").as(a)
+      }: _*)
+    val keysDf = tupleOf(upserts).unionByName(tupleOf(deleteKeys))
+      .filter(mk.map(c(_).isNotNull).reduce(_ && _))
       .distinct()
     val collected0 = keysDf.limit(maxCollectedKeys + 1).collect()
     val overCap = collected0.length > maxCollectedKeys
-    val keysSorted: Option[Array[Long]] =
-      if (keyIsStr || overCap) None
-      else Some(collected0.map(_.getLong(0)).sorted)
-    // string keys sort under UTF-8 BYTE order (u8Less) — the order the
-    // footer envelopes fold under; JVM String ordering would disagree
-    // on supplementary characters and break the binary search
-    val keysSortedStr: Option[Array[String]] =
-      if (!keyIsStr || overCap) None
-      else Some(collected0.map(_.getString(0))
+    // lead-value set for the per-file envelope test (distinct leads of
+    // the collected tuples, sorted for binary search). String leads sort
+    // under UTF-8 BYTE order (u8Less) — the order the footer envelopes
+    // fold under; JVM String ordering would disagree on supplementary
+    // characters and break the binary search
+    val leadSorted: Option[Array[Long]] =
+      if (leadIsStr || overCap) None
+      else Some(collected0.map(_.getLong(0)).distinct.sorted)
+    val leadSortedStr: Option[Array[String]] =
+      if (!leadIsStr || overCap) None
+      else Some(collected0.map(_.getString(0)).distinct
         .sorted(Ordering.fromLessThan(ParquetMeta.u8Less)))
     lazy val (rangeLo, rangeHi) = {
-      val r = keysDf.agg(org.apache.spark.sql.functions.min("_merge_key"),
-        org.apache.spark.sql.functions.max("_merge_key")).head()
+      val r = keysDf.agg(org.apache.spark.sql.functions.min(mk.head),
+        org.apache.spark.sql.functions.max(mk.head)).head()
       (r.getLong(0), r.getLong(1))
     }
     // over-cap string fallback: min/max of the UTF-8 ENCODING (Spark
@@ -2560,21 +2584,21 @@ object Snapshots {
     // min/max would use UTF-16 order and could under-cover the batch
     lazy val (rangeLoS, rangeHiS) = {
       import org.apache.spark.sql.functions.{encode, max => mxf, min => mnf}
-      val r = keysDf.agg(mnf(encode(c("_merge_key"), "UTF-8")),
-        mxf(encode(c("_merge_key"), "UTF-8"))).head()
+      val r = keysDf.agg(mnf(encode(c(mk.head), "UTF-8")),
+        mxf(encode(c(mk.head), "UTF-8"))).head()
       (new String(r.getAs[Array[Byte]](0), "UTF-8"),
         new String(r.getAs[Array[Byte]](1), "UTF-8"))
     }
-    def mayContain(mn: Long, mx: Long): Boolean = keysSorted match {
-      case Some(a) => // first collected key >= mn; inside iff also <= mx
+    def mayContain(mn: Long, mx: Long): Boolean = leadSorted match {
+      case Some(a) => // first collected lead >= mn; inside iff also <= mx
         val i = java.util.Arrays.binarySearch(a, mn)
         val from = if (i >= 0) i else -i - 1
         from < a.length && a(from) <= mx
       case None => mx >= rangeLo && mn <= rangeHi
     }
     def mayContainStr(mn: String, mx: String): Boolean =
-      keysSortedStr match {
-        case Some(a) => // first collected key >= mn (u8); inside iff <= mx
+      leadSortedStr match {
+        case Some(a) => // first collected lead >= mn (u8); inside iff <= mx
           var lo = 0; var hi = a.length
           while (lo < hi) {
             val mid = (lo + hi) >>> 1
@@ -2586,13 +2610,13 @@ object Snapshots {
             !ParquetMeta.u8Less(rangeHiS, mn)
       }
     // the envelope test the planning partition AND the rebase conflict
-    // check share: a file is carried only when its recorded envelope
-    // proves no affected key can be inside
+    // check share: a file is carried only when its recorded lead
+    // envelope proves no affected key can be inside
     def fileMayHoldKeys(e: FileEntry): Boolean =
-      if (keyIsStr) e.strStats.get(key) match {
+      if (leadIsStr) e.strStats.get(lead) match {
         case Some((mn, mx)) => mayContainStr(mn, mx)
         case None => true // no envelope: cannot prove absence → rewrite
-      } else e.stats.get(key) match {
+      } else e.stats.get(lead) match {
         case Some((mn, mx)) => mayContain(mn, mx)
         case None => true
       }
@@ -2602,20 +2626,22 @@ object Snapshots {
       if (touched.isEmpty) read(spark, table, Some(v)).limit(0)
       else readFiles(spark, table, v, touched)
     val antiSide = if (!overCap) broadcast(keysDf) else keysDf
-    val survivors = base.join(antiSide, c(key) === c("_merge_key"),
-      "left_anti")
+    val antiCond = keyCanon.zip(mk).map { case (k, a) => c(k) === c(a) }
+      .reduce(_ && _)
+    val survivors = base.join(antiSide, antiCond, "left_anti")
+      .select(tableCols.map(c): _*)
     enforceUnique(spark, table, upserts, vsParent = false)
     val newData = survivors.unionByName(upserts.select(tableCols.map(c): _*))
     // union across ALL entries: a stats-less head entry (e.g. a 0-row
     // file) must not silently drop envelopes from the rewritten files.
-    // The merge KEY's envelope is RECORDED on the files it writes even
+    // The lead column's envelope is RECORDED on the files it writes even
     // when the table never had one — without it every later merge
     // rewrites everything it rewrote, forever
     val statsCols = (entries.flatMap(_.stats.keys) ++
-      (if (keyIsStr) Nil else Seq(key))).distinct.sorted
+      (if (leadIsStr) Nil else Seq(lead))).distinct.sorted
     val bloomCols = entries.flatMap(_.blooms.keys).distinct.sorted
     val strCols = (entries.flatMap(_.strStats.keys) ++
-      (if (keyIsStr) Seq(key) else Nil)).distinct.sorted
+      (if (leadIsStr) Seq(lead) else Nil)).distinct.sorted
     planHook()
     val touchedPaths = touched.map(_.path).toSet
     val priorPaths = entries.map(_.path).toSet
@@ -2668,188 +2694,10 @@ object Snapshots {
     MergeResult(next, touched.size, carriedCount.get)
   }
 
-  /** COMPOSITE-key copy-on-write MERGE — [[merge]] for the
-    * `(order_id, line_number)`-shaped tuple keys real CDC feeds carry
-    * (order lines, sensor (device, ts-bucket), account (region, id)).
-    * Row semantics are [[merge]]'s, tuple-wise: an `upserts` row
-    * replaces the stored row with the same key TUPLE, a tuple in
-    * `deleteKeys` is removed, a tuple in both is delete-then-insert.
-    * A tuple with ANY null component inserts (upserts) or is ignored
-    * (deletes) — null keys match nothing, exactly the join's semantics.
-    *
-    * File pruning rides the LEADING column's envelope (integral
-    * [min,max] stats or UTF-8 string envelope): a file whose lead
-    * envelope can hold no affected lead value holds no affected tuple —
-    * the same leading-column soundness [[addUnique]]'s parent check
-    * uses. Cluster the layout by the lead column and a bounded CDC
-    * batch touches a bounded file set at any table size. The anti-join
-    * compares ALL key columns (integral components as longs, string
-    * components UNCAST, so '1'/'01' never collapse). Concurrency: the
-    * same auto-rebase/abort protocol as [[merge]], with the racer
-    * conflict test on the lead envelope.
-    */
-  def mergeComposite(spark: SparkSession, table: String, upserts: DataFrame,
-      deleteKeys: DataFrame, keyCols: Seq[String],
-      maxCollectedKeys: Int = 100000,
-      properties: Map[String, String] = Map.empty,
-      planHook: () => Unit = () => ()): MergeResult = {
-    require(keyCols.nonEmpty, "Snapshots.mergeComposite: empty key list")
-    require(keyCols.distinct == keyCols,
-      s"Snapshots.mergeComposite: duplicate key columns in " +
-        keyCols.mkString(","))
-    if (keyCols.size == 1)
-      return merge(spark, table, upserts, deleteKeys, keyCols.head,
-        maxCollectedKeys, properties, planHook)
-    import org.apache.spark.sql.functions.{broadcast, col => c}
-    val v = latestVersion(spark, table)
-    require(v > 0, s"Snapshots.mergeComposite: $table has no committed version")
-    keyCols.foreach(k => require(
-      deleteKeys.columns.exists(_.equalsIgnoreCase(k)),
-      s"Snapshots.mergeComposite: deleteKeys needs a '$k' column"))
-    val entries = manifest(spark, table, v)
-    val tableDf = read(spark, table, Some(v))
-    val tableCols = tableDf.columns
-    require(upserts.columns.sorted.sameElements(tableCols.sorted),
-      s"Snapshots.mergeComposite: upserts columns " +
-        s"[${upserts.columns.sorted.mkString(",")}] must match table " +
-        s"columns [${tableCols.sorted.mkString(",")}]")
-    val strType = org.apache.spark.sql.types.StringType
-    // canonical (table-spelled) key names: resolution is case-insensitive
-    // like col()/SQL, and the footer stats maps downstream are keyed by
-    // the table's own spelling
-    val keyFields = keyCols.map { k =>
-      val f = tableDf.schema.fields.find(_.name.equalsIgnoreCase(k))
-        .getOrElse(
-          sys.error(s"Snapshots.mergeComposite: no column '$k' in $table"))
-      require(f.dataType == strType || isIntegralType(f.dataType),
-        s"Snapshots.mergeComposite: merge keys must be integral or " +
-          s"string; '${f.name}' is ${f.dataType.simpleString}")
-      f
-    }
-    val keyCanon = keyFields.map(_.name)
-    val keyIsStr: Seq[Boolean] = keyFields.map(_.dataType == strType)
-    val leadIsStr = keyIsStr.head
-    val lead = keyCanon.head
-    // tuple frame for the anti join: integral components as longs
-    // (width-free equality), string components UNCAST
-    val mk = keyCols.indices.map(i => s"_merge_key_$i")
-    def tupleOf(df: DataFrame): DataFrame =
-      df.select(keyCols.zip(mk).zip(keyIsStr).map { case ((k, a), isStr) =>
-        c(k).cast(if (isStr) "string" else "long").as(a)
-      }: _*)
-    val keysDf = tupleOf(upserts).unionByName(tupleOf(deleteKeys))
-      .filter(mk.map(c(_).isNotNull).reduce(_ && _))
-      .distinct()
-    val collected0 = keysDf.limit(maxCollectedKeys + 1).collect()
-    val overCap = collected0.length > maxCollectedKeys
-    // lead-value set for the per-file envelope test (distinct leads of
-    // the collected tuples; sorted for binary search — u8 order for
-    // strings, matching the footer envelopes)
-    val leadSorted: Option[Array[Long]] =
-      if (leadIsStr || overCap) None
-      else Some(collected0.map(_.getLong(0)).distinct.sorted)
-    val leadSortedStr: Option[Array[String]] =
-      if (!leadIsStr || overCap) None
-      else Some(collected0.map(_.getString(0)).distinct
-        .sorted(Ordering.fromLessThan(ParquetMeta.u8Less)))
-    lazy val (rangeLo, rangeHi) = {
-      val r = keysDf.agg(org.apache.spark.sql.functions.min(mk.head),
-        org.apache.spark.sql.functions.max(mk.head)).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    lazy val (rangeLoS, rangeHiS) = {
-      import org.apache.spark.sql.functions.{encode, max => mxf, min => mnf}
-      val r = keysDf.agg(mnf(encode(c(mk.head), "UTF-8")),
-        mxf(encode(c(mk.head), "UTF-8"))).head()
-      (new String(r.getAs[Array[Byte]](0), "UTF-8"),
-        new String(r.getAs[Array[Byte]](1), "UTF-8"))
-    }
-    def mayContain(mn: Long, mx: Long): Boolean = leadSorted match {
-      case Some(a) =>
-        val i = java.util.Arrays.binarySearch(a, mn)
-        val from = if (i >= 0) i else -i - 1
-        from < a.length && a(from) <= mx
-      case None => mx >= rangeLo && mn <= rangeHi
-    }
-    def mayContainStr(mn: String, mx: String): Boolean =
-      leadSortedStr match {
-        case Some(a) =>
-          var lo = 0; var hi = a.length
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (ParquetMeta.u8Less(a(mid), mn)) lo = mid + 1 else hi = mid
-          }
-          lo < a.length && !ParquetMeta.u8Less(mx, a(lo))
-        case None =>
-          !ParquetMeta.u8Less(mx, rangeLoS) &&
-            !ParquetMeta.u8Less(rangeHiS, mn)
-      }
-    def fileMayHoldKeys(e: FileEntry): Boolean =
-      if (leadIsStr) e.strStats.get(lead) match {
-        case Some((mn, mx)) => mayContainStr(mn, mx)
-        case None => true
-      } else e.stats.get(lead) match {
-        case Some((mn, mx)) => mayContain(mn, mx)
-        case None => true
-      }
-    val (touched, carried) = entries.partition(e =>
-      e.rows > 0 && fileMayHoldKeys(e))
-    val base =
-      if (touched.isEmpty) read(spark, table, Some(v)).limit(0)
-      else readFiles(spark, table, v, touched)
-    val antiSide = if (!overCap) broadcast(keysDf) else keysDf
-    val antiCond = keyCanon.zip(mk).map { case (k, a) => c(k) === c(a) }
-      .reduce(_ && _)
-    val survivors = base.join(antiSide, antiCond, "left_anti")
-      .select(tableCols.map(c): _*)
-    enforceUnique(spark, table, upserts, vsParent = false)
-    val newData = survivors.unionByName(upserts.select(tableCols.map(c): _*))
-    // the lead column's envelope is RECORDED on the rewritten files even
-    // when the table never had one — the next merge then prunes
-    val statsCols = (entries.flatMap(_.stats.keys) ++
-      (if (!leadIsStr) Seq(lead) else Nil)).distinct.sorted
-    val bloomCols = entries.flatMap(_.blooms.keys).distinct.sorted
-    val strCols = (entries.flatMap(_.strStats.keys) ++
-      (if (leadIsStr) Seq(lead) else Nil)).distinct.sorted
-    planHook()
-    val touchedPaths = touched.map(_.path).toSet
-    val priorPaths = entries.map(_.path).toSet
-    val carriedCount = new java.util.concurrent.atomic.AtomicInteger(
-      carried.size)
-    val next = commitWith(newData, table, statsCols, properties, bloomCols,
-      baseFor = parent => {
-        val base =
-          if (parent == v) carried
-          else {
-            // the same auto-rebase proof as [[merge]] (see there)
-            require(Snapshots.properties(spark, table, parent)
-              .get(SchemaProp) ==
-              Snapshots.properties(spark, table, v).get(SchemaProp),
-              s"Snapshots.mergeComposite: concurrent commit on $table " +
-                s"changed the schema (planned against v$v, parent is " +
-                s"now v$parent) — retry the merge")
-            val cur = manifest(spark, table, parent)
-            val curPaths = cur.map(_.path).toSet
-            val lost = touchedPaths -- curPaths
-            require(lost.isEmpty, s"Snapshots.mergeComposite: concurrent " +
-              s"commit on $table rewrote ${lost.size} file(s) this merge " +
-              s"also touches (planned against v$v, parent is now " +
-              s"v$parent) — retry the merge")
-            val added = cur.filterNot(e => priorPaths.contains(e.path))
-            val conflicting = added.filter(e =>
-              e.rows > 0 && fileMayHoldKeys(e))
-            require(conflicting.isEmpty, s"Snapshots.mergeComposite: " +
-              s"concurrent commit on $table added ${conflicting.size} " +
-              s"file(s) that may hold this merge's keys (planned against " +
-              s"v$v, parent is now v$parent) — retry the merge")
-            cur.filterNot(e => touchedPaths.contains(e.path))
-          }
-        carriedCount.set(base.size)
-        base
-      }, strStatsCols = strCols,
-      writeVia = partitionedWriteVia(spark, table))
-    MergeResult(next, touched.size, carriedCount.get)
-  }
+  /** [[merge]] on the single key column `keyCol`. */
+  def merge(spark: SparkSession, table: String, upserts: DataFrame,
+      deleteKeys: DataFrame, keyCol: String): MergeResult =
+    merge(spark, table, upserts, deleteKeys, Seq(keyCol))
 
   /** Compact the latest version's layout into ~`targetBytes` files as a
     * NEW overwrite commit — same row content (the q_versioned_compact

@@ -73,7 +73,7 @@ object MergeStream {
                          // runs once, not three times
     val upserts = winners.filter(col("_op") =!= "D").drop("_op")
     val deletes = winners.filter(col("_op") === "D").select(col(keyCol))
-    Snapshots.merge(spark, table, upserts, deletes, keyCol,
+    Snapshots.merge(spark, table, upserts, deletes, Seq(keyCol),
       properties = Map(batchProp -> batchId.toString))
   }
 }

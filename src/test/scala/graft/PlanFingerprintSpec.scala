@@ -89,6 +89,24 @@ class PlanFingerprintSpec extends SparkSpec {
     assert(normalize(a) === a) // idempotent
   }
 
+  test("normalization strips common-subexpression alias counters — " +
+      "the same count_if query hashes alike on every construction") {
+    import graft.PlanFingerprint.normalize
+    import org.apache.spark.sql.functions.{col, count_if}
+    val a = normalize("Project [(f#1 = R) AS _common_expr_0#12]")
+    val b = normalize("Project [(f#7 = R) AS _common_expr_4#40]")
+    assert(a === b)
+    assert(normalize(a) === a) // idempotent
+    // the counter is JVM-global: each construction allocates fresh
+    // suffixes, and the fingerprint must not see them
+    def q = spark.range(10).agg(count_if(col("id") === 1).as("n"))
+    val first = q.queryExecution.executedPlan.toString
+    val second = q.queryExecution.executedPlan.toString
+    assert(first.contains("_common_expr_"), first)
+    assert(first !== second)
+    assert(PlanFingerprint.of(q) === PlanFingerprint.of(q))
+  }
+
   test("normalization strips runtime query-stage numbers and codegen " +
       "ids — a query whose construction executes jobs embeds reused " +
       "stages whose numbering is scheduling, not plan shape") {

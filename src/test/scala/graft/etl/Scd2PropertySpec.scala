@@ -141,13 +141,11 @@ class Scd2PropertySpec extends SparkSpec {
     batches <- Gen.listOfN(n, genRows)
     steps <- Gen.listOfN(n, Gen.oneOf(0, 1))
     keyOnly <- Gen.oneOf(false, true)
-    scalable <- Gen.oneOf(false, true)
-  } yield (batches, steps.scanLeft(0)(_ + _).tail, keyOnly, scalable)
+  } yield (batches, steps.scanLeft(0)(_ + _).tail, keyOnly)
 
   test("merge and initialLoad match a reference model exactly, surrogate keys included") {
-    check(Prop.forAll(genRun) { case (batches, days, keyOnly, scalable) =>
-      val c = Scd2Config(Seq("id"), if (keyOnly) Nil else Seq("name", "seg"), "key",
-        scalableKeys = scalable)
+    check(Prop.forAll(genRun) { case (batches, days, keyOnly) =>
+      val c = Scd2Config(Seq("id"), if (keyOnly) Nil else Seq("name", "seg"), "key")
       val nAttr = c.attrCols.size
       val steps = batches.zip(days.map(d =>
         java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(d.toLong))))

@@ -300,7 +300,7 @@ class SnapshotsSpec extends SparkSpec {
     val tbl2 = freshTable("cimergec")
     Snapshots.commit(Seq((1L, 1, 10L), (2L, 2, 20L)).toDF("k1", "k2", "v"),
       tbl2, statsCols = Seq("k1"))
-    Snapshots.mergeComposite(spark, tbl2,
+    Snapshots.merge(spark, tbl2,
       Seq((2L, 2, 222L)).toDF("k1", "k2", "v"),
       Seq((1L, 1)).toDF("K1", "K2"), Seq("K1", "k2"))
     assert(Snapshots.read(spark, tbl2).collect()
@@ -335,7 +335,7 @@ class SnapshotsSpec extends SparkSpec {
     // (maxCollectedKeys = 0 → encode()-ordered range, shuffled anti)
     val r2 = Snapshots.merge(spark, tbl,
       Seq(("z1", 50L)).toDF("k", "v"),
-      Seq.empty[String].toDF("k"), "k", maxCollectedKeys = 0)
+      Seq.empty[String].toDF("k"), Seq("k"), maxCollectedKeys = 0)
     assert(r2.filesCarried > 0,
       "rewritten low-range files carry their recorded k envelope")
     val m2 = Snapshots.read(spark, tbl).collect()
@@ -366,7 +366,7 @@ class SnapshotsSpec extends SparkSpec {
     // (2,1) is in BOTH upserts and deletes → the upsert row must win;
     // (1,1) only deleted
     val del = Seq((1L, 1), (2L, 1)).toDF("g", "i")
-    val r = Snapshots.mergeComposite(spark, tbl, ups, del, Seq("g", "i"))
+    val r = Snapshots.merge(spark, tbl, ups, del, Seq("g", "i"))
     assert(r.filesCarried > 0, "lead-9 file holds no affected lead")
     val got = Snapshots.read(spark, tbl).collect()
       .map(x => ((x.getLong(0), x.getInt(1)), x.getString(2))).toMap
@@ -378,11 +378,38 @@ class SnapshotsSpec extends SparkSpec {
     // deleteKeys must carry EVERY key column — a lead-only delete frame
     // cannot express tuple deletion and refuses loudly
     val e = intercept[Exception] {
-      Snapshots.mergeComposite(spark, tbl,
+      Snapshots.merge(spark, tbl,
         Seq((1L, 1, "z")).toDF("g", "i", "v"),
         Seq(1L).toDF("g"), Seq("g", "i"))
     }
     assert(e.getMessage.contains("deleteKeys needs"), e.getMessage)
+    // over-cap (maxCollectedKeys = 0): the per-file test falls back to
+    // the batch's lead [min,max] range and the tuple anti-join shuffles;
+    // tuple semantics hold, and the lead-9 file is still outside [1,3]
+    val r2 = Snapshots.merge(spark, tbl,
+      Seq((3L, 1, "N"), (3L, 2, "m")).toDF("g", "i", "v"),
+      Seq((1L, 2)).toDF("g", "i"), Seq("g", "i"), maxCollectedKeys = 0)
+    assert(r2.filesCarried > 0, "lead-9 file lies outside the lead range")
+    assert(Snapshots.read(spark, tbl).collect()
+      .map(x => ((x.getLong(0), x.getInt(1)), x.getString(2))).toMap ===
+      Map((2L, 1) -> "C", (3L, 1) -> "N", (3L, 2) -> "m",
+        (9L, 1) -> "x", (9L, 2) -> "y"))
+    // string lead: compared UNCAST ('1'/'01' distinct), pruned through
+    // the UTF-8 string envelope
+    val st = freshTable("cmerge_str")
+    Snapshots.commit(
+      Seq(("01", 1, "a"), ("1", 1, "b"), ("1", 2, "c")).toDF("s", "i", "v"),
+      st, strStatsCols = Seq("s"))
+    Snapshots.commit(Seq(("z", 1, "x")).toDF("s", "i", "v"), st,
+      strStatsCols = Seq("s"))
+    val r3 = Snapshots.merge(spark, st,
+      Seq(("1", 1, "B"), ("01", 2, "n")).toDF("s", "i", "v"),
+      Seq(("1", 2)).toDF("s", "i"), Seq("s", "i"))
+    assert(r3.filesCarried > 0, "z file holds no affected lead")
+    assert(Snapshots.read(spark, st).collect()
+      .map(x => ((x.getString(0), x.getInt(1)), x.getString(2))).toMap ===
+      Map(("01", 1) -> "a", ("01", 2) -> "n", ("1", 1) -> "B",
+        ("z", 1) -> "x"))
   }
 
   test("add-column evolution: per-version schema, old files null-filled") {
@@ -598,7 +625,7 @@ class SnapshotsSpec extends SparkSpec {
     // the racer commits INSIDE the low merge's plan→commit window — the
     // deterministic version of two pipelines merging concurrently
     var racer: Snapshots.MergeResult = null
-    val r = Snapshots.merge(spark, tbl, lowUpd, noKeys, "o_orderkey",
+    val r = Snapshots.merge(spark, tbl, lowUpd, noKeys, Seq("o_orderkey"),
       planHook = () => {
         racer = Snapshots.merge(spark, tbl, highUpd, noKeys, "o_orderkey")
       })
@@ -626,7 +653,7 @@ class SnapshotsSpec extends SparkSpec {
     val theirs = orders.filter(col("o_orderkey") === 50)
       .withColumn("o_totalprice", lit(0.0))
     val e = intercept[IllegalArgumentException] {
-      Snapshots.merge(spark, tbl, mine, noKeys, "o_orderkey",
+      Snapshots.merge(spark, tbl, mine, noKeys, Seq("o_orderkey"),
         planHook = () => {
           Snapshots.merge(spark, tbl, theirs, noKeys, "o_orderkey")
         })
@@ -649,7 +676,7 @@ class SnapshotsSpec extends SparkSpec {
       .withColumn("o_orderkey", col("o_orderkey") + 100000L)
       .withColumn("o_flag", lit("new"))
     val e = intercept[IllegalArgumentException] {
-      Snapshots.merge(spark, tbl, mine, noKeys, "o_orderkey",
+      Snapshots.merge(spark, tbl, mine, noKeys, Seq("o_orderkey"),
         planHook = () => { Snapshots.commit(evolved, tbl,
           statsCols = Seq("o_orderkey")) })
     }
@@ -668,7 +695,7 @@ class SnapshotsSpec extends SparkSpec {
     val insB = orders.filter(col("o_orderkey") === 20)
       .withColumn("o_orderkey", lit(9000050L))
     val e = intercept[IllegalArgumentException] {
-      Snapshots.merge(spark, tbl, insA, noKeys, "o_orderkey",
+      Snapshots.merge(spark, tbl, insA, noKeys, Seq("o_orderkey"),
         planHook = () => {
           Snapshots.merge(spark, tbl, insB, noKeys, "o_orderkey")
         })
