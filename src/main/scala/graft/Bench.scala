@@ -42,7 +42,9 @@ package graft
   * of its normalized statically-planned physical tree, so a silent plan
   * regression (lost broadcast, new shuffle) diffs loudly between round
   * artifacts even when timing noise hides it. `fp_drift` carries every
-  * query whose fingerprint departs the committed sf0.1 baseline.
+  * query whose fingerprint departs the committed sf0.1 baseline, and the
+  * full artifact's `fp_unstable` every query whose iterations planned
+  * different fingerprints (name → the distinct fp8s; normally empty).
   * `tables` pins per-table row counts + schema fingerprints, so "same
   * plan, different data" is adjudicable from artifacts alone.
   */
@@ -65,7 +67,9 @@ object Bench {
 
     final case class Timing(total: Double, buildMs: Long, queryMs: Long)
     var errors = Map.empty[String, String]
-    var plans = Map.empty[String, String]
+    // every iteration's fingerprint, in order: the last one is the
+    // query's reported fp, and iterations that disagree are fp_unstable
+    var plans = Map.empty[String, Vector[String]]
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val results: Seq[(String, Option[Timing])] = selected.map {
@@ -89,7 +93,8 @@ object Bench {
             // static-plan fingerprint, taken BEFORE execution:
             // deterministic across runs (post-AQE trees carry
             // scheduling-dependent stage reuse/coalesce artifacts).
-            plans += name -> PlanFingerprint.of(df)
+            plans += name ->
+              (plans.getOrElse(name, Vector.empty) :+ PlanFingerprint.of(df))
             val t2 = System.nanoTime()
             df.count()
             val t3 = System.nanoTime()
@@ -132,7 +137,9 @@ object Bench {
     // run (baseline regeneration material) and diffed against the
     // committed sf0.1 baseline — a plan regression ANYWHERE surfaces by
     // name in fp_drift (normally empty)
-    val fp8 = plans.map { case (k, v) => k -> v.take(8) }
+    val fp8s = plans.map { case (k, v) => k -> v.map(_.take(8)) }
+    val fp8 = fp8s.map { case (k, v) => k -> v.last }
+    val unstable = PlanBaseline.unstable(fp8s)
     // best-effort like the artifact write below: a full disk must not
     // take down the compact stdout line
     try PlanBaseline.write(
@@ -147,6 +154,8 @@ object Bench {
     val newCount = fp8.keys.count(k => !baseline.contains(k))
     val plansJson = mapJson(fp8.toSeq.sortBy(_._1)
       .map { case (k, v) => (k, jsonStr(v)) })
+    val unstableJson = mapJson(unstable.toSeq.sortBy(_._1)
+      .map { case (k, fps) => (k, fps.map(jsonStr).mkString("[", ",", "]")) })
     val buildJson = mapJson(ok.sortBy(_._1)
       .map { case (k, t) => (k, t.buildMs.toString) })
     val queryMsJson = mapJson(ok.sortBy(_._1)
@@ -161,7 +170,8 @@ object Bench {
       s""","errors":$errJson,"tables":$tblJson""" +
       s""","n_fp":${fp8.size},"n_base":${baseline.size}""" +
       s""","n_drift":${drift.size},"n_new":$newCount""" +
-      s""","fp_drift":$driftJson,"plans":$plansJson""" +
+      s""","fp_drift":$driftJson,"fp_unstable":$unstableJson""" +
+      s""","plans":$plansJson""" +
       s""","build_ms":$buildJson,"query_ms":$queryMsJson""" +
       s""","queries":$qJson}"""
     // a failed artifact write must NOT take the compact stdout line down

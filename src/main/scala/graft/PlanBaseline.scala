@@ -61,6 +61,16 @@ object PlanBaseline {
       baseline.get(name).exists(_ != fp)
     }
 
+  /** Queries whose iterations planned DIFFERENT fingerprints (name →
+    * the distinct fps, first-seen order): a plan token that depends on
+    * allocation history (a JVM-global counter in an alias, say) would
+    * otherwise surface only when the iteration count changes, as a
+    * drift against a baseline taken at another count.
+    */
+  def unstable(perIter: Map[String, Seq[String]]): Map[String, Seq[String]] =
+    perIter.map { case (name, fps) => name -> fps.distinct }
+      .filter(_._2.size > 1)
+
   def load(path: String): Map[String, String] = {
     val f = new java.io.File(path)
     if (!f.isFile) Map.empty

@@ -476,8 +476,7 @@ object CoreQueries {
   /** S1/S2/P2/F2: CSV sink + scan roundtrip with explicit schema. */
   val csvRoundtrip = Q("q_csv_roundtrip",
     (s, d) => {
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_csv_" +
-        s"${d.replaceAll("[^A-Za-z0-9.]", "_")}_${s.sparkContext.applicationId}"
+      val out = Fixtures.tablePath(s, d, "csv")
       region(s, d).coalesce(1).write.mode("overwrite").option("header", "true").csv(out)
       val schema = StructType(Seq(
         StructField("r_regionkey", IntegerType), StructField("r_name", StringType)))
@@ -695,8 +694,7 @@ object CoreQueries {
   /** S5/S6: parquet sink + scan roundtrip. */
   val parquetRoundtrip = Q("q_parquet_roundtrip",
     (s, d) => {
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_pq_" +
-        s"${d.replaceAll("[^A-Za-z0-9.]", "_")}_${s.sparkContext.applicationId}"
+      val out = Fixtures.tablePath(s, d, "pq")
       nation(s, d).write.mode("overwrite").parquet(out)
       s.read.parquet(out).orderBy(col("n_nationkey"))
     },
@@ -707,8 +705,7 @@ object CoreQueries {
     */
   val orcRoundtrip = Q("q_orc_roundtrip",
     (s, d) => {
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_orc_" +
-        s"${d.replaceAll("[^A-Za-z0-9.]", "_")}_${s.sparkContext.applicationId}"
+      val out = Fixtures.tablePath(s, d, "orc")
       nation(s, d).write.mode("overwrite").orc(out)
       s.read.orc(out).orderBy(col("n_nationkey"))
     },
@@ -723,8 +720,7 @@ object CoreQueries {
     */
   val jsonRoundtrip = Q("q_json_roundtrip",
     (s, d) => {
-      val out = s"${System.getProperty("java.io.tmpdir")}/graft_json_" +
-        s"${d.replaceAll("[^A-Za-z0-9.]", "_")}_${s.sparkContext.applicationId}"
+      val out = Fixtures.tablePath(s, d, "json")
       val src = supplier(s, d)
       src.write.mode("overwrite").json(out)
       s.read.schema(src.schema).json(out).orderBy(col("s_suppkey"))

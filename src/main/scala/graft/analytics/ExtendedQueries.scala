@@ -507,8 +507,7 @@ object ExtendedQueries {
     */
   val mvRewrite = Q("q_mv_rewrite",
     (s, d) => {
-      val mvPath = s"${System.getProperty("java.io.tmpdir")}/graft_mv_" +
-        s"${d.replaceAll("[^A-Za-z0-9.]", "_")}_${s.sparkContext.applicationId}"
+      val mvPath = Fixtures.tablePath(s, d, "mv")
       graft.plans.MaterializedViews.buildAndRegister(s,
         s"$d/orders.parquet", mvPath,
         keys = Seq("o_orderstatus", "o_orderpriority"), countCol = "n",
@@ -538,8 +537,7 @@ object ExtendedQueries {
     */
   val mvRewriteFiltered = Q("q_mv_rewrite_filtered",
     (s, d) => {
-      val mvPath = s"${System.getProperty("java.io.tmpdir")}/graft_mvf_" +
-        s"${d.replaceAll("[^A-Za-z0-9.]", "_")}_${s.sparkContext.applicationId}"
+      val mvPath = Fixtures.tablePath(s, d, "mvf")
       graft.plans.MaterializedViews.buildAndRegister(s,
         s"$d/orders.parquet", mvPath,
         keys = Seq("o_orderstatus", "o_orderpriority"), countCol = "n",

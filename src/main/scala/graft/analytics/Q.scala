@@ -49,7 +49,7 @@ object QueryDsl {
 object Fixtures {
   def tablePath(s: SparkSession, d: String, tag: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_snap_${tag}_" +
-      s"${d.replaceAll("[^A-Za-z0-9.]", "_")}_${s.sparkContext.applicationId}"
+      s"${AppState.sanitize(d)}_${s.sparkContext.applicationId}"
 
   def freshTable(s: SparkSession, d: String, tag: String): String = {
     val path = tablePath(s, d, tag)

@@ -2020,9 +2020,10 @@ object SnapshotQueries {
          WHERE p2 >= CAST(50000 AS DECIMAL(18,4))"""))
 
   /** X116: SQL MERGE INTO — the analyzer expands `UPDATE SET * / INSERT
-    * *` into per-column assignments, which the rule turns into one
-    * key-exact [[Snapshots.merge]] upsert; a second MERGE with `WHEN
-    * MATCHED THEN DELETE` maps to the tombstoning merge. Target = even
+    * *` into per-column assignments, which the rule's action cascade
+    * lands as one key-exact [[Snapshots.merge]] upsert; a second MERGE
+    * with `WHEN MATCHED THEN DELETE` lands as that merge's delete keys
+    * (the same cascade, one unconditional clause). Target = even
     * orders, source = div-3 orders at doubled price: matched (div 6)
     * update, unmatched (odd div 3) insert, then div-5 keys delete.
     */

@@ -44,23 +44,23 @@ import org.apache.spark.sql.functions.{col, count, lit}
   *  - DELETE: `Snapshots.deleteVector` — a position-vector commit, so
   *    arbitrary predicates work with no key column and no file rewrite.
   *  - UPDATE: `Snapshots.updateWhere` — atomic vector + rewritten rows.
-  *  - MERGE: the canonical unconditional whole-row shapes
-  *    (`UPDATE SET * / INSERT *`, `WHEN MATCHED THEN DELETE`) map
-  *    DIRECTLY onto `Snapshots.merge` (copy-on-write, key-exact, no
-  *    extra join stage). Everything else real CDC merges use —
-  *    `WHEN MATCHED AND <cond>`, multiple clauses (first-true-wins),
-  *    partial `SET` (unassigned columns keep target values), values
-  *    referencing both sides, conditional INSERTs, and
-  *    `WHEN NOT MATCHED BY SOURCE THEN UPDATE/DELETE` — evaluates as a
-  *    side-prefixed join cascade that still lands as ONE atomic
-  *    `Snapshots.merge` commit. Composite `ON k1 = k1 AND k2 = k2`
+  *  - MERGE: ONE path for every shape — a side-prefixed join of target
+  *    and source evaluates the SQL first-true-wins action cascade and
+  *    lands as ONE atomic `Snapshots.merge` commit (copy-on-write,
+  *    key-exact). The canonical `UPDATE SET * / INSERT *` upsert and
+  *    `WHEN MATCHED THEN DELETE` are its unconditional one-clause
+  *    sections; everything else real CDC merges use — `WHEN MATCHED AND
+  *    <cond>`, multiple clauses, partial `SET` (unassigned columns keep
+  *    target values), values referencing both sides, conditional
+  *    INSERTs, and `WHEN NOT MATCHED BY SOURCE THEN UPDATE/DELETE` — is
+  *    the same cascade with more clauses. Composite `ON k1 = k1 AND k2 = k2`
   *    tuple keys land through the same key-list `Snapshots.merge`, and
   *    `MERGE WITH SCHEMA EVOLUTION` adds source-only columns to the
   *    target (metadata-only addColumn + catalog-schema sync; star
   *    expansions carry their source values) and WIDENS target columns a
   *    source feed outgrew (int->bigint, float->double — the metadata-only
-  *    widenColumn event; non-key columns only). Only explicit
-  *    key-changing SETs refuse.
+  *    widenColumn event; non-key columns only). Only key-changing
+  *    SETs refuse: `SET k = s.k` (or `t.k`) is the identity and passes.
   *
   * Time-traveled relations (`versionAsOf`/`timestampAsOf`/`tag`/
   * `branch` reader options) refuse all DML: history is immutable.
@@ -818,8 +818,8 @@ object SqlDml {
       // scalar lift does not compose with the merge cascade's
       // two-sided projections), so those refuse loudly; plain UPDATE
       // supports the scalar shape via liftScalarSets. Action CONDITIONS
-      // decorrelate like DELETE/UPDATE predicates do — see
-      // rewriteMergeGeneral's `decond`.
+      // decorrelate like DELETE/UPDATE predicates do — see `decond`
+      // below.
       (m.matchedActions ++ m.notMatchedActions ++
         m.notMatchedBySourceActions).foreach {
         case UpdateAction(_, assigns, _) => assigns.foreach(a =>
@@ -901,137 +901,26 @@ object SqlDml {
       require(m.matchedActions.nonEmpty || m.notMatchedActions.nonEmpty ||
         m.notMatchedBySourceActions.nonEmpty,
         "graft DML: MERGE with no actions")
-      // the canonical UNCONDITIONAL whole-row shapes keep the direct
-      // Snapshots.merge mapping (no extra join stage, baselined plans);
-      // everything else — conditional actions, multiple clauses,
-      // partial SETs, target-referencing values, NOT MATCHED BY
-      // SOURCE — takes the general first-match-wins cascade
-      def fullRowFromSource(assigns: Seq[Assignment]): Boolean = {
-        val srcIds = sOut.map(_.exprId).toSet
-        val names = assigns.flatMap(_.key match {
-          case ar: AttributeReference => Some(ar.name)
-          case _ => None
-        })
-        names.size == assigns.size &&
-          tOut.forall(t => names.exists(_.equalsIgnoreCase(t.name))) &&
-          assigns.forall(_.value.collect {
-              case ar: AttributeReference => ar
-            }.forall(ar => srcIds.contains(ar.exprId) ||
-              keyCols.exists(ar.name.equalsIgnoreCase)))
-      }
-      val simple = m.notMatchedBySourceActions.isEmpty &&
-        m.matchedActions.size <= 1 && m.notMatchedActions.size <= 1 &&
-        m.matchedActions.forall {
-          case DeleteAction(None) => true
-          case UpdateAction(None, assigns, _) => fullRowFromSource(assigns)
-          case _ => false
-        } &&
-        m.notMatchedActions.forall {
-          case InsertAction(None, assigns) => fullRowFromSource(assigns)
-          case _ => false
-        } &&
-        !(m.matchedActions.exists(_.isInstanceOf[DeleteAction]) &&
-          m.notMatchedActions.nonEmpty)
-      if (!simple)
-        return rewriteMergeGeneral(m, table, tOut, sOut, keyCols, newCols,
-          widenCols, widened, ident)
-      // an action's assignments (the analyzer expands SET * / INSERT *
-      // into per-column assignments) become a full-row SOURCE projection
-      // — Snapshots.merge replaces whole rows, so every target column
-      // must be assigned, and values may reference only the source
-      // (byName re-anchoring resolves them against the source frame)
-      def projOf(assigns: Seq[Assignment], what: String)
-          : Seq[(String, Column)] = {
-        val srcIds = sOut.map(_.exprId).toSet
-        val byTarget = assigns.map { asg =>
-          val name = asg.key match {
-            case ar: AttributeReference => ar.name
-            case other => throw new IllegalArgumentException(
-              s"graft DML: MERGE $what assigns to non-column $other")
-          }
-          asg.value.foreach {
-            case ar: AttributeReference =>
-              require(srcIds.contains(ar.exprId) ||
-                keyCols.exists(ar.name.equalsIgnoreCase),
-                s"graft DML: MERGE $what value for '$name' references " +
-                  s"target column '${ar.name}' — whole-row replacement " +
-                  "can only compute from the source")
-            case _ => ()
-          }
-          (name, asColumn(unNarrow(name, asg.value)))
-        }
-        val missing = tOut.map(_.name)
-          .filterNot(n => byTarget.exists(_._1.equalsIgnoreCase(n)))
-        require(missing.isEmpty, s"graft DML: MERGE $what must assign " +
-          s"every target column (missing ${missing.mkString(", ")}) — " +
-          "partial updates go through UPDATE")
-        tOut.map(t => byTarget.find(_._1.equalsIgnoreCase(t.name)).get)
-      }
-      var updateProj: Option[Seq[(String, Column)]] = None
-      var deletes = false
-      m.matchedActions.foreach {
-        case DeleteAction(None) => deletes = true
-        case UpdateAction(None, assigns, _) =>
-          updateProj = Some(projOf(assigns, "WHEN MATCHED"))
-        case other => throw new IllegalArgumentException(
-          s"graft DML: unsupported WHEN MATCHED action $other — " +
-            "conditional actions are not supported")
-      }
-      var insertProj: Option[Seq[(String, Column)]] = None
-      m.notMatchedActions.foreach {
-        case InsertAction(None, assigns) =>
-          insertProj = Some(projOf(assigns, "WHEN NOT MATCHED"))
-        case other => throw new IllegalArgumentException(
-          s"graft DML: unsupported WHEN NOT MATCHED action $other — " +
-            "conditional actions are not supported")
-      }
-      require(!(deletes && insertProj.nonEmpty), "graft DML: MATCHED " +
-        "DELETE plus NOT MATCHED INSERT is not an upsert — split into " +
-        "two statements")
-      // evolution: both canonical shapes are full-row-from-source, so
-      // the new columns ride every projection with their source values
-      def withNew(proj: Seq[(String, Column)]): Seq[(String, Column)] =
-        proj ++ newCols.map(f => (f.name,
-          GraftBridge.column(UnresolvedAttribute(Seq(f.name)))))
-      GraftMergeCommand(table, m.sourceTable, keyCols,
-        updateProj = updateProj.map(withNew),
-        insertProj = insertProj.map(withNew),
-        deleteMatched = deletes,
-        targetSchema = org.apache.spark.sql.types.StructType(
-          widened(schemaOf(tOut).fields) ++ newCols),
-        newCols = newCols, widenCols = widenCols, ident = ident)
-    }
-
-    /** The general MERGE form: conditional MATCHED/NOT-MATCHED actions
-      * (first-true-wins, the SQL cascade), multiple clauses, PARTIAL
-      * `SET` (unassigned columns keep target values), values referencing
-      * BOTH sides, and `WHEN NOT MATCHED BY SOURCE` — the shapes real
-      * CDC merges use. Expressions are re-anchored SIDE-AWARE: the
-      * command joins a target frame and a source frame whose columns are
-      * prefixed per side, so a target and a source column sharing a name
-      * (the norm in MERGE) resolve unambiguously.
-      */
-    private def rewriteMergeGeneral(m: MergeIntoTable, table: String,
-        tOut: Seq[Attribute], sOut: Seq[Attribute], keyCols: Seq[String],
-        newCols: Seq[org.apache.spark.sql.types.StructField],
-        widenCols: Seq[(String, org.apache.spark.sql.types.DataType)],
-        widened: Array[org.apache.spark.sql.types.StructField] =>
-          Array[org.apache.spark.sql.types.StructField],
-        ident: Option[String]): LogicalPlan = {
-      // evolution: a star UPDATE carries the new columns' source values;
+      // every MERGE evaluates the SQL first-true-wins cascade — the
+      // canonical SET * / INSERT * / WHEN MATCHED THEN DELETE shapes are
+      // its one- and two-clause cases. Expressions are re-anchored
+      // SIDE-AWARE: the command joins a target frame and a source frame
+      // whose columns are prefixed per side, so a target and a source
+      // column sharing a name (the norm in MERGE) resolve unambiguously.
+      // Evolution: a star UPDATE carries the new columns' source values;
       // every INSERT is full-row-from-source (validated below), so new
       // columns ride inserts too; explicit/bySource actions leave them
       // to shapeRow's target-side carry (null-filled post-evolution)
       val newAssigns: Seq[(String, Column)] = newCols.map(f => (f.name,
         GraftBridge.column(UnresolvedAttribute(
-          Seq(GraftMergeConditionalCommand.SP + f.name)))))
+          Seq(GraftMergeCommand.SP + f.name)))))
       val tIds = tOut.map(_.exprId).toSet
       val sIds = sOut.map(_.exprId).toSet
       def sided(e: Expression): Column = GraftBridge.column(e.transform {
         case a: AttributeReference if tIds.contains(a.exprId) =>
-          UnresolvedAttribute(Seq(GraftMergeConditionalCommand.TP + a.name))
+          UnresolvedAttribute(Seq(GraftMergeCommand.TP + a.name))
         case a: AttributeReference if sIds.contains(a.exprId) =>
-          UnresolvedAttribute(Seq(GraftMergeConditionalCommand.SP + a.name))
+          UnresolvedAttribute(Seq(GraftMergeCommand.SP + a.name))
       })
       def onlySide(e: Expression, badIds: Set[
           org.apache.spark.sql.catalyst.expressions.ExprId],
@@ -1041,18 +930,14 @@ object SqlDml {
             s"may reference only the $side, got '${ar.name}'")
         case _ => ()
       }
-      // same narrowing-cast strip as the simple path: the analyzer
-      // aligns star assignments to the PRE-widen target type, which
-      // would ANSI-overflow on the values the widen exists for
-      def unNarrow(name: String, e: Expression): Expression =
-        widenCols.find(_._1.equalsIgnoreCase(name)) match {
-          case Some((_, wdt)) => e match {
-            case c: Cast if c.child.dataType == wdt &&
-                tOut.exists(t => t.name.equalsIgnoreCase(name) &&
-                  t.dataType == c.dataType) => c.child
-            case other => other
-          }
-          case None => e
+      // a key SET whose value is the same-named key of either side is
+      // the identity (the join condition makes t.k = s.k): the star
+      // expansion's `k = s.k` and an explicit full-row `SET k = s.k`
+      def keyIdentity(key: String, e: Expression): Boolean =
+        stripWiden(e) match {
+          case ar: AttributeReference => ar.name.equalsIgnoreCase(key) &&
+            (tIds.contains(ar.exprId) || sIds.contains(ar.exprId))
+          case _ => false
         }
       def assignsOf(assigns: Seq[Assignment], what: String,
           allowKey: Boolean): Seq[(String, Column)] = assigns.map { a =>
@@ -1064,7 +949,8 @@ object SqlDml {
         val t = tOut.find(_.name.equalsIgnoreCase(name)).getOrElse(
           throw new IllegalArgumentException(
             s"graft DML: MERGE $what assigns unknown column '$name'"))
-        require(allowKey || !keyCols.exists(t.name.equalsIgnoreCase),
+        require(allowKey || !keyCols.exists(t.name.equalsIgnoreCase) ||
+          keyIdentity(t.name, a.value),
           s"graft DML: MERGE $what must not SET the merge key " +
             s"'${t.name}' — key-changing updates are not a merge")
         (t.name, sided(unNarrow(t.name, a.value)))
@@ -1080,12 +966,8 @@ object SqlDml {
       val matched = m.matchedActions.map {
         case DeleteAction(c) => (decond(c, "WHEN MATCHED condition"), None)
         case UpdateAction(c, assigns, fromStar) =>
-          // a star's key assignment is `k = s.k` — identical to the
-          // matched row's own key by the join condition, so allowed;
-          // an EXPLICIT key SET stays refused (key-changing update)
           (decond(c, "WHEN MATCHED condition"),
-            Some(assignsOf(assigns, "WHEN MATCHED",
-              allowKey = fromStar) ++
+            Some(assignsOf(assigns, "WHEN MATCHED", allowKey = false) ++
               (if (fromStar) newAssigns else Nil)))
         case other => throw new IllegalArgumentException(
           s"graft DML: unsupported WHEN MATCHED action $other")
@@ -1122,7 +1004,7 @@ object SqlDml {
         case other => throw new IllegalArgumentException(
           s"graft DML: unsupported WHEN NOT MATCHED BY SOURCE action $other")
       }
-      GraftMergeConditionalCommand(table, m.sourceTable, keyCols,
+      GraftMergeCommand(table, m.sourceTable, keyCols,
         matched, notMatched, nmbs,
         org.apache.spark.sql.types.StructType(
           widened(schemaOf(tOut).fields) ++ newCols),
@@ -1322,118 +1204,25 @@ object SqlDml {
     }
   }
 
-  /** MERGE INTO → [[Snapshots.merge]] (copy-on-write, key-exact). The
-    * projections turn the SOURCE into full target rows (the analyzer's
-    * expansion of SET * / INSERT *, or explicit full-column
-    * assignments); update-only restricts to keys present, insert-only
-    * to keys absent, both together is the plain upsert.
-    */
-  final case class GraftMergeCommand(table: String, source: LogicalPlan,
-      keyCols: Seq[String], updateProj: Option[Seq[(String, Column)]],
-      insertProj: Option[Seq[(String, Column)]],
-      deleteMatched: Boolean,
-      targetSchema: org.apache.spark.sql.types.StructType,
-      newCols: Seq[org.apache.spark.sql.types.StructField] = Nil,
-      widenCols: Seq[(String, org.apache.spark.sql.types.DataType)] = Nil,
-      ident: Option[String])
-      extends LeafRunnableCommand {
-    override def innerChildren: Seq[LogicalPlan] = Seq(source)
-    override def run(spark: SparkSession): Seq[Row] = {
-      // WITH SCHEMA EVOLUTION commits its schema changes AFTER every
-      // guard that runs pre-merge (the cardinality guard, the in-batch
-      // UNIQUE pre-validation below): those refusals leave the table
-      // untouched, schema included. Guards that live INSIDE the merge
-      // commit itself — unique-vs-carried-files, CHECK/FK enforcement,
-      // the concurrent-commit rebase refusal — can still fire after the
-      // evolution committed; that outcome is benign to retry (the
-      // retried statement recomputes its evolution set as empty) but is
-      // a two-commit window, the same one Delta's schema-then-data
-      // evolution has. Widens go FIRST: widenColumn carries its own
-      // refusals (constraints, rename history) and must fire before any
-      // addColumn lands.
-      def evolve(): Unit = if (newCols.nonEmpty || widenCols.nonEmpty) {
-        widenCols.foreach { case (n, dt) =>
-          Snapshots.widenColumn(spark, table, n, dt) }
-        newCols.foreach(f =>
-          Snapshots.addColumn(spark, table, f.name, f.dataType))
-        // sync the catalog entry or the next statement on the name
-        // would compare the stale CREATE-time schema and wedge
-        syncCatalogSchema(spark, table, ident)
-      }
-      val src0 = GraftBridge.dataFrame(spark, source)
-      // projections are target-ordered with target names (projOf) —
-      // shaping is a positional select + cast
-      def shaped(proj: Seq[(String, Column)]) =
-        src0.select(proj.zip(targetSchema.fields).map { case ((n, c), f) =>
-          c.cast(f.dataType).as(n) }: _*)
-      if (deleteMatched) {
-        // WHEN MATCHED THEN DELETE: drop target rows whose key (tuple)
-        // appears in the source (keys absent from the target are no-ops)
-        val keys = src0.select(keyCols.map(col): _*)
-        evolve()
-        Snapshots.merge(spark, table,
-          upserts = shapedEmpty(spark), deleteKeys = keys,
-          keyCols = keyCols)
-      } else {
-        lazy val targetKeys = Snapshots.readMor(spark, table)
-          .select(keyCols.map(col): _*).distinct()
-        val ups = updateProj.map(p =>
-          shaped(p).join(targetKeys, keyCols, "left_semi"))
-        // cardinality guard: two source rows updating one target row is
-        // ambiguous — refuse before ANYTHING commits (Delta semantics),
-        // the pending schema evolution included
-        ups.foreach(u => refuseMultiMatch(u.select(keyCols.map(col): _*),
-          keyCols, table))
-        val ins = insertProj.map(p =>
-          shaped(p).join(targetKeys, keyCols, "left_anti"))
-        def fp(p: Option[Seq[(String, Column)]]) =
-          p.map(_.map { case (n, c) => (n, c.toString) })
-        val upserts = (ups, ins) match {
-          case (Some(u), Some(i)) =>
-            // the common SET * / INSERT * pair collapses to the plain
-            // source — one scan instead of a semi+anti union
-            if (fp(updateProj) == fp(insertProj)) shaped(updateProj.get)
-            else u.unionByName(i)
-          case (Some(u), None) => u
-          case (None, Some(i)) => i
-          case (None, None) => throw new IllegalStateException(
-            "graft DML: MERGE command with no actions")
-        }
-        // the in-batch UNIQUE refusal would otherwise fire inside the
-        // merge, AFTER the schema evolution committed — run it first so
-        // the common refusal leaves the schema untouched
-        if (newCols.nonEmpty || widenCols.nonEmpty)
-          Snapshots.preValidateUniqueBatch(spark, table, upserts)
-        evolve()
-        Snapshots.merge(spark, table,
-          upserts = withRecordedSchema(spark, upserts, targetSchema),
-          deleteKeys = shapedEmpty(spark), keyCols = keyCols)
-      }
-      refreshCatalog(spark, ident)
-      Seq.empty
-    }
-    private def shapedEmpty(spark: SparkSession) =
-      spark.createDataFrame(new java.util.ArrayList[Row](), targetSchema)
-  }
-
-  /** The GENERAL MERGE command (see `rewriteMergeGeneral`): evaluates
-    * the SQL action cascade — per matched/not-matched/not-matched-by-
-    * source row, the FIRST action whose condition holds applies; a row
-    * matching no action is untouched — then lands the whole statement
-    * as ONE atomic [[Snapshots.merge]] (update/insert rows as upserts,
-    * deletes as delete keys).
+  /** MERGE INTO (see `rewriteMerge`): evaluates the SQL action cascade
+    * — per matched/not-matched/not-matched-by-source row, the FIRST
+    * action whose condition holds applies; a row matching no action is
+    * untouched — then lands the whole statement as ONE atomic
+    * [[Snapshots.merge]] (update/insert rows as upserts, deletes as
+    * delete keys). `UPDATE SET * / INSERT *` and `WHEN MATCHED THEN
+    * DELETE` are the cascade's unconditional one-clause sections.
     *
-    * Shape at scale: one inner join target⋈source on the merge key for
-    * the matched cascade (localCheckpoint'ed — every action filters the
-    * SAME materialized row set, so N actions never re-run the join), an
-    * anti-join per unmatched side, and the merge's own envelope-pruned
-    * rewrite. Everything is keyed on the merge key — AQE broadcasts the
-    * (typically CDC-batch-sized) source side. Multiple source rows
-    * matching-and-acting on one target key are REFUSED (the standard
-    * MERGE cardinality rule — see [[SqlDml.refuseMultiMatch]]), exactly
-    * like the unconditional path.
+    * Shape at scale: ONE join target⋈source on the merge key whose type
+    * covers exactly the row classes the actions need (an anti-join when
+    * only one unmatched side acts), localCheckpoint'ed — every action
+    * filters the SAME materialized row set, so N actions never re-run
+    * the join — then the merge's own envelope-pruned rewrite. AQE
+    * broadcasts the (typically CDC-batch-sized) source side. Multiple
+    * source rows matching-and-acting on one target key are REFUSED (the
+    * standard MERGE cardinality rule — see [[SqlDml.refuseMultiMatch]]),
+    * except under a lone unconditional `WHEN MATCHED THEN DELETE`.
     */
-  final case class GraftMergeConditionalCommand(table: String,
+  final case class GraftMergeCommand(table: String,
       source: LogicalPlan, keyCols: Seq[String],
       matched: Seq[(Option[Column], Option[Seq[(String, Column)]])],
       notMatched: Seq[(Option[Column], Seq[(String, Column)])],
@@ -1443,7 +1232,7 @@ object SqlDml {
       widenCols: Seq[(String, org.apache.spark.sql.types.DataType)] = Nil,
       ident: Option[String] = None)
       extends LeafRunnableCommand {
-    import GraftMergeConditionalCommand.{TP, SP}
+    import GraftMergeCommand.{TP, SP}
     override def innerChildren: Seq[LogicalPlan] = Seq(source)
 
     override def run(spark: SparkSession): Seq[Row] = {
@@ -1546,67 +1335,88 @@ object SqlDml {
         when(!sPresent, actIdx(notMatchedBySource.map(_._1)))
           .otherwise(lit(0)))
       val pinned = j.localCheckpoint()
-      // cardinality guard over the already-materialized join: >1 source
-      // row matching AND acting on one target key is ambiguous — refuse
-      // (rows whose matched cascade selects no action modify nothing
-      // and are exempt, as are duplicate NOT-MATCHED insert keys)
-      if (needM) refuseMultiMatch(
-        pinned.filter(col(actM) >= 1)
-          .select(keyCols.map(k => col(TP + k).as(k)): _*),
-        keyCols, table)
-      var upserts = Seq.empty[org.apache.spark.sql.DataFrame]
-      var delKeys = Seq.empty[org.apache.spark.sql.DataFrame]
-      matched.zipWithIndex.foreach { case ((_, setOpt), i) =>
-        val rows = pinned.filter(col(actM) === lit(i + 1))
-        setOpt match {
-          case Some(set) => upserts :+= shapeRow(rows, set, TP)
-          case None => delKeys :+= rows
-            .select(keyCols.map(k => col(TP + k).as(k)): _*)
+      try {
+        // cardinality guard over the already-materialized join: >1 source
+        // row matching AND acting on one target key is ambiguous — refuse
+        // (rows whose matched cascade selects no action modify nothing
+        // and are exempt, as are duplicate NOT-MATCHED insert keys, and a
+        // lone unconditional WHEN MATCHED THEN DELETE: deleting a row
+        // twice deletes it once — Delta exempts the shorthand the same way)
+        if (needM && matched != Seq((None, None))) refuseMultiMatch(
+          pinned.filter(col(actM) >= 1)
+            .select(keyCols.map(k => col(TP + k).as(k)): _*),
+          keyCols, table)
+        var upserts = Seq.empty[org.apache.spark.sql.DataFrame]
+        var delKeys = Seq.empty[org.apache.spark.sql.DataFrame]
+        matched.zipWithIndex.foreach { case ((_, setOpt), i) =>
+          val rows = pinned.filter(col(actM) === lit(i + 1))
+          setOpt match {
+            case Some(set) => upserts :+= shapeRow(rows, set, TP)
+            case None => delKeys :+= rows
+              .select(keyCols.map(k => col(TP + k).as(k)): _*)
+          }
+        }
+        notMatched.zipWithIndex.foreach { case ((_, proj), i) =>
+          upserts :+= shapeRow(pinned.filter(col(actI) === lit(i + 1)),
+            proj, SP)
+        }
+        notMatchedBySource.zipWithIndex.foreach { case ((_, setOpt), i) =>
+          val rows = pinned.filter(col(actD) === lit(i + 1))
+          setOpt match {
+            case Some(set) => upserts :+= shapeRow(rows, set, TP)
+            case None => delKeys :+= rows
+              .select(keyCols.map(k => col(TP + k).as(k)): _*)
+          }
+        }
+        def emptyTarget = spark.createDataFrame(
+          new java.util.ArrayList[Row](), targetSchema)
+        val ups =
+          if (upserts.isEmpty) emptyTarget
+          else upserts.reduce(_.unionByName(_))
+        val dels =
+          if (delKeys.isEmpty) emptyTarget
+          else delKeys.reduce(_.unionByName(_))
+        if (newCols.nonEmpty || widenCols.nonEmpty) {
+          // WITH SCHEMA EVOLUTION commits its schema changes AFTER every
+          // guard that runs pre-merge (the cardinality guard above, the
+          // in-batch UNIQUE pre-validation here): those refusals leave the
+          // table untouched, schema included. Guards that live INSIDE the
+          // merge commit itself — unique-vs-carried-files, CHECK/FK, the
+          // concurrent-commit rebase refusal — can still fire after the
+          // evolution committed; that is benign to retry (the retried
+          // statement recomputes its evolution set as empty) but is a
+          // two-commit window, the same one Delta's schema-then-data
+          // evolution has. Widens go FIRST: widenColumn carries its own
+          // refusals (constraints, rename history) and must fire before
+          // any addColumn lands; the catalog sync keeps the next statement
+          // on the name from comparing the stale CREATE-time schema
+          Snapshots.preValidateUniqueBatch(spark, table, ups)
+          widenCols.foreach { case (n, dt) =>
+            Snapshots.widenColumn(spark, table, n, dt) }
+          newCols.foreach(f =>
+            Snapshots.addColumn(spark, table, f.name, f.dataType))
+          syncCatalogSchema(spark, table, ident)
+        }
+        Snapshots.merge(spark, table,
+          upserts = withRecordedSchema(spark, ups, targetSchema),
+          deleteKeys = dels, keyCols = keyCols)
+      } finally {
+        // the checkpoint belongs to this statement: release its blocks
+        // once the merge committed or refused, instead of holding one
+        // persisted RDD per MERGE until a driver GC lets the cleaner run
+        pinned.queryExecution.logical.foreach {
+          case r: org.apache.spark.sql.execution.LogicalRDD =>
+            r.rdd.unpersist(blocking = false)
+          case _ => ()
         }
       }
-      notMatched.zipWithIndex.foreach { case ((_, proj), i) =>
-        upserts :+= shapeRow(pinned.filter(col(actI) === lit(i + 1)),
-          proj, SP)
-      }
-      notMatchedBySource.zipWithIndex.foreach { case ((_, setOpt), i) =>
-        val rows = pinned.filter(col(actD) === lit(i + 1))
-        setOpt match {
-          case Some(set) => upserts :+= shapeRow(rows, set, TP)
-          case None => delKeys :+= rows
-            .select(keyCols.map(k => col(TP + k).as(k)): _*)
-        }
-      }
-      def emptyTarget = spark.createDataFrame(
-        new java.util.ArrayList[Row](), targetSchema)
-      val ups =
-        if (upserts.isEmpty) emptyTarget
-        else upserts.reduce(_.unionByName(_))
-      val dels =
-        if (delKeys.isEmpty) emptyTarget
-        else delKeys.reduce(_.unionByName(_))
-      if (newCols.nonEmpty || widenCols.nonEmpty) {
-        // pre-validate the in-batch UNIQUE refusal, then commit the
-        // evolution (widens first — they carry their own refusals);
-        // guards inside the merge commit itself (unique-vs-carried,
-        // CHECK/FK, rebase) can still fire post-evolution — benign to
-        // retry, see GraftMergeCommand.evolve
-        Snapshots.preValidateUniqueBatch(spark, table, ups)
-        widenCols.foreach { case (n, dt) =>
-          Snapshots.widenColumn(spark, table, n, dt) }
-        newCols.foreach(f =>
-          Snapshots.addColumn(spark, table, f.name, f.dataType))
-        syncCatalogSchema(spark, table, ident)
-      }
-      Snapshots.merge(spark, table,
-        upserts = withRecordedSchema(spark, ups, targetSchema),
-        deleteKeys = dels, keyCols = keyCols)
       refreshCatalog(spark, ident)
       Seq.empty
     }
   }
 
-  object GraftMergeConditionalCommand {
-    /** Side prefixes the general MERGE joins under — reserved names,
+  object GraftMergeCommand {
+    /** Side prefixes the MERGE cascade joins under — reserved names,
       * refused loudly if a table/source column collides.
       */
     private[plans] val TP = "__graft_t__"

@@ -24,6 +24,16 @@ class PlanBaselineSpec extends AnyFunSuite {
     assert(PlanBaseline.drift(cur, Map.empty) === Map.empty)
   }
 
+  test("unstable = entries whose iterations disagree, with their distinct " +
+      "fingerprints in first-seen order") {
+    val perIter = Map(
+      "q_same" -> Seq("aaaa", "aaaa", "aaaa"),
+      "q_once" -> Seq("bbbb"),
+      "q_flip" -> Seq("c1", "c2", "c1"))
+    assert(PlanBaseline.unstable(perIter) === Map("q_flip" -> Seq("c1", "c2")))
+    assert(PlanBaseline.unstable(Map.empty) === Map.empty)
+  }
+
   test("load/write roundtrip through a file; missing file loads empty") {
     val dir = java.nio.file.Files.createTempDirectory("graft_planbase")
     val path = dir.resolve("sub/plans.json").toString

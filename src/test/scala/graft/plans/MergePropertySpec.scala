@@ -5,12 +5,14 @@ import graft.sources.Snapshots
 import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-/** Model-based property test for the general conditional MERGE cascade
-  * ([[SqlDml.GraftMergeConditionalCommand]]): random target/source
-  * tables and a random clause cascade — `WHEN MATCHED [AND c]
-  * UPDATE/DELETE`, `WHEN NOT MATCHED [AND c] INSERT`, `WHEN NOT MATCHED
-  * BY SOURCE [AND c] UPDATE/DELETE`, each section 0–2 clauses — must
-  * land exactly the rows an in-memory first-true-wins model computes.
+/** Model-based property test for the SQL MERGE cascade
+  * ([[SqlDml.GraftMergeCommand]], the one command every MERGE builds):
+  * random target/source tables and a random clause cascade — `WHEN
+  * MATCHED [AND c] UPDATE/DELETE`, `WHEN NOT MATCHED [AND c] INSERT`,
+  * `WHEN NOT MATCHED BY SOURCE [AND c] UPDATE/DELETE`, each section 0–2
+  * clauses, the whole-row `UPDATE SET *` / explicit full-row `SET k =
+  * s.k, ...` / `INSERT *` among the actions — must land exactly the
+  * rows an in-memory first-true-wins model computes.
   * This pins the semantics example tests cannot enumerate: clause-order
   * precedence under overlapping conditions, rows no clause touches,
   * empty sections, empty source, and partial-SET column carry (the
@@ -52,6 +54,10 @@ class MergePropertySpec extends SparkSpec {
     lit.map(l => MAct(s"UPDATE SET v = $l", Some((_, _) => l))),
     Gen.const(MAct("UPDATE SET v = s.v", Some((_, sv) => sv))),
     Gen.const(MAct("UPDATE SET v = s.v, tag = s.tag",
+      Some((_, sv) => sv), tagFromSource = true)),
+    Gen.const(MAct("UPDATE SET *", Some((_, sv) => sv),
+      tagFromSource = true)),
+    Gen.const(MAct("UPDATE SET k = s.k, v = s.v, tag = s.tag",
       Some((_, sv) => sv), tagFromSource = true)))
 
   private val nCond: Gen[Option[NCond]] = Gen.option(Gen.oneOf(
@@ -61,7 +67,8 @@ class MergePropertySpec extends SparkSpec {
     Gen.const(NIns("INSERT (k, v, tag) VALUES (s.k, s.v, s.tag)",
       (sv, _) => sv)),
     lit.map(l => NIns(s"INSERT (k, v, tag) VALUES (s.k, $l, s.tag)",
-      (_, _) => l)))
+      (_, _) => l)),
+    Gen.const(NIns("INSERT *", (sv, _) => sv)))
 
   private val bCond: Gen[Option[BCond]] = Gen.option(Gen.oneOf(
     lit.map(l => BCond(s"t.v >= $l", (tv, _) => tv >= l)),

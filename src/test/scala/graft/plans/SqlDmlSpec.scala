@@ -20,6 +20,12 @@ class SqlDmlSpec extends SparkSpec {
     dml.sql(s"CREATE TABLE $name USING graft OPTIONS (path '$tbl')")
   }
 
+  /** Ids of the RDDs the context currently holds persisted — compared
+    * as sets, so blocks the cleaner reaps meanwhile cannot mask a leak.
+    */
+  private def persistedRdds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   private def rows(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
@@ -403,7 +409,7 @@ class SqlDmlSpec extends SparkSpec {
     dml.sql("CREATE OR REPLACE TEMPORARY VIEW dml_strk_src AS " +
       "SELECT k, CAST(v AS BIGINT) v FROM VALUES ('1', 100), ('pear', 7) " +
       "AS x(k, v)")
-    // simple path: key '1' updates WITHOUT touching '01'
+    // unconditional SET * / INSERT *: key '1' updates WITHOUT touching '01'
     dml.sql("MERGE INTO dml_strk t USING dml_strk_src s ON t.k = s.k " +
       "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
     assert(content === Map("01" -> 1L, "1" -> 100L, "apple" -> 3L,
@@ -610,7 +616,7 @@ class SqlDmlSpec extends SparkSpec {
       "SELECT CAST(k AS BIGINT) k, CAST(v AS BIGINT) v, " +
       "CAST(tag AS STRING) tag FROM VALUES (2, 200, 'b'), (9, 900, 'i') " +
       "AS x(k, v, tag)")
-    // simple path: SET * / INSERT * carry the evolved column
+    // unconditional SET * / INSERT *: both carry the evolved column
     dml.sql("MERGE WITH SCHEMA EVOLUTION INTO dml_evo t " +
       "USING dml_evo_src s ON t.k = s.k " +
       "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
@@ -679,7 +685,7 @@ class SqlDmlSpec extends SparkSpec {
       "schema untouched") {
     import spark.implicits._
     val wide = 8L * 1000 * 1000 * 1000 // > Int.MaxValue
-    // simple path: SET * / INSERT * with a BIGINT source against an INT
+    // unconditional SET * / INSERT * with a BIGINT source against an INT
     // target column — the analyzer's alignment cast to int would ANSI-
     // overflow; the widen strips it and the value lands exactly
     val tbl = freshTable("wid")
@@ -809,8 +815,9 @@ class SqlDmlSpec extends SparkSpec {
     dml.sql("CREATE OR REPLACE TEMPORARY VIEW dml_comp_src AS " +
       "SELECT CAST(g AS BIGINT) g, CAST(i AS INT) i, CAST(v AS BIGINT) v " +
       "FROM VALUES (1, 2, 200), (3, 1, 300) AS x(g, i, v)")
-    // simple path: tuple (1,2) updates; (3,1) inserts; (1,1)/(2,1)
-    // share a COLUMN with source rows but no TUPLE — untouched
+    // unconditional SET * / INSERT *: tuple (1,2) updates; (3,1)
+    // inserts; (1,1)/(2,1) share a COLUMN with source rows but no
+    // TUPLE — untouched
     dml.sql("MERGE INTO dml_comp t USING dml_comp_src s " +
       "ON t.g = s.g AND t.i = s.i " +
       "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
@@ -863,14 +870,16 @@ class SqlDmlSpec extends SparkSpec {
     dml.sql("CREATE OR REPLACE TEMPORARY VIEW dml_card_dup AS " +
       "SELECT CAST(k AS BIGINT) k, CAST(v AS BIGINT) v FROM VALUES " +
       "(1, 100), (1, 200) AS x(k, v)")
-    // simple path (SET * / INSERT * → GraftMergeCommand)
+    // the unconditional SET * / INSERT * upsert; a refused statement
+    // still releases the cascade's join checkpoint
+    val held = persistedRdds
     val e1 = intercept[IllegalStateException] {
       dml.sql("MERGE INTO dml_card t USING dml_card_dup s ON t.k = s.k " +
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
     }
     assert(e1.getMessage.contains("attempted to modify"), e1.getMessage)
-    // general path (conditional cascade → GraftMergeConditionalCommand),
-    // both for UPDATE and for DELETE actions
+    assert((persistedRdds -- held).isEmpty, "MERGE left an RDD persisted")
+    // conditional actions, both for UPDATE and for DELETE
     val e2 = intercept[IllegalStateException] {
       dml.sql("MERGE INTO dml_card t USING dml_card_dup s ON t.k = s.k " +
         "WHEN MATCHED AND s.v > 0 THEN DELETE")
@@ -895,5 +904,24 @@ class SqlDmlSpec extends SparkSpec {
       "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)")
     assert(rows(Snapshots.readMor(spark, tbl)) ===
       Set((0L, 0L), (1L, 200L), (2L, 20L), (9L, 900L), (9L, 901L)))
+    // an explicit full-row SET naming the key's own source value is the
+    // identity, not a key change — accepted like SET *
+    dml.sql("MERGE INTO dml_card t USING (SELECT CAST(2 AS BIGINT) k, " +
+      "CAST(222 AS BIGINT) v) s ON t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET k = s.k, v = s.v")
+    assert(rows(Snapshots.readMor(spark, tbl)) ===
+      Set((0L, 0L), (1L, 200L), (2L, 222L), (9L, 900L), (9L, 901L)))
+    // duplicate source keys under the lone unconditional MATCHED DELETE
+    // are idempotent, not ambiguous: accepted, key 1 deleted once, in
+    // one commit, and the checkpoint released after the commit
+    val vBefore = Snapshots.latestVersion(spark, tbl)
+    val heldBefore = persistedRdds
+    dml.sql("MERGE INTO dml_card t USING dml_card_dup s ON t.k = s.k " +
+      "WHEN MATCHED THEN DELETE")
+    assert((persistedRdds -- heldBefore).isEmpty,
+      "MERGE left an RDD persisted")
+    assert(Snapshots.latestVersion(spark, tbl) === vBefore + 1)
+    assert(rows(Snapshots.readMor(spark, tbl)) ===
+      Set((0L, 0L), (2L, 222L), (9L, 900L), (9L, 901L)))
   }
 }
