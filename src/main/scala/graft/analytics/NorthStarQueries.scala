@@ -374,9 +374,9 @@ object NorthStarQueries {
       // The LSH chain (shingle → md5 hash → 16 permutations → banding →
       // capped bucket self-join) feeds BOTH the output's left side and
       // the Jaccard confirm; unpersisted it ran twice (57 source scans
-      // in the r18 baseline plan). The confirm's internal pairs.count()
-      // materializes this cache during build, so the final action reads
-      // it warm on both paths.
+      // in the r18 baseline plan). The cache fills once inside the final
+      // action: its producing stages run once, and only the small
+      // pair-sized exchanges above it run once per reading subtree.
       val cand = Dedup.minhashLshCandidatesMd5(docs, "text", "doc_id")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val conf = Dedup.jaccardOnCandidatesStrings(cand, docs, "text",

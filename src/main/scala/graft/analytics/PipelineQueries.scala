@@ -224,7 +224,7 @@ object PipelineQueries {
     // shingled ONCE into a persisted (doc, h) frame feeding both the
     // md5-LSH banding and the set-array Jaccard confirm — same candidate
     // set and identical jaccard values as the unfused operators, minus a
-    // second full-corpus shingle pass and the row-form confirm cascade.
+    // second full-corpus shingle pass.
     val sh = TrainingData.docShingles(docs, "text", "doc_id", 3)
       .select(col("doc_id").as("doc"), col("shingle").as("h"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

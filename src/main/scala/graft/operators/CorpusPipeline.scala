@@ -58,8 +58,7 @@ object CorpusPipeline {
     */
   def nearDedup(docs: DataFrame, cfg: Config): DataFrame =
     nearDedupFused(docs, cfg,
-      c => Dedup.shingleHashRows(c, "text", "doc_id", cfg.nearDupShingle),
-      sh => Dedup.minhashLshCandidatesFromHashes(sh))
+      c => Dedup.shingleHashRows(c, "text", "doc_id", cfg.nearDupShingle))
 
   /** The fused near-dedup tail: persist the corpus once (it feeds the
     * shingle pass and the final anti-join), persist the shingle rows once
@@ -81,12 +80,12 @@ object CorpusPipeline {
   private def nearDedupFused(
       docs: DataFrame,
       cfg: Config,
-      shinglesOf: DataFrame => DataFrame,
-      candidatesOf: DataFrame => DataFrame): DataFrame = {
+      shinglesOf: DataFrame => DataFrame): DataFrame = {
     val corpus = docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sh = shinglesOf(corpus)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = candidatesOf(sh).select(col("id_a"), col("id_b"))
+    val pairs = Dedup.minhashLshCandidatesFromHashes(sh)
+      .select(col("id_a"), col("id_b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val drops = Dedup.jaccardOnShingleSets(pairs, sh)
       .filter(col("jaccard") >= cfg.nearDupThreshold)
@@ -121,8 +120,7 @@ object CorpusPipeline {
     */
   def nearDedupVerified(docs: DataFrame, cfg: Config): DataFrame =
     nearDedupFused(docs, cfg,
-      c => Dedup.shingleHashRowsMd5(c, "text", "doc_id", cfg.nearDupShingle),
-      sh => Dedup.minhashLshCandidatesFromHashes(sh))
+      c => Dedup.shingleHashRowsMd5(c, "text", "doc_id", cfg.nearDupShingle))
 
   /** Stage 5: corpus accounting (docs/tokens/chars per predicted lang). */
   def tokenReport(corpus: DataFrame): DataFrame =

@@ -16,16 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Max candidate-pair count that still rides explicit broadcast hints
-    * in the confirm stage. Sized for the HASHED relation, not the raw
-    * rows: 500k (id_a, id_b) pairs ≈ 8 MB raw ≈ a few tens of MB as a
-    * broadcast hash map — safely inside default driver/executor budgets,
-    * which matters because an explicit broadcast() hint bypasses the
-    * autoBroadcastJoinThreshold safety valve. Shared with
-    * [[CorpusPipeline.nearDedup]]'s drop-set decision.
-    */
-  val broadcastPairLimit: Long = 500000L
-
   /** Exact dedup: keep the smallest `idCol` per distinct `textCol` hash.
     * Group-by on md5 (not the raw text) keeps shuffle rows narrow —
     * at 100 TB you shuffle 16-byte keys, not document bodies.
@@ -197,9 +187,7 @@ object Dedup {
       maxBucketSize: Int = 1000): DataFrame = {
     require(numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
-    val hashed = sh.select(col("doc"),
-      pmod(conv(substring(md5(col("h")), 1, 8), 16, 10).cast("long"), lit(P))
-        .as("h"))
+    val hashed = sh.select(col("doc"), md5PrefixHash(col("h")).as("h"))
     pairBandBuckets(bandBucketsFromHashes(hashed, numHashes, bands), maxBucketSize)
   }
 
@@ -214,9 +202,7 @@ object Dedup {
       shingleSize: Int, numHashes: Int = 16, bands: Int = 8): DataFrame =
     bandBucketsFromHashes(
       TrainingData.docShingles(df, textCol, idCol, shingleSize)
-        .select(col("doc_id").as("doc"),
-          pmod(conv(substring(md5(col("shingle")), 1, 8), 16, 10).cast("long"), lit(P))
-            .as("h")),
+        .select(col("doc_id").as("doc"), md5PrefixHash(col("shingle")).as("h")),
       numHashes, bands)
 
   /** Incremental NEAR-dedup: which documents of an incoming `batch` are
@@ -272,6 +258,14 @@ object Dedup {
         coalesce(col("max_jaccard"), lit(0.0)).as("max_jaccard"),
         (coalesce(col("n_matches"), lit(0L)) > 0).as("dropped"))
   }
+
+  /** The md5-prefix shingle hash: the first 8 hex digits of the n-gram
+    * string's md5 as a long, mod [[minhashModulus]] — the value DuckDB's
+    * replay ([[graft.analytics.NorthStarQueries.md5BucketSql]])
+    * reproduces.
+    */
+  private def md5PrefixHash(shingle: Column): Column =
+    pmod(conv(substring(md5(shingle), 1, 8), 16, 10).cast("long"), lit(P))
 
   /** The permutation constants of hash function `i` (exposed so the md5
     * variant's SQL oracle can replay them).
@@ -372,9 +366,7 @@ object Dedup {
   def shingleHashRowsMd5(df: DataFrame, textCol: String, idCol: String,
       n: Int): DataFrame =
     TrainingData.shingleRows(df, textCol, idCol, n)
-      .select(col("doc_id").as("doc"),
-        pmod(conv(substring(md5(col("shingle")), 1, 8), 16, 10).cast("long"),
-          lit(P)).as("h"))
+      .select(col("doc_id").as("doc"), md5PrefixHash(col("shingle")).as("h"))
 
   /** Exact Jaccard over hashed shingle SETS for given candidate pairs
     * (id_a, id_b) — the confirm stage after LSH. Returns the pairs with
@@ -387,70 +379,82 @@ object Dedup {
       textCol: String,
       idCol: String,
       n: Int): DataFrame =
-    jaccardConfirm(candidates, df, idCol,
-      pruned => shingleHashRows(pruned, textCol, idCol, n).distinct())
+    jaccardOnPrunedDocs(candidates, df, idCol,
+      pruned => shingleHashRows(pruned, textCol, idCol, n))
 
-  /** The shared confirm tail of both Jaccard variants: persist the
-    * distinct candidate pairs (they feed four consumers and are typically
-    * the whole LSH pipeline), semi-join-prune the corpus to candidate
-    * docs BEFORE shingling (at 100 TB an unpruned shingle persist would
-    * not fit), then intersection counts + left-join assembly. The
-    * materialized pair count picks shuffle-vs-broadcast for every
-    * candidate-bounded frame — at LSH selectivity the corpus side never
-    * shuffles. Left joins keep short-doc pairs visible at jaccard 0.
+  /** Exact Jaccard over STRING shingle sets for given candidate pairs —
+    * the oracle-replayable twin of [[jaccardOnCandidates]] (whose hashed
+    * shingles ride xxhash64): the shingle key is the n-gram string
+    * itself, so an ANSI engine reproduces every intersection count
+    * bit-for-bit and no hash-collision caveat applies. Costs wider set
+    * elements than the hashed path — use it where verifiability matters
+    * more than shuffle bytes.
     */
-  private def jaccardConfirm(
+  def jaccardOnCandidatesStrings(
+      candidates: DataFrame,
+      df: DataFrame,
+      textCol: String,
+      idCol: String,
+      n: Int): DataFrame =
+    jaccardOnPrunedDocs(candidates, df, idCol,
+      pruned => pruned.select(col(idCol).as("doc"),
+        explode(array_distinct(TextFunctions.wordShingles(col(textCol), n))).as("h")))
+
+  /** The shared tail of both text-input confirms: distinct the candidate
+    * pairs (callers may pass duplicates), semi-join-prune the corpus to
+    * candidate docs BEFORE shingling (at 100 TB an unpruned shingle pass
+    * would be corpus-sized), then score in [[scoreShingleSets]]. Nothing
+    * is persisted or counted: both consumers of the distinct pairs (the
+    * candidate ids and the scored pairs) are the same aggregate subtree,
+    * so over an uncached input its shuffle runs once and the second read
+    * is a reused exchange.
+    */
+  private def jaccardOnPrunedDocs(
       candidates: DataFrame,
       df: DataFrame,
       idCol: String,
-      shingleRows: DataFrame => DataFrame): DataFrame =
-    jaccardConfirmCore(candidates,
-      (candidateIds: DataFrame) => shingleRows(
-        df.join(candidateIds, col(idCol) === col("_cand_doc"), "left_semi")))
+      shingleRows: DataFrame => DataFrame): DataFrame = {
+    val pairs = candidates.select(col("id_a"), col("id_b")).distinct()
+    scoreShingleSets(pairs, shingleRows(
+      df.join(candidateIds(pairs), col(idCol) === col("_cand_doc"), "left_semi")))
+  }
 
-  /** Exact Jaccard confirm in SET-ARRAY form, for the candidate-bounded
-    * regime: prune the precomputed `(doc, h)` shingle frame to candidate
-    * docs, collapse each doc's shingles into ONE array row
-    * (`collect_set` — distinct by construction, so dup-keeping hash rows
-    * need no separate `.distinct()` shuffle), then score every pair with
-    * `array_intersect` sizes in a single codegen'd projection.
-    *
-    * Versus the row-form [[jaccardOnPrecomputedShingles]] this trades
-    * per-row memory (a doc's whole shingle set lives in one array cell)
-    * for a drastically shorter stage chain: one aggregation plus two
-    * broadcast joins replaces the sizes/intersections/assembly cascade —
-    * about eight fewer scheduler round-trips, which is what dominates a
-    * many-stage composition's wall clock (each AQE shuffle stage is its
-    * own job). Use it where candidates are LSH-bounded and docs are
-    * bounded (shingle sets of a capped-length document); keep the
-    * row-form for unbounded inputs — it never materializes a set wider
-    * than one shuffle row.
-    *
-    * `pairs` must already be distinct (LSH banding output is, by its
-    * final group-by); left joins keep pairs whose doc lost every shingle
-    * visible at jaccard 0, matching the row-form's na.fill semantics.
-    *
-    * No join is hinted and nothing is counted driver-side: every frame
-    * here is the output of a shuffle AQE has ALREADY materialized, so the
-    * runtime re-plan sees exact byte sizes and picks broadcast precisely
-    * when the candidate set is small — the pre-AQE pattern of a
-    * `count()` action feeding an explicit `broadcast()` hint costs an
-    * extra plan traversal to learn less than AQE already knows. Pass
-    * `broadcastHint = true` only where AQE is off and the candidate set
-    * is known-bounded.
+  /** Every doc id of `pairs`, duplicates kept — a semi join's right side
+    * needs no distinct shuffle.
     */
-  def jaccardOnShingleSets(
-      pairs: DataFrame,
-      sh: DataFrame,
-      broadcastHint: Boolean = false): DataFrame = {
-    def maybeBroadcast(d: DataFrame): DataFrame =
-      if (broadcastHint) broadcast(d) else d
-    // dup-tolerated on the right of the semi join — no distinct shuffle
-    val candidateIds = maybeBroadcast(
-      pairs.select(explode(array(col("id_a"), col("id_b"))).as("_cand_doc")))
-    val sets = maybeBroadcast(
-      sh.join(candidateIds, col("doc") === col("_cand_doc"), "left_semi")
-        .groupBy(col("doc")).agg(collect_set(col("h")).as("_hs")))
+  private def candidateIds(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(col("id_a"), col("id_b"))).as("_cand_doc"))
+
+  /** Exact Jaccard confirm over a precomputed `(doc, h)` shingle frame:
+    * prune it to candidate docs, then score in [[scoreShingleSets]].
+    * `pairs` must already be distinct (LSH banding output is, by its
+    * final group-by); `sh` may keep duplicate rows.
+    */
+  def jaccardOnShingleSets(pairs: DataFrame, sh: DataFrame): DataFrame =
+    scoreShingleSets(pairs,
+      sh.join(candidateIds(pairs), col("doc") === col("_cand_doc"), "left_semi"))
+
+  /** The one pair-scoring core, in SET-ARRAY form: collapse each doc's
+    * shingles into ONE array row (`collect_set` — distinct by
+    * construction, so dup-keeping hash rows need no separate `.distinct()`
+    * shuffle), then score every pair with `array_intersect` sizes in a
+    * single codegen'd projection. One aggregation plus two joins; a doc's
+    * whole shingle set lives in one array cell, which bounds it to
+    * capped-length documents (every workload's docs are).
+    *
+    * Emits the pair columns plus `inter`, `sz_a`, `sz_b` (bigint) and
+    * `jaccard`; a zero union scores 0.0. Left joins keep pairs whose doc
+    * has no shingle at all visible with empty sets (sizes 0, jaccard 0).
+    *
+    * No join is hinted and nothing is counted driver-side: the sets and
+    * pairs are shuffle outputs AQE has ALREADY materialized when it
+    * re-plans the joins, so it sees exact byte sizes and broadcasts
+    * precisely when the candidate set is small — a `count()` action
+    * feeding an explicit `broadcast()` hint would cost an extra job to
+    * learn less than AQE already knows.
+    */
+  private def scoreShingleSets(pairs: DataFrame, sh: DataFrame): DataFrame = {
+    val sets = sh.groupBy(col("doc")).agg(collect_set(col("h")).as("_hs"))
     val empty = array().cast(
       org.apache.spark.sql.types.ArrayType(sh.schema("h").dataType))
     val sza = size(col("_hs_a")); val szb = size(col("_hs_b"))
@@ -462,66 +466,14 @@ object Dedup {
         Seq("id_b"), "left")
       .withColumn("_hs_a", coalesce(col("_hs_a"), empty))
       .withColumn("_hs_b", coalesce(col("_hs_b"), empty))
+      .withColumn("inter", inter.cast("bigint"))
+      .withColumn("sz_a", sza.cast("bigint"))
+      .withColumn("sz_b", szb.cast("bigint"))
       .withColumn("jaccard",
         when(sza + szb - inter === 0, lit(0.0))
           .otherwise(inter.cast("double") / (sza + szb - inter)))
       .drop("_hs_a", "_hs_b")
   }
-
-  private def jaccardConfirmCore(
-      candidates: DataFrame,
-      prunedShingleRows: DataFrame => DataFrame): DataFrame = {
-    val pairs = candidates.select(col("id_a"), col("id_b")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val smallCandidates = pairs.count() <= Dedup.broadcastPairLimit
-    def maybeBroadcast(d: DataFrame): DataFrame =
-      if (smallCandidates) broadcast(d) else d
-    val candidateIds = maybeBroadcast(
-      pairs.select(col("id_a").as("_cand_doc"))
-        .unionByName(pairs.select(col("id_b").as("_cand_doc")))
-        .distinct())
-    // Cache the shingle rows: they feed sizes + both join sides, and Spark
-    // has no common-subplan elimination across self-joins. (LRU eviction
-    // reclaims the blocks; no explicit unpersist is owed.)
-    val sh = prunedShingleRows(candidateIds)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = sh.groupBy(col("doc")).agg(count(lit(1)).as("sz"))
-    val shA = sh.select(col("doc").as("id_a"), col("h"))
-    val shB = sh.select(col("doc").as("id_b"), col("h"))
-    val inter = maybeBroadcast(pairs)
-      .join(shA, "id_a")
-      .join(shB, Seq("id_b", "h"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    pairs
-      .join(maybeBroadcast(inter), Seq("id_a", "id_b"), "left").na.fill(0L, Seq("inter"))
-      .join(maybeBroadcast(sizes.select(col("doc").as("id_a"), col("sz").as("sz_a"))),
-        Seq("id_a"), "left")
-      .join(maybeBroadcast(sizes.select(col("doc").as("id_b"), col("sz").as("sz_b"))),
-        Seq("id_b"), "left")
-      .na.fill(0L, Seq("sz_a", "sz_b"))
-      .withColumn("jaccard",
-        when(col("sz_a") + col("sz_b") - col("inter") === 0, lit(0.0))
-          .otherwise(col("inter").cast("double")
-            / (col("sz_a") + col("sz_b") - col("inter"))))
-  }
-
-  /** Exact Jaccard over STRING shingle sets for given candidate pairs —
-    * the oracle-replayable twin of [[jaccardOnCandidates]] (whose hashed
-    * shingles ride xxhash64): identical join shape, but the shingle key
-    * is the n-gram string itself, so an ANSI engine reproduces every
-    * intersection count bit-for-bit and no hash-collision caveat applies.
-    * Costs wider shuffle keys than the hashed path — use it where
-    * verifiability matters more than shuffle bytes.
-    */
-  def jaccardOnCandidatesStrings(
-      candidates: DataFrame,
-      df: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int): DataFrame =
-    jaccardConfirm(candidates, df, idCol,
-      pruned => pruned.select(col(idCol).as("doc"),
-        explode(array_distinct(TextFunctions.wordShingles(col(textCol), n))).as("h")))
 
   /** Shingle-set CONTAINMENT pairs: (id_a, id_b) where id_a's distinct
     * word-n-gram set is a subset of id_b's — the subsumption dedup a
@@ -535,8 +487,8 @@ object Dedup {
     * reasons: at corpus scale the rejoin is a second full shuffle of a
     * corpus-sized frequency table (the window clusters the shingle rows
     * ONCE and reads counts in place), and at test scale the rejoin's
-    * AQE build-side choice reads the persisted shingle cache's size,
-    * which depends on how much of the cache materialized when the stage
+    * AQE build-side choice read the then-persisted shingle cache's size,
+    * which depended on how much of the cache materialized when the stage
     * planned — a scheduling-dependent BuildLeft/BuildRight flip that
     * drifted this query's plan fingerprint exactly once in seven r17
     * runs (reproduced 3/30 under deliberate box contention, r18). Each
@@ -546,22 +498,23 @@ object Dedup {
     * false negatives; candidate cost is Σ df(rarest shingle), the same
     * bound class as every prefix-filtered join here (real text keeps
     * rarest-df small; a corpus of identical boilerplate degenerates for
-    * any containment definition). Confirm is the exact shared
-    * intersection-count tail ([[jaccardOnCandidatesStrings]]) with
-    * containment = (inter == |A|). Docs with fewer than n tokens have no
-    * shingles and are excluded (an empty set is vacuously contained
-    * everywhere — noise, not signal).
+    * any containment definition). Confirm is the shared set scorer
+    * ([[jaccardOnShingleSets]]) with containment = (inter == |A|). Docs
+    * with fewer than n tokens have no shingles, hence no probe, and are
+    * excluded (an empty set is vacuously contained everywhere — noise,
+    * not signal).
     */
   def containmentPairs(df: DataFrame, textCol: String, idCol: String,
       n: Int = 3): DataFrame = {
-    // cached: feeds the windowed probe-argmin pass, the candidate join
-    // AND the confirm's pruned shingle rows (no common-subplan
-    // elimination across self-joins; LRU eviction reclaims the blocks,
-    // same policy as jaccardConfirm)
+    // NOT persisted: AQE reuses no exchange above an in-memory scan, so
+    // a lazily filled cache read by the probe, candidate and confirm
+    // subtrees is re-shuffled once per subtree. Plain, the window's
+    // shuffle runs once, the candidate join streams a second shingle
+    // pass, and the confirm's semi-join is pushed below the shingle
+    // generator, so it shingles candidate docs only.
     val sh = df.select(col(idCol).as("doc"),
       explode(array_distinct(TextFunctions.wordShingles(col(textCol), n)))
         .as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // df-per-shingle as a window, not groupBy+rejoin — see scaladoc
     val probes = sh
       .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
@@ -572,17 +525,11 @@ object Dedup {
       .join(sh.select(col("doc").as("id_b"), col("h")), "h")
       .filter(col("id_a") =!= col("id_b"))
       .select(col("id_a"), col("id_b"))
-    // Confirm on the ALREADY-SHINGLED persisted frame: semi-join-pruning
-    // `sh` to candidate docs yields exactly the rows the string confirm
-    // ([[jaccardOnCandidatesStrings]]) would re-derive from text —
-    // pruning commutes with the per-doc shingle projection — so the
-    // corpus text is shingled ONCE for probe, candidates and confirm
-    // (the r18 baseline plan re-shingled candidate docs from source:
-    // 44 scans / 87 exchanges for this query's static tree).
-    jaccardConfirmCore(candidates,
-      candidateIds => sh.join(candidateIds,
-        col("doc") === col("_cand_doc"), "left_semi"))
-      .filter(col("inter") === col("sz_a") && col("sz_a") > 0)
+    // every id_a has a probe shingle, so |A| > 0 needs no filter (one
+    // here would be pushed into the id_a-side sets only, splitting the
+    // two set sides into different subtrees that no longer share a stage)
+    jaccardOnShingleSets(candidates.distinct(), sh)
+      .filter(col("inter") === col("sz_a"))
       .select(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
   }
 
@@ -635,7 +582,7 @@ object Dedup {
 
   /** Column-level pairwise word-n-gram Jaccard (set semantics) for ad-hoc
     * two-text comparison; zero-union pairs score 0.0, matching
-    * [[jaccardOnCandidates]]. For bulk confirm use the hashed-row path.
+    * [[jaccardOnCandidates]]. For bulk confirm use that operator.
     */
   def jaccardColumns(a: Column, b: Column, n: Int): Column = {
     val sa = array_distinct(TextFunctions.wordShingles(a, n))

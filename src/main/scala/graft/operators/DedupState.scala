@@ -29,6 +29,15 @@ import org.apache.spark.sql.functions._
   */
 object DedupState {
 
+  /** Max merge-map rows that still ride an explicit broadcast hint in
+    * [[incrementalComponents]]' distributed relabel. Sized for the HASHED
+    * relation, not the raw rows: 500k id pairs ≈ 8 MB raw ≈ a few tens of
+    * MB as a broadcast hash map — safely inside default driver/executor
+    * budgets, which matters because an explicit broadcast() hint
+    * bypasses the autoBroadcastJoinThreshold safety valve.
+    */
+  private val broadcastPairLimit: Long = 500000L
+
   /** Merge newly admitted pairs into the stored edge table. Pairs are
     * normalized (`id_a < id_b`, self-loops dropped, duplicates collapsed)
     * and only never-seen pairs are appended — the anti-join keys on the
@@ -147,7 +156,7 @@ object DedupState {
           .localCheckpoint()
         val nMapped = Option(obs.get("n")).collect { case n: Long => n }
           .getOrElse(0L)
-        if (nMapped <= Dedup.broadcastPairLimit) broadcast(mapping)
+        if (nMapped <= broadcastPairLimit) broadcast(mapping)
         else mapping
       }
     // (seeded's cache blocks are reclaimed by LRU eviction; an eager

@@ -604,8 +604,8 @@ object TrainingData {
     // fits comfortably on the driver, three shuffle-join-checkpoint
     // rounds for a few thousand pairs are pure stage-latency waste —
     // union-find them in microseconds and spray the labels back as a
-    // broadcast join (the same count-adaptive pattern as the corpus-
-    // pipeline broadcasts). The persisted `sym` makes the count cheap,
+    // broadcast join (the same count-adaptive pattern as DedupState's
+    // relabel). The persisted `sym` makes the count cheap,
     // and 100k edges is ~1.6 MB collected. Past the threshold — the
     // 100 TB shape — the distributed loop below takes over unchanged.
     // The collected path reads ids as Long; any other id type (the

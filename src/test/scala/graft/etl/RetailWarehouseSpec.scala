@@ -1,7 +1,6 @@
 package graft.etl
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
@@ -89,43 +88,6 @@ class RetailWarehouseSpec extends SparkSpec {
     assert(mart.count() > 0)
   }
 
-  private val tagKey = "graft.test.tag"
-
-  /** The `tagKey` value of every job `body` starts. Marker jobs run on
-    * this thread before and after bound the window: the listener bus
-    * delivers events in order, so jobs started earlier (still queued when
-    * the listener joins) come before the first marker, and once the
-    * second marker's start arrives, so has every job of `body`.
-    */
-  private def jobTags(body: => Unit): Seq[String] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val tag = Option(e.properties).flatMap(p => Option(p.getProperty(tagKey))).getOrElse("")
-        seen.add(tag)
-        if (tag == "end") drained.countDown()
-      }
-    }
-    val sc = spark.sparkContext
-    def marker(tag: String): Unit = {
-      sc.setLocalProperty(tagKey, tag)
-      sc.parallelize(Seq(1), 1).count()
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("start")
-      sc.setLocalProperty(tagKey, "run")
-      body
-      marker("end")
-      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    } finally {
-      sc.setLocalProperty(tagKey, null)
-      sc.removeSparkListener(listener)
-    }
-    seen.asScala.toSeq.dropWhile(_ != "start").drop(1).takeWhile(_ != "end")
-  }
-
   /** Dimension-pool threads still alive after a grace period: a pool that
     * was shut down lets its idle threads exit, one that was not keeps them.
     */
@@ -154,9 +116,8 @@ class RetailWarehouseSpec extends SparkSpec {
 
   test("incremental run: bounded jobs per dimension, all carrying the caller's local properties") {
     val (_, prior, batch) = priorAndBatch()
-    var res: RetailWarehouse.WarehouseResult = null
-    val tags = jobTags {
-      res = RetailWarehouse.run(batch, java.sql.Date.valueOf("2024-07-01"), prior)
+    val (res, tags) = jobTags {
+      RetailWarehouse.run(batch, java.sql.Date.valueOf("2024-07-01"), prior)
     }
     // two dims at 7 jobs each; the four-branch merge this replaced
     // started 10 per dim on this batch

@@ -165,20 +165,84 @@ class DedupSpec extends SparkSpec {
       .collect()
       .map(r => ((r.getAs[Long]("id_a"), r.getAs[Long]("id_b")), r.getAs[Double]("jaccard")))
       .toMap
-    val rowForm = Dedup.jaccardOnCandidates(cands, docs, "text", "doc_id", 3)
+    val wrapper = Dedup.jaccardOnCandidates(cands, docs, "text", "doc_id", 3)
       .collect()
       .map(r => ((r.getAs[Long]("id_a"), r.getAs[Long]("id_b")), r.getAs[Double]("jaccard")))
       .toMap
     assert(got((1L, 2L)) === 0.75)
     assert(got((1L, 3L)) === 0.0)  // disjoint pair surfaces with 0
     assert(got((1L, 9L)) === 0.0)  // doc with no shingle rows at all
-    assert(got === rowForm)
+    // independent reference: set Jaccard over the same word 3-grams on
+    // the driver (no hash collision among this handful of shingles)
+    val sets = docs.as[(Long, String)].collect().toMap.map { case (id, t) =>
+      id -> shingles(t) }
+    val brute = Seq((1L, 2L), (1L, 3L), (1L, 9L)).map { case (a, b) =>
+      (a, b) -> setJaccard(sets.getOrElse(a, Set.empty), sets.getOrElse(b, Set.empty))
+    }.toMap
+    assert(got === brute)
+    assert(wrapper === brute)
     // duplicate shingle rows cannot inflate a set intersection
     val withDups = Dedup.jaccardOnShingleSets(cands, sh.unionAll(sh))
       .collect()
       .map(r => ((r.getAs[Long]("id_a"), r.getAs[Long]("id_b")), r.getAs[Double]("jaccard")))
       .toMap
     assert(withDups === got)
+  }
+
+  /** Distinct word n-grams of `t`, the driver-side twin of
+    * `TextFunctions.wordShingles` + `array_distinct`.
+    */
+  private def shingles(t: String, n: Int = 3): Set[String] =
+    t.trim.split("\\s+").sliding(n).filter(_.length == n).map(_.mkString(" ")).toSet
+
+  /** Set Jaccard; a zero union scores 0.0. */
+  private def setJaccard(a: Set[String], b: Set[String]): Double = {
+    val inter = (a intersect b).size
+    val union = a.size + b.size - inter
+    if (union == 0) 0.0 else inter.toDouble / union
+  }
+
+  test("jaccardOnCandidatesStrings matches driver-side set counts on a " +
+      "seeded corpus: bigint inter/sz_a/sz_b, duplicate pairs, shingle-less docs") {
+    val rnd = new scala.util.Random(20261019L)
+    // three words = 27 possible 3-grams, so random docs overlap often
+    val vocab = Array("ant", "bee", "cat")
+    // 0-8 tokens per doc: the short ones have no 3-gram at all
+    val corpus = (1L to 40L).map(id =>
+      id -> Seq.fill(rnd.nextInt(9))(vocab(rnd.nextInt(vocab.length))).mkString(" "))
+    // candidate ids run past the corpus (41, 42 have no row) and every
+    // pair is listed twice
+    val pairs = Seq.fill(60) {
+      val a = 1L + rnd.nextInt(42); val b = 1L + rnd.nextInt(42)
+      (math.min(a, b), math.max(a, b))
+    }.filter { case (a, b) => a != b }
+    val cands = (pairs ++ pairs).toDF("id_a", "id_b")
+    val got = Dedup.jaccardOnCandidatesStrings(cands, corpus.toDF("doc_id", "text"),
+      "text", "doc_id", 3)
+    for (c <- Seq("inter", "sz_a", "sz_b"))
+      assert(got.schema(c).dataType === org.apache.spark.sql.types.LongType, c)
+    val rows = got.select("id_a", "id_b", "inter", "sz_a", "sz_b", "jaccard")
+      .as[(Long, Long, Long, Long, Long, Double)].collect()
+    val sets = corpus.toMap.map { case (id, t) => id -> shingles(t) }
+    val brute = pairs.distinct.map { case (a, b) =>
+      val sa = sets.getOrElse(a, Set.empty); val sb = sets.getOrElse(b, Set.empty)
+      (a, b, (sa intersect sb).size.toLong, sa.size.toLong, sb.size.toLong,
+        setJaccard(sa, sb))
+    }
+    assert(rows.length === brute.length, "one row per distinct pair")
+    assert(rows.toSet === brute.toSet)
+    assert(brute.exists(r => r._4 == 0L || r._5 == 0L), "a shingle-less side must occur")
+    assert(brute.exists(r => r._3 > 0L), "an overlapping pair must occur")
+  }
+
+  test("building the text-input confirms and containmentPairs starts no job") {
+    val cands = Seq((1L, 2L), (1L, 2L), (1L, 3L)).toDF("id_a", "id_b")
+    val (_, jobs) = jobTags {
+      Dedup.jaccardOnCandidates(cands, docs, "text", "doc_id", 3)
+      Dedup.jaccardOnCandidatesStrings(cands, docs, "text", "doc_id", 3)
+      Dedup.containmentPairs(docs, "text", "doc_id")
+    }
+    assert(jobs.isEmpty, s"construction started ${jobs.size} job(s)")
   }
 
   test("simhash16: identical texts agree, disjoint texts differ") {

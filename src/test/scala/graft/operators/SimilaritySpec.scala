@@ -118,21 +118,11 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("annPlaneCount sizes from parquet footers and launches no Spark job") {
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
     // rowCount directly (not the memoized annPlaneCount wrapper, which a
     // prior suite may have warmed): the footer read is what must be free
-    val n = try {
-      val n0 = graft.sources.ParquetMeta.rowCount(spark, s"$sf001/embeddings.parquet")
-      Thread.sleep(1000) // let any listener events drain (bus is async)
-      assert(jobs === 0, "index sizing must read footer metadata, not scan")
-      n0
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (n, jobs) = jobTags(
+      graft.sources.ParquetMeta.rowCount(spark, s"$sf001/embeddings.parquet"))
+    assert(jobs.isEmpty, "index sizing must read footer metadata, not scan")
     // the sizing matches the documented formula on the actual count
     val planes = graft.analytics.NorthStarQueries.annPlaneCount(spark, sf001)
     val q = math.max(n / 128L, 1L)

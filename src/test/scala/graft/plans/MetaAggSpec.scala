@@ -39,19 +39,8 @@ class MetaAggSpec extends SparkSpec {
       max(col("s")).as("smx"))
     assert(q.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
       s"expected LocalRelation, got\n${q.queryExecution.optimizedPlan}")
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val row = try {
-      val r = q.collect()(0)
-      Thread.sleep(1000) // let any stray job events land on the listener
-      assert(jobs === 0, "metadata aggregate must not launch a job")
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (row, jobs) = jobTags(q.collect()(0))
+    assert(jobs.isEmpty, "metadata aggregate must not launch a job")
     val truth = Snapshots.read(spark, tbl).agg(count(lit(1)),
       min(col("k")), max(col("k")), min(col("s")), max(col("s"))).head()
     assert(row === truth)

@@ -745,19 +745,8 @@ class SnapshotsSpec extends SparkSpec {
       statsCols = Seq("o_orderkey"))
     Snapshots.commit(o.filter(col("o_orderkey") >= 700), tbl,
       statsCols = Seq("o_orderkey"))
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (n, env) = try {
-      val r = Snapshots.statsAgg(spark, tbl, "o_orderkey")
-      Thread.sleep(1000)
-      assert(jobs === 0, "statsAgg must not launch a job")
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val ((n, env), jobs) = jobTags(Snapshots.statsAgg(spark, tbl, "o_orderkey"))
+    assert(jobs.isEmpty, "statsAgg must not launch a job")
     val truth = o.agg(count(lit(1)), min(col("o_orderkey").cast("long")),
       max(col("o_orderkey").cast("long"))).head()
     assert(n === truth.getLong(0))
@@ -785,19 +774,8 @@ class SnapshotsSpec extends SparkSpec {
       strStatsCols = Seq("o_orderpriority"))
     Snapshots.commit(o.filter(col("o_orderkey") >= 700), tbl,
       strStatsCols = Seq("o_orderpriority"))
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (n, env) = try {
-      val r = Snapshots.statsAggStr(spark, tbl, "o_orderpriority")
-      Thread.sleep(1000)
-      assert(jobs === 0, "statsAggStr must not launch a job")
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val ((n, env), jobs) = jobTags(Snapshots.statsAggStr(spark, tbl, "o_orderpriority"))
+    assert(jobs.isEmpty, "statsAggStr must not launch a job")
     val truth = o.agg(count(lit(1)), min(col("o_orderpriority")),
       max(col("o_orderpriority"))).head()
     assert(n === truth.getLong(0))
