@@ -1041,14 +1041,14 @@ object NorthStarQueries {
     * (stored probe, rerank shortlist, recall audit) probes the parquet
     * layout; only q_ann_ivfpq keeps the self-contained in-memory build,
     * because it IS the benchmark of the build path. Built on first use
-    * per (dataset, application) under an [[AppState]] completion
-    * marker, so a failed build is redone rather than reused;
-    * bit-identical to the in-memory index (SimilaritySpec pins the
-    * round-trip), so every consumer's oracle is unchanged.
+    * per (dataset, application) by [[Fixtures.memo]], so a failed build
+    * is redone rather than reused; bit-identical to the in-memory index
+    * (SimilaritySpec pins the round-trip), so every consumer's oracle is
+    * unchanged.
     */
   private def storedPqIndex(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    AppState.ensure(s, "graft_pqidx_" + AppState.sanitize(d)) { out =>
+    Fixtures.memo(s, d, "pqidx") { out =>
       Similarity.writePqIndex(embeddings(s, d), out, iters = 1)
     }
 

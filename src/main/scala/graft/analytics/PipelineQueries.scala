@@ -251,8 +251,7 @@ object PipelineQueries {
   private def storedDedupEdges(s: org.apache.spark.sql.SparkSession,
       d: String, maxDocId: Long)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val dir = AppState.ensure(s,
-      s"graft_edgestate_${AppState.sanitize(d)}_$maxDocId") { dir =>
+    val dir = Fixtures.memo(s, d, s"edgestate_$maxDocId") { dir =>
       val (_, edges) = confirmedDedupEdges(s, d, maxDocId)
       // audit-bounded state is a few hundred rows — one file, one task
       edges.coalesce(1).write.mode("overwrite").parquet(s"$dir/edges")
@@ -416,8 +415,7 @@ object PipelineQueries {
   private def storedCcState(s: org.apache.spark.sql.SparkSession,
       d: String, split: Long, maxDocId: Long)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val dir = AppState.ensure(s,
-      s"graft_ccstate_${AppState.sanitize(d)}_${split}_$maxDocId") { dir =>
+    val dir = Fixtures.memo(s, d, s"ccstate_${split}_$maxDocId") { dir =>
       val (docs, edges) = storedDedupEdges(s, d, maxDocId)
       val edges1 = edges.filter(col("id_a") < split && col("id_b") < split)
       val labels1 = TrainingData.connectedComponents(
@@ -1052,8 +1050,7 @@ object PipelineQueries {
       d: String): String = {
     import graft.operators.InvertedIndex
     import graft.sources.Snapshots
-    val dir = AppState.ensure(s,
-      "graft_invidx_" + d.replaceAll("[^A-Za-z0-9]", "_")) { dir =>
+    val dir = Fixtures.memo(s, d, "invidx") { dir =>
       val tbl = s"$dir/postings"
       val docs = documents(s, d)
       Seq(0, 1).foreach { half =>

@@ -37,34 +37,46 @@ object QueryDsl {
 /** Session-scoped FIXTURE MEMO shared by the catalog files — the
   * `SqlDml.enable` memo discipline applied to bench fixtures: an
   * entry's table construction (commits, mutations, maintenance — all
-  * deterministic in the dataset dir) runs ONCE per (JVM, dataset, tag);
-  * later invocations reuse the built table. Sound because each
-  * memoized build ends in the FINAL state its entry's query reads, and
-  * entries never touch each other's tags. Bench's min-of-3 then
+  * deterministic in the dataset dir) runs ONCE per (application,
+  * dataset, tag); later invocations reuse the built table. Sound because
+  * each memoized build ends in the FINAL state its entry's query reads,
+  * and entries never touch each other's tags. Bench's min-of-3 then
   * measures the query against a warm fixture instead of re-paying the
   * commit protocol per iteration; the correctness dump (one invocation
   * per JVM) is unaffected, and FixtureMemoSpec pins that a SECOND
   * invocation still returns hash-identical results.
+  *
+  * Every path lives under the application's scratch root
+  * ([[graft.Session.scratch]]), which is deleted when the session stops.
   */
 object Fixtures {
+  private def sanitize(s: String): String = s.replaceAll("[^A-Za-z0-9.]", "_")
+
   def tablePath(s: SparkSession, d: String, tag: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_snap_${tag}_" +
-      s"${AppState.sanitize(d)}_${s.sparkContext.applicationId}"
+    s"${graft.Session.scratch(s)}/${tag}_${sanitize(d)}"
 
   def freshTable(s: SparkSession, d: String, tag: String): String = {
     val path = tablePath(s, d, tag)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    graft.Session.deleteRecursively(java.nio.file.Paths.get(path))
     path
   }
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
+  private val built = scala.collection.mutable.Set.empty[String]
 
+  /** `tag`'s path after `build(path)` completed once in this application.
+    * Completion is recorded in memory under one JVM-wide reentrant lock:
+    * builds never race a half-visible store, a build may memo another
+    * tag (a nested memo), and a build that throws records nothing, so
+    * the next call empties the directory and builds again. The path
+    * carries the applicationId, so no other application sees it.
+    */
   def memo(s: SparkSession, d: String, tag: String)(
-      build: String => Unit): String =
-    built.computeIfAbsent(
-      s"${s.sparkContext.applicationId}|$d|$tag",
-      _ => { val tbl = freshTable(s, d, tag); build(tbl); tbl })
+      build: String => Unit): String = built.synchronized {
+    val tbl = tablePath(s, d, tag)
+    if (!built(tbl)) {
+      build(freshTable(s, d, tag))
+      built += tbl
+    }
+    tbl
+  }
 }

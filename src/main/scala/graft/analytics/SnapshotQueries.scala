@@ -714,8 +714,8 @@ object SnapshotQueries {
          ORDER BY version"""))
 
   /** X112: metadata aggregates through the OPTIMIZER
-    * ([[graft.plans.MetaAgg]]) — [[Snapshots.statsAgg]]'s zero-IO
-    * answers without the bespoke API: once the table path is enabled, a
+    * ([[graft.plans.MetaAgg]]) — a metadata aggregate's zero-IO
+    * answers without a bespoke API: once the table path is enabled, a
     * plain `df.agg(count/min/max)` over the indexed read collapses to a
     * LocalRelation computed from manifest row counts and footer-exact
     * envelopes (integral AND string) — zero Spark jobs, any API the
@@ -1070,10 +1070,10 @@ object SnapshotQueries {
   private def bucketedFactTables(s: SparkSession, d: String)
       : (String, String) = {
     // catalog names must stay dot-free (a backticked dotted name parses
-    // as db.table), hence the stricter sanitizer than AppState's
+    // as db.table), hence a stricter sanitizer than the memo's paths use
     val tag = d.replaceAll("[^A-Za-z0-9]", "_")
     val oName = s"graft_bkt_orders_$tag"; val lName = s"graft_bkt_lineitem_$tag"
-    AppState.ensure(s, s"graft_bktstate_$tag") { dir =>
+    Fixtures.memo(s, d, "bktstate") { dir =>
       val oTbl = s"$dir/orders"; val lTbl = s"$dir/lineitem"
       Snapshots.commitBucketed(orders(s, d).select(col("o_orderkey"),
           col("o_orderpriority")), oTbl, "o_orderkey", 16,
@@ -1082,8 +1082,8 @@ object SnapshotQueries {
           col("l_quantity"), col("l_extendedprice"), col("l_discount")),
         lTbl, "l_orderkey", 16, statsCols = Seq("l_orderkey"))
       // the session catalog outlives this build, so registration (also
-      // metadata-only) rides the same once-per-app completion marker —
-      // no per-invocation DROP/CREATE for a parallel reader to race
+      // metadata-only) rides the same once-per-app memo — no
+      // per-invocation DROP/CREATE for a parallel reader to race
       Snapshots.registerBucketed(s, oTbl, oName)
       Snapshots.registerBucketed(s, lTbl, lName)
     }
@@ -1132,8 +1132,7 @@ object SnapshotQueries {
     */
   private def mergedBucketTables(s: SparkSession, d: String)
       : (String, String) = {
-    val dir = AppState.ensure(s, "graft_bktmerge_" +
-      d.replaceAll("[^A-Za-z0-9]", "_")) { dir =>
+    val dir = Fixtures.memo(s, d, "bktmerge") { dir =>
       val oTbl = s"$dir/orders"; val lTbl = s"$dir/lineitem"
       Snapshots.commitBucketed(orders(s, d).select(col("o_orderkey"),
           col("o_orderpriority")), oTbl, "o_orderkey", 16,
@@ -1517,17 +1516,16 @@ object SnapshotQueries {
          SELECT 3, count(*), ${dsumSql("o_totalprice")}, 2 FROM orders
          ORDER BY version"""))
 
-  /** X104: metadata-only aggregates ([[Snapshots.statsAgg]]) — exact
+  /** X104: metadata-only aggregates ([[graft.plans.MetaAgg]]) — exact
     * COUNT/MIN/MAX answered from manifest row counts and footer-exact
-    * key envelopes: zero data IO, constant time at any table size (the
-    * dashboard "how big is this table" query a 100 TB warehouse must
-    * never scan for). The table is committed in two stats-carrying
-    * versions; the oracle recomputes from source truth, pinning the
-    * envelope fold exact.
+    * key envelopes: zero data IO, zero Spark jobs, constant time at any
+    * table size (the dashboard "how big is this table" query a 100 TB
+    * warehouse must never scan for). The table is committed in two
+    * stats-carrying versions; the oracle recomputes from source truth,
+    * pinning the envelope fold exact.
     */
   val statsAggQ = Q("q_stats_agg",
     (s, d) => {
-      import s.implicits._
       val tbl = Fixtures.memo(s, d, "stats") { tbl =>
         val o = src(s, d)
         Snapshots.commit(o.filter(col("o_orderkey") % 2 === 0), tbl,
@@ -1535,9 +1533,11 @@ object SnapshotQueries {
         Snapshots.commit(o.filter(col("o_orderkey") % 2 === 1), tbl,
           statsCols = Seq("o_orderkey"))
       }
-      val (n, env) = Snapshots.statsAgg(s, tbl, "o_orderkey")
-      val (lo, hi) = env.getOrElse(sys.error("empty table"))
-      Seq((n, lo, hi)).toDF("n_rows", "min_key", "max_key")
+      graft.plans.MetaAgg.enable(s, tbl)
+      Snapshots.readIndexed(s, tbl)._1
+        .agg(count(lit(1)).as("n_rows"),
+          min(col("o_orderkey")).as("min_key"),
+          max(col("o_orderkey")).as("max_key"))
     },
     Some("""SELECT count(*) AS n_rows,
          CAST(min(o_orderkey) AS BIGINT) AS min_key,
@@ -1651,13 +1651,12 @@ object SnapshotQueries {
            CAST(sum(CAST(q AS DECIMAL(27,4))) AS DOUBLE) AS total_qty
          FROM u"""))
 
-  /** X104: metadata-only STRING aggregates ([[Snapshots.statsAggStr]])
+  /** X104: metadata-only STRING aggregates ([[graft.plans.MetaAgg]])
     * — exact COUNT/MIN/MAX of a string column folded from the per-file
     * UTF-8 envelopes, zero data IO; the string twin of q_stats_agg.
     */
   val statsAggStrQ = Q("q_stats_agg_str",
     (s, d) => {
-      import s.implicits._
       val tbl = Fixtures.memo(s, d, "statss") { tbl =>
         val o = orders(s, d)
           .select(col("o_orderkey"), col("o_orderpriority"))
@@ -1666,9 +1665,11 @@ object SnapshotQueries {
         Snapshots.commit(o.filter(col("o_orderkey") % 2 === 1), tbl,
           strStatsCols = Seq("o_orderpriority"))
       }
-      val (n, env) = Snapshots.statsAggStr(s, tbl, "o_orderpriority")
-      val (lo, hi) = env.getOrElse(sys.error("empty table"))
-      Seq((n, lo, hi)).toDF("n_rows", "min_pri", "max_pri")
+      graft.plans.MetaAgg.enable(s, tbl)
+      Snapshots.readIndexed(s, tbl)._1
+        .agg(count(lit(1)).as("n_rows"),
+          min(col("o_orderpriority")).as("min_pri"),
+          max(col("o_orderpriority")).as("max_pri"))
     },
     Some("""SELECT count(*) AS n_rows,
          min(o_orderpriority) AS min_pri,

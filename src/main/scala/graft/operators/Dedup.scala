@@ -127,11 +127,20 @@ object Dedup {
     * side `b`, and the two sides of the self-join stop being identical
     * subtrees — Spark's exchange reuse misses, and the whole banding
     * aggregate (the 16-permutation MinHash) runs TWICE. With the stats
-    * split out, both pairing sides are the same `banded` plan over the
-    * same hash-partitioning(bucket) exchange (reused), and the stats
-    * aggregate itself rides that partitioning with no extra shuffle.
+    * split out, the stats aggregate and both pairing sides read ONE
+    * explicit hash-partitioning(bucket) exchange of `banded` (reused),
+    * so the signature is computed once whether the joins are planned as
+    * sort-merge (the exchange is their required partitioning) or as
+    * broadcasts of a small band set (which would otherwise sit on a
+    * broadcast exchange the stats' shuffle cannot reuse). Over a
+    * persisted input AQE reuses no exchange, so there each branch still
+    * aggregates on its own. The non-null
+    * `doc` filter comes first for the same reason: the pairing join's
+    * `a.doc < b.doc` infers it for sides a and b, and a stats branch
+    * without it would plan a second shingle shuffle.
     */
-  private def pairBandBuckets(banded: DataFrame, maxBucketSize: Int): DataFrame = {
+  private def pairBandBuckets(bands: DataFrame, maxBucketSize: Int): DataFrame = {
+    val banded = bands.filter(col("doc").isNotNull).repartition(col("bucket"))
     val stats = banded.groupBy(col("bucket"))
       .agg(count(lit(1)).as("_bsz"), min(col("doc")).as("_rep"))
     val left = banded.join(stats, "bucket")

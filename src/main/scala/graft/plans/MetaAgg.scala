@@ -16,9 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * relation (or a `format("graft")` read) collapses to a [[LocalRelation]]
   * computed from manifest row counts and footer-exact envelopes — the
   * query answers from KBs of metadata with ZERO Spark jobs, whatever API
-  * the user wrote it in. This is the rule form of
-  * [[graft.sources.Snapshots.statsAgg]]: same evidence, same refusal
-  * discipline, but the USER just writes `df.agg(...)` or SQL.
+  * the user wrote it in — the engine's one metadata-aggregate path: the
+  * USER just writes `df.agg(...)` or SQL.
   *
   * Soundness: the rewrite fires only when every aggregate in the list is
   * provable — `count(*)` always (manifest row counts are exact);
@@ -34,11 +33,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Registration-scoped like the MV and window rewrites: plans change
   * only for explicitly [[MetaAgg.enable]]-d table paths.
-  * String MIN/MAX exactness inherits [[graft.sources.Snapshots
-  * .statsAggStr]]'s writer contract: Spark's parquet writer records
-  * binary footer stats exactly or not at all, and stat-less files block
-  * the rewrite — a non-default truncating writer would have to be
-  * refused at ingest, exactly as that method documents.
+  *
+  * String MIN/MAX folds the per-file UTF-8 envelopes (`strStatsCols` at
+  * commit) under byte-wise UTF-8 order — the order Spark, DuckDB and
+  * parquet statistics all compare strings with, so the fold equals the
+  * full-scan aggregate exactly. That rests on the writer contract:
+  * Spark's parquet writer records binary footer stats exactly or not at
+  * all (dropped for size), and a stat-less file blocks the rewrite
+  * rather than being approximated — a non-default truncating writer
+  * would have to be refused at ingest.
   */
 object MetaAgg {
 

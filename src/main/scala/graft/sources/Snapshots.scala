@@ -1336,69 +1336,6 @@ object Snapshots {
       })
   }
 
-  /** Exact (count, min, max) of an integral column answered ENTIRELY
-    * from manifest metadata — zero data IO, zero Spark jobs, constant
-    * time at any table size: counts are exact footer row counts and the
-    * per-file [min,max] envelopes are exact parquet footer statistics,
-    * so their fold is the true aggregate (the SELECT COUNT/MIN/MAX
-    * query pattern a 100 TB table answers from metadata in every
-    * serious engine). Requires every non-empty file to carry stats for
-    * `col` (committed with `statsCols`) and refuses tombstoned versions
-    * (subtracted rows would make the fold an overcount) — both loudly.
-    */
-  def statsAgg(spark: SparkSession, table: String, col: String,
-      version: Option[Int] = None): (Long, Option[(Long, Long)]) = {
-    val v = version.getOrElse(latestVersion(spark, table))
-    val entries = manifest(spark, table, v)
-    require(!entries.exists(e => isMask(e.path)),
-      s"Snapshots.statsAgg: version $v of $table carries merge-on-read " +
-        "deletes — compactMor first (metadata counts cannot subtract)")
-    val withRows = entries.filter(_.rows > 0)
-    require(withRows.forall(_.stats.contains(col)),
-      s"Snapshots.statsAgg: version $v of $table has files without " +
-        s"'$col' stats — commit with statsCols (or compact) first")
-    val n = entries.map(_.rows).sum
-    val env =
-      if (withRows.isEmpty) None
-      else Some((withRows.map(_.stats(col)._1).min,
-        withRows.map(_.stats(col)._2).max))
-    (n, env)
-  }
-
-  /** [[statsAgg]] for STRING columns: exact (count, min, max) folded
-    * from the per-file UTF-8 string envelopes (`strStatsCols` at
-    * commit) under byte-wise UTF-8 order — the order Spark, DuckDB and
-    * parquet statistics all compare strings with, so the fold equals
-    * the full-scan aggregate exactly (footer stats are exact values or
-    * absent under Spark's writer defaults — a file whose stats were
-    * dropped for size is refused below, never approximated; a
-    * non-default truncating writer would have to be refused at ingest).
-    * Same refusal discipline as the
-    * integral path: tombstoned versions and stat-less non-empty files
-    * are refused loudly rather than answered approximately.
-    */
-  def statsAggStr(spark: SparkSession, table: String, col: String,
-      version: Option[Int] = None): (Long, Option[(String, String)]) = {
-    val v = version.getOrElse(latestVersion(spark, table))
-    val entries = manifest(spark, table, v)
-    require(!entries.exists(e => isMask(e.path)),
-      s"Snapshots.statsAggStr: version $v of $table carries merge-on-read " +
-        "deletes — compactMor first (metadata counts cannot subtract)")
-    val withRows = entries.filter(_.rows > 0)
-    require(withRows.forall(_.strStats.contains(col)),
-      s"Snapshots.statsAggStr: version $v of $table has files without " +
-        s"'$col' string stats — commit with strStatsCols first")
-    val n = entries.map(_.rows).sum
-    val env =
-      if (withRows.isEmpty) None
-      else Some((
-        withRows.map(_.strStats(col)._1).reduce((a, b) =>
-          if (ParquetMeta.u8Less(a, b)) a else b),
-        withRows.map(_.strStats(col)._2).reduce((a, b) =>
-          if (ParquetMeta.u8Less(a, b)) b else a)))
-    (n, env)
-  }
-
   /** Manifest property listing every column name ever DROPPED
     * (comma-joined, inherited): re-adding a dropped name would
     * RESURRECT the old files' values through name-based null-fill (the
@@ -3041,7 +2978,7 @@ object Snapshots {
     val visible = readMorEntries(spark, table, v, data, masks,
       withPosMeta = true)
     // a zero-match delete is a NO-OP, not a commit: an empty dv- file
-    // would knock the table off every metadata fast path (statsAgg,
+    // would knock the table off every metadata fast path (MetaAgg,
     // the flat index, partition listings) until a compactMor, for
     // nothing — return the unchanged head instead (idempotent cleanups
     // re-fire freely)

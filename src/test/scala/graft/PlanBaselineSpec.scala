@@ -35,11 +35,14 @@ class PlanBaselineSpec extends AnyFunSuite {
   }
 
   test("load/write roundtrip through a file; missing file loads empty") {
+    // no Spark here, so no session scratch root: the spec owns its dir
     val dir = java.nio.file.Files.createTempDirectory("graft_planbase")
-    val path = dir.resolve("sub/plans.json").toString
-    assert(PlanBaseline.load(path) === Map.empty)
-    val m = Map("q_x" -> "0f0f0f0f", "q_y" -> "12345678")
-    PlanBaseline.write(path, m)
-    assert(PlanBaseline.load(path) === m)
+    try {
+      val path = dir.resolve("sub/plans.json").toString
+      assert(PlanBaseline.load(path) === Map.empty)
+      val m = Map("q_x" -> "0f0f0f0f", "q_y" -> "12345678")
+      PlanBaseline.write(path, m)
+      assert(PlanBaseline.load(path) === m)
+    } finally Session.deleteRecursively(dir)
   }
 }

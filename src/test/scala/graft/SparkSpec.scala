@@ -15,6 +15,16 @@ trait SparkSpec extends AnyFunSuite {
 
   def sf001 = "/root/testdata/sf0.001"
 
+  /** A new, empty, uniquely named directory under the session's scratch
+    * root ([[Session.scratch]]), deleted with it when the session stops.
+    */
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(Session.scratch(spark)), prefix).toString
+
+  /** A table path (not yet created) inside a fresh [[tempDir]]. */
+  def freshTable(tag: String): String = tempDir(tag) + "/t"
+
   /** Physical-plan string for shape assertions. `execute = true` runs the
     * query first so AQE finalizes the plan (broadcast decisions, coalesced
     * shuffles); false returns the initial plan.

@@ -1,6 +1,10 @@
 package graft.analytics
 
-import graft.SparkSpec
+import java.nio.file.{Files, Paths}
+
+import graft.{Session, SparkSpec}
+
+import scala.jdk.CollectionConverters._
 
 /** The fixture memo ([[SnapshotQueries]]): a SECOND invocation of every
   * snapshot-tier catalog entry inside one JVM must return results
@@ -19,6 +23,10 @@ class FixtureMemoSpec extends SparkSpec {
     val extra = Seq(
       NorthStarQueries.annBucketed, NorthStarQueries.annPqUpsert,
       NorthStarQueries.annPqStored, NorthStarQueries.annPqRerank,
+      NorthStarQueries.annIvfPqRecall,
+      PipelineQueries.dedupComponentsStar, PipelineQueries.clusterReps,
+      PipelineQueries.clusterSplit, PipelineQueries.incrementalComponents,
+      PipelineQueries.contaminationBfs, PipelineQueries.keywordSearchStored,
       CoreQueries.partitionOverwrite, CoreQueries.compactRoundtrip)
     (SnapshotQueries.all ++ extra).foreach { q =>
       try {
@@ -56,5 +64,94 @@ class FixtureMemoSpec extends SparkSpec {
     assert(first != other, "datasets too similar to distinguish")
     assert(rows(d1) == first, "memo-hit read the other dataset's table")
     assert(rows(d2) == other)
+  }
+
+  private val d = "fixture-memo-spec"
+
+  test("a memo nested inside a memo's build builds each tag once") {
+    var (outer, inner) = (0, 0)
+    def innerPath(): String = Fixtures.memo(spark, d, "inner") { p =>
+      inner += 1
+      spark.range(3).write.parquet(p)
+    }
+    def outerPath(): String = Fixtures.memo(spark, d, "outer") { p =>
+      outer += 1
+      spark.read.parquet(innerPath()).write.parquet(p)
+    }
+    outerPath(); outerPath(); innerPath()
+    assert((outer, inner) === ((1, 1)))
+    assert(spark.read.parquet(outerPath()).count() === 3)
+  }
+
+  test("a build that throws records nothing: the next call rebuilds " +
+      "from an empty directory") {
+    val path = Fixtures.tablePath(spark, d, "crash")
+    intercept[IllegalStateException] {
+      Fixtures.memo(spark, d, "crash") { p =>
+        spark.range(3).write.parquet(s"$p/first")
+        throw new IllegalStateException("crashed between two writes")
+      }
+    }
+    assert(Files.exists(Paths.get(path, "first")), "no partial build to clear")
+    var leftOver = Seq("not built")
+    val again = Fixtures.memo(spark, d, "crash") { p =>
+      leftOver = Option(new java.io.File(p).list()).toSeq.flatten
+      spark.range(5).write.parquet(s"$p/second")
+    }
+    assert(again === path)
+    assert(leftOver.isEmpty, s"rebuild saw the crashed build's files: $leftOver")
+    assert(!Files.exists(Paths.get(path, "first")))
+    assert(spark.read.parquet(s"$path/second").count() === 5)
+  }
+
+  test("every fixture and spec scratch path lies under the application's " +
+      "scratch root") {
+    val root = Paths.get(Session.scratch(spark))
+    assert(root === Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_${spark.sparkContext.applicationId}"))
+    assert(Files.isDirectory(root))
+    val paths = Seq(
+      Fixtures.tablePath(spark, sf001, "under"),
+      Fixtures.freshTable(spark, sf001, "under"),
+      Fixtures.memo(spark, d, "under")(p => Files.createDirectories(Paths.get(p))),
+      tempDir("under"),
+      freshTable("under"))
+    paths.foreach(p => assert(Paths.get(p).startsWith(root), p))
+  }
+
+  test("the scratch root is deleted when the application stops, also " +
+      "through Spark's shutdown hook") {
+    // a child JVM with its own tmpdir runs one memo and exits without
+    // spark.stop(), like the suite's own shared session
+    val tmp = tempDir("release")
+    val log = Paths.get(tempDir("release_log"), "child.log").toFile
+    val jvmOpts = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filter(_.startsWith("--add-opens"))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx512m",
+      s"-Djava.io.tmpdir=$tmp", "-cp", System.getProperty("java.class.path")) ++
+      jvmOpts ++ Seq("graft.analytics.ScratchRootChild")
+    val proc = new ProcessBuilder(cmd: _*)
+      .redirectOutput(log).redirectErrorStream(true).start()
+    assert(proc.waitFor(120, java.util.concurrent.TimeUnit.SECONDS),
+      "child JVM did not exit")
+    val out = new String(Files.readAllBytes(log.toPath), "UTF-8")
+    assert(proc.exitValue() === 0, out.takeRight(2000))
+    val childRoot = "(?m)^root=(.*)$".r.findFirstMatchIn(out).map(_.group(1))
+      .getOrElse(fail(s"child printed no root:\n${out.takeRight(2000)}"))
+    assert(childRoot.startsWith(tmp))
+    assert(!Files.exists(Paths.get(childRoot)), "root outlived the application")
+    assert(!new java.io.File(tmp).list().exists(_.startsWith("graft_")))
+  }
+}
+
+/** The child JVM of FixtureMemoSpec's release case: one memoized build
+  * under a fresh session, then exit without stopping it.
+  */
+object ScratchRootChild {
+  def main(args: Array[String]): Unit = {
+    val spark = Session.local(1)
+    val p = Fixtures.memo(spark, "child", "t")(p => spark.range(3).write.parquet(p))
+    require(spark.read.parquet(p).count() == 3)
+    println(s"root=${Session.scratch(spark)}")
   }
 }

@@ -62,7 +62,7 @@ class RetailWarehouseSpec extends SparkSpec {
   }
 
   test("warehouse roundtrip: fact partitioned by year, dims re-readable as prior") {
-    val dir = Files.createTempDirectory("graft_wh").toString
+    val dir = tempDir("wh")
     val res = RetailWarehouse.run(staging, asOf)
     RetailWarehouse.writeWarehouse(res, dir)
     assert(new java.io.File(s"$dir/fact_sales/order_year=2024").exists)
@@ -103,7 +103,7 @@ class RetailWarehouseSpec extends SparkSpec {
     */
   private def priorAndBatch(): (String, Map[String, org.apache.spark.sql.DataFrame],
       org.apache.spark.sql.DataFrame) = {
-    val dir = Files.createTempDirectory("graft_wh_inc").toString
+    val dir = tempDir("wh_inc")
     RetailWarehouse.writeWarehouse(RetailWarehouse.run(staging, asOf), dir)
     val batch = Seq(
       ("O4", "2024-03-01", "C3", "Cy", "Consumer", "P1", "Widget", "Hardware", 5.0, 1.0),
@@ -152,7 +152,7 @@ class RetailWarehouseSpec extends SparkSpec {
     val failing = new FilterFileSystem(local) {
       override def rename(src: Path, dst: Path): Boolean = false
     }
-    val target = Files.createTempDirectory("graft_swap").toString + "/dim"
+    val target = tempDir("swap") + "/dim"
     val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
     df.write.parquet(target)
     val staged = new Path(target + "._staged")

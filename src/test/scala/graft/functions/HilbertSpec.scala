@@ -72,7 +72,7 @@ class HilbertSpec extends SparkSpec {
   }
 
   test("hilbert layout prunes a 2-D box at least as well as z-order") {
-    val dir = java.nio.file.Files.createTempDirectory("hilbert").toString
+    val dir = tempDir("hilbert")
     val n = 200000
     val df = spark.range(n.toLong).select(
       pmod(xxhash64($"id"), lit(1024)).cast("int").as("x"),

@@ -85,7 +85,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("3-dim z-order layout prunes ALL THREE dimensions' row groups") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder3").toString
+    val dir = tempDir("zorder3")
     val n = 200000
     // three uncorrelated uniform dimensions, like (date, customer, product)
     val df = spark.range(n.toLong).select(
@@ -124,7 +124,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("z-ordered layout prunes a box predicate's row groups vs a single-column sort") {
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = tempDir("zorder")
     // two uncorrelated uniform dimensions, like (partkey, suppkey)
     val n = 200000
     val df = spark.range(n.toLong).select(

@@ -29,7 +29,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("latin1 CSV roundtrip preserves accented text and explicit schema") {
-    val dir = Files.createTempDirectory("graft_latin1").toString
+    val dir = tempDir("latin1")
     val file = Paths.get(dir, "data.csv")
     Files.write(file, "name,qty\nCafé,3\n".getBytes(Charset.forName("latin1")))
     val schema = StructType(Seq(

@@ -47,7 +47,11 @@ class BucketingSpec extends SparkSpec {
         s"orders side shuffled:\n$plan")
       assert(!plan.contains("Exchange hashpartitioning(c_custkey"),
         s"customer side shuffled:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      // managed tables: dropping them deletes their warehouse directories
+      Seq("b_orders", "b_customer").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
   }
 
   test("runtime bloom filter prunes the big side of a selective shuffle join") {
@@ -119,7 +123,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("year-partitioned fact prunes partitions under a date filter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("part")
     Tables.orders(spark, sf001)
       .withColumn("order_year", year(col("o_orderdate")))
       .write.mode("overwrite").partitionBy("order_year").parquet(dir)

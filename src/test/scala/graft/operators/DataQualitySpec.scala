@@ -78,7 +78,7 @@ class DataQualitySpec extends SparkSpec {
     assert(gotN.head.getLong(3) === 3L)
     // rename-only projection over a scan: NOT persisted (no
     // InMemoryTableScan in any branch plan)
-    val dir = java.nio.file.Files.createTempDirectory("graft_dq_scan").toString
+    val dir = tempDir("dq_scan")
     p.write.mode("overwrite").parquet(dir)
     val renamed = spark.read.parquet(dir).withColumnRenamed("x", "xr")
     val prof = DataQuality.profile(renamed, Seq("xr"))

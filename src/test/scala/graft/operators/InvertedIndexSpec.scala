@@ -78,8 +78,7 @@ class InvertedIndexSpec extends SparkSpec {
   test("stored index: IN-pruned scan skips files, append ≡ full rebuild") {
     import graft.sources.Snapshots
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
-    val tbl = java.nio.file.Files.createTempDirectory("graft_invidx")
-      .toString + "/postings"
+    val tbl = tempDir("invidx") + "/postings"
     // two append commits of disjoint doc halves = index maintenance
     Seq(0, 1).foreach { half =>
       val batch = InvertedIndex.postings(
@@ -112,8 +111,7 @@ class InvertedIndexSpec extends SparkSpec {
       "exact") {
     import graft.sources.IndexedCount
     import graft.sources.Snapshots
-    val tbl = java.nio.file.Files.createTempDirectory("graft_invidx_ne")
-      .toString + "/t"
+    val tbl = freshTable("invidx_ne")
     val post = InvertedIndex.postings(tiny)
     Snapshots.commit(post.repartition(3), tbl) // no stats, no blooms
     val c = IndexedCount.of(spark, tbl, col("token").isin("join"))

@@ -67,7 +67,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("probeBucketed over a partitioned layout equals lshTopK and prunes dynamically") {
     val e = graft.Tables.embeddings(spark, sf001)
-    val out = java.nio.file.Files.createTempDirectory("graft_annidx").toString + "/idx"
+    val out = tempDir("annidx") + "/idx"
     Similarity.writeBucketedCorpus(e, out)
     // one partition directory per occupied bucket, string-typed values
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName)
@@ -396,7 +396,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("stored PQ index round-trips bit-identically and prunes by probed bucket") {
     val e = graft.Tables.embeddings(spark, sf001)
-    val out = java.nio.file.Files.createTempDirectory("graft_pqidx").toString + "/idx"
+    val out = tempDir("pqidx") + "/idx"
     Similarity.writePqIndex(e, out, iters = 1)
     // partition directory per coarse bucket, string-typed values
     val dirs = new java.io.File(s"$out/codes").listFiles()
@@ -442,7 +442,7 @@ class SimilaritySpec extends SparkSpec {
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     // build on A, append B in one batch
-    val one = java.nio.file.Files.createTempDirectory("graft_pqup1").toString + "/i"
+    val one = tempDir("pqup1") + "/i"
     Similarity.writePqIndex(a, one, nCentroids = 4, m = 4, ksub = 8,
       iters = 1, dim = 8)
     Similarity.appendToPqIndex(spark, one, b)
@@ -454,7 +454,7 @@ class SimilaritySpec extends SparkSpec {
       broadcastQueries = true, train = Some(a))
     assert(key(probeOne) === key(ref))
     // append B as two batches: same index
-    val two = java.nio.file.Files.createTempDirectory("graft_pqup2").toString + "/i"
+    val two = tempDir("pqup2") + "/i"
     Similarity.writePqIndex(a, two, nCentroids = 4, m = 4, ksub = 8,
       iters = 1, dim = 8)
     Similarity.appendToPqIndex(spark, two, b.filter(col("vec_id") < 24))

@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
   */
 class DimFilePruneSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_dfpr_$tag").toString + "/t"
-
   private def li = spark.read.parquet(s"$sf001/lineitem.parquet")
     .select(col("l_suppkey"), col("l_extendedprice"))
 

@@ -9,7 +9,7 @@ class MaterializedViewsSpec extends SparkSpec {
   private val factPath = s"$sf001/orders.parquet"
 
   private def freshMv(): String =
-    java.nio.file.Files.createTempDirectory("graft_mv").toString + "/mv"
+    tempDir("mv") + "/mv"
 
   private def registerOrdersMv(): String = {
     val mvPath = freshMv()

@@ -147,8 +147,7 @@ class MergePropertySpec extends SparkSpec {
   private def runSql(c: Case): Map[Long, (Long, String)] = {
     import spark.implicits._
     caseNo += 1
-    val tbl = java.nio.file.Files
-      .createTempDirectory(s"graft_pmrg_$caseNo").toString + "/t"
+    val tbl = freshTable(s"pmrg_$caseNo")
     val tdf =
       if (c.target.isEmpty)
         Seq((0L, 0L, "")).toDF("k", "v", "tag").limit(0)
@@ -186,8 +185,7 @@ class MergePropertySpec extends SparkSpec {
       "bigint target is accepted; a bigint source against an int TARGET " +
       "refuses (out-of-range keys would wrap under the insert cast)") {
     import spark.implicits._
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_pmrg_narrow").toString + "/t"
+    val tbl = freshTable("pmrg_narrow")
     Snapshots.commit(Seq((1, 10L)).toDF("k", "v"), tbl) // k is INT
     dml.sql("DROP TABLE IF EXISTS pmrg_narrow")
     dml.sql(s"CREATE TABLE pmrg_narrow USING graft OPTIONS (path '$tbl')")
@@ -204,8 +202,7 @@ class MergePropertySpec extends SparkSpec {
       "bigint-keyed target updates matches and inserts misses correctly " +
       "(stripWiden + lossless insert-cast path)") {
     import spark.implicits._
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_pmrg_widen_ok").toString + "/t"
+    val tbl = freshTable("pmrg_widen_ok")
     Snapshots.commit(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), tbl) // BIGINT k
     dml.sql("DROP TABLE IF EXISTS pmrg_widen_ok")
     dml.sql(s"CREATE TABLE pmrg_widen_ok USING graft OPTIONS (path '$tbl')")

@@ -12,9 +12,6 @@ import org.apache.spark.sql.functions._
   */
 class MetaAggSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_metaagg_$tag").toString + "/t"
-
   private def build(tag: String): String = {
     import spark.implicits._
     val tbl = freshTable(tag)
@@ -86,5 +83,18 @@ class MetaAggSpec extends SparkSpec {
     assert(q.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
     MetaAgg.clear()
     assert(!q.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+  }
+
+  test("the X104 catalog entries answer from metadata: a LocalRelation " +
+      "plan and zero jobs") {
+    import graft.analytics.SnapshotQueries
+    Seq(SnapshotQueries.statsAggQ, SnapshotQueries.statsAggStrQ).foreach { q =>
+      val df = q.run(spark, sf001) // builds the memoized table
+      assert(df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        s"${q.name}:\n${df.queryExecution.optimizedPlan}")
+      val (rows, jobs) = jobTags(df.collect())
+      assert(jobs.isEmpty, s"${q.name} started ${jobs.size} jobs")
+      assert(rows.length === 1 && rows(0).getLong(0) > 0)
+    }
   }
 }

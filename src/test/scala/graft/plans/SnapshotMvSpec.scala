@@ -9,9 +9,6 @@ import org.apache.spark.sql.types.DecimalType
 
 class SnapshotMvSpec extends SparkSpec {
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_smv_$tag").toString
-
   private def orders = spark.read.parquet(s"$sf001/orders.parquet")
     .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"),
       col("o_totalprice"))
@@ -32,9 +29,9 @@ class SnapshotMvSpec extends SparkSpec {
       (r.getString(0), r.getLong(1), r.getDecimal(2).toPlainString)).toSet
 
   test("full build at v1 rewrites the versioned-fact aggregate exactly") {
-    val tbl = freshDir("full") + "/t"
+    val tbl = freshTable("full")
     Snapshots.commit(orders.filter(col("o_orderkey") <= 800), tbl)
-    val root = freshDir("fullmv")
+    val root = tempDir("fullmv")
     try {
       SnapshotMv.refresh(spark, mvDef(tbl, root))
       val expect = canon(
@@ -52,9 +49,9 @@ class SnapshotMvSpec extends SparkSpec {
   }
 
   test("append then refresh folds ONLY the delta (old files can be cold)") {
-    val tbl = freshDir("inc") + "/t"
+    val tbl = freshTable("inc")
     Snapshots.commit(orders.filter(col("o_orderkey") <= 800), tbl)
-    val root = freshDir("incmv")
+    val root = tempDir("incmv")
     try {
       SnapshotMv.refresh(spark, mvDef(tbl, root))
       Snapshots.commit(orders.filter(col("o_orderkey") > 800), tbl)
@@ -91,10 +88,10 @@ class SnapshotMvSpec extends SparkSpec {
   }
 
   test("time travel to an earlier version is never answered by the MV") {
-    val tbl = freshDir("tt") + "/t"
+    val tbl = freshTable("tt")
     Snapshots.commit(orders.filter(col("o_orderkey") <= 800), tbl)
     Snapshots.commit(orders.filter(col("o_orderkey") > 800), tbl)
-    val root = freshDir("ttmv")
+    val root = tempDir("ttmv")
     try {
       SnapshotMv.refresh(spark, mvDef(tbl, root))
       val v1 = Snapshots.read(spark, tbl, Some(1))
@@ -107,9 +104,9 @@ class SnapshotMvSpec extends SparkSpec {
   }
 
   test("overwrite commit falls back to a full rebuild, still exact") {
-    val tbl = freshDir("ow") + "/t"
+    val tbl = freshTable("ow")
     Snapshots.commit(orders.filter(col("o_orderkey") <= 800), tbl)
-    val root = freshDir("owmv")
+    val root = tempDir("owmv")
     try {
       SnapshotMv.refresh(spark, mvDef(tbl, root))
       Snapshots.commit(orders.filter(col("o_orderkey") > 1200), tbl,
@@ -126,9 +123,9 @@ class SnapshotMvSpec extends SparkSpec {
   }
 
   test("MOR delete + upsert fold through the change feed, exact") {
-    val tbl = freshDir("mor") + "/t"
+    val tbl = freshTable("mor")
     Snapshots.commit(orders, tbl, statsCols = Seq("o_orderkey"))
-    val root = freshDir("mormv")
+    val root = tempDir("mormv")
     try {
       SnapshotMv.refresh(spark, mvDef(tbl, root))
       Snapshots.deleteWhere(spark, tbl,
@@ -155,14 +152,14 @@ class SnapshotMvSpec extends SparkSpec {
   }
 
   test("a group whose rows are all deleted vanishes from the rollup") {
-    val tbl = freshDir("gone") + "/t"
+    val tbl = freshTable("gone")
     // two groups, disjoint key ranges so the delete empties exactly one
     val lo = orders.filter(col("o_orderkey") < 200)
       .withColumn("o_orderstatus", lit("G1"))
     val hi = orders.filter(col("o_orderkey") >= 200 &&
       col("o_orderkey") < 400).withColumn("o_orderstatus", lit("G2"))
     Snapshots.commit(lo.unionByName(hi), tbl, statsCols = Seq("o_orderkey"))
-    val root = freshDir("gonemv")
+    val root = tempDir("gonemv")
     try {
       SnapshotMv.refresh(spark, mvDef(tbl, root))
       Snapshots.deleteWhere(spark, tbl,
@@ -177,9 +174,9 @@ class SnapshotMvSpec extends SparkSpec {
   }
 
   test("refresh at an unchanged version is a no-op that re-registers") {
-    val tbl = freshDir("noop") + "/t"
+    val tbl = freshTable("noop")
     Snapshots.commit(orders.limit(500), tbl)
-    val root = freshDir("noopmv")
+    val root = tempDir("noopmv")
     try {
       assert(SnapshotMv.refresh(spark, mvDef(tbl, root)) === 1)
       MaterializedViews.clear()

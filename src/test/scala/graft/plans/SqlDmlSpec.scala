@@ -12,9 +12,6 @@ class SqlDmlSpec extends SparkSpec {
 
   private lazy val dml: SparkSession = SqlDml.enable(spark)
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_dml_$tag").toString + "/t"
-
   private def register(name: String, tbl: String): Unit = {
     dml.sql(s"DROP TABLE IF EXISTS $name")
     dml.sql(s"CREATE TABLE $name USING graft OPTIONS (path '$tbl')")

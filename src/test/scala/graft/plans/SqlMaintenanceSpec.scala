@@ -12,9 +12,6 @@ class SqlMaintenanceSpec extends SparkSpec {
 
   private lazy val dml: SparkSession = SqlDml.enable(spark)
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_mnt_$tag").toString + "/t"
-
   private def seed3(tbl: String): Unit = {
     import spark.implicits._
     // three commits → three files, each with stats

@@ -70,7 +70,7 @@ class WindowRewriteSpec extends SparkSpec {
   }
 
   test("null join keys are dropped exactly like the inner join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wr").toString
+    val dir = tempDir("wr")
     spark.range(0, 20)
       .select(when(col("id") % 5 === 0, lit(null)).otherwise(col("id") % 3)
           .cast("long").as("k"),

@@ -9,9 +9,6 @@ import org.apache.spark.sql.functions._
   */
 class BranchSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_branch_$tag").toString + "/t"
-
   private def fs(table: String) =
     new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
 

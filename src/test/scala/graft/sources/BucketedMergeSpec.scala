@@ -15,9 +15,6 @@ import org.apache.spark.sql.functions._
   */
 class BucketedMergeSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_bm_$tag").toString + "/t"
-
   private def orders = spark.read.parquet(s"$sf001/orders.parquet")
     .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
 

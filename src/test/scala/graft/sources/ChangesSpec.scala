@@ -8,9 +8,6 @@ import org.apache.spark.sql.functions._
   */
 class ChangesSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_cdf_$tag").toString + "/t"
-
   private def orders = spark.read.parquet(s"$sf001/orders.parquet")
     .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
 

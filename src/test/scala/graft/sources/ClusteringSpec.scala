@@ -8,9 +8,6 @@ import org.apache.spark.sql.functions._
   */
 class ClusteringSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_cl_$tag").toString + "/t"
-
   private def li = spark.read.parquet(s"$sf001/lineitem.parquet")
     .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
       col("l_quantity"))

@@ -9,9 +9,6 @@ import org.apache.spark.sql.functions._
   */
 class ConstraintsSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_chk_$tag").toString + "/t"
-
   private def orders = spark.read.parquet(s"$sf001/orders.parquet")
     .select(col("o_orderkey"), col("o_totalprice"))
 
@@ -81,7 +78,7 @@ class ConstraintsSpec extends SparkSpec {
       Snapshots.upsertMor(spark, tbl,
         orders.limit(3).withColumn("o_totalprice", lit(-2.0)), "o_orderkey")
     }
-    val d = java.nio.file.Files.createTempDirectory("graft_chk_txn").toString
+    val d = tempDir("chk_txn")
     intercept[IllegalArgumentException] {
       Snapshots.commitTxn(spark, Seq(Snapshots.TxnWrite(
         orders.limit(3).withColumn("o_totalprice", lit(-2.0)), tbl)),

@@ -11,9 +11,6 @@ import org.apache.spark.sql.types.{LongType, StringType}
   */
 class DefaultsSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_def_$tag").toString + "/t"
-
   test("pre-evolution files read the default, post-evolution NULLs " +
       "stay NULL, time travel keeps the narrow shape, compaction " +
       "materializes") {

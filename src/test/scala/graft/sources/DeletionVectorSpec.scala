@@ -10,11 +10,18 @@ import org.apache.spark.sql.functions._
   */
 class DeletionVectorSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_dv_$tag").toString + "/t"
-
   private def orders = spark.read.parquet(s"$sf001/orders.parquet")
     .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
+
+  /** The table's row count through the metadata-aggregate rule
+    * ([[graft.plans.MetaAgg]]), and whether it answered from metadata.
+    */
+  private def metaCount(tbl: String): (Long, Boolean) = {
+    graft.plans.MetaAgg.enable(spark, tbl)
+    val q = Snapshots.readIndexed(spark, tbl)._1.agg(count(lit(1)))
+    (q.head().getLong(0), q.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+  }
 
   private def rows(df: DataFrame): Set[(Long, String, Double)] =
     df.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
@@ -137,9 +144,7 @@ class DeletionVectorSpec extends SparkSpec {
     val tbl = freshTable("mat")
     Snapshots.commit(orders, tbl, statsCols = Seq("o_orderkey"))
     Snapshots.deleteVector(spark, tbl, col("o_totalprice") > 150000.0)
-    val e1 = intercept[IllegalArgumentException] {
-      Snapshots.statsAgg(spark, tbl, "o_orderkey")
-    }
+    val e1 = intercept[IllegalArgumentException](metaCount(tbl))
     assert(e1.getMessage.contains("merge-on-read"))
     val e2 = intercept[IllegalArgumentException] {
       Snapshots.readIndexed(spark, tbl)
@@ -153,8 +158,7 @@ class DeletionVectorSpec extends SparkSpec {
     val v = Snapshots.compactMor(spark, tbl)
     assert(rows(Snapshots.read(spark, tbl, Some(v))) === beforeRows)
     // post-compaction, the metadata count answers again and exactly
-    assert(Snapshots.statsAgg(spark, tbl, "o_orderkey")._1 ===
-      beforeRows.size)
+    assert(metaCount(tbl) === ((beforeRows.size.toLong, true)))
   }
 
   test("replication and branch merge refuse vector commits loudly " +
@@ -182,7 +186,7 @@ class DeletionVectorSpec extends SparkSpec {
     assert(Snapshots.updateWhere(spark, tbl, col("n") > 1000L,
       Seq("n" -> (col("n") + 1))) === 1)
     // still mask-free: the metadata aggregate answers
-    assert(Snapshots.statsAgg(spark, tbl, "k")._1 === 2L)
+    assert(metaCount(tbl) === ((2L, true)))
     // long / 2 is a DOUBLE in Spark — the rewritten rows must cast back
     // to the recorded long schema or every later read would fail
     Snapshots.updateWhere(spark, tbl, col("k") === 1L,

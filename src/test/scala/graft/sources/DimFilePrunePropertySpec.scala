@@ -39,8 +39,7 @@ class DimFilePrunePropertySpec extends SparkSpec {
     */
   private lazy val factTbl: String = {
     import spark.implicits._
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_dpsprop_fact").toString + "/t"
+    val tbl = freshTable("dpsprop_fact")
     val df = (0L until 64L).map(i => (i, i * 10))
       .toDF("k", "v")
       .repartitionByRange(8, col("k")).sortWithinPartitions(col("k"))
@@ -54,8 +53,7 @@ class DimFilePrunePropertySpec extends SparkSpec {
     */
   private lazy val widenTbl: String = {
     import spark.implicits._
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_dpsprop_widen").toString + "/t"
+    val tbl = freshTable("dpsprop_widen")
     val df = (0 until 32).map(i => (i, i * 10L)).toDF("k", "v")
       .repartitionByRange(4, col("k")).sortWithinPartitions(col("k"))
     Snapshots.commit(df, tbl, statsCols = Seq("k"), bloomCols = Seq("k"))
@@ -70,8 +68,7 @@ class DimFilePrunePropertySpec extends SparkSpec {
   /** s string with UTF-8 envelopes only — the string evidence tier. */
   private lazy val strTbl: String = {
     import spark.implicits._
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_dpsprop_str").toString + "/t"
+    val tbl = freshTable("dpsprop_str")
     val df = (0 until 64).map(i => (f"s$i%03d", i.toLong)).toDF("s", "v")
       .repartitionByRange(8, col("s")).sortWithinPartitions(col("s"))
     Snapshots.commit(df, tbl, strStatsCols = Seq("s"))

@@ -9,9 +9,6 @@ import org.apache.spark.sql.functions._
   */
 class ForeignKeySpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_fk_$tag").toString + "/t"
-
   private def buildPair(tag: String): (String, String) = {
     import spark.implicits._
     val parent = freshTable(s"${tag}_p")

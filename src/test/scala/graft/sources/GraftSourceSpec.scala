@@ -12,9 +12,6 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 class GraftSourceSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_fmt_$tag").toString + "/t"
-
   test("write/read roundtrip through format(\"graft\"): append, " +
       "overwrite, error-if-exists, ignore") {
     import spark.implicits._
@@ -120,8 +117,7 @@ class GraftSourceSpec extends SparkSpec {
       "as the latest state per key, across a checkpointed restart") {
     import spark.implicits._
     val dst = freshTable("upd")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_updsink_ckpt").toString
+    val ckpt = tempDir("updsink_ckpt")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, Long)]
     def start() = in.toDF().toDF("k", "n")
@@ -192,7 +188,7 @@ class GraftSourceSpec extends SparkSpec {
     import spark.implicits._
     val src = freshTable("pipesrc")
     val dst = freshTable("pipedst")
-    val cp = java.nio.file.Files.createTempDirectory("graft_pipe_cp").toString
+    val cp = tempDir("pipe_cp")
     Snapshots.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), src)
     def start() = spark.readStream.format("graft").load(src)
       .writeStream.format("graft").option("path", dst)
@@ -218,7 +214,7 @@ class GraftSourceSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext =
       spark.sqlContext
     val tbl = freshTable("stream")
-    val cp = java.nio.file.Files.createTempDirectory("graft_fmt_cp").toString
+    val cp = tempDir("fmt_cp")
     val in = MemoryStream[(Long, String)]
     val q = in.toDF().toDF("k", "s").writeStream.format("graft")
       .option("path", tbl).option("checkpointLocation", cp)
@@ -285,7 +281,7 @@ class GraftSourceSpec extends SparkSpec {
     import spark.implicits._
     val src = freshTable("cdcrst")
     val dst = freshTable("cdcdst")
-    val cp = java.nio.file.Files.createTempDirectory("graft_cdc_cp").toString
+    val cp = tempDir("cdc_cp")
     Snapshots.commit(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s"),
       src, statsCols = Seq("k"))
     def start() = spark.readStream.format("graft")

@@ -6,11 +6,8 @@ import org.apache.spark.sql.functions._
 class MaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_maint_$tag").toString + "/t"
-
   test("compact collapses a fragmented layout without losing a row") {
-    val path = tmp("compact")
+    val path = freshTable("compact")
     val df = spark.range(10000L).select($"id", ($"id" % 7).as("g"))
     df.repartition(50).write.parquet(path)
     val (before, bytes) = Maintenance.layoutStats(spark, path)
@@ -24,7 +21,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("compact file count follows the byte target") {
-    val path = tmp("target")
+    val path = freshTable("target")
     spark.range(20000L).select($"id", concat(lit("p" * 50), $"id").as("pad"))
       .repartition(40).write.parquet(path)
     val (_, bytes) = Maintenance.layoutStats(spark, path)
@@ -35,7 +32,7 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("overwritePartitions rewrites only the touched partitions") {
-    val path = tmp("dpo")
+    val path = freshTable("dpo")
     val v1 = Seq((1L, "a", "2024-01-01"), (2L, "b", "2024-01-02"))
       .toDF("k", "v", "dt")
     Maintenance.overwritePartitions(v1, path, Seq("dt"))

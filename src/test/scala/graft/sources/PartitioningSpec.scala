@@ -10,9 +10,6 @@ import org.apache.spark.sql.functions._
   */
 class PartitioningSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_pt_$tag").toString + "/t"
-
   // the driver's testdata ships o_orderdate as TIMESTAMP in some
   // generations — normalize to DATE so literal comparisons and Row
   // accessors are stable
@@ -316,8 +313,7 @@ class PartitioningSpec extends SparkSpec {
     val tbl = freshTable("stream")
     Snapshots.commit(orders.limit(0), tbl)
     Partitioning.setSpec(spark, tbl, Seq(Partitioning.Year("o_orderdate")))
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_pt_ckpt").toString
+    val ckpt = tempDir("pt_ckpt")
     val in = MemoryStream[(Long, Double, String)]
     val q = in.toDF().toDF("o_orderkey", "o_totalprice", "d")
       .withColumn("o_orderdate", col("d").cast("date")).drop("d")

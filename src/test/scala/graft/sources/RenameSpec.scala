@@ -9,9 +9,6 @@ import org.apache.spark.sql.functions._
   */
 class RenameSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_ren_$tag").toString + "/t"
-
   private def orders = spark.read.parquet(s"$sf001/orders.parquet")
     .select(col("o_orderkey"), col("o_totalprice"))
 

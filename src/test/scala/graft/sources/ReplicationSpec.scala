@@ -10,9 +10,6 @@ import org.apache.spark.sql.functions._
   */
 class ReplicationSpec extends SparkSpec {
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_repl_$tag").toString
-
   private def orders = spark.read.parquet(s"$sf001/orders.parquet")
     .select(col("o_orderkey"), col("o_totalprice"))
 
@@ -38,7 +35,7 @@ class ReplicationSpec extends SparkSpec {
   }
 
   test("sync mirrors append / delete / upsert history exactly once") {
-    val d = freshDir("mirror"); val src = s"$d/src"; val dst = s"$d/dst"
+    val d = tempDir("mirror"); val src = s"$d/src"; val dst = s"$d/dst"
     buildHistory(src)
     assert(Replication.sync(spark, src, dst, "o_orderkey") === Seq(1, 2, 3, 4))
     assertMirror(src, dst)
@@ -53,7 +50,7 @@ class ReplicationSpec extends SparkSpec {
   }
 
   test("a crash mid-sync resumes at the first unapplied version") {
-    val d = freshDir("crash"); val src = s"$d/src"; val dst = s"$d/dst"
+    val d = tempDir("crash"); val src = s"$d/src"; val dst = s"$d/dst"
     buildHistory(src)
     val boom = intercept[RuntimeException] {
       Replication.sync(spark, src, dst, "o_orderkey",
@@ -67,7 +64,7 @@ class ReplicationSpec extends SparkSpec {
   }
 
   test("sync replays schema evolution: rename and drop flow structurally") {
-    val d = freshDir("evolve"); val src = s"$d/src"; val dst = s"$d/dst"
+    val d = tempDir("evolve"); val src = s"$d/src"; val dst = s"$d/dst"
     Snapshots.commit(orders.filter(col("o_orderkey") < 300), src,
       statsCols = Seq("o_orderkey"))
     Snapshots.renameColumn(spark, src, "o_totalprice", "price")
@@ -101,7 +98,7 @@ class ReplicationSpec extends SparkSpec {
     // as one upsert version, and sync runs after each — exactly-once on
     // BOTH sides (batch marker + sync marker), so a skipped/crashed
     // sync simply catches up on the next tick
-    val d = freshDir("stream"); val src = s"$d/src"; val dst = s"$d/dst"
+    val d = tempDir("stream"); val src = s"$d/src"; val dst = s"$d/dst"
     def batch(lo: Int, hi: Int, price: Double) =
       orders.filter(col("o_orderkey").between(lo, hi))
         .withColumn("o_totalprice", lit(price))
@@ -135,7 +132,7 @@ class ReplicationSpec extends SparkSpec {
   }
 
   test("source compaction is skipped; the mirror stays exact") {
-    val d = freshDir("compact"); val src = s"$d/src"; val dst = s"$d/dst"
+    val d = tempDir("compact"); val src = s"$d/src"; val dst = s"$d/dst"
     Snapshots.commit(orders.filter(col("o_orderkey") < 500), src,
       statsCols = Seq("o_orderkey"))
     Replication.sync(spark, src, dst, "o_orderkey")

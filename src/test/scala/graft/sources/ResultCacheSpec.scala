@@ -7,9 +7,6 @@ import org.apache.spark.sql.functions._
 
 class ResultCacheSpec extends SparkSpec {
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_rc_$tag").toString
-
   private def orders = spark.read.parquet(s"$sf001/orders.parquet")
     .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
 
@@ -17,9 +14,9 @@ class ResultCacheSpec extends SparkSpec {
     df.collect().map(_.toSeq).toSet
 
   test("second identical query is served from the cache, bit-equal") {
-    val tbl = freshDir("hit") + "/t"
+    val tbl = freshTable("hit")
     Snapshots.commit(orders, tbl)
-    val cache = freshDir("hitc")
+    val cache = tempDir("hitc")
     def q = Snapshots.read(spark, tbl).groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n"))
     assert(!ResultCache.isCached(q, cache, Seq(tbl)))
@@ -38,9 +35,9 @@ class ResultCacheSpec extends SparkSpec {
   }
 
   test("a new dependency version changes the key and recomputes") {
-    val tbl = freshDir("inv") + "/t"
+    val tbl = freshTable("inv")
     Snapshots.commit(orders.filter(col("o_orderkey") <= 800), tbl)
-    val cache = freshDir("invc")
+    val cache = tempDir("invc")
     def q = Snapshots.read(spark, tbl).agg(count(lit(1)).as("n"))
     val v1 = ResultCache.cached(q, cache, Seq(tbl)).head().getLong(0)
     Snapshots.commit(orders.filter(col("o_orderkey") > 800), tbl)
@@ -53,11 +50,11 @@ class ResultCacheSpec extends SparkSpec {
   }
 
   test("different queries and different tables never share an entry") {
-    val tblA = freshDir("a") + "/t"
-    val tblB = freshDir("b") + "/t"
+    val tblA = freshTable("a")
+    val tblB = freshTable("b")
     Snapshots.commit(orders.filter(col("o_orderkey") <= 700), tblA)
     Snapshots.commit(orders.filter(col("o_orderkey") > 700), tblB)
-    val cache = freshDir("abc")
+    val cache = tempDir("abc")
     def qa = Snapshots.read(spark, tblA).agg(count(lit(1)).as("n"))
     def qb = Snapshots.read(spark, tblB).agg(count(lit(1)).as("n"))
     val na = ResultCache.cached(qa, cache, Seq(tblA)).head().getLong(0)
@@ -67,7 +64,7 @@ class ResultCacheSpec extends SparkSpec {
   }
 
   test("plain-directory dependencies sign by file listing") {
-    val dir = freshDir("plain") + "/d"
+    val dir = tempDir("plain") + "/d"
     orders.limit(100).write.parquet(dir)
     val s1 = ResultCache.depSignature(spark, dir)
     assert(s1 === ResultCache.depSignature(spark, dir))
@@ -77,9 +74,9 @@ class ResultCacheSpec extends SparkSpec {
   }
 
   test("prune reclaims old entries; fresh ones survive") {
-    val tbl = freshDir("pr") + "/t"
+    val tbl = freshTable("pr")
     Snapshots.commit(orders.limit(10), tbl)
-    val cache = freshDir("prc")
+    val cache = tempDir("prc")
     def q = Snapshots.read(spark, tbl).agg(count(lit(1)).as("n"))
     ResultCache.cached(q, cache, Seq(tbl))
     assert(ResultCache.prune(spark, cache, olderThanMs = 3600000).isEmpty)

@@ -10,9 +10,6 @@ import org.apache.spark.sql.functions._
   */
 class SegmentIndexSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_segix_$tag").toString + "/t"
-
   private def fs(table: String) =
     new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
 

@@ -31,8 +31,7 @@ class SnapshotFileIndexPropertySpec extends SparkSpec {
     */
   private lazy val plainTbl: String = {
     import spark.implicits._
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_sfiprop_plain").toString + "/t"
+    val tbl = freshTable("sfiprop_plain")
     val df = (0L until 64L).map(i => (i, (i % 7) * 100, f"s${i % 16}%02d"))
       .toDF("k", "v", "s")
       .repartitionByRange(8, col("k")).sortWithinPartitions(col("k"))
@@ -48,8 +47,7 @@ class SnapshotFileIndexPropertySpec extends SparkSpec {
     */
   private lazy val evolvedTbl: String = {
     import spark.implicits._
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_sfiprop_ev").toString + "/t"
+    val tbl = freshTable("sfiprop_ev")
     val df = (0L until 16L).map(i => (i, (i * 10).toInt, f"s${i}%02d"))
       .toDF("k", "q", "s")
       .repartitionByRange(4, col("k")).sortWithinPartitions(col("k"))

@@ -10,9 +10,6 @@ import org.apache.spark.sql.functions._
   */
 class SnapshotFileIndexSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_sfi_$tag").toString + "/t"
-
   /** 16 single-key files: k 0..15, v = 100k..100k+1, s = "s%02d". */
   private def buildKeyed(tbl: String): Unit = {
     import spark.implicits._

@@ -1,15 +1,13 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.plans.DimFilePrune
+import graft.plans.{DimFilePrune, MetaAgg}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 class SnapshotsSpec extends SparkSpec {
-
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_snap_$tag").toString + "/t"
 
   private def orders = spark.read.parquet(s"$sf001/orders.parquet")
     .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
@@ -738,6 +736,23 @@ class SnapshotsSpec extends SparkSpec {
       "pre-delete instants still read whole")
   }
 
+  /** count/min/max of `c` over the latest version through the metadata
+    * aggregate rule ([[MetaAgg]]): the row, whether the optimizer
+    * answered from metadata (a LocalRelation), and the jobs it started.
+    */
+  private def metaAgg(tbl: String, c: String): (Row, Boolean, Seq[String]) = {
+    MetaAgg.enable(spark, tbl)
+    val q = Snapshots.readIndexed(spark, tbl)._1
+      .agg(count(lit(1)), min(col(c)), max(col(c)))
+    val local = q.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    val (row, jobs) = jobTags(q.collect()(0))
+    (row, local, jobs)
+  }
+
+  private def recompute(tbl: String, c: String): Row =
+    Snapshots.read(spark, tbl).agg(count(lit(1)), min(col(c)), max(col(c)))
+      .head()
+
   test("statsAgg answers count/min/max from metadata, zero Spark jobs") {
     val tbl = freshTable("stats")
     val o = orders.select(col("o_orderkey"), col("o_totalprice"))
@@ -745,25 +760,25 @@ class SnapshotsSpec extends SparkSpec {
       statsCols = Seq("o_orderkey"))
     Snapshots.commit(o.filter(col("o_orderkey") >= 700), tbl,
       statsCols = Seq("o_orderkey"))
-    val ((n, env), jobs) = jobTags(Snapshots.statsAgg(spark, tbl, "o_orderkey"))
-    assert(jobs.isEmpty, "statsAgg must not launch a job")
-    val truth = o.agg(count(lit(1)), min(col("o_orderkey").cast("long")),
-      max(col("o_orderkey").cast("long"))).head()
-    assert(n === truth.getLong(0))
-    assert(env === Some((truth.getLong(1), truth.getLong(2))))
-    // refuses a version with tombstones, and a stats-less commit
+    val (row, local, jobs) = metaAgg(tbl, "o_orderkey")
+    assert(local, "answered from the scan, not from metadata")
+    assert(jobs.isEmpty, "the metadata aggregate must not launch a job")
+    val truth = o.agg(count(lit(1)), min(col("o_orderkey")),
+      max(col("o_orderkey"))).head()
+    assert(row === truth)
+    // a version with tombstones is refused by the indexed read
     Snapshots.deleteWhere(spark, tbl,
       spark.range(0, 5).select(col("id").as("o_orderkey")), "o_orderkey")
-    intercept[IllegalArgumentException] {
-      Snapshots.statsAgg(spark, tbl, "o_orderkey")
-    }
+    val e = intercept[IllegalArgumentException](metaAgg(tbl, "o_orderkey"))
+    assert(e.getMessage.contains("merge-on-read"))
     Snapshots.compactMor(spark, tbl)
-    assert(Snapshots.statsAgg(spark, tbl, "o_orderkey")._1 ===
+    assert(metaAgg(tbl, "o_orderkey")._1.getLong(0) ===
       truth.getLong(0) - o.filter(col("o_orderkey") < 5).count())
+    // a stat-less commit keeps the scan plan, and still answers exactly
     Snapshots.commit(o.limit(7), tbl) // no statsCols
-    intercept[IllegalArgumentException] {
-      Snapshots.statsAgg(spark, tbl, "o_orderkey")
-    }
+    val (after, afterLocal, _) = metaAgg(tbl, "o_orderkey")
+    assert(!afterLocal, "stat-less files must block the metadata answer")
+    assert(after === recompute(tbl, "o_orderkey"))
   }
 
   test("statsAggStr answers string count/min/max from metadata, zero jobs") {
@@ -774,33 +789,33 @@ class SnapshotsSpec extends SparkSpec {
       strStatsCols = Seq("o_orderpriority"))
     Snapshots.commit(o.filter(col("o_orderkey") >= 700), tbl,
       strStatsCols = Seq("o_orderpriority"))
-    val ((n, env), jobs) = jobTags(Snapshots.statsAggStr(spark, tbl, "o_orderpriority"))
-    assert(jobs.isEmpty, "statsAggStr must not launch a job")
+    val (row, local, jobs) = metaAgg(tbl, "o_orderpriority")
+    assert(local, "answered from the scan, not from metadata")
+    assert(jobs.isEmpty, "the metadata aggregate must not launch a job")
     val truth = o.agg(count(lit(1)), min(col("o_orderpriority")),
       max(col("o_orderpriority"))).head()
-    assert(n === truth.getLong(0))
-    assert(env === Some((truth.getString(1), truth.getString(2))))
+    assert(row === truth)
     // same refusal discipline as the integral path
     Snapshots.deleteWhere(spark, tbl,
       spark.range(0, 5).select(col("id").as("o_orderkey")), "o_orderkey")
-    intercept[IllegalArgumentException] {
-      Snapshots.statsAggStr(spark, tbl, "o_orderpriority")
-    }
+    val e = intercept[IllegalArgumentException](
+      metaAgg(tbl, "o_orderpriority"))
+    assert(e.getMessage.contains("merge-on-read"))
     Snapshots.compactMor(spark, tbl)
-    assert(Snapshots.statsAggStr(spark, tbl, "o_orderpriority")._2 ===
-      Some((truth.getString(1), truth.getString(2))))
+    val compacted = metaAgg(tbl, "o_orderpriority")._1
+    assert((compacted.getString(1), compacted.getString(2)) ===
+      ((truth.getString(1), truth.getString(2))))
     Snapshots.commit(o.limit(7), tbl) // no strStatsCols
-    intercept[IllegalArgumentException] {
-      Snapshots.statsAggStr(spark, tbl, "o_orderpriority")
-    }
+    val (after, afterLocal, _) = metaAgg(tbl, "o_orderpriority")
+    assert(!afterLocal, "stat-less files must block the metadata answer")
+    assert(after === recompute(tbl, "o_orderpriority"))
   }
 
   test("manifest metadata reads are props-only and stay exact: values " +
       "with '=' and multi-byte UTF-8 round-trip, a terminator-less " +
       "manifest reads as absent, and an empty-props manifest parses") {
     import spark.implicits._
-    val tbl = java.nio.file.Files.createTempDirectory("graft_props")
-      .toString + "/t"
+    val tbl = freshTable("props")
     Snapshots.commit(Seq((1L, 10L)).toDF("k", "v"), tbl)
     val v2 = Snapshots.commit(Seq((2L, 20L)).toDF("k", "v"), tbl,
       properties = Map("note" -> "a=b=c é", "empty.ish" -> "x"))

@@ -12,7 +12,7 @@ import java.nio.file.{Files, Paths}
 class SourcesSpec extends SparkSpec {
 
   test("JsonSource parses nested structs and flattens rating.*") {
-    val dir = Files.createTempDirectory("graft_json").toString
+    val dir = tempDir("json")
     Files.writeString(Paths.get(dir, "products.json"),
       """{"id": 1, "title": "Fjallraven Backpack", "price": 109.95, "rating": {"rate": 3.9, "count": 120}}
         |{"id": 2, "title": "Mens Casual T-Shirt", "price": 22.3, "rating": {"rate": 4.1, "count": 259}}
@@ -38,7 +38,7 @@ class SourcesSpec extends SparkSpec {
   test("HttpSource fetches file:// URLs through the limiter and flattens rating.*") {
     // the reference's API shape: one endpoint returning a JSON ARRAY of
     // products (not json-lines) — each array element must become a row
-    val dir = Files.createTempDirectory("graft_http").toString
+    val dir = tempDir("http")
     Files.writeString(Paths.get(dir, "products.json"),
       """[{"id": 1, "title": "Fjallraven Backpack", "price": 109.95, "rating": {"rate": 3.9, "count": 120}},
         | {"id": 2, "title": "Mens Casual T-Shirt", "price": 22.3, "rating": {"rate": 4.1, "count": 259}}]""".stripMargin)
@@ -84,7 +84,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("CsvSource honors schema and encoding end to end") {
-    val dir = Files.createTempDirectory("graft_srccsv").toString
+    val dir = tempDir("srccsv")
     Files.writeString(Paths.get(dir, "d.csv"), "k,v\n1,x\n2,y\n")
     val schema = StructType(Seq(
       StructField("k", IntegerType), StructField("v", StringType)))
@@ -203,7 +203,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("ParquetSink/ParquetSource roundtrip with partitioning") {
-    val dir = Files.createTempDirectory("graft_sink").toString + "/t"
+    val dir = freshTable("sink")
     val df = graft.Tables.orders(spark, sf001)
       .withColumn("y", year(col("o_orderdate")))
     ParquetSink(dir, partitionBy = Seq("y")).write(df)

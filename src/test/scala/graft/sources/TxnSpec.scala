@@ -11,9 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class TxnSpec extends SparkSpec {
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_txn_$tag").toString
-
   private def orders = spark.read.parquet(s"$sf001/orders.parquet")
     .select(col("o_orderkey"), col("o_totalprice"))
 
@@ -21,7 +18,7 @@ class TxnSpec extends SparkSpec {
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   test("a committed transaction lands on every table atomically") {
-    val d = freshDir("ok"); val a = s"$d/a"; val b = s"$d/b"
+    val d = tempDir("ok"); val a = s"$d/a"; val b = s"$d/b"
     val lo = orders.filter(col("o_orderkey") < 100)
     val hi = orders.filter(col("o_orderkey") >= 100 &&
       col("o_orderkey") < 200)
@@ -42,7 +39,7 @@ class TxnSpec extends SparkSpec {
   }
 
   test("a crash before the status write leaves every table unchanged") {
-    val d = freshDir("crash"); val a = s"$d/a"; val b = s"$d/b"
+    val d = tempDir("crash"); val a = s"$d/a"; val b = s"$d/b"
     Snapshots.commit(orders.limit(10), a)
     Snapshots.commit(orders.limit(10), b)
     val boom = intercept[RuntimeException] {
@@ -60,7 +57,7 @@ class TxnSpec extends SparkSpec {
   }
 
   test("a later committer force-aborts an in-doubt transaction on ALL tables") {
-    val d = freshDir("resolve"); val a = s"$d/a"; val b = s"$d/b"
+    val d = tempDir("resolve"); val a = s"$d/a"; val b = s"$d/b"
     Snapshots.commit(orders.limit(10), a)
     Snapshots.commit(orders.limit(10), b)
     intercept[RuntimeException] {
@@ -86,7 +83,7 @@ class TxnSpec extends SparkSpec {
   }
 
   test("a racing commit during the in-doubt window wins; the txn throws") {
-    val d = freshDir("race"); val a = s"$d/a"; val b = s"$d/b"
+    val d = tempDir("race"); val a = s"$d/a"; val b = s"$d/b"
     Snapshots.commit(orders.limit(10), a)
     Snapshots.commit(orders.limit(10), b)
     val boom = intercept[RuntimeException] {
@@ -102,7 +99,7 @@ class TxnSpec extends SparkSpec {
   }
 
   test("vacuum aborts in-doubt transactions before reclaiming their files") {
-    val d = freshDir("vac"); val a = s"$d/a"; val b = s"$d/b"
+    val d = tempDir("vac"); val a = s"$d/a"; val b = s"$d/b"
     Snapshots.commit(orders.limit(10), a)
     Snapshots.commit(orders.limit(10), b)
     intercept[RuntimeException] {
@@ -119,7 +116,7 @@ class TxnSpec extends SparkSpec {
   }
 
   test("a failure staging a LATER table settles earlier pendings as aborted") {
-    val d = freshDir("midfail"); val a = s"$d/a"; val b = s"$d/b"
+    val d = tempDir("midfail"); val a = s"$d/a"; val b = s"$d/b"
     Snapshots.commit(orders.limit(10), a)
     Snapshots.commit(orders.limit(10), b)
     Snapshots.addCheck(spark, b, "pos", "o_totalprice > 0")
@@ -152,7 +149,7 @@ class TxnSpec extends SparkSpec {
   }
 
   test("removeOrphans reclaims an aborted txn's batch dirs, keeps live ones") {
-    val d = freshDir("orphan"); val a = s"$d/a"
+    val d = tempDir("orphan"); val a = s"$d/a"
     Snapshots.commit(orders.limit(10), a)
     intercept[RuntimeException] {
       Snapshots.commitTxn(spark,

@@ -8,9 +8,6 @@ import org.apache.spark.sql.functions._
   */
 class UniqueSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_uq_$tag").toString + "/t"
-
   private def orders = spark.read.parquet(s"$sf001/orders.parquet")
     .select(col("o_orderkey"), col("o_totalprice"))
     .groupBy("o_orderkey")

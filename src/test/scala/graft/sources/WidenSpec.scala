@@ -10,9 +10,6 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
   */
 class WidenSpec extends SparkSpec {
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_wd_$tag").toString + "/t"
-
   test("int→long widens metadata-only: old files read cast, new files " +
       "store long natively, values beyond int range land, time travel " +
       "keeps each version's width") {

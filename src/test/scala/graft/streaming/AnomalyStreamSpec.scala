@@ -33,7 +33,7 @@ class AnomalyStreamSpec extends SparkSpec {
 
   test("streamed scores equal the batch scorer bit-identically") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_anom").toString
+    val dir = tempDir("anom")
     val stream = MemoryStream[AnomEv]
     val q = AnomalyStream.maintainScores(stream.toDF(),
       s"$dir/state", s"$dir/scores")
@@ -55,8 +55,7 @@ class AnomalyStreamSpec extends SparkSpec {
   }
 
   test("crash between state and scores swaps repairs via rescore") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_anomcrash")
-      .toString
+    val dir = tempDir("anomcrash")
     val b0 = allEvents.take(12).toDF()
     val b1 = allEvents.drop(12).toDF()
     AnomalyStream.foldAndScore(b0, 0L, s"$dir/state", s"$dir/scores", 7, 2.0)
@@ -70,8 +69,7 @@ class AnomalyStreamSpec extends SparkSpec {
   }
 
   test("replayed batch cannot double-count the rollup or the scores") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_anomreplay")
-      .toString
+    val dir = tempDir("anomreplay")
     val b0 = allEvents.take(12).toDF()
     AnomalyStream.foldAndScore(b0, 0L, s"$dir/state", s"$dir/scores", 7, 2.0)
     val once = rows(spark.read.parquet(s"$dir/scores"))

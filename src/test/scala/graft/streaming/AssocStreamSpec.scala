@@ -11,8 +11,7 @@ class AssocStreamSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshState(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_assoc_$tag")
-      .toString + "/state"
+    tempDir(s"assoc_$tag") + "/state"
 
   // whole-basket batches: {1,2}x2 then {1,2,3} + {3} then {1,3}
   private val batch0 = Seq(BasketItem(10, 1), BasketItem(10, 2),

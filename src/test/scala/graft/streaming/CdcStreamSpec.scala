@@ -11,8 +11,7 @@ class CdcStreamSpec extends SparkSpec {
 
   test("streamed micro-batches reproduce one batch apply of the whole feed") {
     implicit val sqlCtx = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("graft_cdcstream")
-      .toString + "/snapshot"
+    val path = tempDir("cdcstream") + "/snapshot"
     val stream = MemoryStream[Change]
     val q = CdcStream.maintainSnapshot(stream.toDF(), path, "k")
     try {

@@ -18,8 +18,7 @@ class DimensionStreamSpec extends SparkSpec {
 
   test("streamed micro-batches reproduce the batch SCD2 merge sequence") {
     implicit val sqlCtx = spark.sqlContext
-    val dimPath = java.nio.file.Files.createTempDirectory("graft_dimstream")
-      .toString + "/dim_customer"
+    val dimPath = tempDir("dimstream") + "/dim_customer"
     val stream = MemoryStream[Cust]
     val q = DimensionStream.maintainScd2(
       stream.toDF(), dimPath, cfg, asOf = id => date(id.toInt + 1))

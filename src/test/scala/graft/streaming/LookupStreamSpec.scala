@@ -16,13 +16,9 @@ case class Lookup(key: Long, tag: String)
 class LookupStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  private def fresh(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_lookup_$tag")
-      .toString + "/t"
-
   /** Static side: k 0..63 range-clustered over 8 files, stats + bloom. */
   private def buildStatic(tag: String): String = {
-    val tbl = fresh(tag)
+    val tbl = freshTable(tag)
     val df = (0L until 64L).map(i => (i, s"name$i")).toDF("k", "name")
       .repartitionByRange(8, col("k")).sortWithinPartitions(col("k"))
     Snapshots.commit(df, tbl, statsCols = Seq("k"), bloomCols = Seq("k"))
@@ -98,7 +94,7 @@ class LookupStreamSpec extends SparkSpec {
   test("an era-evolved static table (rename with surviving old files) " +
       "routes through the automatic rule: each era branch prunes " +
       "independently through its own projection") {
-    val tbl = fresh("evolved")
+    val tbl = freshTable("evolved")
     // era 1: k 0..31 over 4 range-clustered files, pre-rename names
     Snapshots.commit(
       (0L until 32L).map(i => (i, s"name$i")).toDF("k", "name")
@@ -129,7 +125,7 @@ class LookupStreamSpec extends SparkSpec {
 
   test("a WIDENED key column (int era under a bigint head) still prunes " +
       "per era: keys narrow to the era's physical width") {
-    val tbl = fresh("evolvedw")
+    val tbl = freshTable("evolvedw")
     Snapshots.commit(
       (0 until 32).map(i => (i, s"v$i")).toDF("k", "v")
         .repartitionByRange(4, col("k")).sortWithinPartitions(col("k")),

@@ -12,10 +12,6 @@ class MergeStreamSpec extends SparkSpec {
   case class Change(k: Long, op: String, version: Long, status: String,
       amount: Double)
 
-  private def freshTable(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_mrgstream_$tag")
-      .toString + "/t"
-
   private def bootstrap(tbl: String): Unit = {
     Snapshots.commit(Seq((1L, "A", 10.0), (2L, "B", 20.0), (3L, "C", 30.0))
       .toDF("k", "status", "amount"), tbl, statsCols = Seq("k"))

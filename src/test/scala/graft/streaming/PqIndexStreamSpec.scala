@@ -33,8 +33,7 @@ class PqIndexStreamSpec extends SparkSpec {
     val base = vecRows(0 until 16)
     val later = vecRows(16 until 32)
     def newIndex(): String = {
-      val p = java.nio.file.Files.createTempDirectory("graft_pqstream")
-        .toString + "/i"
+      val p = tempDir("pqstream") + "/i"
       Similarity.writePqIndex(base.toDF(), p, nCentroids = 4, m = 4,
         ksub = 8, iters = 1, dim = 8)
       p

@@ -25,8 +25,7 @@ class RollupStreamSpec extends SparkSpec {
 
   test("N micro-batches converge to the one-batch recompute, bit-identically") {
     implicit val sqlCtx = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("graft_rollupstream")
-      .toString + "/rollup"
+    val path = tempDir("rollupstream") + "/rollup"
     val stream = MemoryStream[Sale]
     val q = RollupStream.maintainRollup(stream.toDF(), path, rollupFn,
       Seq("region"), Seq("n", "rev"))
@@ -50,8 +49,7 @@ class RollupStreamSpec extends SparkSpec {
   }
 
   test("replayed batch id is skipped: at-least-once delivery cannot double-count") {
-    val path = java.nio.file.Files.createTempDirectory("graft_rollupreplay")
-      .toString + "/rollup"
+    val path = tempDir("rollupreplay") + "/rollup"
     val b0 = Seq(Sale("EU", dec("10.0")), Sale("US", dec("5.0"))).toDF()
     val b1 = Seq(Sale("EU", dec("2.0"))).toDF()
     RollupStream.foldBatch(b0, 0L, path, rollupFn, Seq("region"), Seq("n", "rev"))
@@ -65,8 +63,7 @@ class RollupStreamSpec extends SparkSpec {
   }
 
   test("crash between delete and rename recovers: marker and state stay atomic") {
-    val path = java.nio.file.Files.createTempDirectory("graft_rollupcrash")
-      .toString + "/rollup"
+    val path = tempDir("rollupcrash") + "/rollup"
     val b0 = Seq(Sale("EU", dec("10.0"))).toDF()
     RollupStream.foldBatch(b0, 0L, path, rollupFn, Seq("region"), Seq("n", "rev"))
     // simulate writeSwap dying between its delete(target) and rename:

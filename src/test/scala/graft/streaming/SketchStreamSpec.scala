@@ -27,7 +27,7 @@ class SketchStreamSpec extends SparkSpec {
 
   test("streamed sketch equals the one-shot sketch cell-for-cell") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_cms").toString
+    val dir = tempDir("cms")
     val stream = MemoryStream[SkDoc]
     val q = SketchStream.maintainSketch(stream.toDF(), s"$dir/sk",
       depth = 4, width = 64)
@@ -56,8 +56,7 @@ class SketchStreamSpec extends SparkSpec {
   }
 
   test("replayed batch id cannot double-count cells") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cmsreplay")
-      .toString
+    val dir = tempDir("cmsreplay")
     SketchStream.foldBatch(docs.take(3).toDF(), 0L, s"$dir/sk", "text", 4, 64)
     val once = cells(s"$dir/sk")
     SketchStream.foldBatch(docs.take(3).toDF(), 0L, s"$dir/sk", "text", 4, 64)

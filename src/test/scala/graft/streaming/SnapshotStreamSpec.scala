@@ -10,13 +10,9 @@ case class Click(user: Long, page: String)
 class SnapshotStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  private def fresh(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_snapstream_$tag")
-      .toString + "/t"
-
   test("each micro-batch is one version; content converges to the batch union") {
     implicit val sqlCtx = spark.sqlContext
-    val tbl = fresh("ing")
+    val tbl = freshTable("ing")
     val stream = MemoryStream[Click]
     val q = SnapshotStream.ingest(stream.toDF(), tbl, statsCols = Seq("user"))
     try {
@@ -44,7 +40,7 @@ class SnapshotStreamSpec extends SparkSpec {
   }
 
   test("replayed batch id commits nothing (exactly-once via manifest marker)") {
-    val tbl = fresh("replay")
+    val tbl = freshTable("replay")
     val b0 = Seq(Click(1, "a")).toDF()
     val b1 = Seq(Click(2, "b")).toDF()
     SnapshotStream.commitBatch(b0, 0, tbl, Seq.empty)
@@ -61,7 +57,7 @@ class SnapshotStreamSpec extends SparkSpec {
   }
 
   test("audited ingest drops a poison micro-batch and keeps flowing") {
-    val tbl = fresh("wapstream")
+    val tbl = freshTable("wapstream")
     val audit: org.apache.spark.sql.DataFrame => Option[String] = b =>
       if (b.filter(col("page") === "BAD").count() > 0)
         Some("poison page") else None
@@ -89,7 +85,7 @@ class SnapshotStreamSpec extends SparkSpec {
 
   test("streaming upsert converges to last-write-per-key, atomically") {
     implicit val sqlCtx = spark.sqlContext
-    val tbl = fresh("ups")
+    val tbl = freshTable("ups")
     // seed the table (upsertMor needs a v1), then stream upserts at it
     Snapshots.commit(Seq(Click(1, "seed1"), Click(2, "seed2")).toDF(), tbl)
     val stream = MemoryStream[Click]
@@ -127,7 +123,7 @@ class SnapshotStreamSpec extends SparkSpec {
   test("rebucket cadence: streamed appends restore a bucketed layout " +
       "every N batches, join stays zero-Exchange, CDC lineage intact") {
     implicit val sqlCtx = spark.sqlContext
-    val tbl = fresh("rebucket")
+    val tbl = freshTable("rebucket")
     // seed: a bucketed table (the layout the policy maintains)
     Snapshots.commitBucketed(
       Seq(Click(1, "s1"), Click(2, "s2")).toDF(), tbl, "user", 4)
@@ -177,7 +173,7 @@ class SnapshotStreamSpec extends SparkSpec {
 
   test("rebucket cadence: never-bucketed tables and replays are " +
       "unaffected; audit path restores the layout as a follow-on commit") {
-    val plain = fresh("rebucket_plain")
+    val plain = freshTable("rebucket_plain")
     // a table with NO bucketed version ever: policy must not invent one
     SnapshotStream.commitBatch(Seq(Click(1, "a")).toDF(), 0, plain,
       Seq.empty, rebucketEvery = Some(1))
@@ -186,7 +182,7 @@ class SnapshotStreamSpec extends SparkSpec {
     assert(Snapshots.versions(spark, plain) === Seq(1, 2))
     assert(Snapshots.bucketSpec(spark, plain).isEmpty)
 
-    val tbl = fresh("rebucket_audit")
+    val tbl = freshTable("rebucket_audit")
     Snapshots.commitBucketed(Seq(Click(1, "s")).toDF(), tbl, "user", 4)
     val audit: org.apache.spark.sql.DataFrame => Option[String] = b =>
       if (b.filter(col("page") === "BAD").count() > 0)

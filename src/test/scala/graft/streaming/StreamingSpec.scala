@@ -113,7 +113,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("file-source stream over a landing directory equals the batch run") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("stream")
     // land the raw events file as-is (ns timestamps and all)
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(sf001, "events.parquet"),
@@ -148,8 +148,7 @@ class StreamingSpec extends SparkSpec {
   test("file-source stream starts on an EMPTY landing directory") {
     // the normal starting state of an ingest: the stream must start
     // before the first file lands, then pick up arrivals
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_empty")
-      .toString
+    val dir = tempDir("stream_empty")
     val q = EventStreams.toMemorySink(
       EventStreams.tumblingHourly(EventStreams.fromParquetDir(spark, dir)),
       "t_empty_hourly", "complete")

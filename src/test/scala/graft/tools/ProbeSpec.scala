@@ -17,7 +17,7 @@ class ProbeSpec extends SparkSpec {
     out.toString("UTF-8")
   }
 
-  private def tmp(): Path = Files.createTempDirectory("probe-spec")
+  private def tmp(): Path = Paths.get(tempDir("probe-spec"))
 
   test("explain writes one headed plan file per query") {
     val dir = tmp()
