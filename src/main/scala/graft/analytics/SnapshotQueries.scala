@@ -188,7 +188,7 @@ object SnapshotQueries {
           .withColumn("o_totalprice", lit(0.0))
         Snapshots.upsertMor(s, tbl, batch, "o_orderkey")
       }
-      Snapshots.readMor(s, tbl)
+      Snapshots.read(s, tbl)
         .agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice")).as("total"))
     },
     Some(s"""SELECT count(*) AS n_rows,
@@ -260,7 +260,7 @@ object SnapshotQueries {
           .withColumn("o_totalprice", lit(0.0)), tbl,
           statsCols = Seq("o_orderkey"))
       }
-      Snapshots.readMor(s, tbl)
+      Snapshots.read(s, tbl)
         .agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice")).as("total"))
     },
     Some(s"""SELECT count(*) AS n_rows, ${dsumSql("p")} AS total FROM (
@@ -447,7 +447,7 @@ object SnapshotQueries {
                + (SELECT max(s_suppkey) FROM supplier) // 8"""))
 
   /** X109/X119: Catalyst-native data skipping SURVIVES schema evolution
-    * ([[Snapshots.readIndexedEvolved]]) — the most common long-lived-
+    * ([[Snapshots.read]]) — the most common long-lived-
     * table state. A z-ordered commit, then a column RENAME, a type
     * WIDEN (int→bigint), and an add-column DEFAULT, then a second
     * commit under the evolved schema: the old files now need per-era
@@ -523,7 +523,7 @@ object SnapshotQueries {
             col("part_key"), col("sk"))),
           tbl, statsCols = Seq("part_key", "sk", "qty_i"))
       }
-      Snapshots.readIndexedEvolved(s, tbl)._1
+      Snapshots.read(s, tbl)
         .filter(col("part_key").between(lit(1L), lit(maxPart / 8)) &&
           col("sk").between(lit(maxSupp / 2),
             lit(maxSupp / 2 + maxSupp / 8)) &&
@@ -659,7 +659,7 @@ object SnapshotQueries {
           statsCols = Seq("o_orderkey"))
         Branches.merge(s, tbl, "dev", "o_orderkey")
       }
-      Snapshots.readMor(s, tbl)
+      Snapshots.read(s, tbl)
         .groupBy((col("o_orderkey") % 10).as("bucket"))
         .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total"))
         .unionByName(Branches.readTag(s, tbl, "base")
@@ -778,7 +778,7 @@ object SnapshotQueries {
           catch { case _: IllegalArgumentException => 1L })
       }
       val rejected = rejectedBox.get()
-      Snapshots.readMor(s, child)
+      Snapshots.read(s, child)
         .agg(count(lit(1)).as("n_orders"),
           dsum(col("o_totalprice")).as("total"))
         .select(lit(rejected).as("n_rejected"), col("n_orders"),
@@ -1374,7 +1374,7 @@ object SnapshotQueries {
           "o_orderkey")
         graft.sources.Replication.sync(s, src, dst, "o_orderkey")
       }
-      Snapshots.readMor(s, dst)
+      Snapshots.read(s, dst)
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice")).as("total"))
         .orderBy(col("o_orderpriority"))
@@ -1441,7 +1441,7 @@ object SnapshotQueries {
             .withColumn("o_totalprice", col("o_totalprice") * 2),
           tbl, statsCols = Seq("o_orderkey"))
       }
-      Snapshots.readMor(s, tbl)
+      Snapshots.read(s, tbl)
         .agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice")).as("total"))
     },
     Some("""WITH dd AS (SELECT o_orderkey, max(o_totalprice) AS p
@@ -1697,7 +1697,7 @@ object SnapshotQueries {
         Snapshots.deleteVector(s, tbl,
           col("o_totalprice") < 50000.0)
       }
-      Snapshots.readMor(s, tbl)
+      Snapshots.read(s, tbl)
         .agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice")).as("total"))
     },
     Some(s"""SELECT count(*) AS n_rows, ${dsumSql("o_totalprice")} AS total
@@ -1725,7 +1725,7 @@ object SnapshotQueries {
           Seq("o_totalprice" -> col("o_totalprice") * 0.5))
         Snapshots.deleteVector(s, tbl, col("o_totalprice") > 150000.0)
       }
-      Snapshots.readMor(s, tbl)
+      Snapshots.read(s, tbl)
         .agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice")).as("total"))
     },
     Some(s"""SELECT count(*) AS n_rows, ${dsumSql("p")} AS total FROM (
@@ -2564,7 +2564,7 @@ object SnapshotQueries {
           .select(col("s_suppkey")), dimTbl)
       }
       val dim = Snapshots.readIndexed(s, dimTbl)._1
-      val fact = Snapshots.readIndexedEvolved(s, tbl)._1
+      val fact = Snapshots.read(s, tbl)
       // the PLAIN join — the rule's evolved tier injects the per-era cut
       fact.join(broadcast(dim), col("supp_key") === col("s_suppkey"))
         .groupBy(col("supp_key"))

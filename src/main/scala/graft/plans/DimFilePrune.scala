@@ -459,7 +459,7 @@ object DimFilePruneRule extends Rule[LogicalPlan] with PredicateHelper {
     */
   // ---- the EVOLVED tier: era-sliced fact scans -------------------------
 
-  /** One era branch of a [[graft.sources.Snapshots.readIndexedEvolved]]
+  /** One era branch of a [[graft.sources.Snapshots.read]]
     * union: the era's scan plus a positional map from the CURRENT-name
     * output column to the era's PHYSICAL (column name, type) — None at
     * positions whose era projection is not a plain column or an
@@ -507,8 +507,8 @@ object DimFilePruneRule extends Rule[LogicalPlan] with PredicateHelper {
     }
   }
 
-  /** An era-evolved fact side — the shape `readIndexedEvolved` plans
-    * (and the optimizer reduces): [attribute-only Project | Filter]*
+  /** An era-evolved fact side — the shape `Snapshots.read` plans for
+    * a mask-free evolved version (and the optimizer reduces): [attribute-only Project | Filter]*
     * over a Union of era branches, each a Project over an era-sliced
     * index scan (or the bare scan once the optimizer dropped an
     * identity projection); a single surviving era matches without the

@@ -148,10 +148,17 @@ object MvRewriteRule extends Rule[LogicalPlan] {
     case _ => None
   }
 
+  /** A versioned fact's scan answers its index's exact file list — the
+    * set a [[SnapshotMv]] registration is pinned to; any other file
+    * relation answers its root paths.
+    */
   private def relationPaths(lr: LogicalRelation): Option[Seq[String]] =
     lr.relation match {
-      case h: HadoopFsRelation =>
-        Some(h.location.rootPaths.map(_.toUri.getPath))
+      case h: HadoopFsRelation => h.location match {
+        case fi: graft.sources.SnapshotFileIndex =>
+          Some(fi.inputFiles.toSeq.map(norm))
+        case loc => Some(loc.rootPaths.map(_.toUri.getPath))
+      }
       case _ => None
     }
 

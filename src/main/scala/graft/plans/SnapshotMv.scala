@@ -121,10 +121,10 @@ object SnapshotMv {
               // a file-dropping commit (merge copy-on-write, rollback)
               // is not feed-derivable → full rebuild
               case _: IllegalArgumentException =>
-                aggregate(Snapshots.readMor(spark, mv.factTable), mv)
+                aggregate(Snapshots.read(spark, mv.factTable), mv)
             }
           case None =>
-            aggregate(Snapshots.readMor(spark, mv.factTable), mv)
+            aggregate(Snapshots.read(spark, mv.factTable), mv)
         }
         val dirName = s"r$latest"
         rollup.write.mode("overwrite").parquet(s"${mv.mvRoot}/$dirName")

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.sources.{GraftMorRelation, SnapshotFileIndex, Snapshots}
+import graft.sources.{GraftReadRelation, SnapshotFileIndex, Snapshots}
 import org.apache.spark.sql.{Column, GraftBridge, Row, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Cast, EqualTo, Expression}
@@ -167,11 +167,8 @@ object SqlDml {
                 lr.catalogTable.map(_.identifier.unquotedString)))
             case _ => None
           }
-          case mor: GraftMorRelation =>
-            Some((mor.table, lr.output, mor.options,
-              lr.catalogTable.map(_.identifier.unquotedString)))
-          case ev: graft.sources.GraftEvolvedRelation =>
-            Some((ev.table, lr.output, ev.options,
+          case r: GraftReadRelation =>
+            Some((r.table, lr.output, r.options,
               lr.catalogTable.map(_.identifier.unquotedString)))
           case _ => None
         }
@@ -1243,7 +1240,7 @@ object SqlDml {
       // schema included), so shapeRow carries new columns as typed
       // NULLs on the target side; the actual addColumn + catalog sync
       // happen only after every run-time validation passed
-      val tgt0 = Snapshots.readMor(spark, table)
+      val tgt0 = Snapshots.read(spark, table)
       require((tgt0.columns ++ src0.columns)
         .forall(c => !c.startsWith("__graft_")),
         "graft DML: MERGE reserves the __graft_ column-name prefix")

@@ -14,8 +14,10 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
   * import to consume versioned tables:
   *
   *  - `spark.read.format("graft").load(path)` reads the latest version
-  *    through [[SnapshotFileIndex]], so every downstream `.filter`
-  *    data-skips from manifest evidence automatically. Time travel via
+  *    as [[Snapshots.read]] plans it: the flat [[SnapshotFileIndex]]
+  *    relation, or [[GraftReadRelation]] over the grouped read for a
+  *    masked or era-evolved version — either way every downstream
+  *    `.filter` data-skips from manifest evidence. Time travel via
   *    options: `versionAsOf` (version number), `timestampAsOf` (epoch
   *    millis, resolved like [[Snapshots.readAsOf]]), `tag` (a
   *    [[Branches]] tag name), `branch` (reads a live branch's head);
@@ -63,52 +65,22 @@ final class GraftSource extends RelationProvider
     val version = parameters.get("versionAsOf").map(_.toInt)
       .orElse(parameters.get("tag").map(t =>
         Branches.tagVersion(spark, table, t)))
-      .orElse(parameters.get("timestampAsOf").map { ts =>
-        val t = ts.toLong
-        val vs = Snapshots.versions(spark, table)
-        val eligible = vs.filter(v =>
-          Snapshots.properties(spark, table, v)
-            .get(Snapshots.CommitTsProp).forall(_.toLong <= t))
-        require(eligible.nonEmpty,
-          s"graft source: no version of $table at or before $t")
-        eligible.max
-      })
+      .orElse(parameters.get("timestampAsOf").map(ts =>
+        Snapshots.versionAsOf(spark, table, ts.toLong)))
       .getOrElse(Snapshots.latestVersion(spark, table))
-    // route by the EXPLICIT table state, not exception control flow
-    // (a malformed-manifest require must surface as itself, never as a
-    // confusing later MOR-path error):
-    //  - a segment-plannable version (header proves mask- and
-    //    era-freedom) → the flat fast path WITHOUT opening the flat
-    //    manifest at all (the segment tier's whole point);
-    //  - merge-on-read masks → the MOR relation (v1 scan over readMor;
-    //    metadata alone cannot subtract deletes);
-    //  - rename/widen/default eras with surviving pre-boundary files →
-    //    the EVOLVED relation (per-era FileIndex union — Catalyst data
-    //    skipping survives schema evolution);
-    //  - everything else → the flat data-skipping FileIndex fast path.
-    // The reader options ride the relation either way so downstream
-    // layers (SQL DML) can see whether this relation was time-traveled.
-    def flat(pre: Option[Seq[Snapshots.FileEntry]]): BaseRelation = {
-      // pass the already-parsed entries through: the routing decision
-      // and the index constructor must not each pay an O(files) parse
-      // (the refusal conditions were just checked by the router)
-      val index = new SnapshotFileIndex(spark, table, version, pre, None,
-        wholeVersion = true)
-      HadoopFsRelation(index, new StructType(), index.dataSchema, None,
-        new ParquetFileFormat, parameters)(spark)
-    }
-    if (Snapshots.segmentIndexFor(spark, table, version)
-        .exists(SnapshotFileIndex.segmentPlannable)) flat(None)
-    else {
-      val entries = Snapshots.manifest(spark, table, version)
-      val props = Snapshots.properties(spark, table, version)
-      if (entries.exists(e => Snapshots.isMask(e.path)))
-        new GraftMorRelation(sqlContext, table, version, parameters)
-      else SnapshotFileIndex.refusalOf(table, version, entries, props) match {
-        case None => flat(Some(entries))
-        case Some(_) =>
-          new GraftEvolvedRelation(sqlContext, table, version, parameters)
-      }
+    // the flat data-skipping FileIndex relation when one flat relation
+    // reads the version exactly ([[Snapshots.flatIndexOr]] — the same
+    // routing [[Snapshots.read]] plans by), else the v1 relation over
+    // Snapshots.read (merge-on-read masks, or rename/widen/default eras
+    // with surviving pre-event files). The reader options ride the
+    // relation either way so downstream layers (SQL DML) can see
+    // whether this relation was time-traveled.
+    Snapshots.flatIndexOr(spark, table, version) match {
+      case Left(index) =>
+        HadoopFsRelation(index, new StructType(), index.dataSchema, None,
+          new ParquetFileFormat, parameters)(spark)
+      case Right(_) =>
+        new GraftReadRelation(sqlContext, table, version, parameters)
     }
   }
 
@@ -320,38 +292,41 @@ final class GraftSource extends RelationProvider
   }
 }
 
-/** The catalog relation for versions carrying merge-on-read masks:
-  * [[Snapshots.readMor]] behind Spark's v1 `PrunedFilteredScan` — column
-  * pruning and the translatable pushed filters are applied INSIDE the
-  * MOR plan (before the mask anti-joins), and Spark re-applies every
-  * filter on top (v1 contract), so results are exact even for filters
-  * the translator skips. Slower than the data-skipping FileIndex path
-  * by design; `compactMor` returns the table to the fast path.
+/** The catalog relation for versions one flat file relation cannot read
+  * exactly — merge-on-read masks, or rename/widen/default eras with
+  * surviving pre-event files: [[Snapshots.read]] behind Spark's v1
+  * `PrunedFilteredScan`. Column pruning and the translatable pushed
+  * filters re-enter that plan, where Catalyst pushes them through each
+  * group's era projection into the group's [[SnapshotFileIndex]] slice
+  * (file skipping from manifest evidence, the cut visible in the inner
+  * scans' `numFiles`) and below the mask anti-joins. Spark re-applies
+  * every filter on top (v1 contract), so results stay exact for filter
+  * shapes [[GraftV1Filters]] does not translate. `compactMor`/compaction
+  * returns the table to the flat relation.
   */
-final class GraftMorRelation(sql: SQLContext, val table: String,
+final class GraftReadRelation(sql: SQLContext, val table: String,
     val version: Int, val options: Map[String, String])
     extends BaseRelation with PrunedFilteredScan {
-  import org.apache.spark.sql.{Column, Row}
+  import org.apache.spark.sql.Row
   import org.apache.spark.sql.functions.col
 
   override def sqlContext: SQLContext = sql
 
-  private def frame: DataFrame =
-    Snapshots.readMor(sql.sparkSession, table, Some(version))
+  // memoized: the relation is pinned to an immutable version, and the
+  // grouped plan is expensive to build (manifest parse, era grouping,
+  // one SnapshotFileIndex per group with its file-status cache)
+  private[sources] lazy val frame: DataFrame =
+    Snapshots.read(sql.sparkSession, table, Some(version))
 
-  // the RECORDED schema, not the MOR plan's (whose nullability widens
-  // through the mask joins) — it must equal what the FileIndex relation
-  // reported when the catalog table was created, or re-resolution after
-  // a DELETE refuses with a schema-mismatch error
-  override val schema: StructType =
-    Snapshots.properties(sql.sparkSession, table, version)
-      .get(Snapshots.SchemaProp)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType])
-      .getOrElse(frame.schema) match {
-        // match the FileIndex relation's nullability convention exactly
-        case st => StructType(st.fields.map(_.copy(nullable = true)))
-      }
+  // the RECORDED schema, nullable-normalized like the flat relation — it
+  // must equal what the FileIndex relation reported when the catalog
+  // table was created, or re-resolution after a DELETE refuses with a
+  // schema mismatch (the grouped plan's own nullability widens through
+  // the mask joins)
+  override val schema: StructType = StructType(
+    SnapshotFileIndex.recordedSchema(table, version,
+      Snapshots.properties(sql.sparkSession, table, version))
+      .fields.map(_.copy(nullable = true)))
 
   override def buildScan(requiredColumns: Array[String],
       filters: Array[org.apache.spark.sql.sources.Filter])
@@ -362,10 +337,11 @@ final class GraftMorRelation(sql: SQLContext, val table: String,
   }
 }
 
-/** v1 `Filter` → [[Column]] translation shared by the MOR and evolved
-  * relations — the pushed filters re-enter a full Catalyst plan, where
-  * they drive file skipping (evolved: per-era FileIndex envelopes) or
-  * scan-level pushdown (MOR: parquet row groups before the mask joins).
+/** v1 `Filter` → [[Column]] translation for [[GraftReadRelation]]: the
+  * v1 scan interface hands pushed filters over as data-source `Filter`s,
+  * and they must become Columns to re-enter the Catalyst plan of
+  * [[Snapshots.read]], where they drive file skipping (each group's
+  * FileIndex envelopes) and parquet pushdown below the mask joins.
   */
 private[sources] object GraftV1Filters {
   import org.apache.spark.sql.Column
@@ -394,59 +370,5 @@ private[sources] object GraftV1Filters {
       case Not(c) => translate(c).map(!_)
       case _ => None
     }
-  }
-}
-
-/** The catalog relation for ERA-EVOLVED versions (rename / type-widen /
-  * add-column-default events with surviving pre-boundary files):
-  * [[Snapshots.readIndexedEvolved]] behind Spark's v1
-  * `PrunedFilteredScan`. Pushed filters re-apply INSIDE the evolved
-  * plan, where Catalyst pushes them through each era's re-aliasing
-  * projection into that era's [[SnapshotFileIndex]] — so a plain SQL
-  * `WHERE` still cuts files from manifest evidence on a renamed/widened
-  * 100 TB table (the numFiles cut is visible in the inner scans).
-  * Spark re-applies every filter on top (v1 contract), so results stay
-  * exact for shapes the translator skips. `compactMor`/compaction
-  * returns the table to the flat single-index fast path.
-  */
-final class GraftEvolvedRelation(sql: SQLContext, val table: String,
-    val version: Int, val options: Map[String, String])
-    extends BaseRelation with PrunedFilteredScan {
-  import org.apache.spark.sql.Row
-  import org.apache.spark.sql.functions.col
-
-  override def sqlContext: SQLContext = sql
-
-  // memoized: the relation is pinned to an immutable version, and the
-  // evolved plan is expensive to build (manifest parse, era grouping,
-  // one SnapshotFileIndex per era with its file-status cache) — a def
-  // here repaid the full planning cost on EVERY buildScan against the
-  // catalog relation
-  private lazy val frame: DataFrame =
-    Snapshots.readIndexedEvolved(sql.sparkSession, table, Some(version))._1
-
-  // the RECORDED schema, nullable-normalized to the relation convention
-  // (see GraftMorRelation.schema for why); no frame-schema fallback —
-  // readIndexedEvolved itself refuses schema-less legacy manifests, so
-  // falling back would build the whole per-era plan just to throw from
-  // inside it with a confusing stack
-  override val schema: StructType =
-    Snapshots.properties(sql.sparkSession, table, version)
-      .get(Snapshots.SchemaProp)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType])
-      .getOrElse(throw new IllegalStateException(
-        s"GraftEvolvedRelation: version $version of $table records no " +
-          "schema (legacy manifest) — recommit or use Snapshots.read"))
-      match {
-        case st => StructType(st.fields.map(_.copy(nullable = true)))
-      }
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[org.apache.spark.sql.sources.Filter])
-      : org.apache.spark.rdd.RDD[Row] = {
-    val filtered = filters.flatMap(GraftV1Filters.translate)
-      .foldLeft(frame)((df, c) => df.filter(c))
-    filtered.select(requiredColumns.toSeq.map(col): _*).rdd
   }
 }

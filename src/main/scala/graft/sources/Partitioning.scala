@@ -446,7 +446,7 @@ object Partitioning {
     val spec = currentSpec(spark, table)
     require(spec.nonEmpty,
       s"Partitioning.rewriteLayout: $table declares no spec")
-    val df = Snapshots.readMor(spark, table)
+    val df = Snapshots.read(spark, table)
     val (_, entries) = writePartitionedBatch(df, table, spec, statsCols,
       bloomCols, strStatsCols)
     val v = Snapshots.latestVersion(spark, table)

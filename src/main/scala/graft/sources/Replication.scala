@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions.col
   * tombstone; both → [[Snapshots.upsertMor]] (the pair nets to the same
   * atomic last-write-per-key); feed-empty versions (compaction) apply
   * nothing. The target must be sync-owned: interleaving foreign commits
-  * breaks the mirror invariant (loudly, at the next readMor compare, not
+  * breaks the mirror invariant (loudly, at the next read compare, not
   * silently).
   *
   * `hook(v)` is a deterministic crash seam, called after source version

@@ -77,7 +77,12 @@ object ResultCache {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.relation match {
           case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths.map(_.toString).mkString(",")
+            h.location match {
+              // a versioned table's root is the same for every version:
+              // its exact file list keys the scan
+              case fi: SnapshotFileIndex => fi.inputFiles.mkString(",")
+              case loc => loc.rootPaths.map(_.toString).mkString(",")
+            }
           case _ => ""
         }
     }.mkString(";")

@@ -28,22 +28,27 @@ import org.apache.spark.unsafe.types.UTF8String
   * file at construction (cached — re-listing per query would be the
   * planning bottleneck the manifest exists to avoid).
   *
-  * Two forms:
-  *  - the public `(spark, table, version)` constructor indexes the WHOLE
-  *    version and refuses states a single flat relation cannot read
-  *    exactly: tombstoned versions (a tombstone read as data null-fills
-  *    the schema — use [[Snapshots.readMor]]) and rename/drop/default/
-  *    widen events with surviving pre-boundary files ([[refusalOf]] is
-  *    the shared precise test — inert events, e.g. after a compaction
-  *    rewrote every old file, do NOT refuse);
-  *  - the `private[sources]` era form takes one [[Snapshots.EraGroup]]'s
-  *    entries plus that era's physical schema, and skips the era
-  *    refusals — [[Snapshots.readIndexedEvolved]] builds one per era and
-  *    unions, so an evolved 100 TB table KEEPS Catalyst data skipping.
-  *    The era projection re-shapes pushed predicates into widening casts
+  * Every read of a versioned table ([[Snapshots.read]]) scans through
+  * this index, in one of two forms:
+  *  - the WHOLE-VERSION form (`flatForm`): the public
+  *    `(spark, table, version)` constructor, and the flat routing of
+  *    [[Snapshots.read]] / [[GraftSource]]. It refuses states a single
+  *    flat relation cannot read exactly: versions with merge-on-read
+  *    masks (a mask read as data null-fills the schema) and
+  *    rename/drop/default/widen events with surviving pre-boundary
+  *    files ([[refusalOf]] is the shared precise test — inert events,
+  *    e.g. after a compaction rewrote every old file, do NOT refuse);
+  *  - the SLICE form (`eraSlice`, `private[sources]`): one group of
+  *    [[Snapshots.read]]'s grouped plan — the entries of one
+  *    [[Snapshots.EraGroup]] that the same masks apply to, plus that
+  *    era's physical schema — skipping the refusals. The reader unions
+  *    the slices, subtracting each slice's masks above its scan, so an
+  *    evolved or masked 100 TB table KEEPS Catalyst data skipping. The
+  *    era projection re-shapes pushed predicates into widening casts
   *    (`cast(old as long) > 5`) and default coalesces
   *    (`coalesce(c, lit) = 7`); [[mayMatch]] understands both, so
-  *    pruning survives the projection.
+  *    pruning survives the projection. A slice never answers
+  *    `flatForm`.
   */
 final class SnapshotFileIndex private[sources] (spark: SparkSession,
     val table: String, val version: Int,
@@ -73,16 +78,18 @@ final class SnapshotFileIndex private[sources] (spark: SparkSession,
       .filter(SnapshotFileIndex.segmentPlannable)
 
   /** True only for whole-version forms — shapes whose `entries` are
-    * exactly the version's manifest: the public constructor and
-    * [[GraftSource]]'s flat routing (which pre-parses the manifest and
-    * passes it through as an override, so `entriesOverride.isEmpty` is
-    * NOT the test). The era form and [[SnapshotFileIndex.prunedCopy]]
-    * slices answer false; optimizer rules that reason from "entries =
-    * the whole version" (the dim-prune rule gates on it — doubling as
-    * its fixed-point idempotence guard) must check this. Era slices
-    * additionally answer `eraSlice = true` — the dim-prune rule's
-    * evolved tier prunes THOSE through their era projection, and the
-    * pruned copies answer false again, preserving the fixed point.
+    * exactly the version's manifest: the public constructor and the
+    * flat routing of [[Snapshots.read]] / [[GraftSource]] (which
+    * pre-parses the manifest and passes it through as an override, so
+    * `entriesOverride.isEmpty` is NOT the test). Slices — the grouped
+    * read's, [[Snapshots.readBucketed]]'s and
+    * [[SnapshotFileIndex.prunedCopy]]'s — answer false; optimizer rules
+    * that reason from "entries = the whole version" (the dim-prune rule
+    * gates on it — doubling as its fixed-point idempotence guard) must
+    * check this. The grouped read's slices additionally answer
+    * `eraSlice = true` — the dim-prune rule's evolved tier prunes THOSE
+    * through their era projection, and the pruned copies answer false
+    * again, preserving the fixed point.
     */
   private[graft] def flatForm: Boolean = wholeVersion
 
@@ -121,15 +128,9 @@ final class SnapshotFileIndex private[sources] (spark: SparkSession,
     * first merge flipped it. The era form reads in its era's physical
     * (name, type) shape instead.
     */
-  val dataSchema: StructType = schemaOverride.getOrElse(
-    props.get(Snapshots.SchemaProp) match {
-      case Some(json) =>
-        val st = DataType.fromJson(json).asInstanceOf[StructType]
-        StructType(st.fields.map(_.copy(nullable = true)))
-      case None => throw new IllegalStateException(
-        s"SnapshotFileIndex: version $version of $table records no schema " +
-          "(legacy manifest) — recommit or use Snapshots.read")
-    })
+  val dataSchema: StructType = schemaOverride.getOrElse(StructType(
+    SnapshotFileIndex.recordedSchema(table, version, props)
+      .fields.map(_.copy(nullable = true))))
 
   private val rootPath = {
     val p = new Path(table)
@@ -546,6 +547,38 @@ final class SnapshotFileIndex private[sources] (spark: SparkSession,
 
 object SnapshotFileIndex {
 
+  /** The schema `props` record for `version` — the committing writer's
+    * truth, which every read applies. A manifest from before schema
+    * recording is refused: footer inference would silently widen types.
+    */
+  private[graft] def recordedSchema(table: String, version: Int,
+      props: Map[String, String]): StructType =
+    props.get(Snapshots.SchemaProp) match {
+      case Some(json) => DataType.fromJson(json).asInstanceOf[StructType]
+      case None => throw new IllegalStateException(
+        s"SnapshotFileIndex: version $version of $table records no schema " +
+          "(legacy manifest) — recommit it")
+    }
+
+  /** Every [[SnapshotFileIndex]] `plan` scans, in plan order — how a
+    * caller finds a frame's index slices (and their file cuts) from the
+    * plan itself, with no handle returned by the reader.
+    */
+  private[graft] def indexesOf(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Seq[SnapshotFileIndex] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    plan.collect {
+      case lr: LogicalRelation => lr.relation match {
+        case h: HadoopFsRelation => h.location match {
+          case fi: SnapshotFileIndex => Some(fi)
+          case _ => None
+        }
+        case _ => None
+      }
+    }.flatten
+  }
+
   /** A file-pruned copy of a FLAT index — the rewrite target of the
     * automatic dim-driven prune rule ([[graft.plans.DimFilePruneRule]]):
     * same table/version/schema, entries restricted to `kept`. Built
@@ -630,7 +663,7 @@ object SnapshotFileIndex {
     * without parsing per-file entries: a recorded ZERO mask count,
     * per-segment byte totals, the schema, and NO evolution events (era
     * refusals need per-file sequence numbers the rollups don't carry).
-    * Shared with [[GraftSource]]'s relation routing, which must make
+    * Shared with [[Snapshots.flatIndexOr]]'s routing, which must make
     * the same call without opening the flat manifest.
     */
   private[sources] def segmentPlannable(ix: Snapshots.SegIndex): Boolean =
@@ -643,8 +676,8 @@ object SnapshotFileIndex {
 
   /** Why a single FLAT relation cannot read this version exactly, or
     * None when it can — the PRECISE refusal test shared by the class
-    * constructor and [[GraftSource]]'s relation routing (which must
-    * decide MOR/evolved/flat without exception-driven control flow).
+    * constructor and [[Snapshots.flatIndexOr]]'s routing (which must
+    * decide flat/grouped without exception-driven control flow).
     * Evolution events are inherited forever, but once compaction
     * rewrites every pre-event file the events are inert and the flat
     * fast path is exact again.
@@ -656,24 +689,22 @@ object SnapshotFileIndex {
       boundaries.exists(b => entries.exists(_.seq <= b))
     if (entries.exists(e => Snapshots.isMask(e.path)))
       Some(s"SnapshotFileIndex: version $version of $table carries " +
-        "merge-on-read deletes — use Snapshots.readMor (or compactMor " +
-        "first)")
+        "merge-on-read deletes — read it with Snapshots.read (or " +
+        "compactMor first)")
     else if (anyPreEventFile(
         (Snapshots.renameEvents(props) ++ Snapshots.dropEvents(props))
           .map(_.boundary)))
       Some(s"SnapshotFileIndex: $table has files from before a " +
-        "rename/drop — era-mapped reads need Snapshots.read / " +
-        "readIndexedEvolved (or compact to materialize)")
+        "rename/drop — era-mapped reads need Snapshots.read (or " +
+        "compact to materialize)")
     else if (anyPreEventFile(Snapshots.defaultEvents(props).map(_.boundary)))
       Some(s"SnapshotFileIndex: $table has files from before an " +
         "add-column default — a flat relation would read them as NULL; " +
-        "use Snapshots.read / readIndexedEvolved (or compact to " +
-        "materialize)")
+        "use Snapshots.read (or compact to materialize)")
     else if (Snapshots.widenEvents(props)
         .exists(w => entries.exists(e => e.seq <= w.boundary)))
       Some(s"SnapshotFileIndex: $table has files narrower than a type " +
-        "widening — use Snapshots.read / readIndexedEvolved (or compact " +
-        "to materialize)")
+        "widening — use Snapshots.read (or compact to materialize)")
     else None
   }
 }

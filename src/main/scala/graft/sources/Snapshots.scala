@@ -78,7 +78,7 @@ object Snapshots {
   /** Manifest property holding the table's cumulative COLUMN RENAME
     * history: comma-joined events `P:old>new`, where P is the version
     * whose files still carry `old` (the rename commit's parent) —
-    * inherited by every child commit like constraints. [[readFiles]]
+    * inherited by every child commit like constraints. [[read]]
     * maps each data file's era names (by its data sequence number) to
     * the current ones, so a rename never rewrites a byte.
     */
@@ -476,7 +476,7 @@ object Snapshots {
       c == '='), s"bad constraint name '$name'")
     val v = latestVersion(spark, table)
     require(v > 0, s"Snapshots.addCheck: $table has no committed version")
-    violationsOf(readMor(spark, table, Some(v)), Map(name -> predicate))
+    violationsOf(read(spark, table, Some(v)), Map(name -> predicate))
       .foreach { case (n, p, cnt) =>
         sys.error(s"Snapshots.addCheck: existing rows violate '$n' ($p): " +
           s"$cnt row(s) — clean the data first")
@@ -613,10 +613,8 @@ object Snapshots {
     val v = latestVersion(spark, table)
     require(v > 0, s"Snapshots.addUnique: $table has no committed version")
     val tag = keyCols.mkString(",")
-    val schema = this.properties(spark, table, v).get(SchemaProp)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse(readMor(spark, table, Some(v)).schema)
+    val schema = SnapshotFileIndex.recordedSchema(table, v,
+      this.properties(spark, table, v))
     keyCols.foreach { k =>
       val f = schema.fields.find(_.name == k).getOrElse(sys.error(
         s"Snapshots.addUnique: no column '$k' in $table"))
@@ -625,7 +623,7 @@ object Snapshots {
         s"Snapshots.addUnique: UNIQUE keys must be integral or string; " +
           s"'$k' is ${f.dataType.simpleString}")
     }
-    val cur = readMor(spark, table, Some(v))
+    val cur = read(spark, table, Some(v))
       .filter(keyCols.map(c(_).isNotNull).reduce(_ && _))
     val dup = cur.groupBy(keyCols.map(c): _*).agg(cnt(l(1)).as("n"))
       .filter(c("n") > 1).limit(1).count()
@@ -718,10 +716,8 @@ object Snapshots {
       s"Snapshots.addForeignKey: parent $parentTable has no committed version")
     def typeOf(t: String, ver: Int, name: String)
         : org.apache.spark.sql.types.DataType = {
-      val schema = this.properties(spark, t, ver).get(SchemaProp)
-        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        .getOrElse(readMor(spark, t, Some(ver)).schema)
+      val schema = SnapshotFileIndex.recordedSchema(t, ver,
+        properties(spark, t, ver))
       schema.fields.find(_.name == name).getOrElse(sys.error(
         s"Snapshots.addForeignKey: no column '$name' in $t")).dataType
     }
@@ -733,7 +729,7 @@ object Snapshots {
       s"Snapshots.addForeignKey: '$col' (${cdt.simpleString}) and " +
         s"'$parentCol' (${pdt.simpleString}) must both be integral or " +
         "both string")
-    val existing = readMor(spark, table, Some(v))
+    val existing = read(spark, table, Some(v))
       .select(c(col)).filter(c(col).isNotNull).distinct()
     val orphans = missingRefs(spark, existing, col, parentTable, parentCol)
     require(orphans.isEmpty, s"Snapshots.addForeignKey: existing rows " +
@@ -776,7 +772,7 @@ object Snapshots {
       : Seq[(String, Seq[Any])] = {
     import org.apache.spark.sql.functions.{col => c}
     foreignKeys(spark, table).flatMap { case (col, pTable, pCol) =>
-      val vals = readMor(spark, table)
+      val vals = read(spark, table)
         .select(c(col)).filter(c(col).isNotNull).distinct()
       val missing = missingRefs(spark, vals, col, pTable, pCol)
       if (missing.isEmpty) None else Some((col, missing))
@@ -835,7 +831,7 @@ object Snapshots {
     }
     if (candidates.isEmpty) // provably no parent row in the probe's range
       return vals.limit(5).collect().map(_.get(0)).toSeq
-    val visible = readMorEntries(spark, pTable, pv, candidates, del)
+    val visible = readEntries(spark, pTable, pv, candidates, del)
       .select((if (integral) c(pCol).cast("long") else c(pCol)).as(col))
     probe.join(visible, Seq(col), "left_anti")
       .limit(5).collect().map(_.get(0)).toSeq
@@ -904,7 +900,7 @@ object Snapshots {
               }
             }
             if (candidates.nonEmpty) {
-              val visible = readMorEntries(spark, table, v, candidates, del)
+              val visible = readEntries(spark, table, v, candidates, del)
               val batchKeys = nonNull.select(ks.map(c): _*).distinct()
               val clash = visible.join(batchKeys, ks, "left_semi")
                 .limit(1).count()
@@ -1143,7 +1139,7 @@ object Snapshots {
           }
         }
         if (candidates.nonEmpty) {
-          val visible = readMorEntries(spark, table, v, candidates,
+          val visible = readEntries(spark, table, v, candidates,
             Seq.empty)
           val clash = visible.join(nonNull.select(ks.map(c): _*).distinct(),
             ks, "left_semi").limit(1).count()
@@ -1277,7 +1273,7 @@ object Snapshots {
     * pre-rename file instead). The commit is metadata-only: it carries
     * the parent's files, records the renamed schema, and appends a
     * rename EVENT (`parentVersion:old>new`) to the inherited
-    * [[RenamesProp]]; [[readFiles]] reads each file with its ERA's
+    * [[RenamesProp]]; [[read]] reads each file with its ERA's
     * names (decided by the file's data sequence number vs the event
     * boundary) and aliases to the current ones, so old and new files
     * union correctly at any version, and time travel to a pre-rename
@@ -1364,7 +1360,7 @@ object Snapshots {
     * compose. The dropped name is retired permanently ([[DroppedProp]]).
     * Refused while merge-on-read tombstones exist (the tombstone key
     * column is resolved by name at read time — dropping it would break
-    * every later readMor; same rule as [[renameColumn]]) and while a
+    * every later read; same rule as [[renameColumn]]) and while a
     * CHECK or UNIQUE constraint references the column (the inherited
     * constraint would poison every future write).
     */
@@ -1389,7 +1385,7 @@ object Snapshots {
       schema.fields.filterNot(_.name == name))
     // retire EVERY era name the column ever carried, not just the current
     // one: after rename(a->b) + drop(b), re-adding a column named 'a'
-    // would otherwise pass the retired-name check while readFiles' era
+    // would otherwise pass the retired-name check while read's era
     // mapping resurrects pre-rename files' physical 'a' values into it —
     // exactly the value-resurrection DroppedProp exists to prevent.
     // Walk the rename history newest-first, chasing the name backwards.
@@ -1700,7 +1696,7 @@ object Snapshots {
     val touched = touchedE.map(_._1); val carried = carriedE.map(_._1)
     val base =
       if (touched.isEmpty) read(spark, table, Some(v)).limit(0)
-      else readFiles(spark, table, v, touched)
+      else readEntries(spark, table, v, touched, Nil)
     val survivors = base.join(keysDf.distinct(),
       c(keyCol) === c("_merge_key"), "left_anti")
     enforceChecks(spark, table, upserts)
@@ -1796,7 +1792,7 @@ object Snapshots {
     */
   def readBucketed(spark: SparkSession, table: String,
       version: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     import org.apache.spark.sql.catalyst.catalog.BucketSpec
     val v = version.getOrElse(latestVersion(spark, table))
@@ -1809,12 +1805,14 @@ object Snapshots {
       s"Snapshots.readBucketed: ${e.path} carries no bucket file tag — " +
         s"$table v$v was not written by the bucketed writer")))
     val oneFilePerBucket = ids.distinct.size == ids.size
-    val (fs, root) = fsOf(spark, table)
-    val files = entries.map(e => fs.makeQualified(new Path(root, e.path)))
     val schema = org.apache.spark.sql.types.DataType
       .fromJson(properties(spark, table, v)(SchemaProp))
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val index = new InMemoryFileIndex(spark, files, Map.empty, Some(schema))
+    // the manifest's exact file list, so pushed filters skip files from
+    // manifest evidence here too; the scan groups the kept files into
+    // buckets by the id in their names, as for any bucketed relation
+    val index = new SnapshotFileIndex(spark, table, v, Some(entries),
+      Some(schema))
     val rel = HadoopFsRelation(index,
       partitionSchema = org.apache.spark.sql.types.StructType(Nil),
       dataSchema = schema,
@@ -1905,49 +1903,81 @@ object Snapshots {
     sys.error("unreachable")
   }
 
-  /** Read the table at `version` (default: latest), with the version's
-    * RECORDED schema applied to every file: after an add-column commit,
-    * files written before the column existed read null-filled, and time
-    * travel to a pre-evolution version reads that version's own narrower
-    * schema (per-version schema, the add-column half of schema
-    * evolution; the committing writer's schema wins for its version).
+  /** Read the table at `version` (default: latest) — the ONE reader of
+    * a versioned table. Every data file scans through a
+    * [[SnapshotFileIndex]], so any `.filter`/`WHERE` downstream skips
+    * files from manifest evidence. The version's RECORDED schema applies
+    * to every file: after an add-column commit, files written before the
+    * column existed read null-filled (or as the column's default), and
+    * time travel to a pre-evolution version reads that version's own
+    * schema. A version one flat relation reads exactly plans as the
+    * single whole-version index ([[readIndexed]]'s plan); any other
+    * version — rename/widen/default eras with surviving pre-event files,
+    * or merge-on-read masks — plans through [[readEntries]]: one index
+    * slice per (schema era, applicable masks) group, masks subtracted by
+    * anti-joins above each slice. A schema-less (legacy) manifest is
+    * refused.
     */
   def read(spark: SparkSession, table: String, version: Option[Int] = None)
       : DataFrame = {
     val v = version.getOrElse(latestVersion(spark, table))
-    val files = manifest(spark, table, v)
-    require(files.nonEmpty, s"Snapshots: version $v of $table is empty")
-    readFiles(spark, table, v, files)
+    flatIndexOr(spark, table, v) match {
+      case Left(index) => frameOf(spark, index)
+      case Right(entries) =>
+        val (masks, data) = entries.partition(e => isMask(e.path))
+        readEntries(spark, table, v, data, masks)
+    }
   }
 
-  /** Read through a [[SnapshotFileIndex]]: a relation whose file listing
-    * is the manifest and whose per-file skip decisions are made by
-    * CATALYST'S OWN pushdown — any `.filter`/`WHERE` downstream prunes
-    * files from manifest envelopes/blooms automatically, with the cut
-    * visible in the scan's `numFiles` metric. Returns the index alongside
-    * the frame so callers can observe `lastPrune`. See the class doc for
-    * what the indexed path refuses (tombstones, renamed/dropped eras).
+  /** The single whole-version [[SnapshotFileIndex]] of `v` when ONE flat
+    * relation reads it exactly (Left) — a segment-plannable header
+    * proves mask- and era-freedom without opening the flat manifest —
+    * else the parsed manifest entries [[readEntries]] groups (Right).
+    * Shared by [[read]] and [[GraftSource]]'s relation routing, so the
+    * two can never disagree on which versions take the flat plan.
+    */
+  private[sources] def flatIndexOr(spark: SparkSession, table: String,
+      v: Int): Either[SnapshotFileIndex, Seq[FileEntry]] =
+    if (segmentIndexFor(spark, table, v)
+        .exists(SnapshotFileIndex.segmentPlannable))
+      Left(new SnapshotFileIndex(spark, table, v))
+    else {
+      val (fs, root) = fsOf(spark, table)
+      val m = committedManifestOpt(fs, root, v).getOrElse(
+        sys.error(s"Snapshots: no committed version $v at $table"))
+      require(m.files.exists(e => !isMask(e.path)),
+        s"Snapshots: version $v of $table is empty")
+      // the already-parsed entries pass through: the routing decision
+      // and the index must not each pay an O(files) parse
+      if (SnapshotFileIndex.refusalOf(table, v, m.files, m.props).isEmpty)
+        Left(new SnapshotFileIndex(spark, table, v, Some(m.files), None,
+          wholeVersion = true))
+      else Right(m.files)
+    }
+
+  /** Read through the single whole-version [[SnapshotFileIndex]],
+    * returned alongside the frame so callers can observe `lastPrune`.
+    * Refuses what one flat relation cannot read exactly (masks,
+    * renamed/dropped/defaulted/widened eras — see the class doc);
+    * [[read]] reads every version.
     */
   def readIndexed(spark: SparkSession, table: String,
       version: Option[Int] = None): (DataFrame, SnapshotFileIndex) = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val v = version.getOrElse(latestVersion(spark, table))
     val index = new SnapshotFileIndex(spark, table, v)
-    val rel = HadoopFsRelation(index, new org.apache.spark.sql.types.StructType(),
-      index.dataSchema, None, new ParquetFileFormat, Map.empty)(spark)
-    (org.apache.spark.sql.GraftBridge.dataFrame(spark,
-      LogicalRelation(rel, isStreaming = false)), index)
+    (frameOf(spark, index), index)
   }
 
-  /** Scan `entries` applying `version`'s recorded schema (see [[read]]).
-    * Manifests from before schema recording fall back to parquet
-    * footer inference.
-    */
-  private def readFiles(spark: SparkSession, table: String, version: Int,
-      entries: Seq[FileEntry]): DataFrame =
-    readFilesWithProps(spark, table, version, entries,
-      properties(spark, table, version))
+  /** A frame scanning `index` as a plain (unbucketed) parquet relation. */
+  private def frameOf(spark: SparkSession, index: SnapshotFileIndex)
+      : DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val rel = HadoopFsRelation(index, new org.apache.spark.sql.types.StructType(),
+      index.dataSchema, None, new ParquetFileFormat, Map.empty)(spark)
+    org.apache.spark.sql.GraftBridge.dataFrame(spark,
+      LogicalRelation(rel, isStreaming = false))
+  }
 
   /** One schema ERA of a version's file set: files whose physical
     * (name, type) shape derives from the current recorded schema by
@@ -1968,10 +1998,7 @@ object Snapshots {
     * means the file physically stores the OLD type (the FIRST event's
     * old type, if widened twice) and reads in it, cast to current by the
     * caller; every DEFAULT whose boundary is >= s was declared after the
-    * file, whose null-fill therefore reads as the default. Shared by the
-    * plain read path ([[readFilesWithProps]]) and the Catalyst-indexed
-    * one ([[readIndexedEvolved]]) so their era semantics can never
-    * drift.
+    * file, whose null-fill therefore reads as the default.
     */
   private[sources] def eraGroupsOf(st: org.apache.spark.sql.types.StructType,
       props: Map[String, String], entries: Seq[FileEntry]): Seq[EraGroup] = {
@@ -2003,128 +2030,6 @@ object Snapshots {
       }
   }
 
-  /** Read ANY non-masked version through per-era [[SnapshotFileIndex]]es:
-    * the general form of [[readIndexed]] that a rename / type-widen /
-    * add-column-default lineage does NOT knock off the Catalyst data-
-    * skipping path. Entries are grouped into schema eras
-    * ([[eraGroupsOf]]); each era scans through its own FileIndex (so a
-    * pushed WHERE prunes that era's files from manifest evidence — the
-    * index's mayMatch understands the widening casts and default
-    * coalesces the era projection re-shapes predicates into), then the
-    * era frames re-alias/cast/default to the CURRENT schema and union.
-    * The per-era indexes return so callers can observe the file cut
-    * (sum of lastPrune). An un-evolved version yields exactly one index
-    * — the [[readIndexed]] plan.
-    */
-  def readIndexedEvolved(spark: SparkSession, table: String,
-      version: Option[Int] = None): (DataFrame, Seq[SnapshotFileIndex]) = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    import org.apache.spark.sql.functions.{col => c, coalesce}
-    val v = version.getOrElse(latestVersion(spark, table))
-    val entries = manifest(spark, table, v)
-    require(entries.nonEmpty, s"Snapshots: version $v of $table is empty")
-    require(!entries.exists(e => isMask(e.path)),
-      s"Snapshots.readIndexedEvolved: version $v of $table carries " +
-        "merge-on-read deletes — use readMor (or compactMor first)")
-    val props = properties(spark, table, v)
-    val st0 = props.get(SchemaProp)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse(throw new IllegalStateException(
-        s"Snapshots.readIndexedEvolved: version $v of $table records no " +
-          "schema (legacy manifest) — recommit or use Snapshots.read"))
-    // nullable-normalized like the flat index: file scans produce
-    // nullable output, and era unions widen nullability anyway
-    val st = org.apache.spark.sql.types.StructType(
-      st0.fields.map(_.copy(nullable = true)))
-    val framesAndIndexes = eraGroupsOf(st, props, entries).map { g =>
-      val index = new SnapshotFileIndex(spark, table, v,
-        Some(g.entries),
-        Some(org.apache.spark.sql.types.StructType(
-          g.eraSchema.fields.map(_.copy(nullable = true)))),
-        eraSlice = true)
-      val rel = HadoopFsRelation(index,
-        new org.apache.spark.sql.types.StructType(), index.dataSchema,
-        None, new ParquetFileFormat, Map.empty)(spark)
-      val df = org.apache.spark.sql.GraftBridge.dataFrame(spark,
-        LogicalRelation(rel, isStreaming = false))
-      val base = df.select(st.fields.toSeq.map(f =>
-        c(g.eraNameOf(f.name)).cast(f.dataType).as(f.name)): _*)
-      val framed = g.defaults.foldLeft(base) { (d2, d) =>
-        d2.withColumn(d.name,
-          coalesce(c(d.name), defaultLit(d).cast(st(d.name).dataType)))
-      }
-      (framed, index)
-    }
-    (framesAndIndexes.map(_._1).reduce(_.unionByName(_)),
-      framesAndIndexes.map(_._2))
-  }
-
-  /** [[readFiles]] with the version's properties supplied by the caller —
-    * the merge-on-read reader already holds them and may ask for the
-    * position-metadata columns; everything else goes through
-    * [[readFiles]].
-    */
-  private def readFilesWithProps(spark: SparkSession, table: String,
-      version: Int, entries: Seq[FileEntry],
-      props: Map[String, String], withPosMeta: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{col => c}
-    // a tombstone (equality keys or a position-delete vector) read as
-    // data would null-fill the table schema — refuse loudly instead of
-    // silently polluting the result
-    require(entries.forall(e => !isMask(e.path)),
-      s"Snapshots: version $version of $table carries merge-on-read " +
-        "deletes — read it via readMor (or materialize with compactMor)")
-    // position masking joins on the scan's own metadata columns — they
-    // ride every frame this method returns when requested
-    def withMeta(df: DataFrame): DataFrame =
-      if (!withPosMeta) df
-      else df.select(df.columns.map(c).toSeq ++ Seq(
-        c("_metadata.file_name").as(MetaFile),
-        c("_metadata.row_index").as(MetaPos)): _*)
-    // absolute entry paths come from zero-copy clones ([[cloneTable]]):
-    // they point into the SOURCE table's data dir and resolve as-is
-    def pathsOf(es: Seq[FileEntry]): Seq[String] = es.map(e =>
-      if (new Path(e.path).isAbsolute) e.path else s"$table/${e.path}")
-    props.get(SchemaProp) match {
-      case Some(json) =>
-        val st = org.apache.spark.sql.types.DataType.fromJson(json)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        require(!withPosMeta || !st.fieldNames.exists(n =>
-          n == MetaFile || n == MetaPos),
-          s"Snapshots: table $table has a column shadowing the reserved " +
-            s"position-metadata names $MetaFile/$MetaPos")
-        val events = renameEvents(props)
-        val defaults = defaultEvents(props)
-          .filter(d => st.fieldNames.contains(d.name)) // dropped: dead event
-        val widens = widenEvents(props)
-          .filter(w => st.fieldNames.contains(w.name))
-        if (events.isEmpty && defaults.isEmpty && widens.isEmpty)
-          withMeta(spark.read.schema(st).parquet(pathsOf(entries): _*))
-        else {
-          eraGroupsOf(st, props, entries).map { g =>
-            // the meta projection hangs directly off the scan, before
-            // the era-alias select — unions do not propagate metadata
-            // columns, so it cannot be deferred to the caller
-            val scan = withMeta(
-              spark.read.schema(g.eraSchema).parquet(pathsOf(g.entries): _*))
-            val metaCols =
-              if (withPosMeta) Seq(c(MetaFile), c(MetaPos)) else Seq.empty
-            val base = scan.select(st.fields.toSeq
-              .map(f => c(g.eraNameOf(f.name)).cast(f.dataType).as(f.name))
-              ++ metaCols: _*)
-            g.defaults.foldLeft(base) { (df, d) =>
-              df.withColumn(d.name,
-                org.apache.spark.sql.functions.coalesce(c(d.name),
-                  defaultLit(d).cast(st(d.name).dataType)))
-            }
-          }.reduce(_.unionByName(_))
-        }
-      case None => withMeta(spark.read.parquet(pathsOf(entries): _*))
-    }
-  }
-
   /** Read the table AS OF a wall-clock instant: the newest version whose
     * recorded commit time ([[CommitTsProp]]) is at or before `tsMillis`
     * — the "what did the dashboard show yesterday 09:00" form of time
@@ -2133,7 +2038,14 @@ object Snapshots {
     * instant. Throws if no version is old enough.
     */
   def readAsOf(spark: SparkSession, table: String, tsMillis: Long)
-      : DataFrame = {
+      : DataFrame =
+    read(spark, table, Some(versionAsOf(spark, table, tsMillis)))
+
+  /** The version [[readAsOf]] reads at `tsMillis` (see there) — shared
+    * with `format("graft")`'s `timestampAsOf` option.
+    */
+  private[graft] def versionAsOf(spark: SparkSession, table: String,
+      tsMillis: Long): Int = {
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"Snapshots.readAsOf: $table has no committed version")
     val eligible = vs.filter { v =>
@@ -2143,10 +2055,7 @@ object Snapshots {
     require(eligible.nonEmpty,
       s"Snapshots.readAsOf: no version of $table at or before $tsMillis " +
         s"(earliest commit: ${properties(spark, table, vs.head).get(CommitTsProp).getOrElse("unstamped")})")
-    // through the MOR reader: a resolved version carrying tombstones
-    // must time-travel like any other (readMor is readFiles-identical
-    // when no tombstones exist, so plain tables pay nothing)
-    readMor(spark, table, Some(eligible.max))
+    eligible.max
   }
 
   /** Rows added between two versions of an APPEND-ONLY lineage, read from
@@ -2168,8 +2077,8 @@ object Snapshots {
     require(!added.exists(e => isMask(e.path)),
       s"Snapshots.diffAdded: versions $from→$to of $table add merge-on-" +
         "read deletes — file-level diff cannot express them; use changes")
-    if (added.isEmpty) readFiles(spark, table, to, Seq(b.head)).limit(0)
-    else readFiles(spark, table, to, added)
+    if (added.isEmpty) readEntries(spark, table, to, Seq(b.head), Nil).limit(0)
+    else readEntries(spark, table, to, added, Nil)
   }
 
   // --- two-level manifests: the segment-index (manifest-list) tier --------
@@ -2561,7 +2470,7 @@ object Snapshots {
       e.rows > 0 && fileMayHoldKeys(e))
     val base =
       if (touched.isEmpty) read(spark, table, Some(v)).limit(0)
-      else readFiles(spark, table, v, touched)
+      else readEntries(spark, table, v, touched, Nil)
     val antiSide = if (!overCap) broadcast(keysDf) else keysDf
     val antiCond = keyCanon.zip(mk).map { case (k, a) => c(k) === c(a) }
       .reduce(_ && _)
@@ -2746,7 +2655,7 @@ object Snapshots {
     val strCols = all.flatMap(_.strStats.keys).distinct
       .flatMap(n => currentColName(curProps, n)).distinct.sorted
     val clusterCols = clustering(spark, table).map(_._2).getOrElse(Seq.empty)
-    val subset = readMorEntries(spark, table, cur, touched, Seq.empty)
+    val subset = readEntries(spark, table, cur, touched, Seq.empty)
     val shaped = clusteredLayout(spark, table, subset, nOut)
     val v2 = commitWith(shaped, table,
       statsCols = (statsCols ++ clusterCols).distinct,
@@ -2849,7 +2758,7 @@ object Snapshots {
     * data file — the fast-delete write path. Where [[merge]] pays
     * copy-on-write (rewrite every file that may hold an affected key —
     * at 100 TB, possibly terabytes for a thousand keys), deleteWhere
-    * writes kilobytes and commits; readers ([[readMor]]) subtract the
+    * writes kilobytes and commits; readers ([[read]]) subtract the
     * keys at scan time, and [[compactMor]] later materializes the
     * deletes back into a pure-data representation.
     *
@@ -2898,7 +2807,7 @@ object Snapshots {
     * "deleted but not yet re-inserted" state can ever be observed).
     * Cost is O(batch): no data file is rewritten — the constant-time
     * upsert path where [[merge]] pays copy-on-write and
-    * [[mergeBucketed]] pays a bucket rewrite. Read with [[readMor]];
+    * [[mergeBucketed]] pays a bucket rewrite. Read with [[read]];
     * [[compactMor]] materializes. Upserting a key twice in one batch
     * keeps both rows (same contract as [[merge]] upserts).
     */
@@ -2912,10 +2821,8 @@ object Snapshots {
     require(v > 0, s"Snapshots.upsertMor: $table has no committed version")
     require(batch.columns.contains(keyCol),
       s"Snapshots.upsertMor: batch needs a '$keyCol' column")
-    val tableCols = this.properties(spark, table, v).get(SchemaProp)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq)
-      .getOrElse(readMor(spark, table, Some(v)).columns.toSeq)
+    val tableCols = SnapshotFileIndex.recordedSchema(table, v,
+      this.properties(spark, table, v)).fieldNames.toSeq
     require(batch.columns.sorted.sameElements(tableCols.sorted),
       s"Snapshots.upsertMor: batch columns [${batch.columns.sorted.mkString(",")}] " +
         s"must match table columns [${tableCols.sorted.mkString(",")}]")
@@ -2975,7 +2882,7 @@ object Snapshots {
     val (masks, data) = all.partition(e => isMask(e.path))
     require(data.nonEmpty, s"Snapshots: version $v of $table is empty")
     requireUniqueNames(data, table, v)
-    val visible = readMorEntries(spark, table, v, data, masks,
+    val visible = readEntries(spark, table, v, data, masks,
       withPosMeta = true)
     // a zero-match delete is a NO-OP, not a commit: an empty dv- file
     // would knock the table off every metadata fast path (MetaAgg,
@@ -3057,10 +2964,9 @@ object Snapshots {
     val v = latestVersion(spark, table)
     require(v > 0, s"Snapshots.updateWhere: $table has no committed version")
     require(set.nonEmpty, "Snapshots.updateWhere: empty SET")
-    val tableCols = this.properties(spark, table, v).get(SchemaProp)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq)
-      .getOrElse(readMor(spark, table, Some(v)).columns.toSeq)
+    val recorded = SnapshotFileIndex.recordedSchema(table, v,
+      this.properties(spark, table, v))
+    val tableCols = recorded.fieldNames.toSeq
     set.foreach { case (k, _) => require(tableCols.contains(k),
       s"Snapshots.updateWhere: no column '$k' in $table") }
     uniqueKeySets(spark, table).foreach { ks =>
@@ -3073,18 +2979,11 @@ object Snapshots {
     val (masks, data) = all.partition(e => isMask(e.path))
     require(data.nonEmpty, s"Snapshots: version $v of $table is empty")
     requireUniqueNames(data, table, v)
-    val matched = readMorEntries(spark, table, v, data, masks,
+    val matched = readEntries(spark, table, v, data, masks,
       withPosMeta = true).filter(condition)
       .localCheckpoint() // one scan feeds both the DV and the new rows
     if (matched.isEmpty) return v // zero matches: no-op, not a mask commit
     planHook() // test seam: positions planned, commit not yet published
-    // the rewritten rows must keep the RECORDED types: a type-changing
-    // SET (long / 2 is a double) would otherwise write files the
-    // recorded schema can no longer read — every later read of every
-    // later version would fail after a successful commit
-    val recorded = this.properties(spark, table, v).get(SchemaProp)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
     // optional lookup enrichment (decorrelated scalar-subquery SET
     // values join per-key aggregates in): it must be ROW-PRESERVING —
     // the DV positions come from `matched`, the rewritten rows from the
@@ -3102,11 +3001,12 @@ object Snapshots {
     }
     val updated0 = set.foldLeft(enriched) { case (df, (k, col)) =>
       df.withColumn(k, col) }
-    val updated = recorded match {
-      case Some(st) => updated0.select(st.fields.toSeq.map(f =>
-        c(f.name).cast(f.dataType).as(f.name)): _*)
-      case None => updated0.select(tableCols.map(c): _*)
-    }
+    // the rewritten rows must keep the RECORDED types: a type-changing
+    // SET (long / 2 is a double) would otherwise write files the
+    // recorded schema can no longer read — every later read of every
+    // later version would fail after a successful commit
+    val updated = updated0.select(recorded.fields.toSeq.map(f =>
+      c(f.name).cast(f.dataType).as(f.name)): _*)
     enforceChecks(spark, table, updated)
     enforceForeignKeys(spark, table, updated)
     val (fs, root) = fsOf(spark, table)
@@ -3124,51 +3024,69 @@ object Snapshots {
       batchDir = Some(batchDir))
   }
 
-  /** Read a version that may carry merge-on-read tombstones: data files
-    * grouped by their data sequence number, each group anti-joined
-    * against exactly the tombstones committed AFTER it (group count ≤
-    * versions since the last compaction, so the plan stays narrow).
-    * Tombstone key sets are tiny by construction — AQE broadcasts the
-    * anti-join side — and a version with no tombstones reads with zero
-    * overhead. Deletes-of-deletes union before the join, so
-    * re-deleting is idempotent.
+  /** The grouped body of [[read]] over an explicit entry subset of
+    * version `v` — also what the internal readers scan (merge's touched
+    * files, [[diffAdded]], [[compactSmall]], [[changes]], the position
+    * scans of [[deleteVector]]/[[updateWhere]]). `data` is grouped by
+    * schema era ([[eraGroupsOf]]) and, within an era, by the `masks`
+    * committed AFTER it (a mask applies only to data with a LOWER
+    * sequence number; the group count stays ≤ the commits since the last
+    * compaction). Each group scans through its own [[SnapshotFileIndex]]
+    * slice — so pushed filters skip files from manifest evidence on a
+    * masked or evolved version too — is re-aliased/cast/defaulted to the
+    * version's CURRENT schema, and has its position deletes and equality
+    * tombstones subtracted by anti-joins on the scan's
+    * `_metadata.file_name`/`_metadata.row_index` and the tombstone key.
+    * Mask sets are kilobytes by construction (AQE broadcasts the anti
+    * side); deletes-of-deletes union before the join, so re-deleting is
+    * idempotent. `withPosMeta = true` keeps the (file name, row index)
+    * columns on the result. A mask listed in `data` is refused: the
+    * rewriting callers pass no masks and cannot carry one.
     */
-  def readMor(spark: SparkSession, table: String,
-      version: Option[Int] = None): DataFrame = {
-    val v = version.getOrElse(latestVersion(spark, table))
-    val all = manifest(spark, table, v)
-    val (masks, data) = all.partition(e => isMask(e.path))
-    require(data.nonEmpty, s"Snapshots: version $v of $table is empty")
-    readMorEntries(spark, table, v, data, masks)
-  }
-
-  /** The MOR-subtraction core of [[readMor]] over an explicit entry
-    * subset — shared with [[changes]], whose delete pre-images are the
-    * parent version's visible rows restricted to files that may hold an
-    * affected key. `masks` may mix equality tombstones and position
-    * DVs; each applies only to data files with a LOWER sequence number.
-    * `withPosMeta = true` keeps the (file name, row index) metadata
-    * columns on the result — what [[deleteVector]]/[[updateWhere]]
-    * compute their positions from.
-    */
-  private def readMorEntries(spark: SparkSession, table: String, v: Int,
+  private def readEntries(spark: SparkSession, table: String, v: Int,
       data: Seq[FileEntry], masks: Seq[FileEntry],
       withPosMeta: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col => c}
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col => c}
+    import org.apache.spark.sql.types.StructType
+    require(data.forall(e => !isMask(e.path)),
+      s"Snapshots: version $v of $table carries merge-on-read deletes " +
+        "this operation cannot rewrite — materialize them with compactMor")
+    require(data.nonEmpty, s"Snapshots: version $v of $table is empty")
     val (del, dvs) = masks.partition(e => isTombstone(e.path))
-    if (masks.isEmpty && !withPosMeta) return readFiles(spark, table, v, data)
     if (dvs.nonEmpty) requireUniqueNames(data, table, v)
     val props = properties(spark, table, v)
+    // nullable-normalized like the flat index: file scans produce
+    // nullable output, and group unions widen nullability anyway
+    val st = StructType(SnapshotFileIndex.recordedSchema(table, v, props)
+      .fields.map(_.copy(nullable = true)))
+    require(!withPosMeta || !st.fieldNames.exists(n =>
+      n == MetaFile || n == MetaPos),
+      s"Snapshots: table $table has a column shadowing the reserved " +
+        s"position-metadata names $MetaFile/$MetaPos")
     lazy val keyCol =
       spark.read.parquet(tombPaths(table, del): _*).schema.head.name
-    data.groupBy(_.seq).toSeq.sortBy(_._1).map { case (gseq, es) =>
-      val applicDel = del.filter(_.seq > gseq)
-      val applicDv = dvs.filter(_.seq > gseq)
+    val groups = eraGroupsOf(st, props, data).flatMap(g =>
+      g.entries.groupBy(e => masks.filter(_.seq > e.seq)).toSeq
+        .sortBy(_._2.map(_.seq).min).map { case (m, es) => (g, es, m) })
+    groups.map { case (g, es, applic) =>
+      val (applicDel, applicDv) = applic.partition(e => isTombstone(e.path))
       val needMeta = withPosMeta || applicDv.nonEmpty
-      var df = readFilesWithProps(spark, table, v, es, props,
-        withPosMeta = needMeta)
+      val index = new SnapshotFileIndex(spark, table, v, Some(es),
+        Some(StructType(g.eraSchema.fields.map(_.copy(nullable = true)))),
+        eraSlice = true)
+      // the position columns hang directly off the scan, before the era
+      // projection — unions do not propagate metadata columns
+      val metaCols =
+        if (!needMeta) Nil
+        else Seq(c("_metadata.file_name").as(MetaFile),
+          c("_metadata.row_index").as(MetaPos))
+      val base = frameOf(spark, index).select(st.fields.toSeq.map(f =>
+        c(g.eraNameOf(f.name)).cast(f.dataType).as(f.name)) ++ metaCols: _*)
+      var df = g.defaults.foldLeft(base) { (d2, d) =>
+        d2.withColumn(d.name,
+          coalesce(c(d.name), defaultLit(d).cast(st(d.name).dataType)))
+      }
       if (applicDv.nonEmpty) {
-        // DVs are kilobytes by construction — broadcast the anti side
         val dv = broadcast(
           spark.read.parquet(tombPaths(table, applicDv): _*).distinct())
         df = df.join(dv, df(MetaFile) === dv(DvFileCol) &&
@@ -3270,7 +3188,7 @@ object Snapshots {
         val (dvAdds, data) = rest.partition(e => isDv(e.path))
         val ins =
           if (data.isEmpty) None
-          else Some(readFiles(spark, table, v, data)
+          else Some(readEntries(spark, table, v, data, Nil)
             .withColumn("_change_type", lit("insert"))
             .withColumn("_commit_version", lit(v)))
         // position-DV deletes: pre-images are the parent's visible rows
@@ -3289,7 +3207,7 @@ object Snapshots {
               pd.filter(e => names.contains(new Path(e.path).getName))
             if (candidates.isEmpty) None
             else {
-              val visible = readMorEntries(spark, table, parentV,
+              val visible = readEntries(spark, table, parentV,
                 candidates, pmask, withPosMeta = true)
               Some(visible.join(
                   org.apache.spark.sql.functions.broadcast(dv),
@@ -3324,7 +3242,7 @@ object Snapshots {
             if (candidates.isEmpty) None
             else {
               val visible =
-                readMorEntries(spark, table, parentV, candidates, pdel)
+                readEntries(spark, table, parentV, candidates, pdel)
               val keys = spark.read.parquet(tombPaths(table, tomb): _*)
                 .distinct()
               Some(visible.join(keys,
@@ -3338,7 +3256,7 @@ object Snapshots {
     }
     if (frames.isEmpty) {
       val schema = org.apache.spark.sql.types.StructType(
-        readMor(spark, table, Some(to)).schema.fields ++ Seq(
+        read(spark, table, Some(to)).schema.fields ++ Seq(
           org.apache.spark.sql.types.StructField("_change_type",
             org.apache.spark.sql.types.StringType, nullable = false),
           org.apache.spark.sql.types.StructField("_commit_version",
@@ -3380,7 +3298,7 @@ object Snapshots {
         statsCols = statsColsM, bloomCols = bloomColsM,
         strStatsCols = strColsM)
     val clusterCols = clustering(spark, table).map(_._2).getOrElse(Seq.empty)
-    commit(clusteredLayout(spark, table, readMor(spark, table, Some(cur)),
+    commit(clusteredLayout(spark, table, read(spark, table, Some(cur)),
         nOut), table,
       overwrite = true, statsCols = (statsColsM ++ clusterCols).distinct,
       bloomCols = bloomColsM,
@@ -3530,7 +3448,7 @@ object Snapshots {
     val statsCols = entries.flatMap(_.stats.keys).distinct.sorted
     val bloomCols = entries.flatMap(_.blooms.keys).distinct.sorted
     val strCols = entries.flatMap(_.strStats.keys).distinct.sorted
-    commitWith(readFiles(spark, table, cur, small).repartition(nOut),
+    commitWith(readEntries(spark, table, cur, small, Nil).repartition(nOut),
       table, statsCols, Map(DataChangeProp -> "false"), bloomCols,
       baseFor = parent => {
         require(parent == cur, s"Snapshots.compactSmall: concurrent commit " +

@@ -72,7 +72,7 @@ object SnapshotStream {
     * micro-batch lands as ONE atomic merge-on-read upsert
     * ([[Snapshots.upsertMor]]) — older copies of the batch's keys are
     * tombstoned and the new rows appended in the same commit, so a
-    * reader ([[Snapshots.readMor]]) always sees exactly the last write
+    * reader ([[Snapshots.read]]) always sees exactly the last write
     * per key at some batch boundary, never a between-states mix. Cost
     * per batch is O(batch) — no data file rewrite, the constant-time
     * streaming-upsert shape; run [[Snapshots.compactMor]] periodically.
@@ -195,27 +195,18 @@ object SnapshotStream {
     * `enableIfAbsent`) is removed when the stream terminates; direct
     * batch callers that omit `owned` keep the registration, their
     * returned frame (and anything composed on top) optimizes lazily
-    * after this method returns. ERA-EVOLVED tables (rename/widen/default
-    * events with surviving pre-event files) route through the SAME rule
-    * via the per-era indexed read ([[Snapshots.readIndexedEvolved]]):
-    * the rule's evolved tier prunes each era branch through its own
-    * projection, so an evolved lookup table keeps the cut.
+    * after this method returns. The static side is [[Snapshots.read]],
+    * so ERA-EVOLVED tables (rename/widen/default events with surviving
+    * pre-event files) route through the SAME rule: its evolved tier
+    * prunes each era branch through its own projection, so an evolved
+    * lookup table keeps the cut. A masked version joins unpruned.
     */
   private[graft] def lookupBatch(batch: DataFrame, table: String,
       factCol: String, streamCol: String, maxKeys: Int,
       owned: Option[java.util.concurrent.atomic.AtomicBoolean] = None)
       : DataFrame = {
     val spark = batch.sparkSession
-    // flat tables take the single whole-version index; era-evolved
-    // tables take the per-era union — BOTH route through the automatic
-    // rule. MOR-masked versions refuse LOUDLY either way.
-    val (fact, fidx) =
-      try { val (f, i) = Snapshots.readIndexed(spark, table); (f, Seq(i)) }
-      catch {
-        case e: IllegalArgumentException
-            if String.valueOf(e.getMessage).contains("readIndexedEvolved") =>
-          Snapshots.readIndexedEvolved(spark, table)
-      }
+    val fact = Snapshots.read(spark, table)
     // registration is if-absent (a user's own enable() choice on
     // this table wins); if THIS call created it, report ownership so
     // lookupJoin's termination listener can remove it — the returned
@@ -229,43 +220,21 @@ object SnapshotStream {
     // force optimization NOW: the rule fires (or declines) here,
     // the optimized plan is reused when the sink executes the same
     // frame, and the cut counter is read from THIS plan (the global
-    // lastCut would race with concurrent queries). Counted over PRUNED
-    // indexes only (!flatForm && !eraSlice): an unpruned era slice is
-    // not a cut, and a no-rewrite plan reads None.
-    val prunedSizes = joined.queryExecution.optimizedPlan.collect {
-      case lr: org.apache.spark.sql.execution.datasources
-          .LogicalRelation => lr.relation match {
-        case h: org.apache.spark.sql.execution.datasources
-            .HadoopFsRelation => h.location match {
-          case fi: graft.sources.SnapshotFileIndex
-              if fi.table == fidx.head.table && !fi.flatForm &&
-                !fi.eraSlice =>
-            Some(fi.entries.size)
-          case _ => None
-        }
-        case _ => None
-      }
-    }.flatten
-    val total = fidx.map(_.entries.size).sum
+    // lastCut would race with concurrent queries). The rule swaps each
+    // index it prunes for a pruned copy (neither flatForm nor
+    // eraSlice); unpruned era branches (colAt unprovable) still count
+    // as kept, and a no-rewrite plan reads None.
+    import graft.sources.SnapshotFileIndex.indexesOf
+    val scanned = indexesOf(joined.queryExecution.optimizedPlan)
+      .filter(_.table == table)
+    val pruned = scanned.filter(fi => !fi.flatForm && !fi.eraSlice)
     lastLookupPrune =
-      if (prunedSizes.isEmpty) None
+      if (pruned.isEmpty) None
       else {
-        // unpruned era branches (colAt unprovable) still count as kept
-        val prunedTotal = prunedSizes.sum
-        val unprunedKept = joined.queryExecution.optimizedPlan.collect {
-          case lr: org.apache.spark.sql.execution.datasources
-              .LogicalRelation => lr.relation match {
-            case h: org.apache.spark.sql.execution.datasources
-                .HadoopFsRelation => h.location match {
-              case fi: graft.sources.SnapshotFileIndex
-                  if fi.table == fidx.head.table && fi.eraSlice =>
-                Some(fi.entries.size)
-              case _ => None
-            }
-            case _ => None
-          }
-        }.flatten.sum
-        val kept = prunedTotal + unprunedKept
+        val total = indexesOf(fact.queryExecution.analyzed)
+          .map(_.entries.size).sum
+        val kept = pruned.map(_.entries.size).sum +
+          scanned.filter(_.eraSlice).map(_.entries.size).sum
         Some((kept, total - kept))
       }
     joined

@@ -3,7 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.{PlanFingerprint, Session, SparkEntry}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListenerJobEnd, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -127,47 +127,34 @@ object Probe {
       taskMs: Long, inMB: Double, srMB: Double, swMB: Double, nTasks: Int)
 
   private def stages(spark: SparkSession, sfDir: String,
-      names: Seq[String]): Unit = {
-    val done = scala.collection.mutable.ArrayBuffer.empty[Stage]
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      names: Seq[String]): Unit =
+    try for (n <- names) {
+      spark.sharedState.cacheManager.clearCache()
+      spark.sparkContext.setJobDescription(s"profile: $n")
+      val ((buildMs, queryMs), events) = JobWindow.events(spark) {
+        val t0 = System.nanoTime()
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        val t1 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        ((t1 - t0) / 1e6, (System.nanoTime() - t1) / 1e6)
+      }
+      val all = events.collect { case e: SparkListenerStageCompleted =>
         val si = e.stageInfo
         val m = si.taskMetrics
         val wall = (for (a <- si.completionTime; b <- si.submissionTime)
           yield a - b).getOrElse(-1L)
-        done.synchronized {
-          done += Stage(si.stageId, si.name.takeWhile(_ != '\n').take(90),
-            wall, m.executorRunTime,
-            m.inputMetrics.bytesRead / 1e6,
-            m.shuffleReadMetrics.totalBytesRead / 1e6,
-            m.shuffleWriteMetrics.bytesWritten / 1e6, si.numTasks)
-        }
+        Stage(si.stageId, si.name.takeWhile(_ != '\n').take(90),
+          wall, m.executorRunTime,
+          m.inputMetrics.bytesRead / 1e6,
+          m.shuffleReadMetrics.totalBytesRead / 1e6,
+          m.shuffleWriteMetrics.bytesWritten / 1e6, si.numTasks)
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try for (n <- names) {
-      done.synchronized(done.clear())
-      jobs.set(0)
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.setJobDescription(s"profile: $n")
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val t1 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val t2 = System.nanoTime()
-      Thread.sleep(300) // let the listener bus drain
-      val all = done.synchronized(done.toList)
-      println(f"%n=== $n build=${(t1 - t0) / 1e6}%.0fms query=${(t2 - t1) / 1e6}%.0fms stages=${all.size} ===")
+      val jobs = events.count(_.isInstanceOf[SparkListenerJobEnd])
+      println(f"%n=== $n build=$buildMs%.0fms query=$queryMs%.0fms stages=${all.size} ===")
       println(f"${"stage"}%6s ${"wall_ms"}%8s ${"task_ms"}%8s ${"in_MB"}%8s ${"shR_MB"}%8s ${"shW_MB"}%8s ${"tasks"}%6s  name")
       for (s <- all.sortBy(-_.wallMs).take(25))
         println(f"${s.id}%6d ${s.wallMs}%8d ${s.taskMs}%8d ${s.inMB}%8.1f ${s.srMB}%8.1f ${s.swMB}%8.1f ${s.nTasks}%6d  ${s.name}")
       println(s"[profile] $n sum_stage_wall=${all.map(_.wallMs.max(0)).sum}ms " +
-        s"n_stages=${all.size} n_jobs=${jobs.get}")
-    } finally {
-      spark.sparkContext.setJobDescription(null)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
+        s"n_stages=${all.size} n_jobs=$jobs")
+    } finally spark.sparkContext.setJobDescription(null)
 }

@@ -68,7 +68,8 @@ class DimFilePruneSpec extends SparkSpec {
       tbl, statsCols = Seq("k", "g"))
     DimFilePrune.enable(spark, tbl)
     try {
-      val (fact, idxs) = Snapshots.readIndexedEvolved(spark, tbl)
+      val fact = Snapshots.read(spark, tbl)
+      val idxs = SnapshotFileIndex.indexesOf(fact.queryExecution.analyzed)
       assert(idxs.size === 2)
       // join on k: BOTH eras prune (k is a plain column in each
       // projection) — one file kept per era

@@ -177,7 +177,7 @@ class MergePropertySpec extends SparkSpec {
       }
     dml.sql(s"MERGE INTO $name t USING pmrg_s_$caseNo s ON t.k = s.k " +
       clauses.mkString(" "))
-    Snapshots.readMor(spark, tbl).collect()
+    Snapshots.read(spark, tbl).collect()
       .map(r => (r.getLong(0), (r.getLong(1), r.getString(2)))).toMap
   }
 
@@ -213,7 +213,7 @@ class MergePropertySpec extends SparkSpec {
       "ON t.k = s.k " +
       "WHEN MATCHED THEN UPDATE SET v = s.v " +
       "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)")
-    val got = Snapshots.readMor(spark, tbl).collect()
+    val got = Snapshots.read(spark, tbl).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got === Map(1L -> 10L, 2L -> 99L, 3L -> 30L), got.toString)
   }

@@ -24,6 +24,13 @@ class SnapshotMvSpec extends SparkSpec {
       .agg(count(lit(1)).as("n_orders"),
         sum(col("o_totalprice").cast("decimal(27,4)")).as("rev"))
 
+  /** Whether a physical plan scans the versioned fact itself: its
+    * reads list files through the table's SnapshotFileIndex, while the
+    * MV rollup is a plain parquet directory.
+    */
+  private def scansFact(plan: String): Boolean =
+    plan.contains("SnapshotFileIndex")
+
   private def canon(df: DataFrame): Set[(String, Long, String)] =
     df.collect().map(r =>
       (r.getString(0), r.getLong(1), r.getDecimal(2).toPlainString)).toSet
@@ -43,7 +50,7 @@ class SnapshotMvSpec extends SparkSpec {
       val plan = executedPlan(df, execute = false)
       assert(plan.contains(new java.io.File(root).getName),
         s"expected MV scan:\n$plan")
-      assert(!plan.contains("data/b"), s"fact files must be gone:\n$plan")
+      assert(!scansFact(plan), s"fact files must be gone:\n$plan")
       assert(canon(df) === expect)
     } finally MaterializedViews.clear()
   }
@@ -60,7 +67,7 @@ class SnapshotMvSpec extends SparkSpec {
       // stale v1 rollup
       val stale = userQuery(tbl)
       val stalePlan = executedPlan(stale, execute = false)
-      assert(stalePlan.contains("data/b"),
+      assert(scansFact(stalePlan),
         s"stale MV must not answer the new version:\n$stalePlan")
 
       // brutal delta-only proof: make v1's files unreadable; an
@@ -82,7 +89,7 @@ class SnapshotMvSpec extends SparkSpec {
           sum(col("o_totalprice").cast("decimal(27,4)")).as("rev")))
       val df = userQuery(tbl)
       val plan = executedPlan(df, execute = false)
-      assert(!plan.contains("data/b"), s"fact files must be gone:\n$plan")
+      assert(!scansFact(plan), s"fact files must be gone:\n$plan")
       assert(canon(df) === expect, "delta fold must equal full recompute")
     } finally MaterializedViews.clear()
   }
@@ -97,7 +104,7 @@ class SnapshotMvSpec extends SparkSpec {
       val v1 = Snapshots.read(spark, tbl, Some(1))
         .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
       val plan = executedPlan(v1, execute = false)
-      assert(plan.contains("data/b"), s"v1 must scan the fact:\n$plan")
+      assert(scansFact(plan), s"v1 must scan the fact:\n$plan")
       assert(v1.agg(sum(col("n"))).head().getLong(0) ===
         orders.filter(col("o_orderkey") <= 800).count())
     } finally MaterializedViews.clear()
@@ -117,7 +124,7 @@ class SnapshotMvSpec extends SparkSpec {
         .agg(count(lit(1)).as("n_orders"),
           sum(col("o_totalprice").cast("decimal(27,4)")).as("rev")))
       val df = userQuery(tbl)
-      assert(!executedPlan(df, execute = false).contains("data/b"))
+      assert(!scansFact(executedPlan(df, execute = false)))
       assert(canon(df) === expect)
     } finally MaterializedViews.clear()
   }
@@ -141,7 +148,7 @@ class SnapshotMvSpec extends SparkSpec {
         .select(col("o_orderstatus"), col("o_orderpriority"),
           col("n").as("n_orders"),
           col("rev").cast("decimal(38,4)").as("rev"))
-      val expect = Snapshots.readMor(spark, tbl)
+      val expect = Snapshots.read(spark, tbl)
         .groupBy(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),
           sum(col("o_totalprice").cast("decimal(27,4)"))
@@ -182,7 +189,7 @@ class SnapshotMvSpec extends SparkSpec {
       MaterializedViews.clear()
       assert(SnapshotMv.refresh(spark, mvDef(tbl, root)) === 1)
       val df = userQuery(tbl)
-      assert(!executedPlan(df, execute = false).contains("data/b"))
+      assert(!scansFact(executedPlan(df, execute = false)))
       assert(df.count() > 0)
     } finally MaterializedViews.clear()
   }

@@ -39,17 +39,17 @@ class SqlDmlSpec extends SparkSpec {
     register("dml_ins", tbl)
     dml.sql("INSERT INTO dml_ins VALUES (100, 1000), (101, 1010)")
     assert(Snapshots.latestVersion(spark, tbl) === 2)
-    assert(rows(Snapshots.readMor(spark, tbl)) ===
+    assert(rows(Snapshots.read(spark, tbl)) ===
       Set((0L, 0L), (1L, 10L), (2L, 20L), (100L, 1000L), (101L, 1010L)))
     // INSERT ... SELECT
     dml.sql("INSERT INTO dml_ins SELECT k + 200, v FROM dml_ins " +
       "WHERE k >= 100")
-    assert(rows(Snapshots.readMor(spark, tbl))
+    assert(rows(Snapshots.read(spark, tbl))
       .contains((300L, 1000L)))
     // overwrite replaces content but keeps history
     dml.sql("INSERT OVERWRITE dml_ins VALUES (7, 70)")
-    assert(rows(Snapshots.readMor(spark, tbl)) === Set((7L, 70L)))
-    assert(rows(Snapshots.readMor(spark, tbl, Some(2)))
+    assert(rows(Snapshots.read(spark, tbl)) === Set((7L, 70L)))
+    assert(rows(Snapshots.read(spark, tbl, Some(2)))
       .contains((100L, 1000L)))
   }
 
@@ -59,7 +59,7 @@ class SqlDmlSpec extends SparkSpec {
     seed(tbl)
     register("dml_del", tbl)
     dml.sql("DELETE FROM dml_del WHERE v > 50 AND k % 2 = 0")
-    assert(rows(Snapshots.readMor(spark, tbl)) ===
+    assert(rows(Snapshots.read(spark, tbl)) ===
       (0L until 10L).filterNot(k => k * 10 > 50 && k % 2 == 0)
         .map(k => (k, k * 10)).toSet)
     // the commit added only a dv- file
@@ -68,7 +68,7 @@ class SqlDmlSpec extends SparkSpec {
     assert(m.filterNot(e => m1(e.path)).forall(e => Snapshots.isDv(e.path)))
     // DELETE with no WHERE empties the table
     dml.sql("DELETE FROM dml_del")
-    assert(Snapshots.readMor(spark, tbl).count() === 0)
+    assert(Snapshots.read(spark, tbl).count() === 0)
   }
 
   test("UPDATE commits an atomic vector + rewritten rows") {
@@ -76,7 +76,7 @@ class SqlDmlSpec extends SparkSpec {
     seed(tbl)
     register("dml_upd", tbl)
     dml.sql("UPDATE dml_upd SET v = v + 1 WHERE k < 3")
-    assert(rows(Snapshots.readMor(spark, tbl)) ===
+    assert(rows(Snapshots.read(spark, tbl)) ===
       (0L until 10L).map(k => (k, if (k < 3) k * 10 + 1 else k * 10)).toSet)
     assert(Snapshots.latestVersion(spark, tbl) === 2)
   }
@@ -95,7 +95,7 @@ class SqlDmlSpec extends SparkSpec {
     dml.sql("MERGE INTO dml_mrg USING src_up ON dml_mrg.k = src_up.k " +
       "WHEN MATCHED THEN UPDATE SET * " +
       "WHEN NOT MATCHED THEN INSERT *")
-    assert(rows(Snapshots.readMor(spark, tbl)) ===
+    assert(rows(Snapshots.read(spark, tbl)) ===
       Set((0L, 0L), (1L, 10L), (2L, 20L), (3L, 999L), (4L, 40L),
         (7L, 777L)))
     // update-only: unmatched key 8 must NOT be inserted
@@ -103,21 +103,21 @@ class SqlDmlSpec extends SparkSpec {
       .createOrReplaceTempView("src_uo")
     dml.sql("MERGE INTO dml_mrg USING src_uo ON dml_mrg.k = src_uo.k " +
       "WHEN MATCHED THEN UPDATE SET *")
-    val afterUo = rows(Snapshots.readMor(spark, tbl))
+    val afterUo = rows(Snapshots.read(spark, tbl))
     assert(afterUo.contains((4L, 444L)) && !afterUo.exists(_._1 == 8L))
     // insert-only: matched key 4 must NOT be updated
     dml.createDataFrame(Seq((4L, 4444L), (9L, 99L))).toDF("k", "v")
       .createOrReplaceTempView("src_io")
     dml.sql("MERGE INTO dml_mrg USING src_io ON dml_mrg.k = src_io.k " +
       "WHEN NOT MATCHED THEN INSERT *")
-    val afterIo = rows(Snapshots.readMor(spark, tbl))
+    val afterIo = rows(Snapshots.read(spark, tbl))
     assert(afterIo.contains((4L, 444L)) && afterIo.contains((9L, 99L)))
     // matched delete
     dml.createDataFrame(Seq((0L, 0L), (1L, 0L))).toDF("k", "v")
       .createOrReplaceTempView("src_del")
     dml.sql("MERGE INTO dml_mrg USING src_del ON dml_mrg.k = src_del.k " +
       "WHEN MATCHED THEN DELETE")
-    assert(!rows(Snapshots.readMor(spark, tbl)).exists(_._1 <= 1L))
+    assert(!rows(Snapshots.read(spark, tbl)).exists(_._1 <= 1L))
   }
 
   test("guards: time-traveled relations refuse DML; constraints " +
@@ -188,7 +188,7 @@ class SqlDmlSpec extends SparkSpec {
     dml.sql(s"CREATE TABLE dml_ctas USING graft OPTIONS (path '$tbl') " +
       "AS SELECT id AS k, id * 10 AS v FROM range(5)")
     assert(Snapshots.latestVersion(spark, tbl) === 1)
-    assert(rows(Snapshots.readMor(spark, tbl)) ===
+    assert(rows(Snapshots.read(spark, tbl)) ===
       (0L until 5L).map(k => (k, k * 10)).toSet)
     assert(dml.sql("SELECT count(*) FROM dml_ctas").head().getLong(0) === 5)
   }
@@ -328,7 +328,7 @@ class SqlDmlSpec extends SparkSpec {
     // matched 5..9: 8,9 delete (t.v>=80); 7 updates (7000>6000) to
     // 7000+70; 5,6 hit NO action and stay. unmatched source 10,11
     // insert, 12 skipped. unmatched target 0,1 -> -1; 4 deleted; 2,3 stay
-    assert(rows(Snapshots.readMor(spark, tbl)) === Set(
+    assert(rows(Snapshots.read(spark, tbl)) === Set(
       (0L, -1L), (1L, -1L), (2L, 20L), (3L, 30L), (5L, 50L), (6L, 60L),
       (7L, 7070L), (10L, 10000L), (11L, 11000L)))
     // the whole cascade landed as ONE commit
@@ -339,7 +339,7 @@ class SqlDmlSpec extends SparkSpec {
     dml.sql("""MERGE INTO dml_cmrg t USING cmrg_src2 s ON t.k = s.k
       WHEN MATCHED AND s.v >= 0 THEN UPDATE SET v = 999
       WHEN MATCHED THEN DELETE""")
-    val after = rows(Snapshots.readMor(spark, tbl))
+    val after = rows(Snapshots.read(spark, tbl))
     assert(after.contains((0L, 999L)) && after.contains((1L, 999L)) &&
       after.contains((2L, 999L)))
     // SET on the merge key refuses loudly
@@ -385,7 +385,7 @@ class SqlDmlSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(parts("7") === 1L)
     assert(parts("0") === 3L) // 0,3 from the seed + the inserted 100
-    assert(rows(Snapshots.readMor(spark, tbl)).contains((101L, 7L)))
+    assert(rows(Snapshots.read(spark, tbl)).contains((101L, 7L)))
     // INSERT OVERWRITE replaces content and stays partition-laid-out
     dml.sql("INSERT OVERWRITE dml_ptins VALUES (1, 5)")
     val after = Partitioning.partitions(spark, tbl)
@@ -401,7 +401,7 @@ class SqlDmlSpec extends SparkSpec {
     Snapshots.commit(Seq(("01", 1L), ("1", 10L), ("apple", 3L))
       .toDF("k", "v"), tbl, strStatsCols = Seq("k"))
     register("dml_strk", tbl)
-    def content: Map[String, Long] = Snapshots.readMor(spark, tbl)
+    def content: Map[String, Long] = Snapshots.read(spark, tbl)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     dml.sql("CREATE OR REPLACE TEMPORARY VIEW dml_strk_src AS " +
       "SELECT k, CAST(v AS BIGINT) v FROM VALUES ('1', 100), ('pear', 7) " +
@@ -426,24 +426,24 @@ class SqlDmlSpec extends SparkSpec {
     dml.sql("CREATE OR REPLACE TEMPORARY VIEW dml_sub_bad AS " +
       "SELECT CAST(k AS BIGINT) k FROM VALUES (2), (5) AS x(k)")
     dml.sql("DELETE FROM dml_sub WHERE k IN (SELECT k FROM dml_sub_bad)")
-    assert(rows(Snapshots.readMor(spark, tbl)).map(_._1) ===
+    assert(rows(Snapshots.read(spark, tbl)).map(_._1) ===
       Set(0L, 1L, 3L, 4L, 6L, 7L, 8L, 9L))
     dml.sql("UPDATE dml_sub SET v = 0 " +
       "WHERE k IN (SELECT k + 1 FROM dml_sub_bad)")
-    assert(rows(Snapshots.readMor(spark, tbl))
+    assert(rows(Snapshots.read(spark, tbl))
       .filter(_._2 == 0L).map(_._1) === Set(0L, 3L, 6L)) // 0: seed v=0
     // correlated EXISTS DECORRELATES into the uncorrelated IN it
     // denotes — the common CDC DELETE shape works end-to-end, including
     // an outer-side expression (`b.k = t.k + 1` ⇒ keys where k+1 is bad)
     dml.sql("DELETE FROM dml_sub WHERE EXISTS " +
       "(SELECT 1 FROM dml_sub_bad b WHERE b.k = dml_sub.k + 1)")
-    assert(rows(Snapshots.readMor(spark, tbl)).map(_._1) ===
+    assert(rows(Snapshots.read(spark, tbl)).map(_._1) ===
       Set(0L, 3L, 6L, 7L, 8L, 9L)) // 1 and 4 gone (1+1=2, 4+1=5)
     dml.sql("UPDATE dml_sub SET v = 77 WHERE EXISTS " +
       "(SELECT 1 FROM dml_sub_bad b WHERE b.k = dml_sub.k)")
     // both bad keys (2, 5) were deleted by the first statement — the
     // correlated UPDATE matches nothing and must be a clean no-op
-    assert(rows(Snapshots.readMor(spark, tbl))
+    assert(rows(Snapshots.read(spark, tbl))
       .filter(_._2 == 77L).map(_._1) === Set.empty[Long])
   }
 
@@ -462,7 +462,7 @@ class SqlDmlSpec extends SparkSpec {
       "SELECT CAST(k AS BIGINT) k, CAST(g AS BIGINT) g FROM VALUES " +
       "(2, 1), (9, 1), (NULL, 1), (3, 2) AS x(k, g)")
     def content: Set[(Option[Long], Long)] =
-      Snapshots.readMor(spark, tbl).collect().map(r =>
+      Snapshots.read(spark, tbl).collect().map(r =>
         (if (r.isNullAt(0)) None else Some(r.getLong(0)),
           r.getLong(1))).toSet
     // NOT EXISTS: the null-key target row has no match ⇒ KEPT, and the
@@ -523,7 +523,7 @@ class SqlDmlSpec extends SparkSpec {
       "SELECT CAST(k AS BIGINT) k, CAST(x AS BIGINT) x FROM VALUES " +
       "(1, 5), (1, 7), (3, 100), (NULL, 9) AS s(k, x)")
     def content: Set[(Option[Long], Option[Long])] =
-      Snapshots.readMor(spark, tbl).collect().map(r =>
+      Snapshots.read(spark, tbl).collect().map(r =>
         (if (r.isNullAt(0)) None else Some(r.getLong(0)),
           if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSet
     // COUNT: the classic decorrelation bug — unmatched keys (k=2) and
@@ -579,7 +579,7 @@ class SqlDmlSpec extends SparkSpec {
       WHEN MATCHED THEN UPDATE SET v = s.v
       WHEN NOT MATCHED AND NOT EXISTS (
         SELECT 1 FROM dml_mcorr_block b WHERE b.k = s.k) THEN INSERT *""")
-    val got = Snapshots.readMor(spark, tbl).collect()
+    val got = Snapshots.read(spark, tbl).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // 1 updated, 2 deleted (blocklisted), 3/4 untouched, 9 inserted
     assert(got === Set((1L, 100L), (3L, 30L), (4L, 40L), (9L, 900L)),
@@ -617,7 +617,7 @@ class SqlDmlSpec extends SparkSpec {
     dml.sql("MERGE WITH SCHEMA EVOLUTION INTO dml_evo t " +
       "USING dml_evo_src s ON t.k = s.k " +
       "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
-    val got = Snapshots.readMor(spark, tbl).collect()
+    val got = Snapshots.read(spark, tbl).collect()
       .map(r => (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) null else r.getString(2))).toSet
     assert(got === Set((1L, 10L, null), (2L, 200L, "b"), (9L, 900L, "i")))
@@ -641,7 +641,7 @@ class SqlDmlSpec extends SparkSpec {
       "WHEN MATCHED THEN UPDATE SET v = t.v + s.v " +
       "WHEN NOT MATCHED THEN INSERT * " +
       "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET v = 0")
-    val got2 = Snapshots.readMor(spark, tbl2).collect()
+    val got2 = Snapshots.read(spark, tbl2).collect()
       .map(r => (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) null else java.lang.Long.valueOf(r.getLong(2))))
       .toSet
@@ -655,7 +655,7 @@ class SqlDmlSpec extends SparkSpec {
       "USING (SELECT CAST(5 AS BIGINT) k, CAST(50 AS BIGINT) v, " +
       "CAST(55 AS BIGINT) u) s ON t.k = s.k " +
       "WHEN NOT MATCHED THEN INSERT *")
-    assert(Snapshots.readMor(spark, tbl2).count() === 5)
+    assert(Snapshots.read(spark, tbl2).count() === 5)
 
     // a REFUSED evolution merge leaves the table untouched — SCHEMA
     // included: the cardinality guard fires before the addColumn commits
@@ -695,7 +695,7 @@ class SqlDmlSpec extends SparkSpec {
     dml.sql("MERGE WITH SCHEMA EVOLUTION INTO dml_wid t " +
       "USING dml_wid_src s ON t.k = s.k " +
       "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
-    val latest = Snapshots.readMor(spark, tbl)
+    val latest = Snapshots.read(spark, tbl)
     assert(latest.schema("v").dataType ===
       org.apache.spark.sql.types.LongType)
     assert(latest.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -718,7 +718,7 @@ class SqlDmlSpec extends SparkSpec {
       "USING dml_wid2_src s ON t.k = s.k " +
       "WHEN MATCHED AND s.w > 1 THEN UPDATE SET * " +
       "WHEN NOT MATCHED THEN INSERT *")
-    val l2 = Snapshots.readMor(spark, tbl2)
+    val l2 = Snapshots.read(spark, tbl2)
     assert(l2.schema("w").dataType ===
       org.apache.spark.sql.types.DoubleType)
     val got2 = l2.collect().map(r => (r.getLong(0), r.getDouble(1),
@@ -790,12 +790,12 @@ class SqlDmlSpec extends SparkSpec {
     assert(parts("7") === 1L, parts.toString)
     assert(parts.values.sum === 7L, parts.toString)
     // and the rows themselves are exactly the merge's result
-    val got = Snapshots.readMor(spark, tbl).collect()
+    val got = Snapshots.read(spark, tbl).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got === Map(0L -> 0L, 1L -> 9L, 2L -> 2L, 3L -> 0L,
       4L -> 1L, 5L -> 2L, 100L -> 7L))
     // raw-column pruning still works through the auto evidence
-    assert(Snapshots.readMor(spark, tbl).filter(col("g") === 9).count() === 1)
+    assert(Snapshots.read(spark, tbl).filter(col("g") === 9).count() === 1)
   }
 
   test("composite-key MERGE: ON k1 AND k2 matches tuples on the simple " +
@@ -807,7 +807,7 @@ class SqlDmlSpec extends SparkSpec {
       Seq((1L, 1, 10L), (1L, 2, 20L), (2L, 1, 30L)).toDF("g", "i", "v"),
       tbl, statsCols = Seq("g"))
     register("dml_comp", tbl)
-    def content: Map[(Long, Int), Long] = Snapshots.readMor(spark, tbl)
+    def content: Map[(Long, Int), Long] = Snapshots.read(spark, tbl)
       .collect().map(r => ((r.getLong(0), r.getInt(1)), r.getLong(2))).toMap
     dml.sql("CREATE OR REPLACE TEMPORARY VIEW dml_comp_src AS " +
       "SELECT CAST(g AS BIGINT) g, CAST(i AS INT) i, CAST(v AS BIGINT) v " +
@@ -884,13 +884,13 @@ class SqlDmlSpec extends SparkSpec {
     assert(e2.getMessage.contains("attempted to modify"), e2.getMessage)
     // nothing committed by the refused statements
     assert(Snapshots.latestVersion(spark, tbl) === 1)
-    assert(rows(Snapshots.readMor(spark, tbl)) ===
+    assert(rows(Snapshots.read(spark, tbl)) ===
       Set((0L, 0L), (1L, 10L), (2L, 20L)))
     // a condition that lets only ONE of the duplicates act is
     // unambiguous — allowed, and applies that row
     dml.sql("MERGE INTO dml_card t USING dml_card_dup s ON t.k = s.k " +
       "WHEN MATCHED AND s.v = 200 THEN UPDATE SET v = s.v")
-    assert(rows(Snapshots.readMor(spark, tbl)) ===
+    assert(rows(Snapshots.read(spark, tbl)) ===
       Set((0L, 0L), (1L, 200L), (2L, 20L)))
     // duplicate NOT-MATCHED keys insert BOTH rows (the standard allows
     // duplicate inserts; only matched-row modification is ambiguous)
@@ -899,14 +899,14 @@ class SqlDmlSpec extends SparkSpec {
       "(9, 900), (9, 901) AS x(k, v)")
     dml.sql("MERGE INTO dml_card t USING dml_card_ins s ON t.k = s.k " +
       "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)")
-    assert(rows(Snapshots.readMor(spark, tbl)) ===
+    assert(rows(Snapshots.read(spark, tbl)) ===
       Set((0L, 0L), (1L, 200L), (2L, 20L), (9L, 900L), (9L, 901L)))
     // an explicit full-row SET naming the key's own source value is the
     // identity, not a key change — accepted like SET *
     dml.sql("MERGE INTO dml_card t USING (SELECT CAST(2 AS BIGINT) k, " +
       "CAST(222 AS BIGINT) v) s ON t.k = s.k " +
       "WHEN MATCHED THEN UPDATE SET k = s.k, v = s.v")
-    assert(rows(Snapshots.readMor(spark, tbl)) ===
+    assert(rows(Snapshots.read(spark, tbl)) ===
       Set((0L, 0L), (1L, 200L), (2L, 222L), (9L, 900L), (9L, 901L)))
     // duplicate source keys under the lone unconditional MATCHED DELETE
     // are idempotent, not ambiguous: accepted, key 1 deleted once, in
@@ -918,7 +918,7 @@ class SqlDmlSpec extends SparkSpec {
     assert((persistedRdds -- heldBefore).isEmpty,
       "MERGE left an RDD persisted")
     assert(Snapshots.latestVersion(spark, tbl) === vBefore + 1)
-    assert(rows(Snapshots.readMor(spark, tbl)) ===
+    assert(rows(Snapshots.read(spark, tbl)) ===
       Set((0L, 0L), (2L, 222L), (9L, 900L), (9L, 901L)))
   }
 }

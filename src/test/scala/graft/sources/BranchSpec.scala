@@ -19,7 +19,7 @@ class BranchSpec extends SparkSpec {
   }
 
   private def keys(tbl: String): Seq[Long] =
-    Snapshots.readMor(spark, tbl).select("k").collect()
+    Snapshots.read(spark, tbl).select("k").collect()
       .map(_.getLong(0)).toSeq.sorted
 
   test("tags: pin, read by name, immutability, drop") {
@@ -59,7 +59,7 @@ class BranchSpec extends SparkSpec {
     assert(keys(tbl).contains(0L) && !keys(br).contains(0L))
     val applied = Branches.merge(spark, tbl, "dev", "k")
     assert(applied === Seq(2, 3, 4))
-    val merged = Snapshots.readMor(spark, tbl)
+    val merged = Snapshots.read(spark, tbl)
     assert(merged.filter(col("k") === 7L).select("v").head().getLong(0)
       === 777L)
     assert(keys(tbl) ===

@@ -41,7 +41,7 @@ class DeletionVectorSpec extends SparkSpec {
     assert(filesBefore.subsetOf(m2.map(_.path).toSet))
     val added = m2.filterNot(e => filesBefore(e.path))
     assert(added.size === 1 && Snapshots.isDv(added.head.path))
-    val got = Snapshots.readMor(spark, tbl)
+    val got = Snapshots.read(spark, tbl)
     val expect = orders.filter(!(col("o_orderstatus") === "F" &&
       col("o_totalprice") > 150000.0))
     assert(got.count() < before)
@@ -55,10 +55,10 @@ class DeletionVectorSpec extends SparkSpec {
     val tbl = freshTable("seq")
     Snapshots.commit(orders.filter(col("o_orderkey") <= 1000), tbl)
     Snapshots.deleteVector(spark, tbl, col("o_totalprice") > 0.0) // all
-    assert(Snapshots.readMor(spark, tbl).count() === 0)
+    assert(Snapshots.read(spark, tbl).count() === 0)
     val re = orders.filter(col("o_orderkey") <= 1000)
     Snapshots.commit(re, tbl)
-    assert(rows(Snapshots.readMor(spark, tbl)) === rows(re))
+    assert(rows(Snapshots.read(spark, tbl)) === rows(re))
   }
 
   test("a second vector composes; equality tombstones and vectors mix") {
@@ -72,7 +72,7 @@ class DeletionVectorSpec extends SparkSpec {
       .filter(!(col("o_totalprice") > 200000.0))
       .filter(!col("o_orderkey").between(1, 39))
       .filter(!(col("o_orderstatus") === "P"))
-    assert(rows(Snapshots.readMor(spark, tbl)) === rows(expect))
+    assert(rows(Snapshots.read(spark, tbl)) === rows(expect))
   }
 
   test("updateWhere: one atomic commit updates matching rows in place — " +
@@ -84,7 +84,7 @@ class DeletionVectorSpec extends SparkSpec {
       col("o_orderstatus") === "O",
       Seq("o_totalprice" -> col("o_totalprice") * 0.5))
     assert(v === 2)
-    val got = Snapshots.readMor(spark, tbl)
+    val got = Snapshots.read(spark, tbl)
     assert(got.count() === n)
     val expect = orders.withColumn("o_totalprice",
       when(col("o_orderstatus") === "O", col("o_totalprice") * 0.5)
@@ -150,11 +150,9 @@ class DeletionVectorSpec extends SparkSpec {
       Snapshots.readIndexed(spark, tbl)
     }
     assert(e2.getMessage.contains("merge-on-read"))
-    val e3 = intercept[IllegalArgumentException] {
-      Snapshots.read(spark, tbl) // plain read refuses toward readMor
-    }
-    assert(e3.getMessage.contains("readMor"))
-    val beforeRows = rows(Snapshots.readMor(spark, tbl))
+    // read subtracts the vector above an index slice
+    val beforeRows = rows(Snapshots.read(spark, tbl))
+    assert(beforeRows === rows(orders.filter(col("o_totalprice") <= 150000.0)))
     val v = Snapshots.compactMor(spark, tbl)
     assert(rows(Snapshots.read(spark, tbl, Some(v))) === beforeRows)
     // post-compaction, the metadata count answers again and exactly
@@ -191,7 +189,7 @@ class DeletionVectorSpec extends SparkSpec {
     // to the recorded long schema or every later read would fail
     Snapshots.updateWhere(spark, tbl, col("k") === 1L,
       Seq("n" -> (col("n") / 2)))
-    assert(Snapshots.readMor(spark, tbl).collect()
+    assert(Snapshots.read(spark, tbl).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet ===
       Set((1L, 5L), (2L, 20L)))
   }
@@ -217,7 +215,7 @@ class DeletionVectorSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("concurrent commit"))
     // the inner winner's update is visible EXACTLY once
-    val got = Snapshots.readMor(spark, tbl).filter(col("k") === 1L)
+    val got = Snapshots.read(spark, tbl).filter(col("k") === 1L)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq === Seq((1L, 200L)))
     // deleteVector pins too: even a plain append (which rewrites no
@@ -231,6 +229,6 @@ class DeletionVectorSpec extends SparkSpec {
         })
     }
     assert(e2.getMessage.contains("concurrent commit"))
-    assert(Snapshots.readMor(spark, tbl).count() === 4) // nothing deleted
+    assert(Snapshots.read(spark, tbl).count() === 4) // nothing deleted
   }
 }

@@ -13,7 +13,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   * values, duplicates, empty — presented at the recorded width and at a
   * NARROWER one), a plain `fact.join(dim, k === dk)` over an enabled
   * indexed fact must return exactly the rows of the unpruned join. The
-  * widened table reads through [[Snapshots.readIndexedEvolved]] and
+  * widened table reads through [[Snapshots.read]] and
   * drives the era-aware bloom probe (pre-widen files hashed the narrow
   * type) under the same random key sets — the class of silent row loss
   * the widen-aware probe closed. The empty-dim and over-limit edges are
@@ -103,15 +103,15 @@ class DimFilePrunePropertySpec extends SparkSpec {
     df.collect().map(_.toSeq.mkString("|")).sorted.toList
 
   /** Pruned join rows ≡ unpruned join rows. `fact` is the enabled
-    * indexed read; the unpruned side joins the plain read, which the
-    * rule never touches.
+    * indexed read; the unpruned side joins the materialized read
+    * ([[IndexedCount.unpruned]]), which the rule never touches.
     */
   private def sameJoin(tbl: String, fact: DataFrame, key: String,
       dim: DataFrame, show: String): Prop = {
     DimFilePrune.lastCut = None
     val got = rows(fact.join(dim, col(key) === col("dk")))
     if (DimFilePrune.lastCut.nonEmpty) cuts.incrementAndGet()
-    val want = rows(Snapshots.read(spark, tbl)
+    val want = rows(IndexedCount.unpruned(spark, tbl)
       .join(dim, col(key) === col("dk")))
     Prop(got == want) :| s"$show got=$got want=$want"
   }
@@ -148,7 +148,7 @@ class DimFilePrunePropertySpec extends SparkSpec {
       "through readIndexedEvolved (pre-widen blooms hashed narrow; the " +
       "era-aware probe must not lose rows)") {
     check(Prop.forAll(longKeys, Gen.oneOf(true, false)) { (keys, narrow) =>
-      soundOn(widenTbl, Snapshots.readIndexedEvolved(spark, widenTbl)._1,
+      soundOn(widenTbl, Snapshots.read(spark, widenTbl),
         keys, narrow)
     }, minSuccessful = 60)
     checkFired()

@@ -42,10 +42,10 @@ class ForeignKeySpec extends SparkSpec {
         spark.emptyDataFrame.selectExpr("CAST(1 AS BIGINT) AS id"), "id"))
     assert(e3.getMessage.contains("FOREIGN KEY"))
     // a refused write publishes nothing
-    assert(Snapshots.readMor(spark, child).count() === 4)
+    assert(Snapshots.read(spark, child).count() === 4)
     // upserting a VALID value works
     Snapshots.upsertMor(spark, child, Seq((100L, 20L)).toDF("id", "fk"), "id")
-    assert(Snapshots.readMor(spark, child)
+    assert(Snapshots.read(spark, child)
       .filter(col("id") === 100L).head().getLong(1) === 20L)
   }
 

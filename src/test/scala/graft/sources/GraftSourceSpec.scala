@@ -132,7 +132,7 @@ class GraftSourceSpec extends SparkSpec {
       in.addData((1L, 3L)) // key 1 changes: 5 → 8; key 2 untouched
       q.processAllAvailable()
     } finally q.stop()
-    def state(): Map[Long, Long] = Snapshots.readMor(spark, dst)
+    def state(): Map[Long, Long] = Snapshots.read(spark, dst)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(state() === Map(1L -> 8L, 2L -> 7L))
     // restart from the checkpoint: no duplicate keys, no lost state

@@ -28,10 +28,10 @@ class MergeOnReadSpec extends SparkSpec {
     assert(data.toSet === before.toSet && tomb.size === 1)
     assert(tomb.head.stats.contains("o_orderkey"), "tombstone key envelope")
     // read applies the deletes; the pre-delete version still reads whole
-    val got = keysOf(Snapshots.readMor(spark, tbl))
+    val got = keysOf(Snapshots.read(spark, tbl))
     assert(got.intersect((1L to 50L).toSet).isEmpty)
-    assert(Snapshots.readMor(spark, tbl, Some(1)).count() === orders.count())
-    assert(Snapshots.readMor(spark, tbl).count() ===
+    assert(Snapshots.read(spark, tbl, Some(1)).count() === orders.count())
+    assert(Snapshots.read(spark, tbl).count() ===
       orders.filter(!col("o_orderkey").between(1, 50)).count())
   }
 
@@ -45,7 +45,7 @@ class MergeOnReadSpec extends SparkSpec {
     val reinsert = orders.filter(col("o_orderkey").between(1, 10))
       .withColumn("o_totalprice", lit(-1.0))
     Snapshots.commit(reinsert, tbl, statsCols = Seq("o_orderkey"))
-    val r = Snapshots.readMor(spark, tbl)
+    val r = Snapshots.read(spark, tbl)
     // old copies of 1-20 stay deleted; the NEW rows for 1-10 survive
     assert(r.filter(col("o_orderkey").between(1, 10) &&
       col("o_totalprice") =!= -1.0).count() === 0)
@@ -54,22 +54,21 @@ class MergeOnReadSpec extends SparkSpec {
     // and a delete AFTER the re-insert masks the new rows too
     Snapshots.deleteWhere(spark, tbl,
       spark.range(1, 6).select(col("id").as("o_orderkey")), "o_orderkey")
-    val r2 = Snapshots.readMor(spark, tbl)
+    val r2 = Snapshots.read(spark, tbl)
     assert(r2.filter(col("o_orderkey").between(1, 5)).count() === 0)
     assert(r2.filter(col("o_orderkey").between(6, 10) &&
       col("o_totalprice") === -1.0).count() > 0)
   }
 
-  test("plain read refuses a tombstoned version loudly") {
+  test("read subtracts a tombstoned version's deletes") {
     val tbl = freshTable("guard")
-    Snapshots.commit(orders.limit(100), tbl)
+    val base = orders.limit(100).localCheckpoint()
+    Snapshots.commit(base, tbl)
     Snapshots.deleteWhere(spark, tbl,
       spark.range(1, 5).select(col("id").as("o_orderkey")), "o_orderkey")
-    val e = intercept[IllegalArgumentException] {
-      Snapshots.read(spark, tbl).count()
-    }
-    assert(e.getMessage.contains("merge-on-read"))
-    // time travel to the pre-delete version still reads normally
+    assert(keysOf(Snapshots.read(spark, tbl)) ===
+      keysOf(base.filter(!col("o_orderkey").between(1, 4))))
+    // time travel to the pre-delete version still reads every row
     assert(Snapshots.read(spark, tbl, Some(1)).count() === 100)
   }
 
@@ -78,7 +77,7 @@ class MergeOnReadSpec extends SparkSpec {
     Snapshots.commit(orders, tbl, statsCols = Seq("o_orderkey"))
     Snapshots.deleteWhere(spark, tbl,
       spark.range(1, 101).select(col("id").as("o_orderkey")), "o_orderkey")
-    val expect = keysOf(Snapshots.readMor(spark, tbl))
+    val expect = keysOf(Snapshots.read(spark, tbl))
     val v3 = Snapshots.compactMor(spark, tbl)
     val m = Snapshots.manifest(spark, tbl, v3)
     assert(m.forall(e => !Snapshots.isTombstone(e.path)))
@@ -98,7 +97,7 @@ class MergeOnReadSpec extends SparkSpec {
         .select(col("id").as("o_orderkey")))
     Snapshots.deleteWhere(spark, tbl, del, "o_orderkey")
     Snapshots.deleteWhere(spark, tbl, del, "o_orderkey")
-    val n = Snapshots.readMor(spark, tbl).count()
+    val n = Snapshots.read(spark, tbl).count()
     assert(n === orders.filter(!col("o_orderkey").between(1, 10)).count())
   }
 
@@ -114,7 +113,7 @@ class MergeOnReadSpec extends SparkSpec {
         .withColumn("o_totalprice", lit(7.0)))
     val v = Snapshots.upsertMor(spark, tbl, batch, "o_orderkey")
     assert(v === 2, "one atomic version per upsert")
-    val r = Snapshots.readMor(spark, tbl)
+    val r = Snapshots.read(spark, tbl)
     val nOld = orders.filter(col("o_orderkey").between(1, 10)).count()
     assert(r.count() === n0 - nOld + batch.count())
     assert(r.filter(col("o_orderkey").between(1, 10) &&
@@ -123,7 +122,7 @@ class MergeOnReadSpec extends SparkSpec {
     // a second upsert over the same keys wins again
     val batch2 = batch.withColumn("o_totalprice", lit(-2.0))
     Snapshots.upsertMor(spark, tbl, batch2, "o_orderkey")
-    val r2 = Snapshots.readMor(spark, tbl)
+    val r2 = Snapshots.read(spark, tbl)
     assert(r2.filter(col("o_orderkey").between(1, 10) &&
       col("o_totalprice") =!= -2.0).count() === 0)
     assert(r2.count() === r.count())
@@ -150,8 +149,49 @@ class MergeOnReadSpec extends SparkSpec {
     Snapshots.cloneTable(spark, src, dst)
     Snapshots.deleteWhere(spark, dst,
       spark.range(1, 51).select(col("id").as("o_orderkey")), "o_orderkey")
-    assert(Snapshots.readMor(spark, dst).count() ===
+    assert(Snapshots.read(spark, dst).count() ===
       orders.filter(!col("o_orderkey").between(1, 50)).count())
     assert(Snapshots.read(spark, src).count() === orders.count())
+  }
+
+  test("a version with position deletes and equality tombstones skips " +
+      "files under a range filter on read and format(\"graft\"), with " +
+      "a compactMor copy's rows") {
+    import spark.implicits._
+    val tbl = freshTable("maskskip")
+    // 16 files, ten keys each, clustered on k
+    Snapshots.commit((0L until 160L).map(k => (k, k * 10)).toDF("k", "v")
+      .repartitionByRange(16, col("k")).sortWithinPartitions(col("k")),
+      tbl, statsCols = Seq("k"))
+    Snapshots.deleteVector(spark, tbl, col("v") === 30L) // k = 3
+    val masked = Snapshots.deleteWhere(spark, tbl,
+      Seq(5L, 42L).toDF("k"), "k")
+    assert(Snapshots.manifest(spark, tbl, masked)
+      .count(e => Snapshots.isMask(e.path)) === 2)
+    val range = col("k").between(0L, 19L)
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val want = (0L until 20L).filterNot(Set(3L, 5L)).map(k => (k, k * 10))
+    // Snapshots.read: two of the sixteen data files are listed
+    val c = IndexedCount.of(spark, tbl, range)
+    assert(c === IndexedCount(18L, 2, 14))
+    assert(rowsOf(Snapshots.read(spark, tbl).filter(range)) === want)
+    // format("graft") reads the masked version through the v1 relation,
+    // whose pushed filter reaches the same index slices
+    val viaFormat = spark.read.format("graft").load(tbl).filter(range)
+    val rel = viaFormat.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        lr.relation
+    }.collect { case r: GraftReadRelation => r }
+    assert(rel.size === 1)
+    val ixs = SnapshotFileIndex.indexesOf(rel.head.frame.queryExecution.analyzed)
+    ixs.foreach(ix => ix.lastPrune = (0, ix.lastPrune._2))
+    assert(rowsOf(viaFormat) === want)
+    assert(ixs.map(_.lastPrune) === Seq((2, 16)))
+    // a compactMor copy holds the same rows
+    Snapshots.compactMor(spark, tbl)
+    assert(rowsOf(Snapshots.read(spark, tbl).filter(range)) === want)
+    assert(rowsOf(Snapshots.read(spark, tbl)) ===
+      rowsOf(Snapshots.read(spark, tbl, Some(masked))))
   }
 }

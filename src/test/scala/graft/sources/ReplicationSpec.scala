@@ -14,8 +14,8 @@ class ReplicationSpec extends SparkSpec {
     .select(col("o_orderkey"), col("o_totalprice"))
 
   private def assertMirror(src: String, dst: String): Unit = {
-    val a = Snapshots.readMor(spark, src)
-    val b = Snapshots.readMor(spark, dst)
+    val a = Snapshots.read(spark, src)
+    val b = Snapshots.read(spark, dst)
     assert(a.exceptAll(b).count() === 0 && b.exceptAll(a).count() === 0,
       "mirror must equal source content exactly")
   }

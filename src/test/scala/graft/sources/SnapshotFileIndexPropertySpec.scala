@@ -9,7 +9,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   * place a bug LOSES ROWS SILENTLY instead of failing loudly: for
   * arbitrary predicate trees (comparisons, IN, string equality/prefix,
   * AND/OR/NOT nesting, in-range and out-of-range literals), the indexed
-  * read ([[Snapshots.readIndexed]] / [[Snapshots.readIndexedEvolved]])
+  * read ([[Snapshots.readIndexed]] / [[Snapshots.read]])
   * must return exactly the unpruned read's rows. The evolved table
   * drives every era dimension at once — rename, int→long widen WITH a
   * bloom (the width-sensitive probe), and an add-column default — so
@@ -40,7 +40,7 @@ class SnapshotFileIndexPropertySpec extends SparkSpec {
     tbl
   }
   private lazy val plainIndexed = Snapshots.readIndexed(spark, plainTbl)._1
-  private lazy val plainFull = Snapshots.read(spark, plainTbl)
+  private lazy val plainFull = IndexedCount.unpruned(spark, plainTbl)
 
   /** Evolved table: era 1 (k, q:int bloomed, s), then k→key rename,
     * q int→long widen, tag default; era 2 native.
@@ -66,8 +66,8 @@ class SnapshotFileIndexPropertySpec extends SparkSpec {
     tbl
   }
   private lazy val evolvedIndexed =
-    Snapshots.readIndexedEvolved(spark, evolvedTbl)._1
-  private lazy val evolvedFull = Snapshots.read(spark, evolvedTbl)
+    Snapshots.read(spark, evolvedTbl)
+  private lazy val evolvedFull = IndexedCount.unpruned(spark, evolvedTbl)
 
   // ---- predicate generators ----------------------------------------------
 

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Catalyst-native data skipping: filters pushed by FileSourceStrategy
@@ -27,7 +28,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
     val got = df.filter(cond).orderBy("k", "v").collect().toSeq
     assert(ix.lastPrune === ((expectKept, 16)),
       s"cond $cond kept ${ix.lastPrune}")
-    val want = Snapshots.read(spark, tbl).filter(cond)
+    val want = IndexedCount.unpruned(spark, tbl).filter(cond)
       .orderBy("k", "v").collect().toSeq
     assert(got === want, s"cond $cond pruned rows away")
   }
@@ -136,10 +137,13 @@ class SnapshotFileIndexSpec extends SparkSpec {
       "the era projection, results equal Snapshots.read") {
     val tbl = freshTable("evolved")
     buildEvolved(tbl)
-    val (df, ixs) = Snapshots.readIndexedEvolved(spark, tbl)
+    val df = Snapshots.read(spark, tbl)
+    val ixs = SnapshotFileIndex.indexesOf(df.queryExecution.analyzed)
     assert(ixs.size === 2)
-    // full read equals the era-mapped plain read
-    val want = Snapshots.read(spark, tbl).orderBy("key").collect().toSeq
+    // full read equals the era-mapped content: era-1 rows under the
+    // current names, q widened, tag read as the default
+    val want = (0L until 32L).map(k => Row(k, k * 10, f"s$k%02d",
+      if (k < 16) "legacy" else "fresh"))
     assert(df.orderBy("key").collect().toSeq === want)
     // a filter on the RENAMED column prunes era-1 files (stats live
     // under the old name 'k') AND era-2 files
@@ -188,7 +192,8 @@ class SnapshotFileIndexSpec extends SparkSpec {
       .repartitionByRange(16, col("k")).sortWithinPartitions(col("k"))
     Snapshots.commit(df2, tbl, statsCols = Seq("k", "q"),
       bloomCols = Seq("q"))
-    val (evolved, ixs) = Snapshots.readIndexedEvolved(spark, tbl)
+    val evolved = Snapshots.read(spark, tbl)
+    val ixs = SnapshotFileIndex.indexesOf(evolved.queryExecution.analyzed)
     // equality arrives as cast(q as bigint) = 50L; the era-1 file k=5
     // holds int 50, whose bloom bits come from XxHash64.hashInt — a
     // hashLong probe of the same value misses them and (pre-fix)
@@ -217,7 +222,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
     val rels = df.queryExecution.analyzed.collect {
       case lr: LogicalRelation => lr.relation
     }
-    assert(rels.size === 1 && rels.head.isInstanceOf[GraftEvolvedRelation])
+    assert(rels.size === 1 && rels.head.isInstanceOf[GraftReadRelation])
     assert(df.filter(col("key") < 4L).count() === 4L)
     assert(df.filter(col("tag") === "legacy").count() === 16L)
     assert(df.count() === 32L)
@@ -251,7 +256,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
     def kept(cond: org.apache.spark.sql.Column): (Long, Int) = {
       val (d, ix) = Snapshots.readIndexed(spark, tbl)
       val got = d.filter(cond).count()
-      val want = Snapshots.read(spark, tbl).filter(cond).count()
+      val want = IndexedCount.unpruned(spark, tbl).filter(cond).count()
       assert(got === want, s"cond $cond pruned rows away")
       (got, ix.lastPrune._1)
     }
@@ -311,7 +316,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
     def kept(cond: org.apache.spark.sql.Column): (Long, Int) = {
       val (d, ix) = Snapshots.readIndexed(spark, tbl)
       val got = d.filter(cond).count()
-      val want = Snapshots.read(spark, tbl).filter(cond).count()
+      val want = IndexedCount.unpruned(spark, tbl).filter(cond).count()
       assert(got === want, s"cond $cond pruned rows away")
       (got, ix.lastPrune._1)
     }
@@ -332,5 +337,43 @@ class SnapshotFileIndexSpec extends SparkSpec {
     // out-of-range proves zero files on the 18-precision tier
     assert(kept(col("d18") > lit("100").cast("decimal(18,4)"))
       === ((0L, 0)))
+  }
+
+  test("read of a plain, an era-evolved, a masked and a cloned table " +
+      "scans data files only through SnapshotFileIndex") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val plain = freshTable("one_plain")
+    buildKeyed(plain)
+    val evolved = freshTable("one_evolved")
+    buildEvolved(evolved)
+    val masked = freshTable("one_masked")
+    buildKeyed(masked)
+    Snapshots.deleteVector(spark, masked, col("v") === 301L)
+    Snapshots.deleteWhere(spark, masked, Seq(7L).toDF("k"), "k")
+    val cloned = freshTable("one_cloned")
+    Snapshots.cloneTable(spark, plain, cloned)
+    assert(Snapshots.manifest(spark, cloned, 1)
+      .forall(e => new org.apache.hadoop.fs.Path(e.path).isAbsolute))
+    for (t <- Seq(plain, evolved, masked, cloned)) {
+      val df = Snapshots.read(spark, t)
+      val locations = df.queryExecution.optimizedPlan.collect {
+        case lr: LogicalRelation => lr.relation match {
+          case h: HadoopFsRelation => h.location
+          case other => fail(s"$t: non-file relation $other")
+        }
+      }
+      val (indexed, other) = locations.partition(_.isInstanceOf[SnapshotFileIndex])
+      // every data file of the version is scanned through an index;
+      // the only other scans read the mask files themselves
+      val data = Snapshots.manifest(spark, t, Snapshots.latestVersion(spark, t))
+        .filterNot(e => Snapshots.isMask(e.path))
+      assert(indexed.map(_.asInstanceOf[SnapshotFileIndex].entries.size).sum
+        === data.size, t)
+      assert(other.flatMap(_.inputFiles).forall(Snapshots.isMask), t)
+      assert(other.isEmpty === (t != masked), t)
+    }
+    assert(Snapshots.read(spark, cloned).count() === 32L)
+    assert(Snapshots.read(spark, masked).count() === 29L) // v=301, k=7 x2
   }
 }

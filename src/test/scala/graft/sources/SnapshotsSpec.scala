@@ -838,6 +838,6 @@ class SnapshotsSpec extends SparkSpec {
     // ...and the slot stays occupied: the next commit skips past it
     val v4 = Snapshots.commit(Seq((3L, 30L)).toDF("k", "v"), tbl)
     assert(v4 === 4)
-    assert(Snapshots.readMor(spark, tbl).count() === 3)
+    assert(Snapshots.read(spark, tbl).count() === 3)
   }
 }

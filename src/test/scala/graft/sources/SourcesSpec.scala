@@ -92,8 +92,10 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("JdbcSink appends and JdbcSource reads back (embedded Derby)") {
-    // Keep Derby's log out of the repo working directory.
-    System.setProperty("derby.stream.error.file", "/tmp/graft_derby.log")
+    // Keep Derby's log out of the working directory, under the scratch
+    // root the session deletes when it stops.
+    System.setProperty("derby.stream.error.file",
+      tempDir("derby") + "/derby.log")
     val url = "jdbc:derby:memory:graftdb;create=true"
     val driver = Some("org.apache.derby.jdbc.EmbeddedDriver")
     val df = graft.Tables.nation(spark, sf001)

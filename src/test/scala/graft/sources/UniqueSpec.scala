@@ -67,7 +67,7 @@ class UniqueSpec extends SparkSpec {
       spark.range(20, 30).select(col("id").as("o_orderkey")), "o_orderkey")
     Snapshots.commit(orders.filter(col("o_orderkey").between(20, 29)), tbl,
       statsCols = Seq("o_orderkey"))
-    assert(Snapshots.readMor(spark, tbl).count() === 300)
+    assert(Snapshots.read(spark, tbl).count() === 300)
   }
 
   test("multiple NULL keys are allowed (SQL UNIQUE semantics)") {
@@ -79,7 +79,7 @@ class UniqueSpec extends SparkSpec {
       .withColumn("o_orderkey", lit(null).cast("long"))
     Snapshots.commit(nulls, tbl)
     Snapshots.commit(nulls, tbl)
-    assert(Snapshots.readMor(spark, tbl)
+    assert(Snapshots.read(spark, tbl)
       .filter(col("o_orderkey").isNull).count() === 6)
   }
 
@@ -188,7 +188,7 @@ class UniqueSpec extends SparkSpec {
         planHook = () => { Snapshots.addUnique(spark, tbl, "o_orderkey"); () })
     }
     assert(e.getMessage.contains("UNIQUE constraint was added"))
-    assert(Snapshots.readMor(spark, tbl)
+    assert(Snapshots.read(spark, tbl)
       .filter(col("o_orderkey") === 5).count() === 1, "no duplicate landed")
   }
 

@@ -35,7 +35,7 @@ class WidenSpec extends SparkSpec {
     assert(Snapshots.read(spark, tbl, Some(1)).schema("k").dataType ===
       org.apache.spark.sql.types.IntegerType)
     // pruning evidence still works across the widen (stats are longs)
-    val c = IndexedCount.evolved(spark, tbl, col("k").between(big, big))
+    val c = IndexedCount.of(spark, tbl, col("k").between(big, big))
     assert(c.rows === 1 && c.skipped > 0, s"$c")
   }
 
@@ -56,16 +56,16 @@ class WidenSpec extends SparkSpec {
     // a LONG-typed probe of an era-1 value: the int-era file's bloom was
     // hashed at int width — pre-fix this false-rejected the file and the
     // scan silently lost the row
-    val c = IndexedCount.evolved(spark, tbl, col("k") === 5L)
+    val c = IndexedCount.of(spark, tbl, col("k") === 5L)
     assert(c.rows === 1L, "widened bloom probe lost the pre-widen row")
     assert(c.skipped > 0, "bloom pruning power lost entirely")
     // IN-filter across both eras: era-1 value + era-2 beyond-int value
-    val in = Snapshots.readIndexedEvolved(spark, tbl)._1
+    val in = Snapshots.read(spark, tbl)
       .filter(col("k").isin(7L, big))
     assert(in.collect().map(_.getLong(0)).toSet === Set(7L, big))
     // absent values still skip every file (the narrow probe must not
     // blanket-keep)
-    val abs = IndexedCount.evolved(spark, tbl, col("k") === 999L)
+    val abs = IndexedCount.of(spark, tbl, col("k") === 999L)
     assert(abs.rows === 0L && abs.kept === 0, s"$abs")
     // float→double widen with a NaN row: Java NaN != NaN breaks the
     // lossless-roundtrip check, but Spark SQL equality MATCHES NaN —
@@ -78,9 +78,9 @@ class WidenSpec extends SparkSpec {
     Snapshots.widenColumn(spark, ftbl, "x", DoubleType)
     Snapshots.commit(Seq((4, 4.5)).toDF("k", "x").coalesce(1), ftbl,
       bloomCols = Seq("x"))
-    assert(IndexedCount.evolved(spark, ftbl, col("x") === Double.NaN)
+    assert(IndexedCount.of(spark, ftbl, col("x") === Double.NaN)
       .rows === 1L, "NaN probe lost the pre-widen float-era row")
-    assert(IndexedCount.evolved(spark, ftbl, col("x") === 1.5d).rows === 1L)
+    assert(IndexedCount.of(spark, ftbl, col("x") === 1.5d).rows === 1L)
   }
 
   test("float→double widens; narrowing and cross-family casts refuse; " +
@@ -153,7 +153,7 @@ class WidenSpec extends SparkSpec {
     Snapshots.commit(Seq((3, big)).toDF("k", "v"), src,
       statsCols = Seq("k"))
     Replication.sync(spark, src, dst, "k")
-    assert(Snapshots.readMor(spark, dst).collect()
+    assert(Snapshots.read(spark, dst).collect()
       .map(r => (r.getInt(0), r.getLong(1))).toSet ===
       Set((1, 10L), (2, 20L), (3, big)))
     assert(Snapshots.widenEvents(

@@ -95,14 +95,14 @@ class SnapshotStreamSpec extends SparkSpec {
       q.processAllAvailable()
       stream.addData(Click(1, "a2"), Click(2, "b2"))
       q.processAllAvailable()
-      val got = Snapshots.readMor(spark, tbl)
+      val got = Snapshots.read(spark, tbl)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       // user 1: overwritten twice; user 2: seed overwritten; user 3: new
       assert(got === Set((1L, "a2"), (2L, "b2"), (3L, "c")))
       // each micro-batch was ONE version (atomic tombstone+data)
       assert(Snapshots.versions(spark, tbl) === Seq(1, 2, 3))
       // time travel to the first upsert boundary
-      assert(Snapshots.readMor(spark, tbl, Some(2))
+      assert(Snapshots.read(spark, tbl, Some(2))
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
         Set((1L, "a"), (2L, "seed2"), (3L, "c")))
     } finally q.stop()
