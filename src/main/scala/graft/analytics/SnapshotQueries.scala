@@ -201,7 +201,7 @@ object SnapshotQueries {
     * into the stored state (SnapshotMvSpec proves v1's files can be cold
     * during it) — then the user aggregate over the LATEST version is
     * answered from the rollup by the transparent rewrite, exact because
-    * registration pins v2's exact file set. Oracle = the full recompute,
+    * registration pins v2's whole-version scan. Oracle = the full recompute,
     * so the hash pins delta-fold ≡ recompute.
     */
   val mvIncremental = Q("q_mv_incremental",
@@ -222,7 +222,7 @@ object SnapshotQueries {
           statsCols = Seq("o_orderkey"))
         graft.plans.SnapshotMv.refresh(s, mvOf(tbl)) // delta fold to v2
       }
-      // already-current: no fold, just the manifest-pinned registration
+      // already-current: no fold, just the version-pinned registration
       // of the rewrite this entry's aggregate is answered through
       graft.plans.SnapshotMv.refresh(s, mvOf(tbl))
       try {

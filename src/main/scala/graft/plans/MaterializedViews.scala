@@ -42,11 +42,13 @@ object MaterializedViews {
     */
   final case class MvSum(mvCol: String, src: String, castTo: Option[DataType])
 
-  /** `factFiles`: when the MV represents one VERSION of a versioned fact
-    * table ([[SnapshotMv]]), the exact (normalized) file set of that
-    * version — the rewrite fires only for a scan of exactly those files,
-    * so reads of other versions (time travel, post-append latest before
-    * a refresh) are never answered stale. None = plain directory fact.
+  /** `factScan`: when the MV represents one VERSION of a versioned fact
+    * table ([[SnapshotMv]]), that version's whole-version scan identity
+    * ([[graft.sources.SnapshotFileIndex.versionIdentity]]) — the rewrite
+    * fires only for a scan of exactly that version's files, so reads of
+    * other versions (time travel, post-append latest before a refresh)
+    * and pruned slices are never answered stale. None = plain directory
+    * fact, which a versioned scan never matches.
     */
   final case class MvDef(
       factPath: String,
@@ -54,7 +56,7 @@ object MaterializedViews {
       keys: Seq[String],
       countCol: Option[String],
       sums: Seq[MvSum],
-      factFiles: Option[Set[String]] = None)
+      factScan: Option[String] = None)
 
   private val registry =
     new scala.collection.concurrent.TrieMap[String, MvDef]
@@ -90,22 +92,14 @@ object MaterializedViews {
     register(spark, MvDef(factPath, mvPath, keys, Some(countCol), sums))
   }
 
-  private[plans] def lookup(path: String): Option[MvDef] =
-    registry.get(norm(path))
-
-  /** Find the MvDef covering a scan's root paths: the single-directory
-    * fact (exact key) or a versioned fact registered at its TABLE ROOT
-    * whose data files all live under it.
+  /** The MvDef registered at a scan's single root path: the fact
+    * directory, or a versioned fact's table root. A scan over several
+    * roots reads some other file set and is never rewritten.
     */
-  private[plans] def lookupCovering(paths: Seq[String]): Option[MvDef] =
+  private[plans] def lookup(paths: Seq[String]): Option[MvDef] =
     paths match {
-      case Seq(single) if registry.contains(norm(single)) =>
-        registry.get(norm(single))
-      case _ =>
-        val normed = paths.map(norm)
-        registry.collectFirst {
-          case (root, d) if normed.forall(_.startsWith(root + "/")) => d
-        }
+      case Seq(single) => registry.get(norm(single))
+      case _ => None
     }
 
   private[plans] def isEmpty: Boolean = registry.isEmpty
@@ -119,45 +113,49 @@ object MvRewriteRule extends Rule[LogicalPlan] {
     else plan.transformDown {
       case agg @ Aggregate(groups, aggs, child, _) =>
         (for {
-          (paths, filter) <- factScan(child)
-          mv <- lookupCovering(paths)
-          // a versioned-fact MV answers ONLY the exact file set of the
-          // version it was refreshed to — never another version
-          if mv.factFiles.forall(_ ==
-            paths.map(p => norm(p)).toSet)
+          (paths, scan, filter) <- factScan(child)
+          mv <- lookup(paths)
+          // a versioned-fact MV answers ONLY the version it was
+          // refreshed to — never another version or a slice of it
+          if mv.factScan == scan
           rewritten <- tryRewrite(agg, groups, aggs, filter, mv)
         } yield rewritten).getOrElse(agg)
     }
 
-  /** The fact scan's root paths (plus the And of any intervening Filter
-    * predicates) IF `child` is a file scan under only column-pruning
-    * Projects and Filters — any Join/Window/etc. in between disables the
-    * rewrite. Whether the collected predicates are key-only (rewritable)
-    * is decided in [[tryRewrite]], where the MV definition is in hand.
+  /** The fact scan's root paths and versioned scan identity (plus the
+    * And of any intervening Filter predicates) IF `child` is a file scan
+    * under only column-pruning Projects and Filters — any
+    * Join/Window/etc. in between disables the rewrite. Whether the
+    * collected predicates are key-only (rewritable) is decided in
+    * [[tryRewrite]], where the MV definition is in hand.
     */
   private def factScan(child: LogicalPlan)
-      : Option[(Seq[String], Option[Expression])] = child match {
-    case lr: LogicalRelation => relationPaths(lr).map((_, None))
-    case Project(pl, inner)
-        if pl.forall(_.isInstanceOf[AttributeReference]) =>
-      factScan(inner)
-    case Filter(cond, inner) =>
-      factScan(inner).map { case (p, f) =>
-        (p, Some(f.fold(cond)(And(cond, _))))
-      }
-    case _ => None
-  }
+      : Option[(Seq[String], Option[String], Option[Expression])] =
+    child match {
+      case lr: LogicalRelation => relationOf(lr).map { case (p, s) =>
+        (p, s, None) }
+      case Project(pl, inner)
+          if pl.forall(_.isInstanceOf[AttributeReference]) =>
+        factScan(inner)
+      case Filter(cond, inner) =>
+        factScan(inner).map { case (p, s, f) =>
+          (p, s, Some(f.fold(cond)(And(cond, _))))
+        }
+      case _ => None
+    }
 
-  /** A versioned fact's scan answers its index's exact file list — the
-    * set a [[SnapshotMv]] registration is pinned to; any other file
-    * relation answers its root paths.
+  /** A versioned fact's scan answers its table root and its
+    * [[graft.sources.SnapshotFileIndex.scanIdentity]] — what a
+    * [[SnapshotMv]] registration is pinned to; any other file relation
+    * answers its root paths and no identity.
     */
-  private def relationPaths(lr: LogicalRelation): Option[Seq[String]] =
+  private def relationOf(lr: LogicalRelation)
+      : Option[(Seq[String], Option[String])] =
     lr.relation match {
       case h: HadoopFsRelation => h.location match {
         case fi: graft.sources.SnapshotFileIndex =>
-          Some(fi.inputFiles.toSeq.map(norm))
-        case loc => Some(loc.rootPaths.map(_.toUri.getPath))
+          Some((Seq(fi.table), Some(fi.scanIdentity)))
+        case loc => Some((loc.rootPaths.map(_.toUri.getPath), None))
       }
       case _ => None
     }

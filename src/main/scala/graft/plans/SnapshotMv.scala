@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * history is never rescanned.
   *
   * Freshness is exact, not best-effort: the registration pins the fact
-  * VERSION's file set ([[MaterializedViews.MvDef.factFiles]]), so a scan
+  * VERSION ([[MaterializedViews.MvDef.factScan]]), so a scan
   * of any other version — time travel, or the latest after a new append
   * but before the next refresh — simply doesn't rewrite and computes
   * from the fact. A stale MV can never answer a fresh query.
@@ -131,15 +131,10 @@ object SnapshotMv {
         writeMeta(spark, mv.mvRoot, latest, dirName)
         dirName
     }
-    val files = Snapshots.manifest(spark, mv.factTable, latest)
-      .map { e =>
-        val p = e.path
-        if (new Path(p).isAbsolute) MaterializedViews.norm(p)
-        else MaterializedViews.norm(s"${mv.factTable}/$p")
-      }.toSet
     MaterializedViews.register(spark, MaterializedViews.MvDef(
       mv.factTable, s"${mv.mvRoot}/$currentDir", mv.keys,
-      Some(mv.countCol), mv.sums, factFiles = Some(files)))
+      Some(mv.countCol), mv.sums, factScan = Some(graft.sources
+        .SnapshotFileIndex.versionIdentity(spark, mv.factTable, latest))))
     latest
   }
 }

@@ -318,15 +318,14 @@ final class GraftReadRelation(sql: SQLContext, val table: String,
   private[sources] lazy val frame: DataFrame =
     Snapshots.read(sql.sparkSession, table, Some(version))
 
-  // the RECORDED schema, nullable-normalized like the flat relation — it
-  // must equal what the FileIndex relation reported when the catalog
-  // table was created, or re-resolution after a DELETE refuses with a
-  // schema mismatch (the grouped plan's own nullability widens through
-  // the mask joins)
-  override val schema: StructType = StructType(
+  // the RECORDED schema, as the flat relation reports it — it must equal
+  // what the FileIndex relation reported when the catalog table was
+  // created, or re-resolution after a DELETE refuses with a schema
+  // mismatch (the grouped plan's own nullability widens through the mask
+  // joins)
+  override val schema: StructType =
     SnapshotFileIndex.recordedSchema(table, version,
       Snapshots.properties(sql.sparkSession, table, version))
-      .fields.map(_.copy(nullable = true)))
 
   override def buildScan(requiredColumns: Array[String],
       filters: Array[org.apache.spark.sql.sources.Filter])

@@ -78,9 +78,7 @@ object ResultCache {
         lr.relation match {
           case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
             h.location match {
-              // a versioned table's root is the same for every version:
-              // its exact file list keys the scan
-              case fi: SnapshotFileIndex => fi.inputFiles.mkString(",")
+              case fi: SnapshotFileIndex => fi.scanIdentity
               case loc => loc.rootPaths.map(_.toString).mkString(",")
             }
           case _ => ""

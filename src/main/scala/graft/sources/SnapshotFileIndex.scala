@@ -119,18 +119,12 @@ final class SnapshotFileIndex private[sources] (spark: SparkSession,
     SnapshotFileIndex.refusalOf(table, version, entries, props)
       .foreach(msg => throw new IllegalArgumentException(msg))
 
-  /** The version's recorded schema — the committing writer's truth;
-    * footer inference would silently widen types. NULLABILITY is
-    * normalized to nullable, Spark's own file-table convention: file
-    * scans always produce nullable output, and a copy-on-write merge
-    * re-records its scan's schema — a catalog table pinned to a NOT
-    * NULL creation-time schema would refuse to re-resolve after the
-    * first merge flipped it. The era form reads in its era's physical
-    * (name, type) shape instead.
+  /** The version's recorded schema ([[SnapshotFileIndex.recordedSchema]],
+    * nullable); the era form reads in its era's physical (name, type)
+    * shape instead.
     */
-  val dataSchema: StructType = schemaOverride.getOrElse(StructType(
-    SnapshotFileIndex.recordedSchema(table, version, props)
-      .fields.map(_.copy(nullable = true))))
+  val dataSchema: StructType = schemaOverride.getOrElse(
+    SnapshotFileIndex.recordedSchema(table, version, props))
 
   private val rootPath = {
     val p = new Path(table)
@@ -238,6 +232,20 @@ final class SnapshotFileIndex private[sources] (spark: SparkSession,
 
   override def inputFiles: Array[String] =
     entries.map(e => resolved(e).toString).toArray
+
+  /** What this scan reads, as one string — how plan-reading code (the
+    * [[ResultCache]] key, a [[graft.plans.SnapshotMv]] registration's
+    * pinned version) tells two scans of one table apart, since every
+    * version shares the table root. A whole-version form answers its
+    * version's identity ([[SnapshotFileIndex.versionIdentity]]) without
+    * touching `entries`, so a segment-planned index opens no segment; a
+    * slice appends its entry paths.
+    */
+  private[graft] lazy val scanIdentity: String = {
+    val whole = SnapshotFileIndex.versionIdentity(spark, table, version)
+    if (wholeVersion) whole
+    else entries.map(_.path).mkString(whole + ":", ",", "")
+  }
 
   /** Segment mode answers from the index header's recorded byte totals
     * (the planner asks this for every query — join-size estimation);
@@ -548,17 +556,35 @@ final class SnapshotFileIndex private[sources] (spark: SparkSession,
 object SnapshotFileIndex {
 
   /** The schema `props` record for `version` — the committing writer's
-    * truth, which every read applies. A manifest from before schema
-    * recording is refused: footer inference would silently widen types.
+    * truth, which every read applies — with every field NULLABLE,
+    * Spark's own file-table convention: file scans always produce
+    * nullable output, and a copy-on-write merge re-records its scan's
+    * schema, so a catalog table pinned to a NOT NULL creation-time
+    * schema would refuse to re-resolve after the first merge flipped it.
+    * A manifest from before schema recording is refused: footer
+    * inference would silently widen types.
     */
   private[graft] def recordedSchema(table: String, version: Int,
       props: Map[String, String]): StructType =
     props.get(Snapshots.SchemaProp) match {
-      case Some(json) => DataType.fromJson(json).asInstanceOf[StructType]
+      case Some(json) => StructType(DataType.fromJson(json)
+        .asInstanceOf[StructType].fields.map(_.copy(nullable = true)))
       case None => throw new IllegalStateException(
         s"SnapshotFileIndex: version $version of $table records no schema " +
           "(legacy manifest) — recommit it")
     }
+
+  /** The [[SnapshotFileIndex.scanIdentity]] of `version`'s whole-version
+    * scan: the qualified table root and the version number (a committed
+    * version's file set never changes).
+    */
+  private[graft] def versionIdentity(spark: SparkSession, table: String,
+      version: Int): String = {
+    val p = new Path(table)
+    val root = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p)
+    s"$root@v$version"
+  }
 
   /** Every [[SnapshotFileIndex]] `plan` scans, in plan order — how a
     * caller finds a frame's index slices (and their file cuts) from the

@@ -1664,6 +1664,9 @@ object Snapshots {
         s"merge key is '$keyCol' — bucket-aligned copy-on-write needs " +
         "them equal (use merge for other keys)")
     val entries = manifest(spark, table, v)
+    require(!entries.exists(e => isMask(e.path)),
+      s"Snapshots.mergeBucketed: version $v of $table carries " +
+        "merge-on-read masks — run compactMor first")
     val tableCols = read(spark, table, Some(v)).columns
     require(upserts.columns.sorted.sameElements(tableCols.sorted),
       s"Snapshots.mergeBucketed: upserts columns " +
@@ -2371,6 +2374,11 @@ object Snapshots {
       deleteKeys.columns.exists(_.equalsIgnoreCase(k)),
       s"Snapshots.merge: deleteKeys needs a '$k' column"))
     val entries = manifest(spark, table, v)
+    // a carried mask would stop covering the rewritten rows (they get a
+    // higher sequence number), so the rewrite needs a mask-free version
+    require(!entries.exists(e => isMask(e.path)),
+      s"Snapshots.merge: version $v of $table carries merge-on-read " +
+        "masks — run compactMor first")
     val tableDf = read(spark, table, Some(v))
     val tableCols = tableDf.columns
     require(upserts.columns.sorted.sameElements(tableCols.sorted),
@@ -3055,10 +3063,7 @@ object Snapshots {
     val (del, dvs) = masks.partition(e => isTombstone(e.path))
     if (dvs.nonEmpty) requireUniqueNames(data, table, v)
     val props = properties(spark, table, v)
-    // nullable-normalized like the flat index: file scans produce
-    // nullable output, and group unions widen nullability anyway
-    val st = StructType(SnapshotFileIndex.recordedSchema(table, v, props)
-      .fields.map(_.copy(nullable = true)))
+    val st = SnapshotFileIndex.recordedSchema(table, v, props)
     require(!withPosMeta || !st.fieldNames.exists(n =>
       n == MetaFile || n == MetaPos),
       s"Snapshots: table $table has a column shadowing the reserved " +
@@ -3440,6 +3445,9 @@ object Snapshots {
     val (small, big) = entries.partition(e =>
       fs.getFileStatus(new Path(root, e.path)).getLen < minBytes)
     if (small.size <= 1) return cur
+    require(!entries.exists(e => isMask(e.path)),
+      s"Snapshots.compactSmall: version $cur of $table carries " +
+        "merge-on-read masks — run compactMor first")
     val bytes = small.map(e =>
       fs.getFileStatus(new Path(root, e.path)).getLen).sum
     val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt

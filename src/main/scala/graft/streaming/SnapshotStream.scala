@@ -115,10 +115,9 @@ object SnapshotStream {
     * The static table resolves at its LATEST version each batch, so new
     * commits surface at the next micro-batch boundary — the
     * serving-table composition. A version carrying merge-on-read
-    * tombstones refuses LOUDLY through the shared read path (a masked
-    * row served into a lookup would be silent corruption) — run
-    * [[Snapshots.compactMor]] after upserts, the usual MOR serving
-    * discipline.
+    * masks is read through [[Snapshots.read]] with its deletes applied
+    * (a deleted or superseded row is never served) but joins UNPRUNED —
+    * run [[Snapshots.compactMor]] after upserts to get the cut back.
     */
   def lookupJoin(
       stream: DataFrame,

@@ -95,7 +95,7 @@ class InvertedIndexSpec extends SparkSpec {
     val (kept, total) = ix.lastPrune
     assert(kept < total, s"token-clustered files should skip: kept=$kept")
     // pruned scan ≡ unpruned scan
-    val unpruned = graft.sources.IndexedCount.unpruned(spark, tbl)
+    val unpruned = graft.sources.IndexedCount.listed(spark, tbl)
       .filter(col("token").isin(terms: _*))
     assert(n === unpruned.count())
     // append-maintained index answers exactly the from-scratch search

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** A filtered row count over [[Snapshots.read]] together with the file
@@ -29,9 +30,28 @@ object IndexedCount {
 
   /** The latest version's rows as [[Snapshots.read]] returns them,
     * materialized: a filter on this frame runs over the rows and skips
-    * no file — the unpruned reference the file-skipping specs compare
-    * the indexed reads against.
+    * no file — the unpruned reference for ERA-EVOLVED tables, whose
+    * era mapping only the grouped read applies. Flat tables use
+    * [[listed]].
     */
   def unpruned(spark: SparkSession, table: String): DataFrame =
     Snapshots.read(spark, table).localCheckpoint()
+
+  /** The latest version's data files read by a plain parquet listing of
+    * the manifest's paths under the recorded schema — no
+    * [[SnapshotFileIndex]] involved, so a fault in the index's own
+    * listing cannot hide in both sides of a comparison. The unpruned
+    * reference for a FLAT version (one era, no masks); refuses others.
+    */
+  def listed(spark: SparkSession, table: String): DataFrame = {
+    val v = Snapshots.latestVersion(spark, table)
+    val entries = Snapshots.manifest(spark, table, v)
+    val props = Snapshots.properties(spark, table, v)
+    SnapshotFileIndex.refusalOf(table, v, entries, props)
+      .foreach(msg => throw new IllegalArgumentException(msg))
+    spark.read.schema(SnapshotFileIndex.recordedSchema(table, v, props))
+      .parquet(entries.map(e =>
+        if (new Path(e.path).isAbsolute) e.path
+        else s"$table/${e.path}"): _*)
+  }
 }

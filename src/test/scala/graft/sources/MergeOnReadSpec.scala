@@ -194,4 +194,52 @@ class MergeOnReadSpec extends SparkSpec {
     assert(rowsOf(Snapshots.read(spark, tbl)) ===
       rowsOf(Snapshots.read(spark, tbl, Some(masked))))
   }
+
+  test("merge refuses a masked version whose tombstone misses the merge " +
+      "keys; after compactMor the deleted keys stay deleted") {
+    import spark.implicits._
+    val tbl = freshTable("mergemask")
+    // two unsorted files: each one's k envelope spans the whole table
+    Snapshots.commit((0L until 2000L).map(k => (k, k * 10)).toDF("k", "v")
+      .repartition(2), tbl, statsCols = Seq("k"))
+    // tombstone envelope [1, 50]: the merge key 1000 lies outside it
+    Snapshots.deleteWhere(spark, tbl, (1L to 50L).toDF("k"), "k")
+    val up = Seq((1000L, -1L)).toDF("k", "v")
+    val noDeletes = Seq.empty[Long].toDF("k")
+    val e = intercept[IllegalArgumentException] {
+      Snapshots.merge(spark, tbl, up, noDeletes, "k")
+    }
+    assert(e.getMessage.contains("compactMor"), e.getMessage)
+    Snapshots.compactMor(spark, tbl)
+    Snapshots.merge(spark, tbl, up, noDeletes, "k")
+    val r = Snapshots.read(spark, tbl)
+    assert(r.filter(col("k").between(1L, 50L)).count() === 0)
+    assert(r.filter(col("k") === 1000L).select("v").as[Long].collect()
+      .toSeq === Seq(-1L))
+    assert(r.count() === 1950L)
+  }
+
+  test("compactSmall refuses a masked version whose mask file is bigger " +
+      "than minBytes") {
+    import spark.implicits._
+    val tbl = freshTable("smallmask")
+    (0L until 3L).foreach(i => Snapshots.commit(
+      (i * 10 until i * 10 + 10).map(k => (k, k)).toDF("k", "v"), tbl,
+      statsCols = Seq("k")))
+    // 20002 tombstoned keys, two of them live: the tombstone is far
+    // bigger than any data file, so only the data files count as small
+    val v = Snapshots.deleteWhere(spark, tbl, spark.range(100, 20100)
+      .toDF("k").unionByName(Seq(5L, 15L).toDF("k")), "k")
+    val (masks, data) = Snapshots.manifest(spark, tbl, v)
+      .map(e => (e, fs(tbl).getFileStatus(new Path(s"$tbl/${e.path}")).getLen))
+      .partition(x => Snapshots.isMask(x._1.path))
+    val minBytes = data.map(_._2).max + 1
+    assert(masks.nonEmpty && masks.forall(_._2 >= minBytes))
+    val e = intercept[IllegalArgumentException] {
+      Snapshots.compactSmall(spark, tbl, minBytes)
+    }
+    assert(e.getMessage.contains("compactMor"), e.getMessage)
+    assert(Snapshots.latestVersion(spark, tbl) === v)
+    assert(Snapshots.read(spark, tbl).count() === 28L)
+  }
 }

@@ -37,7 +37,7 @@ class SegmentIndexSpec extends SparkSpec {
     assert(ix.lastSegPrune === ((2, 8)), s"got ${ix.lastSegPrune}")
     // the same 6 files a flat per-file evidence pass keeps, of 32
     assert(ix.lastPrune === ((6, 32)), s"got ${ix.lastPrune}")
-    assert(got === IndexedCount.unpruned(spark, tbl).filter(box)
+    assert(got === IndexedCount.listed(spark, tbl).filter(box)
       .orderBy("k", "v").collect().toSeq)
   }
 
@@ -188,7 +188,7 @@ class SegmentIndexSpec extends SparkSpec {
     assert(ix.segmentParses.get === 2,
       s"only surviving segments may parse, parsed ${ix.segmentParses.get}")
     assert(ix.lastPrune === ((6, 32)), s"got ${ix.lastPrune}")
-    val flat = IndexedCount.unpruned(spark, tbl)
+    val flat = IndexedCount.listed(spark, tbl)
       .filter(col("k").between(9L, 14L)).orderBy("k", "v").collect().toSeq
     assert(got === flat)
     // a full scan parses each remaining segment exactly once (cached)

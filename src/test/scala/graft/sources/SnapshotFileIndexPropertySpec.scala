@@ -40,7 +40,7 @@ class SnapshotFileIndexPropertySpec extends SparkSpec {
     tbl
   }
   private lazy val plainIndexed = Snapshots.readIndexed(spark, plainTbl)._1
-  private lazy val plainFull = IndexedCount.unpruned(spark, plainTbl)
+  private lazy val plainFull = IndexedCount.listed(spark, plainTbl)
 
   /** Evolved table: era 1 (k, q:int bloomed, s), then k→key rename,
     * q int→long widen, tag default; era 2 native.

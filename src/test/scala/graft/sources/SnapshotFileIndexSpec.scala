@@ -28,7 +28,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
     val got = df.filter(cond).orderBy("k", "v").collect().toSeq
     assert(ix.lastPrune === ((expectKept, 16)),
       s"cond $cond kept ${ix.lastPrune}")
-    val want = IndexedCount.unpruned(spark, tbl).filter(cond)
+    val want = IndexedCount.listed(spark, tbl).filter(cond)
       .orderBy("k", "v").collect().toSeq
     assert(got === want, s"cond $cond pruned rows away")
   }
@@ -256,7 +256,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
     def kept(cond: org.apache.spark.sql.Column): (Long, Int) = {
       val (d, ix) = Snapshots.readIndexed(spark, tbl)
       val got = d.filter(cond).count()
-      val want = IndexedCount.unpruned(spark, tbl).filter(cond).count()
+      val want = IndexedCount.listed(spark, tbl).filter(cond).count()
       assert(got === want, s"cond $cond pruned rows away")
       (got, ix.lastPrune._1)
     }
@@ -316,7 +316,7 @@ class SnapshotFileIndexSpec extends SparkSpec {
     def kept(cond: org.apache.spark.sql.Column): (Long, Int) = {
       val (d, ix) = Snapshots.readIndexed(spark, tbl)
       val got = d.filter(cond).count()
-      val want = IndexedCount.unpruned(spark, tbl).filter(cond).count()
+      val want = IndexedCount.listed(spark, tbl).filter(cond).count()
       assert(got === want, s"cond $cond pruned rows away")
       (got, ix.lastPrune._1)
     }

@@ -152,6 +152,26 @@ class LookupStreamSpec extends SparkSpec {
     graft.plans.DimFilePrune.clear()
   }
 
+  test("a masked static table serves none of its deleted keys and " +
+      "joins unpruned") {
+    val tbl = buildStatic("masked")
+    Snapshots.deleteWhere(spark, tbl, Seq(5L).toDF("k"), "k")
+    Snapshots.upsertMor(spark, tbl, Seq((6L, "renamed")).toDF("k", "name"),
+      "k")
+    val batch = Seq(Lookup(5, "del"), Lookup(6, "ups"), Lookup(7, "kept"))
+      .toDF()
+    SnapshotStream.lastLookupPrune = Some((0, 0))
+    val out = SnapshotStream.lookupBatch(batch, tbl, "k", "key",
+      maxKeys = 100000)
+    val rows = out.collect().map(r => (r.getLong(0), r.getString(1),
+      if (r.isNullAt(3)) null else r.getString(3))).toSet
+    assert(rows === Set((5L, "del", null), (6L, "ups", "renamed"),
+      (7L, "kept", "name7")), rows.toString)
+    assert(SnapshotStream.lastLookupPrune.isEmpty,
+      s"a masked version reported a cut: ${SnapshotStream.lastLookupPrune}")
+    graft.plans.DimFilePrune.clear()
+  }
+
   test("upserts into the static table surface at the next micro-batch") {
     implicit val sqlCtx = spark.sqlContext
     val tbl = buildStatic("upsert")
