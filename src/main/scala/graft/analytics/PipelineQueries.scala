@@ -221,16 +221,16 @@ object PipelineQueries {
     import graft.operators.Dedup
     val docs = documents(s, d).filter(col("doc_id") < maxDocId)
     // fused shape (see CorpusPipeline.nearDedupFused): the corpus is
-    // shingled ONCE into a persisted (doc, h) frame feeding both the
-    // md5-LSH banding and the set-array Jaccard confirm — same candidate
-    // set and identical jaccard values as the unfused operators, minus a
-    // second full-corpus shingle pass.
+    // shingled ONCE into a (doc, h) frame feeding both the md5-LSH
+    // banding and the set-array Jaccard confirm — same candidate set and
+    // identical jaccard values as the unfused operators, minus a second
+    // full-corpus shingle pass. Not persisted: every branch reads the
+    // same subtree, so AQE reuses its exchanges (it reuses none above a
+    // cache read).
     val sh = TrainingData.docShingles(docs, "text", "doc_id", 3)
       .select(col("doc_id").as("doc"), col("shingle").as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pairs = Dedup.minhashLshCandidatesMd5FromShingles(sh)
       .select(col("id_a"), col("id_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val edges = Dedup.jaccardOnShingleSets(pairs, sh)
       .filter(col("jaccard") >= 0.2).select(col("id_a"), col("id_b"))
     (docs, edges)

@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 /** End-to-end training-corpus preparation: the composition a pretraining
   * data pipeline actually runs, as one declarative plan —
   *
-  *   1. per-doc stats (chars, tokens, quality, language);
-  *   2. quality + length gate;
-  *   3. exact dedup (hash group-by, smallest doc_id survives);
+  *   1. exact dedup (hash group-by, smallest doc_id survives);
+  *   2. per-doc stats (chars, tokens, quality, language) of the
+  *      survivors;
+  *   3. quality + length gate;
   *   4. near-dup removal via LSH candidates → exact-Jaccard confirm
   *      (drop the larger doc_id of each confirmed pair);
   *   5. token accounting for the surviving corpus.
@@ -27,7 +28,7 @@ object CorpusPipeline {
       nearDupShingle: Int = 3,
       nearDupThreshold: Double = 0.6)
 
-  /** Stage 1-2: annotate and gate. */
+  /** Stages 2-3: annotate and gate. */
   def gate(docs: DataFrame, cfg: Config): DataFrame = {
     val annotated = docs.select(
       col("doc_id"), col("text"),
@@ -41,7 +42,7 @@ object CorpusPipeline {
     else gated.filter(col("lang_pred").isin(cfg.langs: _*))
   }
 
-  /** Stage 3: exact dedup keeping the smallest doc_id per text hash —
+  /** Stage 1: exact dedup keeping the smallest doc_id per text hash —
     * the hash-aggregate form (see [[Dedup.exactSurvivors]]: min_by, no
     * sort, duplicates collapse map-side before the shuffle).
     */
@@ -50,8 +51,8 @@ object CorpusPipeline {
 
   /** Stage 4: near-dup removal — LSH candidates, exact-Jaccard confirm,
     * drop the larger id of each confirmed pair. FUSED: the corpus is
-    * shingled ONCE into a persisted `(doc, h)` frame that feeds both the
-    * banding and the candidate-pruned confirm — the standalone operators
+    * shingled ONCE into a `(doc, h)` frame that feeds both the banding
+    * and the candidate-pruned confirm — the standalone operators
     * ([[Dedup.minhashLshCandidates]] + [[Dedup.jaccardOnCandidates]])
     * each shingle from text, which costs the composed pipeline a second
     * posexplode + per-doc window over the corpus.
@@ -60,42 +61,54 @@ object CorpusPipeline {
     nearDedupFused(docs, cfg,
       c => Dedup.shingleHashRows(c, "text", "doc_id", cfg.nearDupShingle))
 
-  /** The fused near-dedup tail: persist the corpus once (it feeds the
-    * shingle pass and the final anti-join), persist the shingle rows once
-    * (they feed LSH banding AND the exact-Jaccard confirm — at 100 TB
-    * both stage boundaries are parquet checkpoints instead), then confirm
-    * with the SET-ARRAY Jaccard ([[Dedup.jaccardOnShingleSets]]): LSH
-    * banding already emits distinct pairs (its final group-by), so the
-    * pairs frame persists without a re-distinct, the drop set rides the
-    * anti-join without one (left_anti ignores right-side duplicates),
-    * and NO driver-side count actions remain — AQE re-plans every join
-    * from the exact materialized shuffle sizes, broadcasting the
-    * candidate-bounded frames at runtime. A ~30-job composition becomes
-    * ~15; at small scale wall clock is scheduler round-trips, not data.
+  /** The fused near-dedup tail: the corpus feeds the shingle pass and
+    * the final anti-join, the shingle rows feed LSH banding AND the
+    * exact-Jaccard confirm, and the candidate pairs feed the confirm's
+    * doc pruning and its scoring. Nothing is persisted: each shared
+    * frame is the same subtree in every branch, so AQE runs each of
+    * their shuffles once and serves every other branch a reused
+    * exchange (the MinHash signature, the shingle window and the
+    * `collect_set` sets are each computed once per action). A cache
+    * would stop that — AQE reuses no exchange above a cache read — and
+    * would outlive the call with no owner to release it. Confirm with
+    * the SET-ARRAY Jaccard ([[Dedup.jaccardOnShingleSets]]): LSH
+    * banding already emits distinct pairs (its final group-by), the drop
+    * set rides the anti-join without a re-distinct (left_anti ignores
+    * right-side duplicates), and NO driver-side count action remains —
+    * AQE re-plans every join from the exact materialized shuffle sizes,
+    * broadcasting the candidate-bounded frames at runtime. At 100 TB
+    * the shingle and pair boundaries are parquet checkpoints instead.
     * The corpus is never shuffled end-to-end in this stage.
-    * Lifetime note: the returned plan keeps reading the persists, so
-    * there is no safe place to unpersist inside the operator; LRU
-    * eviction reclaims the blocks (Bench clears the cache per iteration).
     */
   private def nearDedupFused(
       docs: DataFrame,
       cfg: Config,
       shinglesOf: DataFrame => DataFrame): DataFrame = {
-    val corpus = docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sh = shinglesOf(corpus)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = shinglesOf(docs)
     val pairs = Dedup.minhashLshCandidatesFromHashes(sh)
       .select(col("id_a"), col("id_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val drops = Dedup.jaccardOnShingleSets(pairs, sh)
       .filter(col("jaccard") >= cfg.nearDupThreshold)
       .select(col("id_b").as("drop_id"))
-    corpus.join(drops, corpus("doc_id") === col("drop_id"), "left_anti")
+    docs.join(drops, docs("doc_id") === col("drop_id"), "left_anti")
   }
+
+  /** Stages 1-3 in the order the pipeline runs them: exact dedup first,
+    * then the gate over the survivors only. The same rows and columns as
+    * `exactDedup(gate(docs, cfg))`: the gate reads nothing but `text`
+    * and exact dedup groups by `md5(text)`, so every copy of a text
+    * passes or fails the gate together. Scoring only the survivors also
+    * keeps the text functions off the plan's leaf: over an in-memory
+    * input the optimizer folds a projection above a local relation on
+    * the driver, once per copy of the corpus in the fused near-dedup
+    * plan.
+    */
+  def dedupThenGate(docs: DataFrame, cfg: Config): DataFrame =
+    gate(exactDedup(docs.select(col("doc_id"), col("text"))), cfg)
 
   /** Full pipeline; returns the surviving corpus with its annotations. */
   def prepare(docs: DataFrame, cfg: Config = Config()): DataFrame =
-    nearDedup(exactDedup(gate(docs, cfg)), cfg)
+    nearDedup(dedupThenGate(docs, cfg), cfg)
 
   /** The cross-engine-VERIFIABLE pipeline: the same fused stages with
     * xxhash64 swapped for the md5-prefix hash, so an ANSI oracle
@@ -107,7 +120,7 @@ object CorpusPipeline {
     * fast path — same shapes, no md5 cost.
     */
   def prepareVerified(docs: DataFrame, cfg: Config = Config()): DataFrame =
-    nearDedupVerified(exactDedup(gate(docs, cfg)), cfg)
+    nearDedupVerified(dedupThenGate(docs, cfg), cfg)
 
   /** [[nearDedup]]'s cross-engine-verifiable twin: the IDENTICAL fused
     * shape and shuffle-key widths (8-byte hashed shingles, duplicates

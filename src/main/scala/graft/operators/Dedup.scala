@@ -103,7 +103,8 @@ object Dedup {
     * rows ([[shingleHashRows]] shape, duplicates tolerated — they cannot
     * change a min). The fused corpus pipeline computes the shingle rows
     * once and feeds both this banding and the Jaccard confirm from the
-    * same persisted frame, instead of re-shingling the corpus per stage.
+    * same frame, instead of re-shingling the corpus per stage; pass it
+    * unpersisted, so every branch's shuffle of it is one reused exchange.
     */
   def minhashLshCandidatesFromHashes(
       sh: DataFrame,
@@ -132,12 +133,12 @@ object Dedup {
     * so the signature is computed once whether the joins are planned as
     * sort-merge (the exchange is their required partitioning) or as
     * broadcasts of a small band set (which would otherwise sit on a
-    * broadcast exchange the stats' shuffle cannot reuse). Over a
-    * persisted input AQE reuses no exchange, so there each branch still
-    * aggregates on its own. The non-null
-    * `doc` filter comes first for the same reason: the pairing join's
-    * `a.doc < b.doc` infers it for sides a and b, and a stats branch
-    * without it would plan a second shingle shuffle.
+    * broadcast exchange the stats' shuffle cannot reuse). That reuse
+    * needs an unpersisted input: AQE reuses no exchange above a cache
+    * read, so over a persisted one each branch aggregates on its own.
+    * The non-null `doc` filter comes first for the same reason: the
+    * pairing join's `a.doc < b.doc` infers it for sides a and b, and a
+    * stats branch without it would plan a second shingle shuffle.
     */
   private def pairBandBuckets(bands: DataFrame, maxBucketSize: Int): DataFrame = {
     val banded = bands.filter(col("doc").isNotNull).repartition(col("bucket"))
@@ -186,7 +187,7 @@ object Dedup {
     * `(doc, shingle)` string rows ([[TrainingData.docShingles]] shape,
     * with the shingle string in column `h`) — the md5-variant twin of
     * [[minhashLshCandidatesFromHashes]] for the fused corpus pipeline,
-    * which shares one persisted shingle frame between banding and the
+    * which shares one unpersisted shingle frame between banding and the
     * exact-Jaccard confirm.
     */
   def minhashLshCandidatesMd5FromShingles(

@@ -39,8 +39,7 @@ object Graphs {
     // the three graph-sized frames once; at 100 TB these are the
     // canonical-edge and degree relations, exactly what a production
     // triangle pass would checkpoint. Lifetime: LRU-evicted (the
-    // returned one-row plan keeps reading them; same discipline as
-    // CorpusPipeline.nearDedupFused).
+    // returned one-row plan keeps reading them).
     val e = edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)

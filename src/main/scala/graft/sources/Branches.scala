@@ -150,7 +150,8 @@ object Branches {
     * a sibling path — NEVER inside the table root, whose orphan scans
     * must not see foreign files); the ref records the fork point, which
     * [[pinnedVersions]] protects from vacuum while the branch lives.
-    * Returns the branch table path.
+    * A version carrying merge-on-read masks is refused, as
+    * [[Snapshots.cloneTable]] refuses it. Returns the branch table path.
     */
   def create(spark: SparkSession, table: String, name: String,
       version: Option[Int] = None, dir: Option[String] = None): String = {

@@ -3330,12 +3330,18 @@ object Snapshots {
     * only ever deletes files under its own root.
     *
     * The target must not exist yet (no versions); clone-into-existing
-    * would silently orphan the target's history.
+    * would silently orphan the target's history. A version carrying
+    * merge-on-read masks is refused: the clone stamps every entry it
+    * publishes with its own first sequence number, and a mask covers
+    * only files of a lower one, so the source's deletes would come back.
     */
   def cloneTable(spark: SparkSession, source: String, target: String,
       version: Option[Int] = None): Int = {
     val v = version.getOrElse(latestVersion(spark, source))
     val entries = manifest(spark, source, v)
+    require(!entries.exists(e => isMask(e.path)),
+      s"Snapshots.cloneTable: version $v of $source carries merge-on-read " +
+        "masks — run compactMor first")
     val (sfs, sroot) = fsOf(spark, source)
     val srcAbs = sfs.makeQualified(sroot).toUri.getPath
     val abs = entries.map(e =>

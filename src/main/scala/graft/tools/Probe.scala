@@ -3,9 +3,11 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.{PlanFingerprint, Session, SparkEntry}
-import org.apache.spark.scheduler.{SparkListenerJobEnd, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobEnd, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SparkPlanInfo}
+import org.apache.spark.sql.execution.ui.{SparkListenerDriverAccumUpdates,
+  SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 
 /** Plan and profile probes for named catalog queries, run on the
   * [[graft.Session]] over `$SPARK_GRAFT_SF_DIR` (default sf0.1):
@@ -32,7 +34,7 @@ import org.apache.spark.sql.execution.FormattedMode
   *    (`name  exchanges  bcast  scans  smj  shj  bnlj  cartesian
   *    window1p`), optionally also to a file.
   *  - `stages` runs each query once through the noop sink and prints
-  *    every stage's wall time, summed task time, input and shuffle
+  *    every stage's wall time, summed task time, file-scan and shuffle
   *    read/write MB, slowest first, then a per-query summary line.
   */
 object Probe {
@@ -124,7 +126,36 @@ object Probe {
   }
 
   private final case class Stage(id: Int, name: String, wallMs: Long,
-      taskMs: Long, inMB: Double, srMB: Double, swMB: Double, nTasks: Int)
+      taskMs: Long, scanMB: Double, srMB: Double, swMB: Double, nTasks: Int)
+
+  /** The bytes of the files each file scan in the window listed (its
+    * "size of files read" SQL metric, a driver-side update), summed per
+    * stage that ran the scan: the stage whose accumulables hold one of
+    * the scan's task-side metrics. Scans are found in every plan the
+    * window's executions posted, AQE re-plans included, so a scan whose
+    * stage AQE later folded away still counts. A task's
+    * `inputMetrics.bytesRead` cannot stand in: it reads 0 for a
+    * vectorized parquet scan and counts every cache read in full.
+    */
+  private def scanBytesByStage(events: Seq[SparkListenerEvent]): Map[Int, Long] = {
+    def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+    // files-size metric id -> every metric id of its scan node
+    val scans = events.collect {
+      case e: SparkListenerSQLExecutionStart => e.sparkPlanInfo
+      case e: SparkListenerSQLAdaptiveExecutionUpdate => e.sparkPlanInfo
+    }.flatMap(nodes).flatMap(n =>
+      n.metrics.find(_.name == "size of files read")
+        .map(_.accumulatorId -> n.metrics.map(_.accumulatorId).toSet)).toMap
+    val driverValues = events.collect {
+      case e: SparkListenerDriverAccumUpdates => e.accumUpdates
+    }.flatten.toMap
+    events.collect { case e: SparkListenerStageCompleted =>
+      val ids = e.stageInfo.accumulables.keySet
+      e.stageInfo.stageId -> scans.collect {
+        case (size, m) if m.exists(ids) => driverValues.getOrElse(size, 0L)
+      }.sum
+    }.toMap
+  }
 
   private def stages(spark: SparkSession, sfDir: String,
       names: Seq[String]): Unit =
@@ -138,6 +169,7 @@ object Probe {
         df.write.format("noop").mode("overwrite").save()
         ((t1 - t0) / 1e6, (System.nanoTime() - t1) / 1e6)
       }
+      val scanBytes = scanBytesByStage(events)
       val all = events.collect { case e: SparkListenerStageCompleted =>
         val si = e.stageInfo
         val m = si.taskMetrics
@@ -145,16 +177,16 @@ object Probe {
           yield a - b).getOrElse(-1L)
         Stage(si.stageId, si.name.takeWhile(_ != '\n').take(90),
           wall, m.executorRunTime,
-          m.inputMetrics.bytesRead / 1e6,
+          scanBytes.getOrElse(si.stageId, 0L) / 1e6,
           m.shuffleReadMetrics.totalBytesRead / 1e6,
           m.shuffleWriteMetrics.bytesWritten / 1e6, si.numTasks)
       }
       val jobs = events.count(_.isInstanceOf[SparkListenerJobEnd])
       println(f"%n=== $n build=$buildMs%.0fms query=$queryMs%.0fms stages=${all.size} ===")
-      println(f"${"stage"}%6s ${"wall_ms"}%8s ${"task_ms"}%8s ${"in_MB"}%8s ${"shR_MB"}%8s ${"shW_MB"}%8s ${"tasks"}%6s  name")
+      println(f"${"stage"}%6s ${"wall_ms"}%8s ${"task_ms"}%8s ${"scan_MB"}%8s ${"shR_MB"}%8s ${"shW_MB"}%8s ${"tasks"}%6s  name")
       for (s <- all.sortBy(-_.wallMs).take(25))
-        println(f"${s.id}%6d ${s.wallMs}%8d ${s.taskMs}%8d ${s.inMB}%8.1f ${s.srMB}%8.1f ${s.swMB}%8.1f ${s.nTasks}%6d  ${s.name}")
+        println(f"${s.id}%6d ${s.wallMs}%8d ${s.taskMs}%8d ${s.scanMB}%8.2f ${s.srMB}%8.1f ${s.swMB}%8.1f ${s.nTasks}%6d  ${s.name}")
       println(s"[profile] $n sum_stage_wall=${all.map(_.wallMs.max(0)).sum}ms " +
-        s"n_stages=${all.size} n_jobs=$jobs")
+        s"n_stages=${all.size} n_jobs=$jobs scan_bytes=${scanBytes.values.sum}")
     } finally spark.sparkContext.setJobDescription(null)
 }

@@ -42,6 +42,61 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(ids.contains(6L))
   }
 
+  test("dedupThenGate returns the rows and columns of gate then exactDedup") {
+    // exact-duplicate pairs on each side of every gate, listed larger id
+    // first so the survivor is not simply the first row
+    val english = base * 4
+    val d = Seq(
+      (11L, english), (10L, english),            // passes every gate
+      (21L, "tiny"), (20L, "tiny"),              // fails the length gate
+      (31L, "!!! ??? ... ;;; ::: " * 10),
+      (30L, "!!! ??? ... ;;; ::: " * 10),        // fails the quality gate
+      (41L, "der hund und die katze ist das haus und der baum ist " * 6),
+      (40L, "der hund und die katze ist das haus und der baum ist " * 6),
+      (50L, (base + " extra") * 4),              // passes, no duplicate
+    ).toDF("doc_id", "text")
+    val cfg = CorpusPipeline.Config(minQuality = 0.4, langs = Seq("en"))
+    val want = CorpusPipeline.exactDedup(CorpusPipeline.gate(d, cfg))
+    val got = CorpusPipeline.dedupThenGate(d, cfg)
+    // names and types; gate-then-dedup's min_by makes every column
+    // nullable
+    assert(got.schema.map(f => (f.name, f.dataType)) ===
+      want.schema.map(f => (f.name, f.dataType)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    assert(rows(got) === rows(want))
+    assert(rows(got).map(_.head) === Seq(10L, 50L))
+    // the german pair passes the length and quality gates: only the
+    // language gate drops it
+    assert(rows(CorpusPipeline.dedupThenGate(d, cfg.copy(langs = Nil)))
+      .map(_.head) === Seq(10L, 40L, 50L))
+  }
+
+  test("prepare and prepareVerified leave the cache as they found it") {
+    import org.apache.spark.sql.SpecBridge.cachedEntries
+    val sc = spark.sparkContext
+    val entries = cachedEntries(spark)
+    val rdds = sc.getPersistentRDDs.keySet
+    val cfg = CorpusPipeline.Config(minQuality = 0.4, nearDupThreshold = 0.5)
+    assert(CorpusPipeline.prepare(docs, cfg).count() === 2)
+    assert(CorpusPipeline.prepareVerified(docs, cfg).count() === 2)
+    assert(cachedEntries(spark) === entries)
+    assert(sc.getPersistentRDDs.keySet.diff(rdds).isEmpty)
+  }
+
+  test("one prepare count over a fixed corpus stays within its job bound") {
+    // the sf0.001 documents as an in-memory batch, the shape a caller
+    // hands the pipeline
+    val batch = graft.Tables.documents(spark, sf001)
+      .select($"doc_id", $"text").as[(Long, String)].collect().toSeq
+      .toDF("doc_id", "text")
+    val (n, tags) = jobTags(CorpusPipeline.prepare(batch).count())
+    assert(n > 0)
+    // measured 11 (one per query stage: each shared stage runs once);
+    // with the shingle, corpus and pair frames persisted it was 24
+    assert(tags.size <= 12, s"${tags.size} jobs")
+  }
+
   test("token report aggregates by predicted language") {
     val rep = CorpusPipeline.tokenReport(
       CorpusPipeline.gate(docs, CorpusPipeline.Config()))

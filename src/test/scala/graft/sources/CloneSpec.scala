@@ -107,6 +107,25 @@ class CloneSpec extends SparkSpec {
     assert(canon(Snapshots.read(spark, src)) === canon(orders))
   }
 
+  test("clone of a masked version is refused until compactMor") {
+    import spark.implicits._
+    val src = freshTable("masked")
+    Snapshots.commit((1L to 10L).map(k => (k, k * 10)).toDF("k", "v"), src)
+    val masked = Snapshots.deleteWhere(spark, src, Seq(4L).toDF("k"), "k")
+    assert(Snapshots.read(spark, src).count() === 9)
+    val dst = freshTable("maskeddst")
+    val e = intercept[IllegalArgumentException] {
+      Snapshots.cloneTable(spark, src, dst)
+    }
+    assert(e.getMessage.contains(
+      s"version $masked of $src carries merge-on-read masks — run compactMor first"))
+    assert(Snapshots.versions(spark, dst).isEmpty)
+    Snapshots.compactMor(spark, src)
+    Snapshots.cloneTable(spark, src, dst)
+    assert(canon(Snapshots.read(spark, dst)) === canon(Snapshots.read(spark, src)))
+    assert(Snapshots.read(spark, dst).count() === 9)
+  }
+
   test("clone into an existing table is refused") {
     val src = freshTable("ref")
     Snapshots.commit(orders.limit(10), src)

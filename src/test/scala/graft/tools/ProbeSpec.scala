@@ -48,11 +48,20 @@ class ProbeSpec extends SparkSpec {
   test("stages prints a stage table and a summary line") {
     val log = probe("stages", q)
     assert(log.contains(s"=== $q build="))
-    val summary = s"\\[profile\\] $q sum_stage_wall=\\d+ms n_stages=(\\d+) n_jobs=(\\d+)".r
-      .findFirstMatchIn(log)
+    assert(log.contains("scan_MB"))
+    val summary = (s"\\[profile\\] $q sum_stage_wall=\\d+ms n_stages=(\\d+) " +
+      "n_jobs=(\\d+) scan_bytes=(\\d+)").r.findFirstMatchIn(log)
     assert(summary.isDefined, log)
     assert(summary.get.group(1).toInt > 0)
     assert(summary.get.group(2).toInt > 0)
+    // at least the bytes of the two parquet inputs, counted from the
+    // scan nodes' SQL metrics (a vectorized parquet scan reports no task
+    // input bytes); more where a stage runs a scan again, as the sort's
+    // range-partition sampling job does
+    val files = SparkEntry.queries(q)(spark, sf001).inputFiles
+    val bytes = files.map(f => new java.io.File(new java.net.URI(f)).length).sum
+    assert(files.length === 2 && bytes > 0)
+    assert(summary.get.group(3).toLong >= bytes, log)
   }
 
   test("survey line has one integer per header column, cartesian included") {
